@@ -1,10 +1,10 @@
 """Dump `.explain("formatted")` for declared queries into per-query
-files under plans/r15/ — the optimization round's before/after plan
-evidence (the judge checks plan claims against these files).
+files under plans/<round>/ — an optimization round's before/after plan
+evidence (plan claims are checked against these files).
 
 Usage:
-    python scripts/dump_plans_r15.py before            # all queries
-    python scripts/dump_plans_r15.py after q_foo q_bar # just the named
+    python scripts/dump_round_plans.py r15 before            # all queries
+    python scripts/dump_round_plans.py r15 after q_foo q_bar # just the named
 
 Runs on the SAME session configuration as bench.py (session.get_spark)
 so the dumped plans are the ones the bench actually executes.
@@ -15,21 +15,25 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, ROOT)
 
 from timeseriesdb_spark.plans.checks import formatted_plan  # noqa: E402
 from timeseriesdb_spark.registry import QUERIES  # noqa: E402
 from timeseriesdb_spark.session import get_spark  # noqa: E402
 
-OUT_DIR = os.path.join(os.path.dirname(__file__), "..", "plans", "r15")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or sorted(QUERIES)
-    os.makedirs(OUT_DIR, exist_ok=True)
-    spark = get_spark(app_name=f"plans-r15-{suffix}")
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    round_tag = sys.argv[1]
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    names = sys.argv[3:] or sorted(QUERIES)
+    out_dir = os.path.join(ROOT, "plans", round_tag)
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark(app_name=f"plans-{round_tag}-{suffix}")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         try:
@@ -37,7 +41,7 @@ def main() -> None:
             plan = formatted_plan(df)
         except Exception as exc:  # noqa: BLE001 — record, don't abort
             plan = f"PLAN BUILD FAILED: {exc}"
-        path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
         print(name, "->", path)

@@ -311,3 +311,28 @@ def test_lease_heartbeat_keeps_lock_fresh(tmp_path):
     finally:
         hb.stop()
     assert os.path.getmtime(lock) >= time.time() - 60
+
+
+def test_compact_partials_rejects_bad_kind_before_side_effects(
+    spark, tmp_path
+):
+    # An unknown kind, or a tier that declares no combine (distinct,
+    # drift), must raise ValueError naming the compactable kinds BEFORE
+    # the lease lock, the aside dir or any store read: no lock and no
+    # aside are left behind, and the store is untouched.
+    import os
+
+    import pytest
+
+    from timeseriesdb_spark.api import SignalEngine
+
+    path = str(tmp_path / "hist")
+    eng = SignalEngine(spark, path)
+    _write_hist_batch(spark, path, 0, 1, 5)
+    for kind in ("nope", "distinct", "drift"):
+        with pytest.raises(ValueError, match="compactable kinds.*ohlc"):
+            eng.compact_partials(path, kind)
+        assert os.listdir(tmp_path) == ["hist"]  # no lock, no aside
+        assert [
+            d for d in os.listdir(path) if d.startswith("batch_id=")
+        ] == ["batch_id=0"]

@@ -12,12 +12,17 @@ Per family this file proves:
   refuses loudly instead of corrupting;
 - 'append': a second tranche of NEW rows resumes above the store's
   max batch_id and the served answers equal a single full run;
+- compaction: a compactable family's store is compacted after the
+  second tranche, and the refusal and a third 'append' tranche then
+  run against the compacted store (maintain -> compact -> keep
+  maintaining) with the same served answers; the third tranche's
+  batch ids lie above every id the generation absorbed;
 - 'replay' (ADVICE r13, rollup representative): a COARSER replay
   (availableNow one-batch where the original run used
   maxFilesPerTrigger=1) deletes the stale higher-id partitions
   instead of leaving them to double-count at merge.
 
-Tranches split by user/doc hash parity so every key's full history
+Tranches split by user/doc hash mod 3 so every key's full history
 lands in exactly one tranche — the stateful trigram tail (event
 ngrams) then closes identically to the one-shot run, making the
 equality exact for all families.
@@ -32,7 +37,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
-from timeseriesdb_spark.api import CorpusEngine, SignalEngine
+from timeseriesdb_spark.api import (
+    _HIGH_WATER,
+    _TIERS,
+    CorpusEngine,
+    SignalEngine,
+    guard_fresh_checkpoint,
+)
 from timeseriesdb_spark.tables import load_table
 
 
@@ -120,6 +131,23 @@ SPECS = {
 }
 
 
+# SPECS family -> its tier in the library table (api._TIERS). drift has
+# its own guard tests in test_streaming_drift.py.
+TIER_OF = {
+    "rollup": "rollup",
+    "distinct": "distinct",
+    "hll_register": "hllreg",
+    "frequency": "cm",
+    "ohlc": "ohlc",
+    "histogram": "hist",
+    "quantile": "qsk",
+    "event_ngrams": "ngrams",
+    "heavyhitters": "hh",
+    "trending_terms": "terms",
+    "shipdate": "shipdate",
+}
+
+
 def _engine(kind, spark, tmp_path):
     if kind == "corpus":
         return CorpusEngine(spark, str(tmp_path / "corpus"))
@@ -129,6 +157,14 @@ def _engine(kind, spark, tmp_path):
 def _run_stream(spark, eng, attr, src, store, ckpt, schema, **kw):
     stream = spark.readStream.schema(schema).parquet(src)
     getattr(eng, attr)(stream, store, ckpt, **kw).awaitTermination(180)
+
+
+def _batch_ids(store) -> set[int]:
+    return {
+        int(d.split("=", 1)[1])
+        for d in os.listdir(store)
+        if d.startswith("batch_id=") and d.split("=", 1)[1].isdigit()
+    }
 
 
 def _pdf(df) -> pd.DataFrame:
@@ -142,20 +178,26 @@ def _pdf(df) -> pd.DataFrame:
 
 @pytest.mark.parametrize("family", sorted(SPECS))
 def test_guarded_maintenance_refuse_and_append(spark, tmp_path, family):
+    # every tier of the library table is covered here, so a new tier
+    # cannot skip the guard test
+    assert set(TIER_OF) == set(SPECS)
+    assert set(TIER_OF.values()) == set(_TIERS) - {"drift"}
     kind, source, split_col, attr, serve = SPECS[family]
     src_full = str(tmp_path / "src_full")
     src_a = str(tmp_path / "src_a")
     src_b = str(tmp_path / "src_b")
+    src_c = str(tmp_path / "src_c")
 
     rows = {
         "events": _events,
         "documents": _documents,
         "lineitem": _lineitem,
     }[source](spark)
-    even = F.pmod(F.xxhash64(F.col(split_col)), F.lit(2)) == 0
+    third = F.pmod(F.xxhash64(F.col(split_col)), F.lit(3))
     rows.coalesce(1).write.parquet(src_full)
-    rows.filter(even).coalesce(1).write.parquet(src_a)
-    rows.filter(~even).coalesce(1).write.parquet(src_b)
+    rows.filter(third == 0).coalesce(1).write.parquet(src_a)
+    rows.filter(third == 1).coalesce(1).write.parquet(src_b)
+    rows.filter(third == 2).coalesce(1).write.parquet(src_c)
     schema = rows.schema
 
     eng = _engine(kind, spark, tmp_path)
@@ -179,17 +221,83 @@ def test_guarded_maintenance_refuse_and_append(spark, tmp_path, family):
         )
 
     # declared intent: tranche B carries only NEW rows -> append above
-    # the store's max batch_id; served answers equal the full run
+    # the store's max batch_id
+    ids_a = _batch_ids(store)
     _run_stream(
         spark, eng, attr, src_b, store, str(tmp_path / "ck3"), schema,
         on_fresh_checkpoint="append",
     )
-    bids = sorted(
-        d for d in os.listdir(store) if d.startswith("batch_id=")
+    ids_b = _batch_ids(store) - ids_a
+    assert ids_b and min(ids_b) > max(ids_a)  # overwrote nothing
+
+    # compactable tiers: compact, then keep maintaining the compacted
+    # store (refusal, then tranche C appended above every absorbed id)
+    tier = TIER_OF[family]
+    if _TIERS[tier].combine is not None:
+        assert eng.compact_partials(store, tier) >= 2
+        assert [
+            d for d in os.listdir(store) if d.startswith("batch_id=")
+        ] == ["batch_id=compacted-0"]
+        with pytest.raises(ValueError, match="fresh checkpoint"):
+            _run_stream(
+                spark, eng, attr, src_c, store, str(tmp_path / "ck4"), schema
+            )
+    _run_stream(
+        spark, eng, attr, src_c, store, str(tmp_path / "ck5"), schema,
+        on_fresh_checkpoint="append",
     )
-    assert len(bids) >= 2  # tranche B wrote ABOVE, overwrote nothing
+    ids_c = _batch_ids(store) - ids_a - ids_b
+    assert ids_c and min(ids_c) > max(ids_a | ids_b)
+
+    # served answers equal the full run
     got = _pdf(serve(spark, eng, store))
     pd.testing.assert_frame_equal(got, exp)
+
+
+def test_guard_counts_compacted_generations(tmp_path):
+    """A store holding a compacted generation (batch_id=compacted-<n>)
+    is non-empty: a fresh checkpoint refuses by default, 'append'
+    starts above every batch id the generation absorbed (its
+    high-water file), 'replay' deletes the generation too (it would
+    double-count), and a resumed checkpoint keeps its recorded base.
+    While a compaction's aside dir exists (running, or crashed after
+    the install), every fresh checkpoint refuses: that compaction's
+    recovery deletes the ids its manifest lists, new partials included."""
+    store = tmp_path / "tier"
+    gen = store / "batch_id=compacted-0"
+    gen.mkdir(parents=True)
+    (gen / _HIGH_WATER).write_text("2")  # absorbed batch_id=0..2
+
+    with pytest.raises(ValueError, match="fresh checkpoint"):
+        guard_fresh_checkpoint(str(store), str(tmp_path / "ck_err"))
+    ck = tmp_path / "ck_append"
+    assert guard_fresh_checkpoint(str(store), str(ck), "append") == 3
+    (store / "batch_id=4").mkdir()
+    assert guard_fresh_checkpoint(
+        str(store), str(tmp_path / "ck_append2"), "append"
+    ) == 5
+    (ck / "offsets").mkdir()  # the first run's checkpoint, resumed
+    assert guard_fresh_checkpoint(str(store), str(ck)) == 3
+
+    # compacted-1 installed, batch_id=4 not yet retired, aside left
+    aside = tmp_path / "tier__compact_old_1"
+    aside.mkdir()
+    (aside / "_COMPACT_MANIFEST.json").write_text(
+        '["batch_id=4", "batch_id=compacted-0"]'
+    )
+    for mode in ("error", "append", "replay"):
+        with pytest.raises(ValueError, match="compact_partials"):
+            guard_fresh_checkpoint(
+                str(store), str(tmp_path / f"ck_{mode}_aside"), mode
+            )
+    assert guard_fresh_checkpoint(str(store), str(ck)) == 3
+    aside.joinpath("_COMPACT_MANIFEST.json").unlink()
+    aside.rmdir()
+
+    assert guard_fresh_checkpoint(
+        str(store), str(tmp_path / "ck_replay"), "replay"
+    ) == 0
+    assert os.listdir(store) == []
 
 
 def test_replay_deletes_stale_partitions(spark, tmp_path):

@@ -175,6 +175,32 @@ def q_hll_register_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _hll_registers(load_table(spark, sf_dir, "events"))
 
 
+def hll_estimate(registers: DataFrame) -> DataFrame:
+    """Per-signal (user_id, n_regs, approx_distinct) from (user_id,
+    register_idx, rho) registers of any day range: merge per signal
+    via max(rho), then the raw harmonic estimate (q_hll_estimate)."""
+    merged = registers.groupBy("user_id", "register_idx").agg(
+        F.max("rho").alias("rho")
+    )
+    per_user = merged.groupBy("user_id").agg(
+        F.count("*").alias("n_regs"),
+        F.sum(F.expr("CAST(shiftleft(1L, 61 - rho) AS DECIMAL(38,0))"))
+        .alias("s_nonzero"),
+    )
+    s_int = (
+        F.col("s_nonzero")
+        + (F.lit(HLL_M) - F.col("n_regs")).cast("decimal(38,0)")
+        * F.lit(2**61).cast("decimal(38,0)")
+    )
+    return per_user.select(
+        "user_id",
+        F.col("n_regs").cast("bigint").alias("n_regs"),
+        (F.lit(HLL_EST_NUM) / s_int.cast("double")).alias(
+            "approx_distinct"
+        ),
+    )
+
+
 def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct estimate served FROM the register rollup, with the
     exact count joined alongside as a self-witness (the
@@ -188,28 +214,7 @@ def q_hll_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the serving layer applies corrections, the pytest property pins
     the corrected form within HLL error bounds of the exact count."""
     ev = load_table(spark, sf_dir, "events")
-    merged = (
-        _hll_registers(ev)
-        .groupBy("user_id", "register_idx")
-        .agg(F.max("rho").alias("rho"))
-    )
-    per_user = merged.groupBy("user_id").agg(
-        F.count("*").alias("n_regs"),
-        F.sum(F.expr("CAST(shiftleft(1L, 61 - rho) AS DECIMAL(38,0))"))
-        .alias("s_nonzero"),
-    )
-    s_int = (
-        F.col("s_nonzero")
-        + (F.lit(HLL_M) - F.col("n_regs")).cast("decimal(38,0)")
-        * F.lit(2**61).cast("decimal(38,0)")
-    )
-    est = per_user.select(
-        "user_id",
-        F.col("n_regs").cast("bigint").alias("n_regs"),
-        (F.lit(HLL_EST_NUM) / s_int.cast("double")).alias(
-            "approx_distinct"
-        ),
-    )
+    est = hll_estimate(_hll_registers(ev))
     exact = ev.groupBy("user_id").agg(
         F.countDistinct(scaled_int(F.col("value"))).alias("exact_distinct")
     )

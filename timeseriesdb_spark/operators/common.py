@@ -50,6 +50,21 @@ def isum_sql(expr: str, alias: str) -> str:
     return f"CAST(SUM(CAST({expr} AS BIGINT)) AS DOUBLE) AS {alias}"
 
 
+def merge_by(grain, **folds: str):
+    """A schema-preserving combine of mergeable partials: group at the
+    partial `grain` and fold each column with its named aggregate
+    (``"sum"``, ``"min"``, ``"max"``) under its own name, so the merged
+    frame is again a partial (it can be merged further, compacted, or
+    finalized)."""
+
+    def combine(partials):
+        return partials.groupBy(*grain).agg(
+            *(getattr(F, fn)(c).alias(c) for c, fn in folds.items())
+        )
+
+    return combine
+
+
 def array_ngrams(arr: Column, n: int, sep: str = " ") -> Column:
     """Word n-grams of an array column as an array column, built from n
     aligned ``slice``s folded with ``zip_with``/``concat_ws`` — O(n)

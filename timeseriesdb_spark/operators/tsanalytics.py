@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from timeseriesdb_spark.operators.common import merge_by
 from timeseriesdb_spark.tables import load_table
 
 FOLLOW_MIN = 30     # interval-join window after a trigger event, minutes
@@ -523,27 +524,24 @@ def ohlc_partials(events: DataFrame) -> DataFrame:
     )
 
 
+# the associative OHLC combine: min of mins, max of maxes, sum of counts
+combine_ohlc = merge_by(
+    ("user_id", "day"),
+    okey="min", ckey="max", high="max", low="min", n_samples="sum",
+)
+
+
 def merge_ohlc(partials: DataFrame) -> DataFrame:
     """Combine OHLC partials (associative) and project the bars —
     identical output contract to q_ohlc."""
-    return (
-        partials.groupBy("user_id", "day")
-        .agg(
-            F.min("okey").alias("okey"),
-            F.max("ckey").alias("ckey"),
-            F.max("high").alias("high"),
-            F.min("low").alias("low"),
-            F.sum("n_samples").alias("n_samples"),
-        )
-        .select(
-            "user_id",
-            "day",
-            F.col("okey.v").alias("open"),
-            "high",
-            "low",
-            F.col("ckey.v").alias("close"),
-            "n_samples",
-        )
+    return combine_ohlc(partials).select(
+        "user_id",
+        "day",
+        F.col("okey.v").alias("open"),
+        "high",
+        "low",
+        F.col("ckey.v").alias("close"),
+        "n_samples",
     )
 
 

@@ -64,6 +64,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from timeseriesdb_spark.operators.common import merge_by
+
 POSITIONED_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -199,14 +201,10 @@ def chunk_feature_partials(positioned: DataFrame) -> DataFrame:
     return chunk_feature_agg(base)
 
 
-def merge_feature_partials(partials: DataFrame) -> DataFrame:
-    """Merged chunk rows from any number of batch partials — the
-    read-time combine (sum/min/max are associative; the half-up chunk
-    mean and everything after happen on the merged integers)."""
-    return partials.groupBy("user_id", "seg", "chunk").agg(
-        F.sum("s_u").alias("s_u"),
-        F.sum("ss_u").alias("ss_u"),
-        F.min("mn").alias("mn"),
-        F.max("mx").alias("mx"),
-        F.sum("n").alias("n"),
-    )
+# Merged chunk rows from any number of batch partials — the read-time
+# combine (sum/min/max are associative; the half-up chunk mean and
+# everything after happen on the merged integers).
+merge_feature_partials = merge_by(
+    ("user_id", "seg", "chunk"),
+    s_u="sum", ss_u="sum", mn="min", mx="max", n="sum",
+)

@@ -190,15 +190,11 @@ def ingest_to_parquet(
     daemon's persist path (fm_write, compression_daemon.rs:124-140).
     availableNow trigger drains all pending input then stops (used by
     tests; production uses processingTime)."""
+    from timeseriesdb_spark.api import _run_stream
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    return (
-        stream_stats.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _run_stream(
+        stream_stats, checkpoint_dir,
+        lambda batch_df, _bid: batch_df.write.mode("append").parquet(out_dir),
     )
 
 
