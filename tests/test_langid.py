@@ -104,39 +104,73 @@ def test_confusion_shares_sum_to_million(spark):
         assert abs(s - 1_000_000) <= 5, (lang, s)
 
 
-def test_clear_trained_caches_covers_all_modules(spark):
-    """similarity.clear_trained_caches must invalidate EVERY
-    per-sf_dir trained-state cache (r8 advice hook, extended r10) —
-    a new trained cache that forgets to register here would serve
-    stale state after an in-place rewrite."""
+def test_clear_trained_caches_covers_all_modules(spark, tmp_path):
+    """Every piece of derived state — a table schema, the trained kmeans
+    model, the lazy drift oracles, the lang-id profiles — follows an
+    in-place rewrite of the dataset with NO clear call: the one store
+    keys each value on the files' fingerprint, so a stale entry is
+    never served. clear_trained_caches only frees memory."""
+    import os
+    import shutil
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from timeseriesdb_spark import tables
     from timeseriesdb_spark.operators import mlscoring, similarity
+    from timeseriesdb_spark.registry import LAZY_ORACLES
 
-    # populate a representative cache in each module
-    langid._train_profiles_spark(spark, SF_DIR)
-    langid._lang_id_oracle(SF_DIR)
-    mlscoring._kmeans_drift_oracle(SF_DIR)
-    similarity._ivf_centroids(spark, SF_DIR)
-    assert SF_DIR in langid._PROFILE_CACHE
-    assert SF_DIR in langid._LID_ORACLE_CACHE
-    assert SF_DIR in mlscoring._KM_ORACLE_CACHE
-    assert SF_DIR in mlscoring._ORACLE_SAMPLE_CACHE
-    assert SF_DIR in similarity._IVF_CACHE
+    dst = str(tmp_path / "sf")
+    shutil.copytree(SF_DIR, dst, copy_function=shutil.copyfile)
+    os.chmod(dst, 0o755)
 
-    similarity.clear_trained_caches(SF_DIR)
-    for c in (
-        langid._PROFILE_CACHE,
-        langid._LID_ORACLE_CACHE,
-        langid._CONF_ORACLE_CACHE,
-        mlscoring._KM_ORACLE_CACHE,
-        mlscoring._ORACLE_SAMPLE_CACHE,
-        similarity._IVF_CACHE,
-    ):
-        assert SF_DIR not in c
+    def derived_state():
+        return {
+            "events columns": tables.load_table(spark, dst, "events").columns,
+            "kmeans centers": mlscoring._train_kmeans(spark, dst),
+            "q_kmeans_drift": LAZY_ORACLES["q_kmeans_drift"](dst),
+            "q_kmeans_drift_fft": LAZY_ORACLES["q_kmeans_drift_fft"](dst),
+            "lang profiles": langid._train_profiles_spark(spark, dst),
+        }
 
-    # sf_dir=None clears everything
-    langid._train_profiles_spark(spark, SF_DIR)
+    def same(a, b):
+        return np.array_equal(a, b) if isinstance(a, np.ndarray) else a == b
+
+    before = derived_state()
+
+    # rewrite in place: events' values and columns change, and the
+    # profiles' training corpus (documents) changes with it
+    ev = pq.read_table(f"{dst}/events.parquet")
+    ev = ev.set_column(
+        ev.schema.get_field_index("value"),
+        "value",
+        pc.add(pc.multiply(ev["value"], 3.0), 7.0),
+    ).append_column("extra", pa.array(np.ones(ev.num_rows)))
+    pq.write_table(ev, f"{dst}/events.parquet")
+    docs = pq.read_table(f"{dst}/documents.parquet")
+    docs = docs.set_column(
+        docs.schema.get_field_index("text"), "text", pc.utf8_upper(docs["text"])
+    )
+    pq.write_table(docs, f"{dst}/documents.parquet")
+
+    after = derived_state()
     similarity.clear_trained_caches()
-    assert not langid._PROFILE_CACHE
+    rebuilt = derived_state()
+    assert "extra" in after["events columns"]
+    for kind in before:
+        assert not same(after[kind], before[kind]), kind
+        assert same(after[kind], rebuilt[kind]), kind
+
+    # clearing one dir drops its entries and keeps the others;
+    # sf_dir=None clears everything
+    tables.load_table(spark, SF_DIR, "events")
+    similarity.clear_trained_caches(dst)
+    assert not [k for k in tables._DERIVED if k[1] == dst]
+    assert [k for k in tables._DERIVED if k[1] == SF_DIR]
+    similarity.clear_trained_caches()
+    assert not tables._DERIVED
 
 
 def test_pred_expression_matches_batch_scorer(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from tests.conftest import SF_DIR
 from timeseriesdb_spark.operators import mlscoring
+from timeseriesdb_spark.operators.similarity import clear_trained_caches
 
 
 def _rates(df):
@@ -43,7 +44,7 @@ def test_drift_agreement_bounded_and_deterministic(spark, family):
 
 def test_tree_model_is_deterministic_and_bounded(spark):
     t1 = mlscoring._train_tree(spark, SF_DIR)
-    mlscoring._TREE_CACHE.clear()
+    clear_trained_caches(SF_DIR)
     t2 = mlscoring._train_tree(spark, SF_DIR)
     assert t1 == t2
     assert len(t1) == 3  # root + two children: a broadcast-sized model
@@ -93,7 +94,7 @@ def test_grail_dictionary_read_paths_agree(spark):
     green hash rests on."""
     import numpy as np
 
-    mlscoring._GRAIL_SEG_DICT_CACHE.clear()
+    clear_trained_caches(SF_DIR)
     spark_dict = mlscoring._grail_seg_dictionary(spark, SF_DIR)
     ddb_dict, ids = mlscoring._grail_seg_dictionary_ddb(SF_DIR)
     assert len(spark_dict) == len(ddb_dict) == len(ids)
@@ -126,7 +127,6 @@ def test_grail_embedding_is_affine_invariant(spark, tmp_path):
         map(tuple, mlscoring._grail_seg_coeffs(spark, dst).collect())
     )
     assert a == b
-    mlscoring._GRAIL_SEG_DICT_CACHE.pop(dst, None)
     shutil.rmtree(dst, ignore_errors=True)
 
 
@@ -183,5 +183,29 @@ def test_grail_span_guard_refuses_embed(spark, tmp_path):
     )
     with pytest.raises(Exception, match="GRAIL_SPAN_CENTS"):
         mlscoring._grail_seg_coeffs(spark, dst).collect()
-    mlscoring._GRAIL_SEG_DICT_CACHE.pop(dst, None)
     shutil.rmtree(dst, ignore_errors=True)
+
+
+def test_no_module_level_cache_outside_the_store():
+    """Derived state lives in the one fingerprint-keyed store in
+    tables.py. A module-level *_CACHE dict anywhere else would be keyed
+    by a path string and could serve stale state after an in-place
+    rewrite of a dataset."""
+    import importlib
+    import pkgutil
+
+    import timeseriesdb_spark
+
+    offenders = []
+    for info in pkgutil.walk_packages(
+        timeseriesdb_spark.__path__, "timeseriesdb_spark."
+    ):
+        if info.name == "timeseriesdb_spark.tables":
+            continue
+        module = importlib.import_module(info.name)
+        offenders += [
+            f"{info.name}.{name}"
+            for name, value in vars(module).items()
+            if name.endswith("_CACHE") and isinstance(value, dict)
+        ]
+    assert offenders == []

@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from timeseriesdb_spark.tables import load_table
+from timeseriesdb_spark.tables import derived, lazy_oracle, load_table
 
 LANG_TRAIN_CAP = 32   # labeled training docs per language
 LANG_PROFILE_K = 64   # trigrams per language profile
@@ -68,9 +68,6 @@ def _profiles_from_rows(
     return profiles
 
 
-_PROFILE_CACHE: dict[str, dict[str, dict[str, int]]] = {}
-
-
 def _train_profiles_spark(
     spark: SparkSession, sf_dir: str
 ) -> dict[str, dict[str, int]]:
@@ -78,26 +75,24 @@ def _train_profiles_spark(
     first LANG_TRAIN_CAP docs in (md5(doc_id), doc_id) order — a
     per-language uniform pseudo-random sample that never materializes
     the corpus (window + filter on a 3-column projection)."""
-    if sf_dir in _PROFILE_CACHE:
-        return _PROFILE_CACHE[sf_dir]
     from pyspark.sql import Window
 
-    w = Window.partitionBy("lang").orderBy(
-        F.md5(F.col("doc_id").cast("string")), "doc_id"
-    )
-    pdf = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang", "text")
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= LANG_TRAIN_CAP)
-        .select("lang", "doc_id", "text")
-        .toPandas()
-        .sort_values(["lang", "doc_id"])
-    )
-    _PROFILE_CACHE[sf_dir] = _profiles_from_rows(
-        list(zip(pdf["lang"], pdf["text"]))
-    )
-    return _PROFILE_CACHE[sf_dir]
+    def build() -> dict[str, dict[str, int]]:
+        w = Window.partitionBy("lang").orderBy(
+            F.md5(F.col("doc_id").cast("string")), "doc_id"
+        )
+        pdf = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "lang", "text")
+            .withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= LANG_TRAIN_CAP)
+            .select("lang", "doc_id", "text")
+            .toPandas()
+            .sort_values(["lang", "doc_id"])
+        )
+        return _profiles_from_rows(list(zip(pdf["lang"], pdf["text"])))
+
+    return derived(sf_dir, "langid.profiles", build)
 
 
 def _train_profiles_duck(sf_dir: str) -> dict[str, dict[str, int]]:
@@ -357,53 +352,35 @@ def _lang_id_core_sql(profiles: dict[str, dict[str, int]]) -> str:
     """
 
 
-def _resolve_sf_dir(sf_dir: str | None) -> str:
-    import os
-
-    return sf_dir or os.environ.get(
-        "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
-    )
-
-
-_LID_ORACLE_CACHE: dict[str, str] = {}
-_CONF_ORACLE_CACHE: dict[str, str] = {}
+def _lang_id_sql(sf_dir: str) -> str:
+    core = _lang_id_core_sql(_train_profiles_duck(sf_dir))
+    return f"""
+        WITH {core}
+        SELECT doc_id, lang, pred_lang, score, agree FROM lid
+    """
 
 
-def _lang_id_oracle(sf_dir: str | None = None) -> str:
-    sf_dir = _resolve_sf_dir(sf_dir)
-    if sf_dir not in _LID_ORACLE_CACHE:
-        core = _lang_id_core_sql(_train_profiles_duck(sf_dir))
-        _LID_ORACLE_CACHE[sf_dir] = f"""
-            WITH {core}
-            SELECT doc_id, lang, pred_lang, score, agree FROM lid
-        """
-    return _LID_ORACLE_CACHE[sf_dir]
-
-
-def _lang_confusion_oracle(sf_dir: str | None = None) -> str:
-    sf_dir = _resolve_sf_dir(sf_dir)
-    if sf_dir not in _CONF_ORACLE_CACHE:
-        core = _lang_id_core_sql(_train_profiles_duck(sf_dir))
-        _CONF_ORACLE_CACHE[sf_dir] = f"""
-            WITH {core},
-            conf AS (
-                SELECT lang, pred_lang, count(*) AS n_docs
-                FROM lid GROUP BY lang, pred_lang
-            ),
-            tot AS (
-                SELECT lang, CAST(sum(n_docs) AS BIGINT) AS lang_total
-                FROM conf GROUP BY lang
-            )
-            SELECT c.lang, c.pred_lang,
-                   CAST(c.n_docs AS BIGINT) AS n_docs,
-                   CAST((2 * c.n_docs * 1000000 + t.lang_total)
-                        // (2 * t.lang_total) AS BIGINT) AS share_ppm
-            FROM conf c JOIN tot t USING (lang)
-        """
-    return _CONF_ORACLE_CACHE[sf_dir]
+def _lang_confusion_sql(sf_dir: str) -> str:
+    core = _lang_id_core_sql(_train_profiles_duck(sf_dir))
+    return f"""
+        WITH {core},
+        conf AS (
+            SELECT lang, pred_lang, count(*) AS n_docs
+            FROM lid GROUP BY lang, pred_lang
+        ),
+        tot AS (
+            SELECT lang, CAST(sum(n_docs) AS BIGINT) AS lang_total
+            FROM conf GROUP BY lang
+        )
+        SELECT c.lang, c.pred_lang,
+               CAST(c.n_docs AS BIGINT) AS n_docs,
+               CAST((2 * c.n_docs * 1000000 + t.lang_total)
+                    // (2 * t.lang_total) AS BIGINT) AS share_ppm
+        FROM conf c JOIN tot t USING (lang)
+    """
 
 
 LAZY_ORACLES = {
-    "q_lang_id_ngram": _lang_id_oracle,
-    "q_lang_confusion": _lang_confusion_oracle,
+    "q_lang_id_ngram": lazy_oracle("q_lang_id_ngram", _lang_id_sql),
+    "q_lang_confusion": lazy_oracle("q_lang_confusion", _lang_confusion_sql),
 }

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from timeseriesdb_spark.operators.transforms import packed_grouped_map
-from timeseriesdb_spark.tables import load_table
+from timeseriesdb_spark.tables import derived, lazy_oracle, load_table
 
 DICT_K = 8       # dictionary (landmark) series: the K lowest signal ids
 GRAIL_GAMMA = 1.0
@@ -137,9 +137,6 @@ def q_grail_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packed_grouped_map(ev, embed, "user_id bigint, dim bigint, coeff double")
 
 
-_INT_DICT_CACHE: dict[str, list] = {}
-
-
 def _int_dictionary(spark: SparkSession, sf_dir: str) -> list:
     """The dictionary on the EXACT INTEGER lattice: per landmark
     signal, y = n·xi − Σxi with xi = round(value·100) — an affine
@@ -148,25 +145,19 @@ def _int_dictionary(spark: SparkSession, sf_dir: str) -> list:
     representable, which is what lets q_lcce carry a static DuckDB
     oracle and q_grail_embed a lazy one. Driver-side collect of K
     series only (the dictionary is small by construction; the corpus
-    never moves), cached per sf_dir — immutable input; registered in
-    similarity.clear_trained_caches for in-place rewrites."""
-    if sf_dir in _INT_DICT_CACHE:
-        return _INT_DICT_CACHE[sf_dir]
-    ev = load_table(spark, sf_dir, "events")
-    pdf = (
-        ev.filter(F.col("user_id") < DICT_K)
-        .select("user_id", "ts", "event_id", "value")
-        .toPandas()
-        .sort_values(["user_id", "ts", "event_id"])
-    )
-    out = []
-    for _, g in pdf.groupby("user_id", sort=True):
-        xi = np.floor(
-            g["value"].to_numpy(dtype=np.float64) * 100.0 + 0.5
-        ).astype(np.int64)
-        out.append(len(xi) * xi - xi.sum())
-    _INT_DICT_CACHE[sf_dir] = out
-    return out
+    never moves)."""
+
+    def build() -> list:
+        pdf = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("user_id") < DICT_K)
+            .select("user_id", "ts", "event_id", "value")
+            .toPandas()
+            .sort_values(["user_id", "ts", "event_id"])
+        )
+        return _int_images(pdf)
+
+    return derived(sf_dir, "mlkernels.int_dict", build)
 
 
 def q_lcce(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,14 +211,6 @@ def q_lcce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _resolve_sf_dir(sf_dir: str | None) -> str:
-    import os
-
-    return sf_dir or os.environ.get(
-        "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
-    )
-
-
 def _int_dictionary_ddb(sf_dir: str) -> list:
     """The q_lcce integer-lattice dictionary, read via DuckDB (the
     oracle path has no SparkSession): same parquet doubles, same
@@ -243,6 +226,12 @@ def _int_dictionary_ddb(sf_dir: str) -> list:
         f"WHERE user_id < {DICT_K} ORDER BY user_id, ts, event_id"
     ).fetch_df()
     con.close()
+    return _int_images(pdf)
+
+
+def _int_images(pdf: pd.DataFrame) -> list:
+    """y = n·xi − Σxi per user_id (ascending), xi = round(value·100),
+    from rows already in (user_id, ts, event_id) order."""
     out = []
     for _, g in pdf.groupby("user_id", sort=True):
         xi = np.floor(
@@ -252,10 +241,7 @@ def _int_dictionary_ddb(sf_dir: str) -> list:
     return out
 
 
-_GRAIL_ORACLE_CACHE: dict[str, str] = {}
-
-
-def _grail_oracle(sf_dir: str | None = None) -> str:
+def _grail_sql(sf_dir: str) -> str:
     """DuckDB replay of the quantized-SINK GRAIL embedding: the lattice
     NCC pipeline is q_lcce's oracle with max(cc) in place of the
     argmax tie-break, the kernel is a 129+64-row VALUES lookup
@@ -263,98 +249,95 @@ def _grail_oracle(sf_dir: str | None = None) -> str:
     per-dim left-associative chain over the factory-retrained
     projection literals. LAZY: proj/e1/e2 come from rerunning
     _grail_params on the DuckDB-read dictionary at oracle_sql() time."""
-    sf_dir = _resolve_sf_dir(sf_dir)
-    if sf_dir not in _GRAIL_ORACLE_CACHE:
-        proj, e1, e2 = _grail_params(_int_dictionary_ddb(sf_dir))
-        K, D = proj.shape
-        # {v:.17e} — exponent-form literals parse DIRECTLY as DOUBLE
-        # (strtod, correctly rounded = exact repr round-trip). A bare
-        # decimal literal is DECIMAL first, and DECIMAL-domain folding
-        # of casts/products drifts 1 ulp (measured r11) — the HUGEINT
-        # double-rounding gotcha in literal clothing.
-        e1rows = ", ".join(
-            f"({h - 64}, {float(v):.17e})" for h, v in enumerate(e1)
-        )
-        e2rows = ", ".join(
-            f"({l}, {float(v):.17e})" for l, v in enumerate(e2)
-        )
-        kcols = ", ".join(
-            f"max(CASE WHEN dict_id = {j} THEN kv END) AS k{j}"
-            for j in range(K)
-        )
-        cases = []
-        for dim in range(D):
-            chain = f"(k0 * {float(proj[0, dim]):.17e})"
-            for j in range(1, K):
-                chain = (
-                    f"({chain} + (k{j} * {float(proj[j, dim]):.17e}))"
-                )
-            cases.append(f"WHEN {dim} THEN {chain}")
-        case = " ".join(cases)
-        dimvals = ", ".join(f"({d})" for d in range(D))
-        _GRAIL_ORACLE_CACHE[sf_dir] = f"""
-            WITH ord AS MATERIALIZED (
-                SELECT user_id,
-                       row_number() OVER (
-                           PARTITION BY user_id ORDER BY ts, event_id
-                       ) - 1 AS j,
-                       CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS xi,
-                       count(*) OVER (PARTITION BY user_id) AS n
-                FROM events
-            ),
-            ys AS MATERIALIZED (
-                SELECT user_id, j, n * xi - sx AS y
-                FROM (
-                    SELECT user_id, j, xi, n,
-                           sum(xi) OVER (PARTITION BY user_id) AS sx
-                    FROM ord
-                )
-            ),
-            dt AS MATERIALIZED (
-                SELECT user_id AS dict_id, j AS i, y AS d
-                FROM ys WHERE user_id < {DICT_K}
-            ),
-            nx AS (SELECT user_id, sum(y * y) AS sy FROM ys GROUP BY user_id),
-            nd AS (SELECT dict_id, sum(d * d) AS sd FROM dt GROUP BY dict_id),
-            cc AS MATERIALIZED (
-                SELECT x.user_id, d.dict_id, x.j - d.i AS lag,
-                       sum(x.y * d.d) AS cc
-                FROM ys x, dt d
-                GROUP BY x.user_id, d.dict_id, x.j - d.i
-            ),
-            mx AS (
-                SELECT user_id, dict_id, max(cc) AS mc
-                FROM cc GROUP BY user_id, dict_id
-            ),
-            qv AS (
-                SELECT m.user_id, m.dict_id,
-                       CASE WHEN nx.sy = 0 OR nd.sd = 0 THEN 0
-                            ELSE CAST(floor(
-                                CAST(m.mc AS DOUBLE)
-                                / (sqrt(CAST(nx.sy AS DOUBLE))
-                                   * sqrt(CAST(nd.sd AS DOUBLE)))
-                                * {GRAIL_Q}.0 + 0.5) AS BIGINT) END AS q
-                FROM mx m
-                JOIN nx ON nx.user_id = m.user_id
-                JOIN nd ON nd.dict_id = m.dict_id
-            ),
-            e1(h, v) AS (VALUES {e1rows}),
-            e2(l, v) AS (VALUES {e2rows}),
-            kvt AS (
-                SELECT s.user_id, s.dict_id, e1.v * e2.v AS kv
-                FROM (
-                    SELECT user_id, dict_id, q,
-                           CAST(floor(q / 64.0) AS BIGINT) AS qh
-                    FROM qv
-                ) s
-                JOIN e1 ON e1.h = s.qh
-                JOIN e2 ON e2.l = s.q - 64 * s.qh
-            ),
-            kp AS (SELECT user_id, {kcols} FROM kvt GROUP BY user_id)
-            SELECT kp.user_id, dm.dim, CASE dm.dim {case} END AS coeff
-            FROM kp CROSS JOIN (VALUES {dimvals}) AS dm(dim)
-        """
-    return _GRAIL_ORACLE_CACHE[sf_dir]
+    proj, e1, e2 = _grail_params(_int_dictionary_ddb(sf_dir))
+    K, D = proj.shape
+    # {v:.17e} — exponent-form literals parse DIRECTLY as DOUBLE
+    # (strtod, correctly rounded = exact repr round-trip). A bare
+    # decimal literal is DECIMAL first, and DECIMAL-domain folding
+    # of casts/products drifts 1 ulp (measured r11) — the HUGEINT
+    # double-rounding gotcha in literal clothing.
+    e1rows = ", ".join(
+        f"({h - 64}, {float(v):.17e})" for h, v in enumerate(e1)
+    )
+    e2rows = ", ".join(
+        f"({l}, {float(v):.17e})" for l, v in enumerate(e2)
+    )
+    kcols = ", ".join(
+        f"max(CASE WHEN dict_id = {j} THEN kv END) AS k{j}"
+        for j in range(K)
+    )
+    cases = []
+    for dim in range(D):
+        chain = f"(k0 * {float(proj[0, dim]):.17e})"
+        for j in range(1, K):
+            chain = (
+                f"({chain} + (k{j} * {float(proj[j, dim]):.17e}))"
+            )
+        cases.append(f"WHEN {dim} THEN {chain}")
+    case = " ".join(cases)
+    dimvals = ", ".join(f"({d})" for d in range(D))
+    return f"""
+        WITH ord AS MATERIALIZED (
+            SELECT user_id,
+                   row_number() OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                   ) - 1 AS j,
+                   CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS xi,
+                   count(*) OVER (PARTITION BY user_id) AS n
+            FROM events
+        ),
+        ys AS MATERIALIZED (
+            SELECT user_id, j, n * xi - sx AS y
+            FROM (
+                SELECT user_id, j, xi, n,
+                       sum(xi) OVER (PARTITION BY user_id) AS sx
+                FROM ord
+            )
+        ),
+        dt AS MATERIALIZED (
+            SELECT user_id AS dict_id, j AS i, y AS d
+            FROM ys WHERE user_id < {DICT_K}
+        ),
+        nx AS (SELECT user_id, sum(y * y) AS sy FROM ys GROUP BY user_id),
+        nd AS (SELECT dict_id, sum(d * d) AS sd FROM dt GROUP BY dict_id),
+        cc AS MATERIALIZED (
+            SELECT x.user_id, d.dict_id, x.j - d.i AS lag,
+                   sum(x.y * d.d) AS cc
+            FROM ys x, dt d
+            GROUP BY x.user_id, d.dict_id, x.j - d.i
+        ),
+        mx AS (
+            SELECT user_id, dict_id, max(cc) AS mc
+            FROM cc GROUP BY user_id, dict_id
+        ),
+        qv AS (
+            SELECT m.user_id, m.dict_id,
+                   CASE WHEN nx.sy = 0 OR nd.sd = 0 THEN 0
+                        ELSE CAST(floor(
+                            CAST(m.mc AS DOUBLE)
+                            / (sqrt(CAST(nx.sy AS DOUBLE))
+                               * sqrt(CAST(nd.sd AS DOUBLE)))
+                            * {GRAIL_Q}.0 + 0.5) AS BIGINT) END AS q
+            FROM mx m
+            JOIN nx ON nx.user_id = m.user_id
+            JOIN nd ON nd.dict_id = m.dict_id
+        ),
+        e1(h, v) AS (VALUES {e1rows}),
+        e2(l, v) AS (VALUES {e2rows}),
+        kvt AS (
+            SELECT s.user_id, s.dict_id, e1.v * e2.v AS kv
+            FROM (
+                SELECT user_id, dict_id, q,
+                       CAST(floor(q / 64.0) AS BIGINT) AS qh
+                FROM qv
+            ) s
+            JOIN e1 ON e1.h = s.qh
+            JOIN e2 ON e2.l = s.q - 64 * s.qh
+        ),
+        kp AS (SELECT user_id, {kcols} FROM kvt GROUP BY user_id)
+        SELECT kp.user_id, dm.dim, CASE dm.dim {case} END AS coeff
+        FROM kp CROSS JOIN (VALUES {dimvals}) AS dm(dim)
+    """
 
 
 QUERIES = {
@@ -362,7 +345,7 @@ QUERIES = {
     "q_lcce": q_lcce,
 }
 
-LAZY_ORACLES = {"q_grail_embed": _grail_oracle}
+LAZY_ORACLES = {"q_grail_embed": lazy_oracle("q_grail_embed", _grail_sql)}
 
 # Both kernels converted (q_lcce r11, q_grail_embed late r11): the
 # integer-lattice cross-correlation replays exactly — exact int sums

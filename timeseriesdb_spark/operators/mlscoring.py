@@ -38,12 +38,14 @@ family.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from timeseriesdb_spark.tables import load_table
+from timeseriesdb_spark.tables import derived, lazy_oracle, load_table
 
 SEG_ROWS = 64     # rows per scored segment (ref segment_size scaled down)
 N_CLUSTERS = 4
@@ -65,28 +67,23 @@ def _features(values: np.ndarray) -> np.ndarray:
     )
 
 
-_CENTERS_CACHE: dict[str, np.ndarray] = {}
-_TREE_CACHE: dict[str, tuple] = {}
-_SAMPLE_CACHE: dict[str, np.ndarray] = {}
-
-
 def _sample_features(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """Segment features of the bounded training sample (the
     dictionary-sized subset the reference trains smartcore models on,
     lossyML/src/main.rs:26-64): SAMPLE_SIGNALS signals, SEG_ROWS
-    segments, one (mean, std, min, max) row each. Cached per sf_dir —
-    each family's training starts from the same immutable sample."""
-    if sf_dir in _SAMPLE_CACHE:
-        return _SAMPLE_CACHE[sf_dir]
-    ev = load_table(spark, sf_dir, "events")
-    pdf = (
-        ev.filter(F.col("user_id") < SAMPLE_SIGNALS)
-        .select("user_id", "ts", "event_id", "value")
-        .toPandas()
-    )
-    X = _sample_features_from_pdf(pdf)
-    _SAMPLE_CACHE[sf_dir] = X
-    return X
+    segments, one (mean, std, min, max) row each. Derived once per data
+    version — each family's training starts from the same sample."""
+
+    def build() -> np.ndarray:
+        pdf = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("user_id") < SAMPLE_SIGNALS)
+            .select("user_id", "ts", "event_id", "value")
+            .toPandas()
+        )
+        return _sample_features_from_pdf(pdf)
+
+    return derived(sf_dir, "mlscoring.sample", build)
 
 
 def _sample_features_from_pdf(pdf: "pd.DataFrame") -> np.ndarray:
@@ -105,13 +102,12 @@ def _sample_features_from_pdf(pdf: "pd.DataFrame") -> np.ndarray:
 def _train_kmeans(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """Deterministic Lloyd's iterations on segment features of the
     sample signals; init = evenly spaced sorted-by-mean features (no
-    RNG → reproducible across runs/partitionings). Cached per sf_dir —
-    the training sample is immutable input."""
-    if sf_dir in _CENTERS_CACHE:
-        return _CENTERS_CACHE[sf_dir]
-    centers = _kmeans_centers_np(_sample_features(spark, sf_dir))
-    _CENTERS_CACHE[sf_dir] = centers
-    return centers
+    RNG → reproducible across runs/partitionings)."""
+    return derived(
+        sf_dir,
+        "mlscoring.kmeans",
+        lambda: _kmeans_centers_np(_sample_features(spark, sf_dir)),
+    )
 
 
 def _kmeans_centers_np(X: np.ndarray) -> np.ndarray:
@@ -142,11 +138,11 @@ def _train_tree(spark: SparkSession, sf_dir: str) -> tuple:
     labels. Returns ((j0,t0),(jL,tL),(jR,tR)) — three (feature_idx,
     threshold) pairs, a broadcast-sized model like the kmeans
     centers."""
-    if sf_dir in _TREE_CACHE:
-        return _TREE_CACHE[sf_dir]
-    tree = _tree_np(_sample_features(spark, sf_dir))
-    _TREE_CACHE[sf_dir] = tree
-    return tree
+    return derived(
+        sf_dir,
+        "mlscoring.tree",
+        lambda: _tree_np(_sample_features(spark, sf_dir)),
+    )
 
 
 def _tree_np(X: np.ndarray) -> tuple:
@@ -320,53 +316,12 @@ def _features_from_chunks(chunks: DataFrame) -> DataFrame:
     )
 
 
-# r14 OPTIMIZATION-ROUND REMOVAL: r13 persisted the per-(sf_dir, tier)
-# reconstruction feature frame MEMORY_AND_DISK in a module-level cache
-# (the four families of a tier label identical rows, so the frame was
-# shared across the q_*_drift_* cells — a VERDICT r12 efficiency
-# target). Under the optimization-round rules that persist is
-# cross-invocation result caching: a TIMED bench run of a drift cell
-# must recompute its tier's reconstruction (PAA read-back, integer
-# DFT, GRAIL embedding) from the parquet inputs, not read rows its
-# warm-up persisted. Every cell now rebuilds its tier frame per
-# invocation; the bench medians honestly include the reconstruction
-# work the query claims to measure. (Driver-side trained-model
-# parameters — centroids, tree thresholds — are NOT results but query
-# constants the DuckDB oracles embed as literals; see
-# OPTIMIZATION_r14.md "Caching audit".)
-
-
-def _cached_tier_feats(
-    spark: SparkSession, sf_dir: str, tier: str, build
-) -> DataFrame:
-    """Build the tier's feature frame per invocation (name kept so the
-    call sites read as 'the shared tier frame'; no state survives the
-    call — see the removal note above)."""
-    return build()
-
-
-def clear_tier_feats(sf_dir: str | None = None) -> None:
-    """No-op since the r14 cross-invocation persist removal; retained
-    so existing invalidation hooks (clear_trained_caches, probes,
-    tests) need no signature change."""
-
-
 def _drift_result(
     spark: SparkSession, sf_dir: str, label_of
 ) -> DataFrame:
     """Shared drift rollup over the PAA-tier feature frame."""
-    # the tier key carries PAA_CHUNK: the frame depends on it, and the
-    # identity-degradation pin (tests) legitimately overrides it to 1
     return _drift_rollup(
-        spark,
-        sf_dir,
-        _cached_tier_feats(
-            spark,
-            sf_dir,
-            f"paa{PAA_CHUNK}",
-            lambda: _segment_features(spark, sf_dir),
-        ),
-        label_of,
+        spark, sf_dir, _segment_features(spark, sf_dir), label_of
     )
 
 
@@ -709,9 +664,6 @@ def _check_grail_span(xi: "np.ndarray", where: str) -> None:
         )
 
 
-_GRAIL_SEG_DICT_CACHE: dict[str, list] = {}
-
-
 def _grail_seg_dictionary(spark: SparkSession, sf_dir: str) -> list:
     """Segment-granular GRAIL dictionary: the FIRST complete segment
     (SEG_ROWS rows by (ts, event_id)) of each of the first
@@ -721,20 +673,21 @@ def _grail_seg_dictionary(spark: SparkSession, sf_dir: str) -> list:
     z-normalized correlation is mathematically unchanged but every
     cross-term is an exact int64). Bounded driver pull:
     GRAIL_DICT_K × SEG_ROWS rows via a row_number prefilter."""
-    if sf_dir in _GRAIL_SEG_DICT_CACHE:
-        return _GRAIL_SEG_DICT_CACHE[sf_dir]
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pdf = (
-        ev.filter(F.col("user_id") < GRAIL_DICT_K)
-        .select(
-            "user_id", "value", F.row_number().over(w).alias("rn")
+
+    def build() -> list:
+        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+        pdf = (
+            load_table(spark, sf_dir, "events")
+            .filter(F.col("user_id") < GRAIL_DICT_K)
+            .select(
+                "user_id", "value", F.row_number().over(w).alias("rn")
+            )
+            .where(F.col("rn") <= SEG_ROWS)
+            .toPandas()
         )
-        .where(F.col("rn") <= SEG_ROWS)
-        .toPandas()
-    )
-    _GRAIL_SEG_DICT_CACHE[sf_dir] = _seg_dict_from_pdf(pdf)
-    return _GRAIL_SEG_DICT_CACHE[sf_dir]
+        return _seg_dict_from_pdf(pdf)
+
+    return derived(sf_dir, "mlscoring.grail_dict", build)
 
 
 def _seg_dict_from_pdf(pdf: "pd.DataFrame") -> list:
@@ -842,15 +795,10 @@ def _grail_tier_query(family: str):
     GRAIL representation)."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        def build() -> DataFrame:
-            raw = _segment_features(spark, sf_dir).select(
-                "user_id", "seg", *_FEATS_RAW
-            )
-            return raw.join(
-                _grail_seg_coeffs(spark, sf_dir), ["user_id", "seg"]
-            )
-
-        feats = _cached_tier_feats(spark, sf_dir, "grail", build)
+        raw = _segment_features(spark, sf_dir).select(
+            "user_id", "seg", *_FEATS_RAW
+        )
+        feats = raw.join(_grail_seg_coeffs(spark, sf_dir), ["user_id", "seg"])
         return _drift_rollup(
             spark, sf_dir, feats, _LABELERS[family](spark, sf_dir)
         )
@@ -879,14 +827,7 @@ def _tier_query(family: str, tier: str):
     the original q_*_drift family."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        feats = _cached_tier_feats(
-            spark,
-            sf_dir,
-            tier,
-            lambda: _fft_segment_features(
-                spark, sf_dir, _RECON_FNS[tier]()
-            ),
-        )
+        feats = _fft_segment_features(spark, sf_dir, _RECON_FNS[tier]())
         return _drift_rollup(
             spark, sf_dir, feats, _LABELERS[family](spark, sf_dir)
         )
@@ -1050,34 +991,24 @@ def _drift_tail_sql(labeled_sql: str) -> str:
     """
 
 
-def _resolve_sf_dir(sf_dir: str | None) -> str:
-    import os
-
-    return sf_dir or os.environ.get(
-        "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
-    )
-
-
-_ORACLE_SAMPLE_CACHE: dict[str, np.ndarray] = {}
-
-
 def _oracle_sample(sf_dir: str) -> np.ndarray:
     """The training sample via DuckDB — byte-identical to
-    _sample_features (same rows, same sort, same numpy body). Cached
-    per sf_dir and shared by the four drift-oracle factories, and the
-    factories only call it on an SQL-cache MISS, so a fully-cached
-    resolve_oracles() re-reads no parquet (ADVICE r9)."""
+    _sample_features (same rows, same sort, same numpy body). Shared
+    by every drift-oracle factory, which only call it on an SQL miss,
+    so a fully-cached resolve_oracles() re-reads no parquet (ADVICE
+    r9)."""
     import duckdb
 
-    if sf_dir not in _ORACLE_SAMPLE_CACHE:
-        con = duckdb.connect()
-        pdf = con.execute(
-            f"SELECT user_id, ts, event_id, value "
-            f"FROM '{sf_dir}/events.parquet' "
-            f"WHERE user_id < {SAMPLE_SIGNALS}"
-        ).fetch_df()
-        _ORACLE_SAMPLE_CACHE[sf_dir] = _sample_features_from_pdf(pdf)
-    return _ORACLE_SAMPLE_CACHE[sf_dir]
+    def build() -> np.ndarray:
+        with duckdb.connect() as con:
+            pdf = con.execute(
+                f"SELECT user_id, ts, event_id, value "
+                f"FROM '{sf_dir}/events.parquet' "
+                f"WHERE user_id < {SAMPLE_SIGNALS}"
+            ).fetch_df()
+        return _sample_features_from_pdf(pdf)
+
+    return derived(sf_dir, "mlscoring.oracle_sample", build)
 
 
 def _kmeans_dists_sql(C: np.ndarray, cols) -> list[str]:
@@ -1097,9 +1028,6 @@ def _argmin_case_sql(names: list[str]) -> str:
         for k in range(len(names) - 1)
     )
     return f"CASE {whens} ELSE {len(names) - 1} END"
-
-
-_KM_ORACLE_CACHE: dict[str, str] = {}
 
 
 def _kmeans_labeled_sql(sf_dir: str) -> str:
@@ -1124,15 +1052,6 @@ def _kmeans_labeled_sql(sf_dir: str) -> str:
         )"""
 
 
-def _kmeans_drift_oracle(sf_dir: str | None = None) -> str:
-    sf_dir = _resolve_sf_dir(sf_dir)
-    if sf_dir not in _KM_ORACLE_CACHE:
-        _KM_ORACLE_CACHE[sf_dir] = _drift_tail_sql(
-            _kmeans_labeled_sql(sf_dir)
-        )
-    return _KM_ORACLE_CACHE[sf_dir]
-
-
 def _tree_case_sql(tree, cols) -> str:
     (j0, t0), (jl, tl), (jr, tr) = tree
     return (
@@ -1140,9 +1059,6 @@ def _tree_case_sql(tree, cols) -> str:
         f"(CASE WHEN {cols[jl]} <= {_dk(tl)} THEN 0 ELSE 1 END) "
         f"ELSE (CASE WHEN {cols[jr]} <= {_dk(tr)} THEN 2 ELSE 3 END) END"
     )
-
-
-_TREE_ORACLE_CACHE: dict[str, str] = {}
 
 
 def _tree_labeled_sql(sf_dir: str) -> str:
@@ -1153,15 +1069,6 @@ def _tree_labeled_sql(sf_dir: str) -> str:
                    {_tree_case_sql(tree, _DEG_COLS)} AS ld
             FROM feats
         )"""
-
-
-def _tree_drift_oracle(sf_dir: str | None = None) -> str:
-    sf_dir = _resolve_sf_dir(sf_dir)
-    if sf_dir not in _TREE_ORACLE_CACHE:
-        _TREE_ORACLE_CACHE[sf_dir] = _drift_tail_sql(
-            _tree_labeled_sql(sf_dir)
-        )
-    return _TREE_ORACLE_CACHE[sf_dir]
 
 
 def _forest_label_sql(forest, cols) -> str:
@@ -1186,9 +1093,6 @@ def _forest_label_sql(forest, cols) -> str:
     return f"CASE {whens} ELSE {N_CLUSTERS - 1} END"
 
 
-_FOREST_ORACLE_CACHE: dict[str, str] = {}
-
-
 def _forest_labeled_sql(sf_dir: str) -> str:
     X = _oracle_sample(sf_dir)
     forest = _forest_np(X, _kmeans_labels(X, _kmeans_centers_np(X)))
@@ -1198,18 +1102,6 @@ def _forest_labeled_sql(sf_dir: str) -> str:
                    {_forest_label_sql(forest, _DEG_COLS)} AS ld
             FROM feats
         )"""
-
-
-def _forest_drift_oracle(sf_dir: str | None = None) -> str:
-    sf_dir = _resolve_sf_dir(sf_dir)
-    if sf_dir not in _FOREST_ORACLE_CACHE:
-        _FOREST_ORACLE_CACHE[sf_dir] = _drift_tail_sql(
-            _forest_labeled_sql(sf_dir)
-        )
-    return _FOREST_ORACLE_CACHE[sf_dir]
-
-
-_KNN_ORACLE_CACHE: dict[str, str] = {}
 
 
 def _knn_labeled_sql(sf_dir: str) -> str:
@@ -1246,15 +1138,6 @@ def _knn_labeled_sql(sf_dir: str) -> str:
             SELECT l.user_id, l.lr, d.ld
             FROM lr l JOIN ld d USING (user_id, seg)
         )"""
-
-
-def _knn_drift_oracle(sf_dir: str | None = None) -> str:
-    sf_dir = _resolve_sf_dir(sf_dir)
-    if sf_dir not in _KNN_ORACLE_CACHE:
-        _KNN_ORACLE_CACHE[sf_dir] = _drift_tail_sql(
-            _knn_labeled_sql(sf_dir)
-        )
-    return _KNN_ORACLE_CACHE[sf_dir]
 
 
 def _fft_drift_tail_sql(fft_sql: str, labeled_sql: str) -> str:
@@ -1328,37 +1211,29 @@ _LABELED_SQL = {
 }
 
 
-def _make_tier_oracle(family: str, tier: str):
-    """Oracle factory for one (family, tier) cell: the family's
-    labeled CTE over the tier's reconstruction frame. The FFT recon
-    SQL is lazy (per-distinct-n twiddle tables); the PLA recon SQL is
-    static (the LTTB selection needs no trained state) — only the
-    family model makes either factory lazy."""
-    cache: dict[str, str] = {}
+def _paa_oracle_sql(family: str, sf_dir: str) -> str:
+    return _drift_tail_sql(_LABELED_SQL[family](sf_dir))
 
-    def factory(sf_dir: str | None = None) -> str:
-        sf_dir = _resolve_sf_dir(sf_dir)
-        if sf_dir not in cache:
-            if tier == "fft":
-                from timeseriesdb_spark.operators.transforms import (
-                    _fft_recon_oracle,
-                )
 
-                recon = _fft_recon_oracle(sf_dir)
-            elif tier == "pla":
-                from timeseriesdb_spark.operators.transforms import (
-                    ORACLES as _T_ORACLES,
-                )
+def _tier_oracle_sql(family: str, tier: str, sf_dir: str) -> str:
+    """Oracle SQL for one (family, tier) cell: the family's labeled CTE
+    over the tier's reconstruction frame. The FFT recon SQL is lazy
+    (per-distinct-n twiddle tables); the PLA recon SQL is static (the
+    LTTB selection needs no trained state) — only the family model
+    makes either oracle lazy."""
+    if tier == "fft":
+        from timeseriesdb_spark.operators.transforms import _fft_recon_oracle
 
-                recon = _T_ORACLES["q_pla_recon"]
-            else:
-                recon = _RECON_SQL[tier]
-            cache[sf_dir] = _fft_drift_tail_sql(
-                recon, _LABELED_SQL[family](sf_dir)
-            )
-        return cache[sf_dir]
+        recon = _fft_recon_oracle(sf_dir)
+    elif tier == "pla":
+        from timeseriesdb_spark.operators.transforms import (
+            ORACLES as _T_ORACLES,
+        )
 
-    return factory
+        recon = _T_ORACLES["q_pla_recon"]
+    else:
+        recon = _RECON_SQL[tier]
+    return _fft_drift_tail_sql(recon, _LABELED_SQL[family](sf_dir))
 
 
 def _grail_seg_dictionary_ddb(sf_dir: str) -> tuple[list, list]:
@@ -1387,8 +1262,8 @@ def _grail_seg_dictionary_ddb(sf_dir: str) -> tuple[list, list]:
     return _seg_dict_from_pdf(pdf), ids
 
 
-def _make_grail_oracle(family: str):
-    """Oracle factory for one GRAIL cell: the q_grail_embed lattice
+def _grail_oracle_sql(family: str, sf_dir: str) -> str:
+    """Oracle SQL for one GRAIL cell: the q_grail_embed lattice
     replay (exact-int NCC per (segment, landmark), quantized-SINK
     e1·e2 table lookup, left-associative projection chains) at
     SEGMENT granularity, joined to the exact-decimal raw features and
@@ -1396,152 +1271,140 @@ def _make_grail_oracle(family: str):
     agreement tail."""
     from timeseriesdb_spark.operators.mlkernels import _grail_params
 
-    cache: dict[str, str] = {}
-
-    def factory(sf_dir: str | None = None) -> str:
-        sf_dir = _resolve_sf_dir(sf_dir)
-        if sf_dir in cache:
-            return cache[sf_dir]
-        int_dict, dict_ids = _grail_seg_dictionary_ddb(sf_dir)
-        proj, e1, e2 = _grail_params(int_dict)
-        K = len(int_dict)
-        e1rows = ", ".join(
-            f"({h - 64}, {float(v):.17e})" for h, v in enumerate(e1)
-        )
-        e2rows = ", ".join(
-            f"({l}, {float(v):.17e})" for l, v in enumerate(e2)
-        )
-        kcols = ", ".join(
-            f"max(CASE WHEN dict_id = {dict_ids[j]} THEN kv END) AS k{j}"
-            for j in range(K)
-        )
-        chains = []
-        for dim, cname in enumerate(_FEATS_DEG):
-            chain = f"(k0 * {float(proj[0, dim]):.17e})"
-            for j in range(1, K):
-                chain = f"({chain} + (k{j} * {float(proj[j, dim]):.17e}))"
-            chains.append(f"{chain} AS {cname}")
-        cache[sf_dir] = f"""
-        WITH ord AS MATERIALIZED (
-            SELECT user_id,
-                   row_number() OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                   ) - 1 AS rn,
-                   CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS xi,
-                   CAST(CAST(value AS DECIMAL(38,6)) AS DOUBLE) AS v
-            FROM events
-        ),
-        comp AS MATERIALIZED (
-            SELECT * FROM (
-                SELECT user_id, rn // {SEG_ROWS} AS seg,
-                       rn % {SEG_ROWS} AS j, xi, v,
-                       count(*) OVER (
-                           PARTITION BY user_id, rn // {SEG_ROWS}
-                       ) AS n
-                FROM ord)
-            WHERE n = {SEG_ROWS}
-        ),
-        ys AS MATERIALIZED (
-            SELECT user_id, seg, j, {SEG_ROWS} * xi - sx AS y
-            FROM (SELECT user_id, seg, j, xi,
-                         sum(xi) OVER (PARTITION BY user_id, seg) AS sx
-                  FROM comp)
-        ),
-        dt AS MATERIALIZED (
-            SELECT user_id AS dict_id, j AS i, y AS d
-            FROM ys WHERE user_id < {GRAIL_DICT_K} AND seg = 0
-        ),
-        nx AS (SELECT user_id, seg, sum(y * y) AS sy
-               FROM ys GROUP BY 1, 2),
-        nd AS (SELECT dict_id, sum(d * d) AS sd FROM dt GROUP BY 1),
-        cc AS MATERIALIZED (
-            SELECT x.user_id, x.seg, d.dict_id, x.j - d.i AS lag,
-                   sum(x.y * d.d) AS cc
-            FROM ys x, dt d
-            GROUP BY 1, 2, 3, 4
-        ),
-        mx AS (SELECT user_id, seg, dict_id, max(cc) AS mc
-               FROM cc GROUP BY 1, 2, 3),
-        qv AS (
-            SELECT m.user_id, m.seg, m.dict_id,
-                   CASE WHEN nx.sy = 0 OR nd.sd = 0 THEN 0
-                        ELSE CAST(floor(
-                            CAST(m.mc AS DOUBLE)
-                            / (sqrt(CAST(nx.sy AS DOUBLE))
-                               * sqrt(CAST(nd.sd AS DOUBLE)))
-                            * 4096.0 + 0.5) AS BIGINT) END AS q
-            FROM mx m
-            JOIN nx ON nx.user_id = m.user_id AND nx.seg = m.seg
-            JOIN nd ON nd.dict_id = m.dict_id
-        ),
-        e1(h, v) AS (VALUES {e1rows}),
-        e2(l, v) AS (VALUES {e2rows}),
-        kvt AS (
-            SELECT s.user_id, s.seg, s.dict_id, e1.v * e2.v AS kv
-            FROM (SELECT user_id, seg, dict_id, q,
-                         CAST(floor(q / 64.0) AS BIGINT) AS qh
-                  FROM qv) s
-            JOIN e1 ON e1.h = s.qh
-            JOIN e2 ON e2.l = s.q - 64 * s.qh
-        ),
-        kp AS (SELECT user_id, seg, {kcols} FROM kvt GROUP BY 1, 2),
-        emb AS (SELECT user_id, seg, {", ".join(chains)} FROM kp),
-        rawf AS (
-            SELECT user_id, seg,
-                   CAST(su AS DOUBLE) / nn / 1000000.0 AS f_mean,
-                   sqrt(greatest(CAST(ssu AS DOUBLE) / nn / 1000000.0
-                        - (CAST(su AS DOUBLE) / nn / 1000000.0)
-                        * (CAST(su AS DOUBLE) / nn / 1000000.0), 0.0))
-                       AS f_std,
-                   f_min, f_max
-            FROM (
-                SELECT user_id, seg,
-                       CAST(sum(CAST(v AS DECIMAL(38,6))) * 1000000
-                            AS BIGINT) AS su,
-                       CAST(sum(CAST(v * v AS DECIMAL(38,6))) * 1000000
-                            AS BIGINT) AS ssu,
-                       min(v) AS f_min, max(v) AS f_max,
-                       count(*) AS nn
-                FROM comp GROUP BY 1, 2)
-        ),
-        feats AS (
-            SELECT r.user_id, r.seg, f_mean, f_std, f_min, f_max,
-                   d_mean, d_std, d_min, d_max
-            FROM rawf r
-            JOIN emb e ON e.user_id = r.user_id AND e.seg = r.seg
-        ),
-        {_LABELED_SQL[family](sf_dir)},
-        per_user AS (
-            SELECT user_id, count(*) AS n_segments,
-                   CAST(sum(CASE WHEN lr = ld THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_agree
-            FROM labeled GROUP BY user_id
-        ),
-        users AS (SELECT DISTINCT user_id FROM events)
-        SELECT u.user_id,
-               CAST(coalesce(p.n_segments, 0) AS BIGINT) AS n_segments,
-               CAST(coalesce(p.n_agree, 0) AS BIGINT) AS n_agree,
-               CASE WHEN coalesce(p.n_segments, 0) > 0
-                    THEN round(p.n_agree / p.n_segments, 6)
-               END AS agree_rate
-        FROM users u LEFT JOIN per_user p USING (user_id)
-        """
-        return cache[sf_dir]
-
-    return factory
-
-
-LAZY_ORACLES = {
-    "q_kmeans_drift": _kmeans_drift_oracle,
-    "q_tree_drift": _tree_drift_oracle,
-    "q_knn_drift": _knn_drift_oracle,
-    "q_forest_drift": _forest_drift_oracle,
-}
-for _family in ("kmeans", "tree", "knn", "forest"):
-    for _tier in ("fft", "pla", "rrd", "buff"):
-        LAZY_ORACLES[f"q_{_family}_drift_{_tier}"] = _make_tier_oracle(
-            _family, _tier
-        )
-    LAZY_ORACLES[f"q_{_family}_drift_grail"] = _make_grail_oracle(
-        _family
+    int_dict, dict_ids = _grail_seg_dictionary_ddb(sf_dir)
+    proj, e1, e2 = _grail_params(int_dict)
+    K = len(int_dict)
+    e1rows = ", ".join(
+        f"({h - 64}, {float(v):.17e})" for h, v in enumerate(e1)
     )
+    e2rows = ", ".join(
+        f"({l}, {float(v):.17e})" for l, v in enumerate(e2)
+    )
+    kcols = ", ".join(
+        f"max(CASE WHEN dict_id = {dict_ids[j]} THEN kv END) AS k{j}"
+        for j in range(K)
+    )
+    chains = []
+    for dim, cname in enumerate(_FEATS_DEG):
+        chain = f"(k0 * {float(proj[0, dim]):.17e})"
+        for j in range(1, K):
+            chain = f"({chain} + (k{j} * {float(proj[j, dim]):.17e}))"
+        chains.append(f"{chain} AS {cname}")
+    return f"""
+    WITH ord AS MATERIALIZED (
+        SELECT user_id,
+               row_number() OVER (
+                   PARTITION BY user_id ORDER BY ts, event_id
+               ) - 1 AS rn,
+               CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS xi,
+               CAST(CAST(value AS DECIMAL(38,6)) AS DOUBLE) AS v
+        FROM events
+    ),
+    comp AS MATERIALIZED (
+        SELECT * FROM (
+            SELECT user_id, rn // {SEG_ROWS} AS seg,
+                   rn % {SEG_ROWS} AS j, xi, v,
+                   count(*) OVER (
+                       PARTITION BY user_id, rn // {SEG_ROWS}
+                   ) AS n
+            FROM ord)
+        WHERE n = {SEG_ROWS}
+    ),
+    ys AS MATERIALIZED (
+        SELECT user_id, seg, j, {SEG_ROWS} * xi - sx AS y
+        FROM (SELECT user_id, seg, j, xi,
+                     sum(xi) OVER (PARTITION BY user_id, seg) AS sx
+              FROM comp)
+    ),
+    dt AS MATERIALIZED (
+        SELECT user_id AS dict_id, j AS i, y AS d
+        FROM ys WHERE user_id < {GRAIL_DICT_K} AND seg = 0
+    ),
+    nx AS (SELECT user_id, seg, sum(y * y) AS sy
+           FROM ys GROUP BY 1, 2),
+    nd AS (SELECT dict_id, sum(d * d) AS sd FROM dt GROUP BY 1),
+    cc AS MATERIALIZED (
+        SELECT x.user_id, x.seg, d.dict_id, x.j - d.i AS lag,
+               sum(x.y * d.d) AS cc
+        FROM ys x, dt d
+        GROUP BY 1, 2, 3, 4
+    ),
+    mx AS (SELECT user_id, seg, dict_id, max(cc) AS mc
+           FROM cc GROUP BY 1, 2, 3),
+    qv AS (
+        SELECT m.user_id, m.seg, m.dict_id,
+               CASE WHEN nx.sy = 0 OR nd.sd = 0 THEN 0
+                    ELSE CAST(floor(
+                        CAST(m.mc AS DOUBLE)
+                        / (sqrt(CAST(nx.sy AS DOUBLE))
+                           * sqrt(CAST(nd.sd AS DOUBLE)))
+                        * 4096.0 + 0.5) AS BIGINT) END AS q
+        FROM mx m
+        JOIN nx ON nx.user_id = m.user_id AND nx.seg = m.seg
+        JOIN nd ON nd.dict_id = m.dict_id
+    ),
+    e1(h, v) AS (VALUES {e1rows}),
+    e2(l, v) AS (VALUES {e2rows}),
+    kvt AS (
+        SELECT s.user_id, s.seg, s.dict_id, e1.v * e2.v AS kv
+        FROM (SELECT user_id, seg, dict_id, q,
+                     CAST(floor(q / 64.0) AS BIGINT) AS qh
+              FROM qv) s
+        JOIN e1 ON e1.h = s.qh
+        JOIN e2 ON e2.l = s.q - 64 * s.qh
+    ),
+    kp AS (SELECT user_id, seg, {kcols} FROM kvt GROUP BY 1, 2),
+    emb AS (SELECT user_id, seg, {", ".join(chains)} FROM kp),
+    rawf AS (
+        SELECT user_id, seg,
+               CAST(su AS DOUBLE) / nn / 1000000.0 AS f_mean,
+               sqrt(greatest(CAST(ssu AS DOUBLE) / nn / 1000000.0
+                    - (CAST(su AS DOUBLE) / nn / 1000000.0)
+                    * (CAST(su AS DOUBLE) / nn / 1000000.0), 0.0))
+                   AS f_std,
+               f_min, f_max
+        FROM (
+            SELECT user_id, seg,
+                   CAST(sum(CAST(v AS DECIMAL(38,6))) * 1000000
+                        AS BIGINT) AS su,
+                   CAST(sum(CAST(v * v AS DECIMAL(38,6))) * 1000000
+                        AS BIGINT) AS ssu,
+                   min(v) AS f_min, max(v) AS f_max,
+                   count(*) AS nn
+            FROM comp GROUP BY 1, 2)
+    ),
+    feats AS (
+        SELECT r.user_id, r.seg, f_mean, f_std, f_min, f_max,
+               d_mean, d_std, d_min, d_max
+        FROM rawf r
+        JOIN emb e ON e.user_id = r.user_id AND e.seg = r.seg
+    ),
+    {_LABELED_SQL[family](sf_dir)},
+    per_user AS (
+        SELECT user_id, count(*) AS n_segments,
+               CAST(sum(CASE WHEN lr = ld THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_agree
+        FROM labeled GROUP BY user_id
+    ),
+    users AS (SELECT DISTINCT user_id FROM events)
+    SELECT u.user_id,
+           CAST(coalesce(p.n_segments, 0) AS BIGINT) AS n_segments,
+           CAST(coalesce(p.n_agree, 0) AS BIGINT) AS n_agree,
+           CASE WHEN coalesce(p.n_segments, 0) > 0
+                THEN round(p.n_agree / p.n_segments, 6)
+           END AS agree_rate
+    FROM users u LEFT JOIN per_user p USING (user_id)
+    """
+
+
+LAZY_ORACLES = {}
+for _family in ("kmeans", "tree", "knn", "forest"):
+    _name = f"q_{_family}_drift"
+    LAZY_ORACLES[_name] = lazy_oracle(_name, partial(_paa_oracle_sql, _family))
+    for _tier in ("fft", "pla", "rrd", "buff"):
+        _name = f"q_{_family}_drift_{_tier}"
+        LAZY_ORACLES[_name] = lazy_oracle(
+            _name, partial(_tier_oracle_sql, _family, _tier)
+        )
+    _name = f"q_{_family}_drift_grail"
+    LAZY_ORACLES[_name] = lazy_oracle(_name, partial(_grail_oracle_sql, _family))

@@ -39,7 +39,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from timeseriesdb_spark.tables import load_table
+# clear_trained_caches stays importable from here; clearing the store
+# only frees memory, since a rewritten dataset rebuilds on next lookup.
+from timeseriesdb_spark.tables import (
+    clear_derived as clear_trained_caches,
+    derived,
+    lazy_oracle,
+    load_table,
+    resolve_sf_dir,
+)
 
 DIM = 64
 QUERY_VEC_ID = 0     # the probe vector for top-k search
@@ -293,83 +301,36 @@ IVF_ITERS = 15
 IVF_TRAIN_CAP = 4096  # centroid-training sample cap (driver-side rows)
 
 
-_IVF_CACHE: dict[str, "object"] = {}
-# Fixed probe constants per sf_dir (r15): the QUERY_VEC_ID embedding
-# and the RECALL_PROBES probe params — bounded deterministic driver
-# pulls the oracles embed as literals, cached exactly like the trained
-# quantizers they are used with.
-_QUERY_VEC_CACHE: dict[str, "object"] = {}
-_RECALL_PROBE_CACHE: dict[str, list] = {}
-
-
-def clear_trained_caches(sf_dir: str | None = None) -> None:
-    """Invalidate EVERY per-sf_dir trained-state cache across the
-    package (IVF centroids + PQ codebooks here, the ANN lazy-oracle
-    SQL, the ML-drift sample/model/oracle caches, the lang-id
-    profiles/oracles). The caches assume the tables under a dir are
-    immutable; call this after rewriting a dir in place (long-lived
-    processes, test fixtures) to force a retrain — r8 advice: the
-    staleness caveat needs an actual reset hook; r10: new trained
-    caches (lang-id, drift oracle sample) register here rather than
-    growing parallel half-hooks. With sf_dir=None, clears
-    everything."""
-    from timeseriesdb_spark.operators import langid, mlkernels, mlscoring
-
-    caches = [
-        _IVF_CACHE, _PQ_CACHE,
-        _QUERY_VEC_CACHE, _RECALL_PROBE_CACHE,
-        _RECALL_ORACLE_CACHE, _IVF_ORACLE_CACHE, _PQ_ORACLE_CACHE,
-        mlscoring._CENTERS_CACHE, mlscoring._TREE_CACHE,
-        mlscoring._SAMPLE_CACHE, mlscoring._ORACLE_SAMPLE_CACHE,
-        mlscoring._KM_ORACLE_CACHE, mlscoring._TREE_ORACLE_CACHE,
-        mlscoring._FOREST_ORACLE_CACHE, mlscoring._KNN_ORACLE_CACHE,
-        mlscoring._GRAIL_SEG_DICT_CACHE,
-        langid._PROFILE_CACHE, langid._LID_ORACLE_CACHE,
-        langid._CONF_ORACLE_CACHE,
-        mlkernels._INT_DICT_CACHE, mlkernels._GRAIL_ORACLE_CACHE,
-    ]
-    for c in caches:
-        if sf_dir is None:
-            c.clear()
-        else:
-            c.pop(sf_dir, None)
-    # persisted tier feature frames need an unpersist, not a dict pop
-    mlscoring.clear_tier_feats(sf_dir)
-
-
 def _ivf_centroids(spark: SparkSession, sf_dir: str) -> "object":
-    """train_ivf_centroids over the sf_dir embeddings table. Cached
-    per sf_dir like _pq_codebooks (immutable input, same staleness
-    caveat): the coarse quantizer is trained once and reused by every
-    probe — the stored-index lifecycle CorpusEngine.build_ann_index
-    makes durable, here in-process."""
-    if sf_dir not in _IVF_CACHE:
-        _IVF_CACHE[sf_dir] = train_ivf_centroids(
-            load_table(spark, sf_dir, "embeddings")
-        )
-    return _IVF_CACHE[sf_dir]
+    """train_ivf_centroids over the sf_dir embeddings table, derived
+    once per data version like _pq_codebooks: the coarse quantizer is
+    trained once and reused by every probe — the stored-index lifecycle
+    CorpusEngine.build_ann_index makes durable, here in-process."""
+    return derived(
+        sf_dir,
+        "similarity.ivf",
+        lambda: train_ivf_centroids(load_table(spark, sf_dir, "embeddings")),
+    )
 
 
 def _query_vec(spark: SparkSession, sf_dir: str):
     """QUERY_VEC_ID's embedding as float64 — the fixed probe vector
     q_ann_ivf / q_ann_pq fold into their plans as literals. A 1-row
-    bounded driver pull, cached per sf_dir like the quantizers it is
-    probed against (r15; the per-invocation filter+toPandas job
-    serialized ~0.3 s before the main job). Registered in
-    clear_trained_caches."""
+    bounded driver pull, derived once per data version like the
+    quantizers it is probed against (r15; the per-invocation
+    filter+toPandas job serialized ~0.3 s before the main job)."""
     import numpy as np
 
-    if sf_dir not in _QUERY_VEC_CACHE:
+    def build():
         emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
         q = (
             emb.filter(F.col("vec_id") == QUERY_VEC_ID)
             .select("e")
             .toPandas()
         )
-        _QUERY_VEC_CACHE[sf_dir] = np.asarray(
-            q["e"].iloc[0], dtype=np.float64
-        )
-    return _QUERY_VEC_CACHE[sf_dir]
+        return np.asarray(q["e"].iloc[0], dtype=np.float64)
+
+    return derived(sf_dir, "similarity.query_vec", build)
 
 
 def _train_sample_spark(emb: DataFrame):
@@ -379,7 +340,7 @@ def _train_sample_spark(emb: DataFrame):
     as TakeOrderedAndProject — no global materialization), then sorted
     by vec_id. The DuckDB oracle generator draws the IDENTICAL sample
     via SQL md5 (same lowercase-hex ordering) so both engines train
-    the same quantizers — see _ann_recall_oracle."""
+    the same quantizers — see _ann_recall_sql."""
     import numpy as np
 
     pdf = (
@@ -539,25 +500,20 @@ PQ_KS = 16      # centroids per subspace codebook (4-bit codes)
 PQ_ITERS = 10   # Lloyd iterations per subspace
 
 
-_PQ_CACHE: dict[str, "object"] = {}
-
-
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> "object":
     """Per-subspace kmeans codebooks (PQ_M × PQ_KS × DIM/PQ_M), trained
     driver-side on the same deterministic md5-order bounded sample as
     the IVF coarse quantizer (≤ IVF_TRAIN_CAP rows ever leave the
     cluster). Deterministic init: per subspace, sort by the subvector's
-    first coordinate and pick PQ_KS evenly spaced rows. Cached per
-    sf_dir (immutable input — same staleness caveat as mlkernels'
-    dictionary cache: clear after rewriting a dir in place)."""
-    import numpy as np
-
-    if sf_dir in _PQ_CACHE:
-        return _PQ_CACHE[sf_dir]
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = _pq_train_np(_train_sample_spark(emb))
-    _PQ_CACHE[sf_dir] = books
-    return books
+    first coordinate and pick PQ_KS evenly spaced rows. Derived once
+    per data version."""
+    return derived(
+        sf_dir,
+        "similarity.pq",
+        lambda: _pq_train_np(
+            _train_sample_spark(load_table(spark, sf_dir, "embeddings"))
+        ),
+    )
 
 
 def _pq_train_np(X) -> "object":
@@ -1194,33 +1150,30 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall_micros hash-match cross-engine. The trained quantizers
     (IVF centroids, PQ codebooks) reach the oracle by retraining the
     IDENTICAL numpy kernels on the IDENTICAL md5-ordered sample read
-    via DuckDB — see _ann_recall_oracle. Invariants additionally
+    via DuckDB — see _ann_recall_sql. Invariants additionally
     pinned in tests/test_ann.py (recall bounds, IVF→1.0 at full
     nprobe, PQ hits == ADC-vs-truth overlap recomputed in numpy)."""
     C = _ivf_centroids(spark, sf_dir)
     CB = _pq_codebooks(spark, sf_dir)
     emb = _with_norm(load_table(spark, sf_dir, "embeddings"))
 
-    # Probe params cached per sf_dir like the quantizers they derive
-    # from (r15): the RECALL_PROBES-row pull is a bounded
+    # Probe params derived once per data version like the quantizers
+    # they derive from (r15): the RECALL_PROBES-row pull is a bounded
     # deterministic query constant the oracle embeds as literals —
     # re-running the orderBy/limit/toPandas job per invocation
-    # serialized ~0.4 s before the main job. Registered in
-    # clear_trained_caches.
-    if sf_dir not in _RECALL_PROBE_CACHE:
+    # serialized ~0.4 s before the main job.
+    def probe_params() -> list:
         probes_pdf = (
             emb.orderBy("vec_id")
             .limit(RECALL_PROBES)
             .select("vec_id", "e")
             .toPandas()
         )
-        _RECALL_PROBE_CACHE[sf_dir] = _recall_probe_params(
-            probes_pdf["vec_id"].to_numpy(),
-            probes_pdf["e"].to_numpy(),
-            C,
-            CB,
+        return _recall_probe_params(
+            probes_pdf["vec_id"].to_numpy(), probes_pdf["e"].to_numpy(), C, CB
         )
-    prows = _RECALL_PROBE_CACHE[sf_dir]
+
+    prows = derived(sf_dir, "similarity.recall_probes", probe_params)
     probes = spark.createDataFrame(
         prows,
         "probe_id long, qe array<double>, qnorm double, qbucket string, "
@@ -1623,70 +1576,39 @@ def _build_recall_sql(C, CB, params) -> str:
     """
 
 
-_RECALL_ORACLE_CACHE: dict[str, str] = {}
-
-
-def _ann_recall_oracle(sf_dir: str | None = None) -> str:
-    """Generate the q_ann_recall oracle for the SF under test
-    (SPARK_TSDB_TEST_SF, defaulting to the driver's sf0.01): read the
+def _ann_recall_sql(sf_dir: str) -> str:
+    """Generate the q_ann_recall oracle for the SF under test: read the
     embeddings parquet via DuckDB, retrain the IVF/PQ quantizers with
     the SAME numpy kernels on the SAME md5-ordered bounded sample the
     Spark path uses, derive the probe constants with the SAME helper,
     and inline everything as exact literals. Resolved lazily (registry
     LAZY_ORACLES) so package import never touches testdata; tests pass
     sf_dir explicitly to pin a different scale."""
-    import os
+    import numpy as np
 
-    if sf_dir is None:
-        sf_dir = os.environ.get(
-            "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
-        )
-    if sf_dir not in _RECALL_ORACLE_CACHE:
-        import duckdb
-        import numpy as np
-
-        con = duckdb.connect()
-        pq = f"{sf_dir}/embeddings.parquet"
-        sample = (
-            con.execute(
-                f"SELECT vec_id, embedding FROM '{pq}' "
-                f"ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id "
-                f"LIMIT {IVF_TRAIN_CAP}"
-            )
-            .fetch_df()
-            .sort_values("vec_id")
-        )
-        X = np.stack(sample["embedding"].to_numpy()).astype(np.float64)
-        C = _kmeans_cells_np(X)
-        CB = _pq_train_np(X)
-        pr = con.execute(
-            f"SELECT vec_id, embedding FROM '{pq}' "
-            f"ORDER BY vec_id LIMIT {RECALL_PROBES}"
-        ).fetch_df()
-        params = _recall_probe_params(
-            pr["vec_id"].to_numpy(),
-            [np.asarray(v, dtype=np.float64) for v in pr["embedding"]],
-            C,
-            CB,
-        )
-        _RECALL_ORACLE_CACHE[sf_dir] = _build_recall_sql(C, CB, params)
-    return _RECALL_ORACLE_CACHE[sf_dir]
+    C, CB, _, con, pq = _oracle_embeddings_state(sf_dir)
+    pr = con.execute(
+        f"SELECT vec_id, embedding FROM '{pq}' "
+        f"ORDER BY vec_id LIMIT {RECALL_PROBES}"
+    ).fetch_df()
+    params = _recall_probe_params(
+        pr["vec_id"].to_numpy(),
+        [np.asarray(v, dtype=np.float64) for v in pr["embedding"]],
+        C,
+        CB,
+    )
+    return _build_recall_sql(C, CB, params)
 
 
-def _oracle_embeddings_state(sf_dir: str | None):
-    """Shared lazy-oracle loader: (sf_dir, trained C, trained CB, the
-    QUERY_VEC_ID probe vector as float64) — everything an ANN oracle
-    needs, read via DuckDB from the parquet under test and trained
-    with the exact numpy kernels the Spark path uses."""
-    import os
-
+def _oracle_embeddings_state(sf_dir: str):
+    """Shared lazy-oracle loader: (trained C, trained CB, the
+    QUERY_VEC_ID probe vector as float64, the DuckDB connection, the
+    parquet path) — everything an ANN oracle needs, read via DuckDB
+    from the parquet under test and trained with the exact numpy
+    kernels the Spark path uses."""
     import duckdb
     import numpy as np
 
-    if sf_dir is None:
-        sf_dir = os.environ.get(
-            "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
-        )
     con = duckdb.connect()
     pq = f"{sf_dir}/embeddings.parquet"
     sample = (
@@ -1703,28 +1625,17 @@ def _oracle_embeddings_state(sf_dir: str | None):
         f"SELECT embedding FROM '{pq}' WHERE vec_id = {QUERY_VEC_ID}"
     ).fetchone()
     qv = np.asarray(qrow[0], dtype=np.float64)
-    return sf_dir, _kmeans_cells_np(X), _pq_train_np(X), qv, con, pq
+    return _kmeans_cells_np(X), _pq_train_np(X), qv, con, pq
 
 
-_IVF_ORACLE_CACHE: dict[str, str] = {}
-
-
-def _ann_ivf_oracle(sf_dir: str | None = None) -> str:
+def _ann_ivf_sql(sf_dir: str) -> str:
     """q_ann_ivf as a DuckDB oracle: cell assignment replayed as exact
     fold-dot argmax (first-max tie-break via list_position), probe
     cells/norm inlined from the identical driver-side numpy, cosine as
     the exact fold — so the pruned top-k matches bit-for-bit."""
-    import os
-
     import numpy as np
 
-    if sf_dir is None:
-        sf_dir = os.environ.get(
-            "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
-        )
-    if sf_dir in _IVF_ORACLE_CACHE:
-        return _IVF_ORACLE_CACHE[sf_dir]
-    _, C, _, qv, _, _ = _oracle_embeddings_state(sf_dir)
+    C, _, qv, _, _ = _oracle_embeddings_state(sf_dir)
     qn = qv / np.linalg.norm(qv)
     probe_cells = [
         int(i) for i in np.argsort(qn @ C.T)[::-1][:IVF_NPROBE]
@@ -1734,7 +1645,7 @@ def _ann_ivf_oracle(sf_dir: str | None = None) -> str:
         _fold_dot_duck(C[c]) for c in range(IVF_CELLS)
     ) + "]"
     cells_csv = ", ".join(str(c) for c in probe_cells)
-    sql = f"""
+    return f"""
         WITH raw AS MATERIALIZED (
             SELECT vec_id, label, {_fold_norm_duck()} AS norm,
                    {dl} AS dl,
@@ -1753,29 +1664,16 @@ def _ann_ivf_oracle(sf_dir: str | None = None) -> str:
         WHERE cell IN ({cells_csv})
         ORDER BY cos_t DESC, vec_id LIMIT {TOP_K}
     """
-    _IVF_ORACLE_CACHE[sf_dir] = sql
-    return sql
 
 
-_PQ_ORACLE_CACHE: dict[str, str] = {}
-
-
-def _ann_pq_oracle(sf_dir: str | None = None) -> str:
+def _ann_pq_sql(sf_dir: str) -> str:
     """q_ann_pq as a DuckDB oracle: PQ codes replayed as exact argmin
     folds (pq_code_columns' expressions term-for-term), the probe's
     ADC lookup table inlined from the identical numpy, the top-k
     ordered by the identically-rounded ADC distance."""
-    import os
-
     import numpy as np
 
-    if sf_dir is None:
-        sf_dir = os.environ.get(
-            "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
-        )
-    if sf_dir in _PQ_ORACLE_CACHE:
-        return _PQ_ORACLE_CACHE[sf_dir]
-    _, _, CB, qv, _, _ = _oracle_embeddings_state(sf_dir)
+    _, CB, qv, _, _ = _oracle_embeddings_state(sf_dir)
     d = CB.shape[2]
     lut = [
         [
@@ -1803,7 +1701,7 @@ def _ann_pq_oracle(sf_dir: str | None = None) -> str:
         lut_m = "[" + ", ".join(_dk(x) for x in lut[m]) + "]"
         term = f"list_extract({lut_m}, code_{m} + 1)"
         adc = term if adc is None else f"({adc} + {term})"
-    sql = f"""
+    return f"""
         WITH raw AS MATERIALIZED (
             SELECT vec_id, label,
                    {", ".join(f"{cl} AS cl_{m}" for m, cl in enumerate(cls))}
@@ -1825,8 +1723,6 @@ def _ann_pq_oracle(sf_dir: str | None = None) -> str:
         FROM coded
         ORDER BY adc_t, vec_id LIMIT {TOP_K}
     """
-    _PQ_ORACLE_CACHE[sf_dir] = sql
-    return sql
 
 
 def _semdedup_oracle(sf_dir: str | None = None) -> str:
@@ -1837,13 +1733,9 @@ def _semdedup_oracle(sf_dir: str | None = None) -> str:
     Spark query derives from the identical parquet. At the driver's
     sf0.01 (and the sf0.1 bench) this is the historical 4-bit SQL
     verbatim."""
-    import os
-
     import duckdb
 
-    sf = sf_dir or os.environ.get(
-        "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
-    )
+    sf = resolve_sf_dir(sf_dir)
     n = duckdb.sql(
         f"SELECT count(*) FROM '{sf}/embeddings.parquet'"
     ).fetchone()[0]
@@ -1882,9 +1774,9 @@ def _semdedup_oracle(sf_dir: str | None = None) -> str:
 
 
 LAZY_ORACLES = {
-    "q_ann_recall": _ann_recall_oracle,
-    "q_ann_ivf": _ann_ivf_oracle,
-    "q_ann_pq": _ann_pq_oracle,
+    "q_ann_recall": lazy_oracle("q_ann_recall", _ann_recall_sql),
+    "q_ann_ivf": lazy_oracle("q_ann_ivf", _ann_ivf_sql),
+    "q_ann_pq": lazy_oracle("q_ann_pq", _ann_pq_sql),
     "q_semdedup": _semdedup_oracle,
 }
 

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from timeseriesdb_spark.tables import load_table
+from timeseriesdb_spark.tables import lazy_oracle, load_table
 
 FFT_RATIO = 0.1    # keep top ratio·n/2 coefficients (ref ratio sweep 0.01-0.5)
 FFT_XU = 100              # value grid: testdata generates exact 0.01 steps
@@ -256,115 +256,103 @@ def fft_twiddles_int(n: int):
     return c, s
 
 
-def _resolve_sf_dir(sf_dir: str | None) -> str:
-    import os
-
-    return sf_dir or os.environ.get(
-        "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
-    )
-
-
-_FFT_ORACLE_CACHE: dict[str, str] = {}
-
-
-def _fft_recon_oracle(sf_dir: str | None = None) -> str:
+def _fft_recon_sql(sf_dir: str) -> str:
     """DuckDB replay of the integer-lattice truncated DFT: twiddle
     VALUES per DISTINCT series length (n rows each — (k·j) mod n
     indexing collapses the k×j plane onto one cycle), exact HUGEINT
     coefficient/magnitude/reconstruction arithmetic, one final double
     division. LAZY (the langid/mlscoring recipe): the factory reads
     the same parquet to learn the distinct lengths."""
-    sf_dir = _resolve_sf_dir(sf_dir)
-    if sf_dir not in _FFT_ORACLE_CACHE:
-        import duckdb
+    import duckdb
 
-        con = duckdb.connect()
-        ns = sorted(
-            r[0]
-            for r in con.execute(
-                f"SELECT DISTINCT count(*) FROM "
-                f"'{sf_dir}/events.parquet' GROUP BY user_id"
-            ).fetchall()
+    con = duckdb.connect()
+    ns = sorted(
+        r[0]
+        for r in con.execute(
+            f"SELECT DISTINCT count(*) FROM "
+            f"'{sf_dir}/events.parquet' GROUP BY user_id"
+        ).fetchall()
+    )
+    con.close()
+    rows = []
+    for n in ns:
+        c, s = fft_twiddles_int(int(n))
+        rows.extend(
+            f"({n}, {m}, {int(c[m])}, {int(s[m])})" for m in range(n)
         )
-        con.close()
-        rows = []
-        for n in ns:
-            c, s = fft_twiddles_int(int(n))
-            rows.extend(
-                f"({n}, {m}, {int(c[m])}, {int(s[m])})" for m in range(n)
-            )
-        tw = ", ".join(rows)
-        ratio = f"CAST({FFT_RATIO!r} AS DOUBLE)"
-        _FFT_ORACLE_CACHE[sf_dir] = f"""
-            WITH ord AS MATERIALIZED (
-                SELECT user_id,
-                       row_number() OVER (
-                           PARTITION BY user_id ORDER BY ts, event_id
-                       ) - 1 AS j,
-                       CAST(floor(value * {FFT_XU}.0 + 0.5) AS BIGINT)
-                           AS xi,
-                       value
-                FROM events
-            ),
-            nn AS (
-                SELECT user_id, CAST(count(*) AS BIGINT) AS n
-                FROM ord GROUP BY user_id
-            ),
-            tw(n, m, c, s) AS (VALUES {tw}),
-            ks AS (
-                SELECT user_id, n, unnest(range(0, n // 2 + 1)) AS k
-                FROM nn
-            ),
-            co AS MATERIALIZED (
-                SELECT o.user_id, ks.k, ks.n,
-                       sum(o.xi * t.c) AS a, sum(o.xi * t.s) AS b
-                FROM ord o
-                JOIN ks ON ks.user_id = o.user_id
-                JOIN tw t ON t.n = ks.n AND t.m = (ks.k * o.j) % ks.n
-                GROUP BY o.user_id, ks.k, ks.n
-            ),
-            pick AS (
-                SELECT user_id, k, n, a, b,
-                       row_number() OVER (
-                           PARTITION BY user_id
-                           ORDER BY a * a + b * b DESC, k
-                       ) AS rn
-                FROM co
-            ),
-            kept AS (
-                SELECT user_id, k, n, a, b,
-                       CASE WHEN k = 0 OR 2 * k = n THEN 1 ELSE 2 END AS w
-                FROM pick
-                WHERE rn <= GREATEST(
-                    1, CAST(floor((n // 2 + 1) * {ratio}) AS BIGINT))
-            ),
-            yr AS (
-                SELECT o.user_id, o.j,
-                       sum(kt.w * (kt.a * t.c + kt.b * t.s)) AS y
-                FROM ord o
-                JOIN kept kt ON kt.user_id = o.user_id
-                JOIN tw t ON t.n = kt.n AND t.m = (kt.k * o.j) % kt.n
-                GROUP BY o.user_id, o.j
-            ),
-            den AS (
-                SELECT user_id,
-                       CAST(n AS HUGEINT) * {FFT_XU}
-                       * CAST({FFT_TWS} AS HUGEINT) * {FFT_TWS} AS d
-                FROM nn
-            )
-            SELECT o.user_id, o.j AS pos, o.value,
-                   CAST(CASE WHEN y.y >= 0
-                             THEN (2 * y.y * 1000000 + den.d)
-                                  // (2 * den.d)
-                             ELSE -((2 * (-y.y) * 1000000 + den.d)
-                                    // (2 * den.d)) END
-                        AS DOUBLE) / 1000000.0 AS recon
+    tw = ", ".join(rows)
+    ratio = f"CAST({FFT_RATIO!r} AS DOUBLE)"
+    return f"""
+        WITH ord AS MATERIALIZED (
+            SELECT user_id,
+                   row_number() OVER (
+                       PARTITION BY user_id ORDER BY ts, event_id
+                   ) - 1 AS j,
+                   CAST(floor(value * {FFT_XU}.0 + 0.5) AS BIGINT)
+                       AS xi,
+                   value
+            FROM events
+        ),
+        nn AS (
+            SELECT user_id, CAST(count(*) AS BIGINT) AS n
+            FROM ord GROUP BY user_id
+        ),
+        tw(n, m, c, s) AS (VALUES {tw}),
+        ks AS (
+            SELECT user_id, n, unnest(range(0, n // 2 + 1)) AS k
+            FROM nn
+        ),
+        co AS MATERIALIZED (
+            SELECT o.user_id, ks.k, ks.n,
+                   sum(o.xi * t.c) AS a, sum(o.xi * t.s) AS b
             FROM ord o
-            JOIN yr y ON y.user_id = o.user_id AND y.j = o.j
-            JOIN den ON den.user_id = o.user_id
-        """
-    return _FFT_ORACLE_CACHE[sf_dir]
+            JOIN ks ON ks.user_id = o.user_id
+            JOIN tw t ON t.n = ks.n AND t.m = (ks.k * o.j) % ks.n
+            GROUP BY o.user_id, ks.k, ks.n
+        ),
+        pick AS (
+            SELECT user_id, k, n, a, b,
+                   row_number() OVER (
+                       PARTITION BY user_id
+                       ORDER BY a * a + b * b DESC, k
+                   ) AS rn
+            FROM co
+        ),
+        kept AS (
+            SELECT user_id, k, n, a, b,
+                   CASE WHEN k = 0 OR 2 * k = n THEN 1 ELSE 2 END AS w
+            FROM pick
+            WHERE rn <= GREATEST(
+                1, CAST(floor((n // 2 + 1) * {ratio}) AS BIGINT))
+        ),
+        yr AS (
+            SELECT o.user_id, o.j,
+                   sum(kt.w * (kt.a * t.c + kt.b * t.s)) AS y
+            FROM ord o
+            JOIN kept kt ON kt.user_id = o.user_id
+            JOIN tw t ON t.n = kt.n AND t.m = (kt.k * o.j) % kt.n
+            GROUP BY o.user_id, o.j
+        ),
+        den AS (
+            SELECT user_id,
+                   CAST(n AS HUGEINT) * {FFT_XU}
+                   * CAST({FFT_TWS} AS HUGEINT) * {FFT_TWS} AS d
+            FROM nn
+        )
+        SELECT o.user_id, o.j AS pos, o.value,
+               CAST(CASE WHEN y.y >= 0
+                         THEN (2 * y.y * 1000000 + den.d)
+                              // (2 * den.d)
+                         ELSE -((2 * (-y.y) * 1000000 + den.d)
+                                // (2 * den.d)) END
+                    AS DOUBLE) / 1000000.0 AS recon
+        FROM ord o
+        JOIN yr y ON y.user_id = o.user_id AND y.j = o.j
+        JOIN den ON den.user_id = o.user_id
+    """
 
+
+_fft_recon_oracle = lazy_oracle("q_fft_recon", _fft_recon_sql)
 
 LAZY_ORACLES = {"q_fft_recon": _fft_recon_oracle}
 

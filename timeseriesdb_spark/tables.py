@@ -14,8 +14,13 @@ whatever layout the directory has, so the same query code applies.
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+from typing import TypeVar
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+
+_T = TypeVar("_T")
 
 TABLES = [
     "region",
@@ -56,21 +61,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Explicit-schema read (r15, guide §1/§6): schema INFERENCE re-reads
     # the parquet footer and rebuilds the file index on every call —
     # measured 120 ms vs 26 ms with a declared schema at sf0.1, and
-    # most queries call load_table 2-4×. The first read of a
-    # (sf_dir, table) infers once and records the StructType; later
-    # reads declare it — the standard production discipline (schemas
-    # are declared, not re-inferred per query). This caches METADATA
-    # only (a pure-Python StructType, valid across sessions): every
-    # action still scans the parquet data in full, nothing row-shaped
-    # is retained (the r14 caching-audit line: bounded deterministic
-    # non-row constants are query definition, not results).
+    # most queries call load_table 2-4×. The first read of a table
+    # infers once and records the StructType in the derived-state store
+    # (metadata only, valid across sessions); later reads declare it
+    # until the files under sf_dir change.
     path = f"{sf_dir}/{name}.parquet"
-    schema = _SCHEMA_CACHE.get(path)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+    schema = derived(
+        sf_dir, f"schema:{name}", lambda: spark.read.parquet(path).schema
+    )
+    df = spark.read.schema(schema).parquet(path)
     for field in df.schema.fields:
         if field.name not in _NS_TS_COLUMNS:
             continue
@@ -93,10 +92,77 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # Columns known to be nanosecond timestamps in the driver's parquet.
 _NS_TS_COLUMNS = {"ts"}
 
-# Inferred parquet schema per file path (metadata, not data — see the
-# load_table comment). StructType is session-independent, so a cached
-# entry outlives any one SparkSession.
-_SCHEMA_CACHE: dict[str, StructType] = {}
+
+def resolve_sf_dir(sf_dir: str | None) -> str:
+    """The dataset dir a lazy oracle factory reads: the argument, else
+    SPARK_TSDB_TEST_SF, else the driver's correctness scale (sf0.01)."""
+    return sf_dir or os.environ.get(
+        "SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01"
+    )
+
+
+# Derived state per dataset dir, keyed (kind, sf_dir) → (fingerprint,
+# value): parquet schemas, trained model parameters, probe constants
+# and lazy-oracle SQL. Only bounded, deterministic, non-row values live
+# here (OPTIMIZATION_r14.md "Caching audit") — never rows or
+# DataFrames; every action still scans the parquet in full.
+_DERIVED: dict[tuple[str, str], tuple[tuple, object]] = {}
+
+
+def _fingerprint(sf_dir: str) -> tuple:
+    """(relpath, size, mtime_ns) of every file under each table's
+    parquet path; a missing table stamps as (relpath, None)."""
+    stamp = []
+    for name in TABLES:
+        rel = f"{name}.parquet"
+        root = os.path.join(sf_dir, rel)
+        files = [rel]
+        if os.path.isdir(root):
+            files = sorted(
+                os.path.relpath(os.path.join(d, f), sf_dir)
+                for d, _, names in os.walk(root)
+                for f in names
+            )
+        for f in files:
+            try:
+                st = os.stat(os.path.join(sf_dir, f))
+            except OSError:
+                stamp.append((f, None))
+                continue
+            stamp.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(stamp)
+
+
+def derived(sf_dir: str, kind: str, build: Callable[[], _T]) -> _T:
+    """The `kind` value derived from the tables under sf_dir: cached
+    while the files keep their fingerprint, rebuilt by `build()` once
+    any of them is added, removed or rewritten."""
+    fp = _fingerprint(sf_dir)
+    hit = _DERIVED.get((kind, sf_dir))
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    value = build()
+    _DERIVED[(kind, sf_dir)] = (fp, value)
+    return value
+
+
+def lazy_oracle(name: str, build_sql: Callable[[str], str]) -> Callable[..., str]:
+    """A registry.LAZY_ORACLES factory for query `name`: the oracle SQL
+    `build_sql(sf_dir)` derives from the data under test
+    (resolve_sf_dir), held in the store as kind `oracle:<name>`."""
+
+    def factory(sf_dir: str | None = None) -> str:
+        sf_dir = resolve_sf_dir(sf_dir)
+        return derived(sf_dir, f"oracle:{name}", lambda: build_sql(sf_dir))
+
+    return factory
+
+
+def clear_derived(sf_dir: str | None = None) -> None:
+    """Drop the derived state of sf_dir (all of it with None). Only
+    frees memory: a stale entry is never served."""
+    for key in [k for k in _DERIVED if sf_dir in (None, k[1])]:
+        del _DERIVED[key]
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
