@@ -824,3 +824,27 @@ def test_theilsen_sample_cap_precedes_pair_join(spark):
     plan = checks.formatted_plan(df)
     assert plan.count("ExistingRDD") >= 2, plan
     assert "Scan parquet" not in plan, plan
+
+
+def test_small_scan_estimate_decodes_percent_encoded_paths(
+    spark, tmp_path, monkeypatch
+):
+    """spark.read lists a table under a dir with a space as
+    file:///…/a%20b/…. The split estimate must decode that URI; if it
+    cannot size the files it silently falls back to .rdd, whose full
+    physical planning costs ~150 ms per call."""
+    from timeseriesdb_spark.operators.common import parallelize_small_scan
+
+    path = str(tmp_path / "a b" / "t.parquet")
+    spark.range(10).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert any("%20" in f for f in df.inputFiles())
+
+    def no_rdd(self):
+        raise AssertionError("parallelize_small_scan fell back to .rdd")
+
+    monkeypatch.setattr(type(df), "rdd", property(no_rdd))
+    out = parallelize_small_scan(df, spark)
+    # one small file is one split, below the session's parallelism
+    assert out is not df
+    assert out.count() == 10

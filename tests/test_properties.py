@@ -344,7 +344,7 @@ def _run_scan_locally(batches, kernel, key, finalize=None):
                         outs.append(f)
                 state = None
             cur_key, started = k, True
-            out, state = kernel(b.iloc[s_:e_], state)
+            out, state = kernel(k, b.iloc[s_:e_], state)
             if out is not None and len(out):
                 outs.append(out)
     if started and finalize is not None:
@@ -360,6 +360,28 @@ def _run_scan_locally(batches, kernel, key, finalize=None):
     )
 
 
+class _FakeGroupState:
+    """The part of Spark's GroupState the stream runner touches."""
+
+    def __init__(self):
+        self.value = None
+        self.hasTimedOut = False
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+    def remove(self):
+        self.value = None
+
+
 @given(
     vals=st.lists(
         st.tuples(
@@ -372,13 +394,19 @@ def _run_scan_locally(batches, kernel, key, finalize=None):
         max_size=60,
     ),
     chunk=st.integers(min_value=1, max_value=7),
+    seed=st.integers(min_value=0, max_value=2**16),
 )
-def test_stateful_scan_chunking_invariant(vals, chunk):
-    """The runner contract: for a kernel that carries exact state
-    (running sum + count here), ANY chunking of the key-sorted input
-    produces output identical to the single-chunk run — state, not
-    rows, crosses every boundary."""
+def test_stateful_scan_chunking_invariant(vals, chunk, seed):
+    """The carry-scan contract, both runners: for a kernel that carries
+    exact state (running sum + count here), ANY chunking of the
+    key-sorted input produces output identical to the single-chunk
+    batch run — state, not rows, crosses every boundary. The stream
+    runner's callable gets each key's rows shuffled and cut into
+    chunks of the same size (Spark's post-shuffle Arrow chunks) and
+    must give the same rows and the same final state."""
     import pandas as pd
+
+    from timeseriesdb_spark.operators.transforms import carry_scan_fn
 
     pdf = pd.DataFrame(
         {
@@ -389,7 +417,7 @@ def test_stateful_scan_chunking_invariant(vals, chunk):
         }
     ).sort_values(["user_id", "ts", "event_id"]).reset_index(drop=True)
 
-    def kernel(g, state):
+    def kernel(uid, g, state):
         s0, n0 = state if state is not None else (0.0, 0)
         cs = g["value"].cumsum() + s0
         out = pd.DataFrame(
@@ -412,6 +440,25 @@ def test_stateful_scan_chunking_invariant(vals, chunk):
     ]
     chunked = _run_scan_locally(chunks, kernel, "user_id", fin)
     pd.testing.assert_frame_equal(whole, chunked)
+
+    final = {}
+
+    def keep(uid, state):
+        final[uid] = state
+
+    rows = _run_scan_locally([pdf], kernel, "user_id", keep)
+    run = carry_scan_fn(kernel)
+    streamed, streamed_final = [], {}
+    for uid, g in pdf.groupby("user_id"):
+        g = g.sample(frac=1, random_state=seed)
+        state = _FakeGroupState()
+        pdfs = [g.iloc[i : i + chunk] for i in range(0, len(g), chunk)]
+        streamed += list(run((uid,), iter(pdfs), state))
+        streamed_final[uid] = state.get
+    pd.testing.assert_frame_equal(
+        pd.concat(streamed, ignore_index=True), rows
+    )
+    assert streamed_final == final
 
 
 def test_heavy_hitters_bounds_and_completeness(spark, duck):

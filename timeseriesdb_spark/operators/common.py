@@ -107,8 +107,10 @@ def parallelize_small_scan(df, spark):
     try:
         import math
         import os
+        from urllib.parse import unquote, urlparse
 
-        files = [f[7:] if f.startswith("file:") else f
+        # spark.read lists local files as percent-encoded file:/// URIs
+        files = [unquote(urlparse(f).path) if f.startswith("file:") else f
                  for f in df.inputFiles()]
         if not files:
             raise ValueError("no input files")

@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from timeseriesdb_spark.tables import lazy_oracle, load_table
 
@@ -85,25 +86,27 @@ def packed_grouped_map(df: DataFrame, kernel, schema: str,
 
 def stateful_grouped_scan(df: DataFrame, kernel, schema: str,
                           key: str = "user_id", finalize=None) -> DataFrame:
-    """Ordered per-key scan with O(1) carried state — NO group
-    materialization, ever.
+    """The BATCH runner of the carry-scan contract: an ordered per-key
+    scan with O(1) carried state — NO group materialization, ever.
+
+    The contract, shared with `stateful_stream_scan`:
+    `kernel(key, rows, state) -> (out_pdf | None, state)`, where `rows`
+    holds one key's rows in (ts, event_id) order and `state` is None
+    at the start of a key; `finalize(key, state) -> pdf | None` fires
+    when a key's last row has passed (for kernels that emit only a
+    per-key summary, e.g. a forecast).
 
     `packed_grouped_map` bounds executor memory by "batch + one
     group", which for a hot signal is still that signal's whole
     history in one pandas frame. Sequential recurrences (EWMA, Holt,
     any streaming-style scan) don't need the group: they need the
-    rows IN ORDER plus a constant-size state — the same O(1)-carry
-    discipline the streaming kernels prove bit-identical
-    (streaming/smoothing.py). Here rows are repartitioned on `key`
-    and sorted within partitions by (key, ts, event_id); the
-    mapInPandas iterator walks Arrow batches as they stream, slicing
-    each into contiguous same-key runs, and calls
-    `kernel(run_pdf, state) -> (out_pdf | None, state)` per run —
-    state (not rows) is carried when a key straddles batches, so
-    per-task memory is bounded by ONE ARROW BATCH regardless of how
-    hot the signal is. `finalize(key_value, state) -> pdf | None`
-    fires when a key's last row has passed (for kernels that emit
-    only a per-key summary, e.g. a forecast).
+    rows IN ORDER plus a constant-size state. Here rows are
+    repartitioned on `key` and sorted within partitions by
+    (key, ts, event_id); the mapInPandas iterator walks Arrow batches
+    as they stream, slicing each into contiguous same-key runs and
+    calling the kernel per run — state (not rows) is carried when a
+    key straddles batches, so per-task memory is bounded by ONE ARROW
+    BATCH regardless of how hot the signal is.
 
     At 100 TB: one shuffle on the key, per-task memory = Arrow batch
     size (spark.sql.execution.arrow.maxRecordsPerBatch), state = a
@@ -131,7 +134,7 @@ def stateful_grouped_scan(df: DataFrame, kernel, schema: str,
                             outs.append(f)
                     state = None
                 cur_key, started = k, True
-                out, state = kernel(b.iloc[s_:e_], state)
+                out, state = kernel(k, b.iloc[s_:e_], state)
                 if out is not None and len(out):
                     outs.append(out)
             if outs:
@@ -145,6 +148,80 @@ def stateful_grouped_scan(df: DataFrame, kernel, schema: str,
         df.repartition(key)
         .sortWithinPartitions(key, "ts", "event_id")
         .mapInPandas(run, schema)
+    )
+
+
+def carry_scan_fn(step, finalize=None, idle_timeout_ms=None):
+    """The `(key, pdfs, state)` callable the stream runner hands to
+    `applyInPandasWithState`: one key's micro-batch through
+    `step(key, rows, state)`, the state read from and written back to
+    the GroupState (a step returning state None removes it). With
+    `idle_timeout_ms`, a timed-out key's state goes to
+    `finalize(key, state)` and is removed, and every update re-arms
+    the timeout. Built here, not at module level, so it pickles BY
+    VALUE with its step — executors never import this package.
+
+    Concat BEFORE sorting: Spark hands a key's micro-batch slice in
+    arbitrary post-shuffle order, split into Arrow chunks of
+    spark.sql.execution.arrow.maxRecordsPerBatch rows. Sorting each
+    chunk on its own would run the step out of time order (split or
+    merge episodes, take deltas against the wrong neighbour, slide a
+    frame backwards) whenever a key spans chunks — more than 10k rows
+    by default, or an interleaved multi-partition fetch. One concat
+    and one sort restore the (ts, event_id) order every step assumes;
+    memory stays bounded by the key's micro-batch slice."""
+    def run(key, pdfs, state):
+        (k,) = key
+        carry = state.get if state.exists else None
+        if state.hasTimedOut:
+            state.remove()
+            out = finalize(k, carry) if finalize is not None else None
+        else:
+            chunks = [p for p in pdfs if len(p)]
+            if not chunks:
+                return
+            rows = (
+                pd.concat(chunks, ignore_index=True)
+                .sort_values(["ts", "event_id"])
+                .reset_index(drop=True)
+            )
+            out, carry = step(k, rows, carry)
+            if carry is None:
+                state.remove()
+            else:
+                state.update(tuple(carry))
+                if idle_timeout_ms is not None:
+                    state.setTimeoutDuration(idle_timeout_ms)
+        if out is not None and len(out):
+            yield out
+
+    return run
+
+
+def stateful_stream_scan(events: DataFrame, step, schema, state_schema,
+                         finalize=None,
+                         idle_timeout_ms: int | None = None) -> DataFrame:
+    """The STREAM runner of the carry-scan contract (see
+    `stateful_grouped_scan`): each micro-batch's rows per signal go
+    through `step` in (ts, event_id) order, with the state carried in
+    Spark's state store under `state_schema` and the step's outputs
+    appended to a stream of `schema`. The only
+    `applyInPandasWithState` call in the package. Batches must arrive
+    per-signal in time order (file source staged time-ordered, or a
+    Kafka source partitioned by signal with in-partition ordering —
+    the reference's arrival-order assumption, future_signal.rs:207).
+    `idle_timeout_ms` turns on a processing-time timeout that hands an
+    idle signal's state to `finalize` (see `carry_scan_fn`)."""
+    return events.groupBy("user_id").applyInPandasWithState(
+        carry_scan_fn(step, finalize, idle_timeout_ms),
+        outputStructType=schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.NoTimeout
+            if idle_timeout_ms is None
+            else GroupStateTimeout.ProcessingTimeTimeout
+        ),
     )
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from timeseriesdb_spark.operators.common import merge_by
+from timeseriesdb_spark.operators.transforms import stateful_grouped_scan
 from timeseriesdb_spark.tables import load_table
 
 FOLLOW_MIN = 30     # interval-join window after a trigger event, minutes
@@ -113,24 +114,52 @@ def q_follow_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def ewma_step(alpha: float):
+    """The EWMA carry step (transforms' carry-scan contract), shared by
+    the batch q_ewma and the streamed streaming/smoothing.ewma_stream:
+    s_0 = v_0; s_t = α·v_t + (1−α)·s_{t−1} (adjust=False). State is
+    ONLY the previous smoothed value (s_{t−1},) — one double per
+    signal, the minimal carry the recurrence needs. The carry seeds
+    pandas' C ewm kernel as a prepended pseudo-value, for which
+    adjust=False computes exactly s_t = α·v_t + (1−α)·s_{t−1} from the
+    first real row on, so output cut at ANY row boundary (Arrow
+    batches, micro-batches) is BIT-IDENTICAL to the one-pass
+    recurrence (pinned by tests/test_tsanalytics.py's 7-row-Arrow-batch
+    test and tests/test_streaming_smoothing.py's stream == batch)."""
+
+    def step(key, rows, state):
+        v = rows["value"].reset_index(drop=True)
+        seeded = v if state is None else pd.concat(
+            [pd.Series(state), v], ignore_index=True
+        )
+        s = seeded.ewm(alpha=alpha, adjust=False).mean()
+        if state is not None:
+            s = s.iloc[1:].reset_index(drop=True)
+        out = pd.DataFrame(
+            {
+                "user_id": rows["user_id"].reset_index(drop=True),
+                "event_id": rows["event_id"].reset_index(drop=True),
+                "ts": rows["ts"].reset_index(drop=True),
+                "ewma": s,
+            }
+        )
+        return out, (float(s.iloc[-1]),)
+
+    return step
+
+
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially weighted moving average per signal (α = 0.2,
     adjust=False semantics: s_0 = v_0; s_t = α·v_t + (1−α)·s_{t−1}).
 
     A linear recurrence is inherently sequential per signal, so this
     is a pandas kernel (Arrow-batched, pandas' C ewm under the hood)
-    — the one shape Spark's built-ins can't express — run through
-    transforms.stateful_grouped_scan: one shuffle on the signal key,
-    Python crossed per Arrow batch, and ONLY the previous smoothed
-    value carried when a signal straddles batches. The carry seeds
-    the next chunk's ewm by prepending it as a pseudo-row, which for
-    adjust=False reproduces s_t = α·v_t + (1−α)·s_{t−1} exactly from
-    the first real row — chunked output is BIT-IDENTICAL to the
-    one-pass recurrence (the streaming/smoothing.py discipline,
-    pinned there by stream==batch parity and here by
-    tests/test_tsanalytics.py's tiny-Arrow-batch pin). Per-task
-    memory is one Arrow batch even for a hot signal at 100 TB — the
-    group is never materialized.
+    — the one shape Spark's built-ins can't express — run as
+    `ewma_step` through transforms.stateful_grouped_scan: one shuffle
+    on the signal key, Python crossed per Arrow batch, and ONLY the
+    previous smoothed value carried when a signal straddles batches.
+    Per-task memory is one Arrow batch even for a hot signal at
+    100 TB — the group is never materialized.
 
     ORACLE-CHECKED (r8): the recurrence is a fixed sequence of IEEE
     double ops (s ← (1−α)·s + α·v, left-to-right), so a DuckDB
@@ -138,35 +167,10 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical doubles — emitting FULL precision (no round()) is
     what makes the hash exact, since numpy and DuckDB round()
     disagree on FP ties while raw IEEE arithmetic cannot."""
-    from timeseriesdb_spark.operators.transforms import stateful_grouped_scan
-
     ev = load_table(spark, sf_dir, "events")
-
-    def ewma(pdf: pd.DataFrame, state):
-        v = pdf["value"].reset_index(drop=True)
-        if state is None:
-            s = v.ewm(alpha=EWMA_ALPHA, adjust=False).mean()
-        else:
-            seeded = pd.concat([pd.Series([state]), v], ignore_index=True)
-            s = (
-                seeded.ewm(alpha=EWMA_ALPHA, adjust=False)
-                .mean()
-                .iloc[1:]
-                .reset_index(drop=True)
-            )
-        out = pd.DataFrame(
-            {
-                "user_id": pdf["user_id"].reset_index(drop=True),
-                "event_id": pdf["event_id"].reset_index(drop=True),
-                "ts": pdf["ts"].reset_index(drop=True),
-                "ewma": s,
-            }
-        )
-        return out, float(s.iloc[-1])
-
     return stateful_grouped_scan(
         ev.select("user_id", "event_id", "ts", "value"),
-        ewma,
+        ewma_step(EWMA_ALPHA),
         "user_id bigint, event_id bigint, ts timestamp, ewma double",
     )
 
@@ -244,11 +248,9 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     + (1−β)b), so a DuckDB recursive CTE carrying (level, trend)
     per signal reproduces the final state bitwise; outputs are full
     precision so no round() implementation can disagree."""
-    from timeseriesdb_spark.operators.transforms import stateful_grouped_scan
-
     ev = load_table(spark, sf_dir, "events")
 
-    def holt(pdf: pd.DataFrame, state):
+    def holt(uid, pdf: pd.DataFrame, state):
         # state = (pending_first_value | None, level, trend): the
         # recurrence continues across Arrow chunks with exactly these
         # two floats (plus the un-seeded first value while a signal
@@ -900,8 +902,6 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the stateful_grouped_scan discipline — state is 2 + m
     doubles per signal, per-task memory one Arrow batch, bit-identical
     across chunk seams (the streaming-kernel guarantee)."""
-    from timeseriesdb_spark.operators.transforms import stateful_grouped_scan
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", F.date_trunc("day", F.col("ts"))).orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
@@ -917,7 +917,7 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def hw(pdf: pd.DataFrame, state):
+    def hw(uid, pdf: pd.DataFrame, state):
         import numpy as np
 
         v = pdf["close"].to_numpy(dtype=np.float64)

@@ -16,9 +16,9 @@ which trigger sizing cannot do when one hot signal dominates a batch.
 
 State is O(1) per signal: (current window start, rows admitted in it)
 — two longs regardless of throughput, the same discipline as every
-other stateful kernel here. A signal's slice is concatenated and
-sorted ONCE per micro-batch (the alerts.py cross-chunk contract), so
-admission order is deterministic even when the key spans Arrow chunks.
+other stateful kernel here. The stream runner hands the step a
+signal's whole micro-batch in (ts, event_id) order, so admission order
+is deterministic even when the key spans Arrow chunks.
 
 Cross-batch exactness: a window that spans micro-batches keeps
 admitting against the SAME counter (carried in state), so the cap
@@ -31,7 +31,6 @@ it; rows for an OLDER window than the state's are shed outright
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -40,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from timeseriesdb_spark.operators.transforms import stateful_stream_scan
 
 ADMIT_SCHEMA = StructType(
     [
@@ -59,51 +60,6 @@ STATE_SCHEMA = StructType(
 )
 
 
-def make_admitter(cap: int, window_sec: int):
-    """Factory for the stateful admission kernel (closure ships by
-    value — executors never import this module)."""
-
-    win_us = window_sec * 1_000_000
-
-    def admit(key, pdfs, state):
-        import pandas as pd
-
-        (uid,) = key
-        cur_win, n = (state.get if state.exists else (None, 0))
-
-        chunks = [p for p in pdfs if len(p)]
-        whole = pd.concat(chunks, ignore_index=True) if chunks else None
-        for pdf in [whole] if whole is not None else []:
-            pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-            us = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-            flags = []
-            for t in us:
-                w = (t // win_us) * win_us
-                if cur_win is None or w > cur_win:
-                    cur_win, n = w, 0
-                if w < cur_win:
-                    flags.append(False)  # window already passed: shed
-                elif n < cap:
-                    flags.append(True)
-                    n += 1
-                else:
-                    flags.append(False)
-            yield pd.DataFrame(
-                {
-                    "user_id": pdf["user_id"],
-                    "event_id": pdf["event_id"],
-                    "ts": pdf["ts"],
-                    "value": pdf["value"],
-                    "admitted": flags,
-                }
-            )
-
-        if cur_win is not None:
-            state.update((int(cur_win), int(n)))
-
-    return admit
-
-
 def admitted_stream(
     events: DataFrame, cap: int, window_sec: int
 ) -> DataFrame:
@@ -111,10 +67,34 @@ def admitted_stream(
     each flagged admitted/shed under a per-signal cap of `cap` rows
     per `window_sec` tumbling window. Filter `admitted` for the
     capacity-bounded downstream; the complement is the shed stream."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        make_admitter(cap, window_sec),
-        outputStructType=ADMIT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    win_us = window_sec * 1_000_000
+
+    def admit(key, rows, state):
+        import pandas as pd
+
+        cur_win, n = state if state is not None else (None, 0)
+        us = rows["ts"].astype("datetime64[us]").astype("int64").to_numpy()
+        flags = []
+        for t in us:
+            w = (t // win_us) * win_us
+            if cur_win is None or w > cur_win:
+                cur_win, n = w, 0
+            if w < cur_win:
+                flags.append(False)  # window already passed: shed
+            elif n < cap:
+                flags.append(True)
+                n += 1
+            else:
+                flags.append(False)
+        out = pd.DataFrame(
+            {
+                "user_id": rows["user_id"],
+                "event_id": rows["event_id"],
+                "ts": rows["ts"],
+                "value": rows["value"],
+                "admitted": flags,
+            }
+        )
+        return out, (int(cur_win), int(n))
+
+    return stateful_stream_scan(events, admit, ADMIT_SCHEMA, STATE_SCHEMA)

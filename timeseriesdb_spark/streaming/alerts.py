@@ -17,13 +17,17 @@ eventually closes them — exactly a real alerting engine's semantics
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
     StructField,
     StructType,
     TimestampType,
+)
+
+from timeseriesdb_spark.operators.transforms import (
+    carry_scan_fn,
+    stateful_stream_scan,
 )
 
 EPISODE_SCHEMA = StructType(
@@ -46,85 +50,63 @@ STATE_SCHEMA = StructType(
 )
 
 
-def make_detector(threshold: float, min_len: int):
-    """Factory for the stateful episode kernel (closure ships by
-    value — executors never import this module)."""
+def episode_step(threshold: float, min_len: int):
+    """The island-scan step: state is the open episode, or None (the
+    runner then removes the key's state) once a calm sample closes
+    it."""
 
-    def detect(key, pdfs, state):
+    def detect(uid, rows, state):
         import pandas as pd
 
-        (uid,) = key
-        open_ep = list(state.get) if state.exists else None  # [n, s, e, pk]
+        open_ep = list(state) if state is not None else None  # [n, s, e, pk]
         done: list[tuple] = []
-
-        # Materialize the key's WHOLE micro-batch before sorting:
-        # applyInPandasWithState hands a key's rows in arbitrary
-        # post-shuffle order, split into Arrow chunks of
-        # spark.sql.execution.arrow.maxRecordsPerBatch rows — sorting
-        # each chunk independently would silently split/merge episodes
-        # whenever a key exceeds one chunk (>10k rows default) or a
-        # multi-partition source interleaves fetch order. One concat +
-        # one sort restores the global-order contract the island scan
-        # needs; memory is bounded by the key's micro-batch slice, the
-        # same bound the per-chunk path already implied for state.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        whole = (
-            pd.concat(chunks, ignore_index=True) if chunks else None
-        )
-        for pdf in [whole] if whole is not None else []:
-            pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-            flags = (pdf["value"] > threshold).to_numpy()
-            us = (pdf["ts"].astype("datetime64[us]").astype("int64")).to_numpy()
-            vals = pdf["value"].to_numpy()
-            i = 0
-            n_rows = len(pdf)
-            while i < n_rows:
-                j = i
-                while j < n_rows and flags[j] == flags[i]:
-                    j += 1
-                if flags[i]:  # breaching island [i, j)
-                    if open_ep is None:
-                        open_ep = [j - i, us[i], us[j - 1], vals[i:j].max()]
-                    else:
-                        open_ep[0] += j - i
-                        open_ep[2] = us[j - 1]
-                        open_ep[3] = max(open_ep[3], vals[i:j].max())
-                else:  # calm island closes any open episode
-                    if open_ep is not None:
-                        if open_ep[0] >= min_len:
-                            done.append(tuple(open_ep))
-                        open_ep = None
-                i = j
-
-        if open_ep is not None:
-            state.update(tuple(open_ep))
-        else:
-            state.remove()
-
-        if done:
-            yield pd.DataFrame(
-                {
-                    "user_id": [uid] * len(done),
-                    "start_ts": [pd.Timestamp(s * 1000) for _, s, _, _ in done],
-                    "end_ts": [pd.Timestamp(e * 1000) for _, _, e, _ in done],
-                    "n_samples": [n for n, _, _, _ in done],
-                    "peak_value": [pk for _, _, _, pk in done],
-                }
-            )
+        flags = (rows["value"] > threshold).to_numpy()
+        us = (rows["ts"].astype("datetime64[us]").astype("int64")).to_numpy()
+        vals = rows["value"].to_numpy()
+        i = 0
+        n_rows = len(rows)
+        while i < n_rows:
+            j = i
+            while j < n_rows and flags[j] == flags[i]:
+                j += 1
+            if flags[i]:  # breaching island [i, j)
+                if open_ep is None:
+                    open_ep = [j - i, us[i], us[j - 1], vals[i:j].max()]
+                else:
+                    open_ep[0] += j - i
+                    open_ep[2] = us[j - 1]
+                    open_ep[3] = max(open_ep[3], vals[i:j].max())
+            else:  # calm island closes any open episode
+                if open_ep is not None:
+                    if open_ep[0] >= min_len:
+                        done.append(tuple(open_ep))
+                    open_ep = None
+            i = j
+        out = pd.DataFrame(
+            {
+                "user_id": [uid] * len(done),
+                "start_ts": [pd.Timestamp(s * 1000) for _, s, _, _ in done],
+                "end_ts": [pd.Timestamp(e * 1000) for _, _, e, _ in done],
+                "n_samples": [n for n, _, _, _ in done],
+                "peak_value": [pk for _, _, _, pk in done],
+            }
+        ) if done else None
+        return out, open_ep
 
     return detect
+
+
+def make_detector(threshold: float, min_len: int):
+    """The stream runner's (key, pdfs, state) callable for
+    episode_step."""
+    return carry_scan_fn(episode_step(threshold, min_len))
 
 
 def alert_stream(
     events: DataFrame, threshold: float, min_len: int
 ) -> DataFrame:
     """events stream (user_id, event_id, ts, value) → stream of closed
-    alert episodes. Batches must arrive per-signal in time order (the
-    reference's arrival-order assumption, future_signal.rs:207)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        make_detector(threshold, min_len),
-        outputStructType=EPISODE_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    alert episodes."""
+    return stateful_stream_scan(
+        events, episode_step(threshold, min_len), EPISODE_SCHEMA, STATE_SCHEMA
     )

@@ -20,7 +20,6 @@ same as alerts/segmenter.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -29,6 +28,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from timeseriesdb_spark.operators.transforms import stateful_stream_scan
 
 INTERVAL_SCHEMA = StructType(
     [
@@ -50,37 +51,26 @@ STATE_SCHEMA = StructType(
 )
 
 
-def _scd2_kernel(key, pdfs, state):
-    import pandas as pd
+def scd2_stream(events: DataFrame) -> DataFrame:
+    """events stream (user_id, event_id, ts, event_type) → stream of
+    CLOSED SCD-2 intervals (is_current = 0 rows of the batch build).
+    The open current row per user stays in state — query it by
+    unioning this sink's intervals with the state-closing change that
+    eventually arrives, exactly a warehouse's current-record table."""
 
-    (uid,) = key
-    cur = list(state.get) if state.exists else None  # [state, vf_us, ver]
-    closed: list[tuple] = []
+    def scd2(uid, rows, state):
+        import pandas as pd
 
-    # One concat + one sort per key per micro-batch: Arrow chunking
-    # and post-shuffle row order must not split/merge intervals (the
-    # streaming/alerts.py whole-batch rule).
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(["ts", "event_id"])
-            .reset_index(drop=True)
-        )
-        us = pdf["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-        types = pdf["event_type"].to_numpy()
-        for t_us, et in zip(us, types):
+        cur = list(state) if state is not None else None  # [state, vf_us, ver]
+        closed: list[tuple] = []
+        us = rows["ts"].astype("datetime64[us]").astype("int64").to_numpy()
+        for t_us, et in zip(us, rows["event_type"].to_numpy()):
             if cur is None:
                 cur = [et, int(t_us), 1]
             elif et != cur[0]:
                 closed.append((cur[0], cur[1], int(t_us), cur[2]))
                 cur = [et, int(t_us), cur[2] + 1]
-
-    if cur is not None:
-        state.update(tuple(cur))
-
-    if closed:
-        yield pd.DataFrame(
+        out = pd.DataFrame(
             {
                 "user_id": [uid] * len(closed),
                 "state": [s for s, _, _, _ in closed],
@@ -89,19 +79,7 @@ def _scd2_kernel(key, pdfs, state):
                 "version": [v for _, _, _, v in closed],
                 "is_current": [0] * len(closed),
             }
-        )
+        ) if closed else None
+        return out, cur
 
-
-def scd2_stream(events: DataFrame) -> DataFrame:
-    """events stream (user_id, event_id, ts, event_type) → stream of
-    CLOSED SCD-2 intervals (is_current = 0 rows of the batch build).
-    The open current row per user stays in state — query it by
-    unioning this sink's intervals with the state-closing change that
-    eventually arrives, exactly a warehouse's current-record table."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _scd2_kernel,
-        outputStructType=INTERVAL_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return stateful_stream_scan(events, scd2, INTERVAL_SCHEMA, STATE_SCHEMA)

@@ -40,7 +40,7 @@ REHYDRATES from the feature store's per-signal high-water count
 (signal_high_water — Σn over the store's chunk partials IS each
 signal's next position, because pos is a dense per-signal rank and
 every positioned row lands in exactly one batch partial), seeded
-through make_positioner(initial=...). Checkpoint loss against a
+through positioned_stream(initial=...). Checkpoint loss against a
 non-empty store is refused loudly unless the caller declares intent
 (api.maintain_drift_feature_stream's on_fresh_checkpoint).
 
@@ -56,7 +56,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -65,6 +64,7 @@ from pyspark.sql.types import (
 )
 
 from timeseriesdb_spark.operators.common import merge_by
+from timeseriesdb_spark.operators.transforms import stateful_stream_scan
 
 POSITIONED_SCHEMA = StructType(
     [
@@ -83,11 +83,14 @@ STATE_SCHEMA = StructType(
 )
 
 
-def make_positioner(initial: dict | None = None):
-    """Factory for the stateful position-assignment kernel (closure
-    ships by value — executors never import this module). State per
-    signal: the count of rows already positioned plus the last emitted
-    (ts, event_id) sort key.
+def positioned_stream(
+    events: DataFrame, initial: dict | None = None
+) -> DataFrame:
+    """events stream (user_id, event_id, ts, value) → stream of
+    (user_id, pos, value) with pos = the signal's global arrival rank
+    (row_number over (ts, event_id) — what the batch drift queries
+    window for). State per signal: the count of rows already
+    positioned plus the last emitted (ts, event_id) sort key.
 
     `initial` (signal → already-positioned row count) seeds the carry
     for signals with NO state yet — the checkpoint-loss rehydrate path
@@ -101,68 +104,40 @@ def make_positioner(initial: dict | None = None):
     instead (ADVICE r12)."""
     seed = dict(initial) if initial else {}
 
-    def assign(key, pdfs, state):
+    def assign(uid, rows, state):
         import numpy as np
         import pandas as pd
 
-        (uid,) = key
-        if state.exists:
-            carry, last_ts, last_eid = state.get
+        if state is not None:
+            carry, last_ts, last_eid = state
         else:
             carry, last_ts, last_eid = int(seed.get(uid, 0)), None, None
-        chunks = [p for p in pdfs if len(p)]
-        # Concat BEFORE sorting (the smoothing.py lesson): a per-chunk
-        # sort would interleave positions out of time order whenever a
-        # key spans Arrow chunks.
-        if chunks:
-            whole = pd.concat(chunks, ignore_index=True)
-            whole = whole.sort_values(["ts", "event_id"]).reset_index(
-                drop=True
+        ts_ns = rows["ts"].to_numpy(dtype="datetime64[ns]").astype(np.int64)
+        eid = rows["event_id"].to_numpy(dtype=np.int64)
+        if last_ts is not None and (
+            (int(ts_ns[0]), int(eid[0])) < (last_ts, last_eid)
+        ):
+            raise ValueError(
+                f"drift position carry: signal {uid} received a "
+                f"batch whose min sort key (ts={ts_ns[0]}ns, "
+                f"event_id={eid[0]}) regresses below the last "
+                f"positioned key (ts={last_ts}ns, event_id="
+                f"{last_eid}); per-signal time-ordered arrival "
+                "across micro-batches is a correctness contract — "
+                "positions would silently re-bucket"
             )
-            ts_ns = whole["ts"].to_numpy(dtype="datetime64[ns]").astype(
-                np.int64
-            )
-            eid = whole["event_id"].to_numpy(dtype=np.int64)
-            if last_ts is not None and (
-                (int(ts_ns[0]), int(eid[0])) < (last_ts, last_eid)
-            ):
-                raise ValueError(
-                    f"drift position carry: signal {uid} received a "
-                    f"batch whose min sort key (ts={ts_ns[0]}ns, "
-                    f"event_id={eid[0]}) regresses below the last "
-                    f"positioned key (ts={last_ts}ns, event_id="
-                    f"{last_eid}); per-signal time-ordered arrival "
-                    "across micro-batches is a correctness contract — "
-                    "positions would silently re-bucket"
-                )
-            n = len(whole)
-            yield pd.DataFrame(
-                {
-                    "user_id": whole["user_id"],
-                    "pos": np.arange(carry, carry + n, dtype=np.int64),
-                    "value": whole["value"],
-                }
-            )
-            carry += n
-            last_ts, last_eid = int(ts_ns[-1]), int(eid[-1])
-        state.update((carry, last_ts, last_eid))
+        n = len(rows)
+        out = pd.DataFrame(
+            {
+                "user_id": rows["user_id"],
+                "pos": np.arange(carry, carry + n, dtype=np.int64),
+                "value": rows["value"],
+            }
+        )
+        return out, (carry + n, int(ts_ns[-1]), int(eid[-1]))
 
-    return assign
-
-
-def positioned_stream(
-    events: DataFrame, initial: dict | None = None
-) -> DataFrame:
-    """events stream (user_id, event_id, ts, value) → stream of
-    (user_id, pos, value) with pos = the signal's global arrival rank
-    (row_number over (ts, event_id) — what the batch drift queries
-    window for). `initial` seeds per-signal carries on rehydrate."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        make_positioner(initial),
-        outputStructType=POSITIONED_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return stateful_stream_scan(
+        events, assign, POSITIONED_SCHEMA, STATE_SCHEMA
     )
 
 

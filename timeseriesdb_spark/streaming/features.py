@@ -18,7 +18,6 @@ across micro-batch and Arrow-chunk seams).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -28,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from timeseriesdb_spark.operators.funnels import CONV_EVENT, FEATURE_EVENTS
+from timeseriesdb_spark.operators.transforms import stateful_stream_scan
 
 SNAPSHOT_SCHEMA = StructType(
     [StructField("user_id", LongType()), StructField("purchase_id", LongType()),
@@ -53,62 +53,39 @@ STATE_SCHEMA = StructType(
     ]
 )
 
-_FEATS = list(FEATURE_EVENTS)
-_CONV = CONV_EVENT
+def feature_snapshot_stream(events: DataFrame) -> DataFrame:
+    """events stream (user_id, event_id, ts, event_type, value) →
+    stream of purchases enriched with the strictly-before feature
+    vector — one output row per purchase, state O(1) per user."""
+    feats, conv = list(FEATURE_EVENTS), CONV_EVENT
+    idx = {f: i for i, f in enumerate(feats)}
 
+    def snapshot(uid, rows, state):
+        import pandas as pd
 
-def _feature_kernel(key, pdfs, state):
-    import pandas as pd
-
-    (uid,) = key
-    n_f = len(_FEATS)
-    if state.exists:
-        st = list(state.get)  # [last_0, n_0, last_1, n_1, ...]
-    else:
-        st = [None, 0] * n_f
-    idx = {f: i for i, f in enumerate(_FEATS)}
-    out: list[tuple] = []
-
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(["ts", "event_id"])
-            .reset_index(drop=True)
-        )
-        for row in pdf.itertuples(index=False):
+        # [last_0, n_0, last_1, n_1, ...]
+        st = list(state) if state is not None else [None, 0] * len(feats)
+        out: list[tuple] = []
+        for row in rows.itertuples(index=False):
             et = row.event_type
-            if et == _CONV:
-                out.append(
-                    (int(row.event_id), row.ts, tuple(st))
-                )
+            if et == conv:
+                out.append((int(row.event_id), row.ts, tuple(st)))
             j = idx.get(et)
             if j is not None:
                 st[2 * j] = float(row.value)
                 st[2 * j + 1] = int(st[2 * j + 1]) + 1
-
-    state.update(tuple(st))
-
-    if out:
+        if not out:
+            return None, st
         data = {
             "user_id": [uid] * len(out),
             "purchase_id": [p for p, _, _ in out],
             "purchase_ts": [t for _, t, _ in out],
         }
-        for j, feat in enumerate(_FEATS):
+        for j, feat in enumerate(feats):
             data[f"last_{feat}_value"] = [s[2 * j] for _, _, s in out]
             data[f"n_{feat}_before"] = [int(s[2 * j + 1]) for _, _, s in out]
-        yield pd.DataFrame(data)
+        return pd.DataFrame(data), st
 
-
-def feature_snapshot_stream(events: DataFrame) -> DataFrame:
-    """events stream (user_id, event_id, ts, event_type, value) →
-    stream of purchases enriched with the strictly-before feature
-    vector — one output row per purchase, state O(1) per user."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _feature_kernel,
-        outputStructType=SNAPSHOT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return stateful_stream_scan(
+        events, snapshot, SNAPSHOT_SCHEMA, STATE_SCHEMA
     )

@@ -20,7 +20,6 @@ O(w log w) sort of a 25-value frame.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -30,6 +29,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from timeseriesdb_spark.operators.transforms import stateful_stream_scan
 from timeseriesdb_spark.operators.windows import RQ_ROWS
 
 QUANTILE_SCHEMA = StructType(
@@ -46,71 +46,46 @@ QUANTILE_SCHEMA = StructType(
 STATE_SCHEMA = StructType([StructField("tail", ArrayType(DoubleType()))])
 
 
-def make_rolling_quantile(w_rows: int):
-    """Factory for the stateful kernel (closure ships by value — the
-    executor never imports this module)."""
+def rolling_quantile_stream(events: DataFrame, w_rows: int = RQ_ROWS) -> DataFrame:
+    """events stream (user_id, event_id, ts, value) → stream of
+    rank-selected rolling quantiles over a trailing `w_rows` frame."""
     if w_rows < 2:
         # w_rows=1 would make the carry slice buf[-(w_rows-1):] ==
         # buf[-0:] == the WHOLE buffer — unbounded state (r8 advice).
         raise ValueError(f"rolling quantile needs w_rows >= 2, got {w_rows}")
 
-    def quantiles(key, pdfs, state):
+    def quantiles(uid, rows, state):
         import numpy as np
         import pandas as pd
 
-        (uid,) = key
-        tail = list(state.get[0]) if state.exists else []
-        chunks = [p for p in pdfs if len(p)]
-        whole = pd.concat(chunks, ignore_index=True) if chunks else None
-        frames = []
-        for pdf in [whole] if whole is not None else []:
-            # concat BEFORE sorting (a per-chunk sort would slide the
-            # frame out of time order when a key spans Arrow chunks)
-            pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-            v = pdf["value"].to_numpy(dtype=np.float64)
-            buf = np.concatenate([np.asarray(tail, dtype=np.float64), v])
-            k = len(tail)
-            med = np.empty(len(v))
-            p90 = np.empty(len(v))
-            nf = np.empty(len(v), dtype=np.int64)
-            for i in range(len(v)):
-                end = k + i + 1
-                frame = np.sort(buf[max(0, end - w_rows) : end])
-                n = len(frame)
-                med[i] = frame[(n + 1) // 2 - 1]
-                p90[i] = frame[(9 * n + 9) // 10 - 1]
-                nf[i] = n
-            # plain Python floats: numpy scalars don't pickle into the
-            # state row
-            tail = [float(x) for x in buf[-(w_rows - 1) :]]
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "user_id": pdf["user_id"],
-                        "event_id": pdf["event_id"],
-                        "ts": pdf["ts"],
-                        "med": med,
-                        "p90": p90,
-                        "n_frame": nf,
-                    }
-                )
-            )
-        state.update((tail,))
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+        tail = list(state[0]) if state is not None else []
+        v = rows["value"].to_numpy(dtype=np.float64)
+        buf = np.concatenate([np.asarray(tail, dtype=np.float64), v])
+        k = len(tail)
+        med = np.empty(len(v))
+        p90 = np.empty(len(v))
+        nf = np.empty(len(v), dtype=np.int64)
+        for i in range(len(v)):
+            end = k + i + 1
+            frame = np.sort(buf[max(0, end - w_rows) : end])
+            n = len(frame)
+            med[i] = frame[(n + 1) // 2 - 1]
+            p90[i] = frame[(9 * n + 9) // 10 - 1]
+            nf[i] = n
+        out = pd.DataFrame(
+            {
+                "user_id": rows["user_id"],
+                "event_id": rows["event_id"],
+                "ts": rows["ts"],
+                "med": med,
+                "p90": p90,
+                "n_frame": nf,
+            }
+        )
+        # plain Python floats: numpy scalars don't pickle into the
+        # state row
+        return out, ([float(x) for x in buf[-(w_rows - 1) :]],)
 
-    return quantiles
-
-
-def rolling_quantile_stream(events: DataFrame, w_rows: int = RQ_ROWS) -> DataFrame:
-    """events stream (user_id, event_id, ts, value) → stream of
-    rank-selected rolling quantiles. Batches must arrive per-signal in
-    time order (the arrival-order assumption of the reference's
-    ingestion, future_signal.rs:207)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        make_rolling_quantile(w_rows),
-        outputStructType=QUANTILE_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return stateful_stream_scan(
+        events, quantiles, QUANTILE_SCHEMA, STATE_SCHEMA
     )

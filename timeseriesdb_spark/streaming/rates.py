@@ -23,7 +23,6 @@ double regardless of throughput.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -31,6 +30,11 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
+)
+
+from timeseriesdb_spark.operators.transforms import (
+    carry_scan_fn,
+    stateful_stream_scan,
 )
 
 RATE_SCHEMA = StructType(
@@ -46,61 +50,39 @@ RATE_SCHEMA = StructType(
 STATE_SCHEMA = StructType([StructField("last_value", DoubleType())])
 
 
-def make_counter_rate():
-    """Factory for the stateful delta kernel (closure ships by value —
-    executors never import this module)."""
+def rate_step():
+    """The delta step: state is the signal's last raw value."""
 
-    def rate(key, pdfs, state):
+    def rate(key, rows, state):
         import numpy as np
         import pandas as pd
 
-        carry = state.get[0] if state.exists else None
-        frames = []
-        # Concat BEFORE sorting: a key's micro-batch arrives in
-        # arbitrary post-shuffle order split into Arrow chunks —
-        # per-chunk sorts would compute deltas against the wrong
-        # neighbor whenever a key spans chunks (>10k rows default or
-        # interleaved multi-partition fetch).
-        chunks = [p for p in pdfs if len(p)]
-        whole = pd.concat(chunks, ignore_index=True) if chunks else None
-        for pdf in [whole] if whole is not None else []:
-            pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-            v = pdf["value"].to_numpy(np.float64)
-            first = np.nan if carry is None else carry
-            prev = np.concatenate(([first], v[:-1]))
-            delta = v - prev
-            is_reset = delta < 0  # NaN (no previous value) compares False
-            inc = np.where(
-                np.isnan(delta), 0.0, np.where(is_reset, v, delta)
-            )
-            carry = float(v[-1])
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "user_id": pdf["user_id"],
-                        "event_id": pdf["event_id"],
-                        "ts": pdf["ts"],
-                        "inc_raw": inc,
-                        "is_reset": is_reset.astype(np.int32),
-                    }
-                )
-            )
-        if carry is not None:
-            state.update((carry,))
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+        v = rows["value"].to_numpy(np.float64)
+        first = np.nan if state is None else state[0]
+        prev = np.concatenate(([first], v[:-1]))
+        delta = v - prev
+        is_reset = delta < 0  # NaN (no previous value) compares False
+        inc = np.where(np.isnan(delta), 0.0, np.where(is_reset, v, delta))
+        out = pd.DataFrame(
+            {
+                "user_id": rows["user_id"],
+                "event_id": rows["event_id"],
+                "ts": rows["ts"],
+                "inc_raw": inc,
+                "is_reset": is_reset.astype(np.int32),
+            }
+        )
+        return out, (float(v[-1]),)
 
     return rate
 
 
+def make_counter_rate():
+    """The stream runner's (key, pdfs, state) callable for rate_step."""
+    return carry_scan_fn(rate_step())
+
+
 def counter_rate_stream(events: DataFrame) -> DataFrame:
     """events stream (user_id, event_id, ts, value) → stream of per-row
-    rate events. Batches must arrive per-signal in time order (the
-    reference's arrival-order assumption, future_signal.rs:207)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        make_counter_rate(),
-        outputStructType=RATE_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    rate events."""
+    return stateful_stream_scan(events, rate_step(), RATE_SCHEMA, STATE_SCHEMA)

@@ -7,29 +7,34 @@ future_signal.rs:121-218, lib.rs:337, test_configs/config.toml:4) and
 the buffer maintains AggStats{max,min,sum,count} per segment at put
 (buffer_pool.rs:757-790, 1467-1469).
 
-Here: `applyInPandasWithState` keyed on signal_id. State is ONLY the
-running (segment_index, count, min, max, sum) of the in-progress
-segment — O(1) per signal, never the raw values — so state-store size
-is #signals × a few scalars regardless of throughput. Completed
+Here: a carry-scan step (operators/transforms.stateful_stream_scan)
+keyed on signal_id. State is ONLY the running (segment_index, count,
+min, max, sum) of the in-progress segment — O(1) per signal, never
+the raw values — so state-store size is #signals × a few scalars
+regardless of throughput. Completed
 segments are emitted as soon as their 1000th value arrives in arrival
 order (the reference's implicit ordering; stage files time-ordered to
 reproduce it exactly).
 
-At 100 TB/day the same operator runs on a Kafka source with watermark
--driven state eviction for dead signals (GroupStateTimeout); the emit
-stream feeds the rollup table exactly like the reference's compression
-daemon drains full segments.
+At 100 TB/day the same operator runs on a Kafka source with
+timeout-driven state eviction for dead signals (`idle_timeout_ms`);
+the emit stream feeds the rollup table exactly like the reference's
+compression daemon drains full segments.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
     StructField,
     StructType,
+)
+
+from timeseriesdb_spark.operators.transforms import (
+    carry_scan_fn,
+    stateful_stream_scan,
 )
 
 SEGMENT_SIZE = 1000  # the reference's default (config.toml:4)
@@ -56,65 +61,41 @@ STATE_SCHEMA = StructType(
 )
 
 
-def make_chunk(seg_size: int, idle_timeout_ms: int | None = None):
-    """Factory for the stateful segmentation kernel (returned closure
-    ships by value — executors never import this module).
+def segment_step(seg_size: int):
+    """The segmentation step and its idle-timeout finalize.
 
-    With `idle_timeout_ms`, a signal idle past the timeout FLUSHES its
-    partial segment (cnt < seg_size) and clears its state — the
-    reference's buffer eviction of cold signals (buffer_pool.rs
-    evict/flush path): without it, a dead signal pins its unfinished
-    segment in the state store forever. Downstream treats the short
-    row as a sealed short segment, exactly like the reference's dirty
-    flush."""
+    The step is vectorized over the key's micro-batch: segment
+    boundaries are arithmetic (carry + batch length), per-segment
+    stats come from numpy reduceat over the boundary offsets — no
+    per-value Python loop in the ingest hot path. State stays O(1):
+    only the open segment's (idx, cnt, min, max, sum).
 
-    def chunk(key, pdfs, state):
-        # Vectorized over each Arrow batch: segment boundaries are
-        # arithmetic (carry + batch length), per-segment stats come
-        # from numpy reduceat over the boundary offsets — no per-value
-        # Python loop in the ingest hot path. State stays O(1): only
-        # the open segment's (idx, cnt, min, max, sum).
+    The finalize FLUSHES a timed-out signal's partial segment
+    (cnt < seg_size) — the reference's buffer eviction of cold signals
+    (buffer_pool.rs evict/flush path): without it, a dead signal pins
+    its unfinished segment in the state store forever. Downstream
+    treats the short row as a sealed short segment, exactly like the
+    reference's dirty flush."""
+
+    def chunk(uid, rows, state):
         import numpy as np
         import pandas as pd
 
-        (uid,) = key
-        if state.exists:
-            seg_idx, cnt, mn, mx, sm = state.get
-            if cnt == 0:  # stored 0.0 placeholders are not real extrema
-                mn, mx = None, None
+        seg_idx, cnt, mn, mx, sm = (
+            state if state is not None else (0, 0, None, None, 0.0)
+        )
+        if cnt == 0:  # stored 0.0 placeholders are not real extrema
+            mn, mx = None, None
+        v = rows["value"].to_numpy(dtype=np.float64)
+        out = None
+        need = seg_size - cnt  # values that close the open segment
+        if cnt + len(v) < seg_size:  # batch only extends it
+            cnt += len(v)
+            bmn, bmx = v.min(), v.max()
+            mn = bmn if mn is None or bmn < mn else mn
+            mx = bmx if mx is None or bmx > mx else mx
+            sm += v.sum()
         else:
-            seg_idx, cnt, mn, mx, sm = 0, 0, None, None, 0.0
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            # evict: flush the partial segment and drop the state
-            state.remove()
-            if cnt:
-                yield pd.DataFrame(
-                    [(uid, seg_idx, cnt, mn, mx, sm)],
-                    columns=["user_id", "seg_idx", "cnt",
-                             "seg_min", "seg_max", "seg_sum"],
-                )
-            return
-        frames = []
-        # Concat BEFORE sorting: chunks arrive in arbitrary
-        # post-shuffle order, so a per-chunk sort would segment
-        # out-of-order slices whenever a key spans Arrow chunks.
-        _chunks = [p for p in pdfs if len(p)]
-        _whole = pd.concat(_chunks, ignore_index=True) if _chunks else None
-        for pdf in [_whole] if _whole is not None else []:
-            # arrival order within the batch = event-time order (the
-            # reference's assumption); sort to make it explicit
-            pdf = pdf.sort_values(["ts", "event_id"])
-            v = pdf["value"].to_numpy(dtype=np.float64)
-            if not len(v):
-                continue
-            need = seg_size - cnt  # values that close the open segment
-            if cnt + len(v) < seg_size:  # batch only extends it
-                cnt += len(v)
-                bmn, bmx = v.min(), v.max()
-                mn = bmn if mn is None or bmn < mn else mn
-                mx = bmx if mx is None or bmx > mx else mx
-                sm += v.sum()
-                continue
             # end offset (exclusive) of every segment completed in v
             cuts = np.arange(need, len(v) + 1, seg_size)
             bounds = np.concatenate(([0], cuts))[:-1]
@@ -127,17 +108,15 @@ def make_chunk(seg_size: int, idle_timeout_ms: int | None = None):
                 mins[0] = min(mins[0], mn)
                 maxs[0] = max(maxs[0], mx)
             n_seg = len(cuts)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "user_id": np.full(n_seg, uid, dtype=np.int64),
-                        "seg_idx": seg_idx + np.arange(n_seg, dtype=np.int64),
-                        "cnt": np.full(n_seg, seg_size, dtype=np.int64),
-                        "seg_min": mins,
-                        "seg_max": maxs,
-                        "seg_sum": sums,
-                    }
-                )
+            out = pd.DataFrame(
+                {
+                    "user_id": np.full(n_seg, uid, dtype=np.int64),
+                    "seg_idx": seg_idx + np.arange(n_seg, dtype=np.int64),
+                    "cnt": np.full(n_seg, seg_size, dtype=np.int64),
+                    "seg_min": mins,
+                    "seg_max": maxs,
+                    "seg_sum": sums,
+                }
             )
             seg_idx += n_seg
             tail = v[cuts[-1]:]
@@ -146,14 +125,28 @@ def make_chunk(seg_size: int, idle_timeout_ms: int | None = None):
                 mn, mx, sm = tail.min(), tail.max(), tail.sum()
             else:
                 mn, mx, sm = None, None, 0.0
-        state.update((seg_idx, cnt, mn if mn is not None else 0.0,
-                      mx if mx is not None else 0.0, sm))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+        return out, (seg_idx, cnt, mn if mn is not None else 0.0,
+                     mx if mx is not None else 0.0, sm)
 
-    return chunk
+    def flush(uid, state):
+        import pandas as pd
+
+        if not state[1]:  # nothing open to flush
+            return None
+        return pd.DataFrame(
+            [(uid, *state)],
+            columns=["user_id", "seg_idx", "cnt", "seg_min", "seg_max",
+                     "seg_sum"],
+        )
+
+    return chunk, flush
+
+
+def make_chunk(seg_size: int, idle_timeout_ms: int | None = None):
+    """The stream runner's (key, pdfs, state) callable for
+    segment_step; with `idle_timeout_ms`, an idle signal flushes its
+    partial segment and clears its state."""
+    return carry_scan_fn(*segment_step(seg_size), idle_timeout_ms)
 
 
 def segment_stats_stream(
@@ -164,18 +157,8 @@ def segment_stats_stream(
     """events stream (user_id, ts, value, ...) → stream of completed
     per-signal segment AggStats rows. `idle_timeout_ms` enables
     cold-signal eviction (processing-time timeout → partial-segment
-    flush; see make_chunk)."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            make_chunk(segment_size, idle_timeout_ms),
-            outputStructType=SEGMENT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.ProcessingTimeTimeout
-                if idle_timeout_ms is not None
-                else GroupStateTimeout.NoTimeout
-            ),
-        )
+    flush; see segment_step)."""
+    step, flush = segment_step(segment_size)
+    return stateful_stream_scan(
+        events, step, SEGMENT_SCHEMA, STATE_SCHEMA, flush, idle_timeout_ms
     )

@@ -5,8 +5,8 @@ a TWO-EVENT tail carry per user.
 A trigram is complete when its third event arrives, so the only state
 the next micro-batch needs is each user's last two event types (the
 same minimal-tail discipline as streaming/quantile.py, with two
-strings instead of a value buffer). Each batch sorts its rows per
-user by (ts, event_id), prepends the carried tail, emits one
+strings instead of a value buffer). Each batch takes a user's rows in
+(ts, event_id) order, prepends the carried tail, emits one
 (e1, e2, e3) row per completed triple, and carries the new tail —
 every triple is emitted exactly once across any batch slicing, so
 streamed trigram rows aggregate to EXACTLY the batch miner's counts
@@ -22,7 +22,6 @@ n_users are both exact from the tier.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     LongType,
     StringType,
@@ -30,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from timeseriesdb_spark.operators.transforms import stateful_stream_scan
 
 TRIGRAM_SCHEMA = StructType(
     [
@@ -47,72 +48,33 @@ STATE_SCHEMA = StructType(
 )
 
 
-def make_trigram_kernel():
-    """Factory for the stateful kernel (nested closure ships by value —
-    executors never import this module)."""
-
-    def trigrams(key, pdfs, state):
-        import pandas as pd
-
-        (uid,) = key
-        # tail = the user's last two event types, oldest first; either
-        # may be None while the stream is shorter than two events
-        p1, p2 = (state.get if state.exists else (None, None))
-        chunks = [p for p in pdfs if len(p)]
-        out = []
-        if chunks:
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                .sort_values(["ts", "event_id"])
-                .reset_index(drop=True)
-            )
-            types = pdf["event_type"].tolist()
-            buf = [t for t in (p1, p2) if t is not None] + types
-            k = len(buf) - len(types)
-            rows = []
-            for i, t in enumerate(types):
-                j = k + i  # position of this event in buf
-                if j >= 2:
-                    rows.append((buf[j - 2], buf[j - 1], t))
-                else:
-                    rows.append(None)
-            keep = [r is not None for r in rows]
-            if any(keep):
-                done = pdf[keep]
-                tri = [r for r in rows if r is not None]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "user_id": done["user_id"].reset_index(drop=True),
-                            "event_id": done["event_id"].reset_index(
-                                drop=True
-                            ),
-                            "ts": done["ts"].reset_index(drop=True),
-                            "e1": [r[0] for r in tri],
-                            "e2": [r[1] for r in tri],
-                            "e3": [r[2] for r in tri],
-                        }
-                    )
-                )
-            if len(buf) >= 2:
-                p1, p2 = buf[-2], buf[-1]
-            elif len(buf) == 1:
-                p1, p2 = None, buf[-1]
-        state.update((p1, p2))
-        yield from out
-
-    return trigrams
-
-
 def event_trigram_stream(events: DataFrame) -> DataFrame:
     """events stream (user_id, event_id, ts, event_type) → stream of
-    completed trigrams, one row per event that closes a triple.
-    Batches must arrive per-signal in time order (the arrival-order
-    assumption of the reference's ingestion, future_signal.rs:207)."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        make_trigram_kernel(),
-        outputStructType=TRIGRAM_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    completed trigrams, one row per event that closes a triple."""
+
+    def trigrams(uid, rows, state):
+        import pandas as pd
+
+        # tail = the user's last two event types, oldest first; either
+        # may be None while the stream is shorter than two events
+        p1, p2 = state if state is not None else (None, None)
+        types = rows["event_type"].tolist()
+        buf = [t for t in (p1, p2) if t is not None] + types
+        k = len(buf) - len(types)  # position of the first new event
+        done = rows.iloc[max(0, 2 - k):]  # the rows that close a triple
+        tri = [
+            (buf[j - 2], buf[j - 1], buf[j]) for j in range(max(k, 2), len(buf))
+        ]
+        out = pd.DataFrame(
+            {
+                "user_id": done["user_id"].reset_index(drop=True),
+                "event_id": done["event_id"].reset_index(drop=True),
+                "ts": done["ts"].reset_index(drop=True),
+                "e1": [r[0] for r in tri],
+                "e2": [r[1] for r in tri],
+                "e3": [r[2] for r in tri],
+            }
+        ) if tri else None
+        return out, ([None] + buf)[-2:]
+
+    return stateful_stream_scan(events, trigrams, TRIGRAM_SCHEMA, STATE_SCHEMA)

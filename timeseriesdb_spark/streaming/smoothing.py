@@ -3,13 +3,10 @@ stateful operator with O(1) carry state per signal.
 
 The batch form (operators/tsanalytics.q_ewma) runs the recurrence over
 each signal's whole history; a stream can't, so state carries ONLY the
-previous smoothed value s_{t-1} (one double per signal — the minimal
-carry the recurrence needs, the same O(1)-state discipline as
-streaming/segmenter.py). Each Arrow batch seeds pandas' C ewm kernel
-with the carry by prepending it as a pseudo-value: ewm(adjust=False)
-then computes exactly s_t = α·v_t + (1−α)·s_{t-1} from the first real
-row on, so chunked output is BIT-IDENTICAL to the one-pass batch
-recurrence (pinned by tests/test_streaming_smoothing.py).
+previous smoothed value s_{t-1} (one double per signal). Both forms run
+the one step, tsanalytics.ewma_step, whose exactness argument makes
+chunked output BIT-IDENTICAL to the one-pass batch recurrence (pinned
+by tests/test_streaming_smoothing.py).
 
 This is the 100 TB shape: per-(signal, day-partition) chunks processed
 in time order with the previous chunk's tail as carry-in — state-store
@@ -19,7 +16,6 @@ size is #signals × one double regardless of throughput.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -27,6 +23,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from timeseriesdb_spark.operators.transforms import stateful_stream_scan
+from timeseriesdb_spark.operators.tsanalytics import ewma_step
 
 EWMA_SCHEMA = StructType(
     [
@@ -40,68 +39,9 @@ EWMA_SCHEMA = StructType(
 STATE_SCHEMA = StructType([StructField("s", DoubleType())])
 
 
-def make_ewma(alpha: float):
-    """Factory for the stateful EWMA kernel (closure ships by value —
-    executors never import this module)."""
-
-    def smooth(key, pdfs, state):
-        import pandas as pd
-
-        (uid,) = key
-        carry = state.get[0] if state.exists else None
-        frames = []
-        # Concat BEFORE sorting: a per-chunk sort would seed the EWMA
-        # recursion out of time order whenever a key spans Arrow
-        # chunks (arbitrary post-shuffle order).
-        chunks = [p for p in pdfs if len(p)]
-        whole = pd.concat(chunks, ignore_index=True) if chunks else None
-        for pdf in [whole] if whole is not None else []:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            v = pdf["value"].reset_index(drop=True)
-            if carry is None:
-                s = v.ewm(alpha=alpha, adjust=False).mean()
-            else:
-                seeded = pd.concat(
-                    [pd.Series([carry]), v], ignore_index=True
-                )
-                s = (
-                    seeded.ewm(alpha=alpha, adjust=False)
-                    .mean()
-                    .iloc[1:]
-                    .reset_index(drop=True)
-                )
-            carry = float(s.iloc[-1])
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "user_id": pdf["user_id"].reset_index(drop=True),
-                        "event_id": pdf["event_id"].reset_index(drop=True),
-                        "ts": pdf["ts"].reset_index(drop=True),
-                        "ewma": s,
-                    }
-                )
-            )
-        if carry is not None:
-            state.update((carry,))
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
-
-    return smooth
-
-
 def ewma_stream(events: DataFrame, alpha: float) -> DataFrame:
     """events stream (user_id, event_id, ts, value) → stream of
-    smoothed rows. Batches must arrive per-signal in time order (file
-    source staged time-ordered, or a Kafka source partitioned by
-    signal with in-partition ordering — the reference's arrival-order
-    assumption, future_signal.rs:207)."""
-    return (
-        events.groupBy("user_id")
-        .applyInPandasWithState(
-            make_ewma(alpha),
-            outputStructType=EWMA_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    smoothed rows."""
+    return stateful_stream_scan(
+        events, ewma_step(alpha), EWMA_SCHEMA, STATE_SCHEMA
     )
