@@ -1,15 +1,32 @@
 """The signal store: partitioned-Parquet persistence (SURVEY.md §1.5).
 
 Replaces the reference's RocksDB KV of bincode'd segments
-(file_handler.rs:29-53 fm_write/fm_get) with the declarative layout
-Spark prunes natively:
+(file_handler.rs:29-53 fm_write/fm_get), whose segments are time-ordered
+and keyed by (timestamp, signal) (segment.rs:77-90), with the
+declarative layout Spark prunes natively:
 
 - partition column `event_date` (day of ts) → partition pruning for
   time-range queries (the SegmentKey.timestamp axis);
-- file-level signal clustering via repartition on (signal bucket) +
-  sortWithinPartitions(user_id, ts) → per-file min/max footer stats
-  prune on signal id (the SegmentKey.signal axis) and rows arrive
-  presorted for per-signal windows;
+- every file sorted by (user_id, ts) → per-signal windows read their
+  rows presorted, and within a file the pages (Parquet's column index)
+  each hold a narrow user_id range. Whether Spark's reads skip pages by
+  those ranges is unverified. At the store's batch sizes a file is one
+  row group spanning the whole id range, so footer (row-group) stats do
+  not prune on user_id, and neither does the hash: each file still
+  spans nearly the whole id range;
+- the sort leads with the partition column: `partitionBy` plans its own
+  sort on `event_date` unless the rows arrive sorted on it, and the
+  optimizer then drops a local sort that does not start with it, so the
+  files would come out unsorted;
+- few files, sized to the batch: rows are hashed on
+  pmod(hash(user_id), SIGNAL_BUCKETS), a key with SIGNAL_BUCKETS values
+  and no fixed partition count. AQE coalesces a small batch to one
+  partition (one file per day), and a batch too large to coalesce
+  still fills at most SIGNAL_BUCKETS partitions, so files per day and
+  write stay at most SIGNAL_BUCKETS. Each file costs more than its
+  bytes: without Hadoop's native library every file and dir the
+  committer makes forks a `chmod`, and every merge-at-read opens every
+  file;
 - Parquet encodings (dictionary / delta / byte-stream-split) + zstd do
   the Methods-enum job (§1.3) per column chunk, chosen by the writer.
 
@@ -24,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-SIGNAL_BUCKETS = 16  # files per date partition ≈ cluster write parallelism
+SIGNAL_BUCKETS = 16  # file cap per date partition, per write and compaction
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # compaction target file size
 
 
@@ -40,12 +57,13 @@ def _micros_timestamps(events: DataFrame) -> None:
 
 
 def write_signal_store(events: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist events as the time-partitioned, signal-clustered store."""
+    """Persist events as the time-partitioned, signal-clustered store
+    laid out as the module docstring describes."""
     _micros_timestamps(events)
     (
         events.withColumn("event_date", F.to_date("ts"))
-        .repartition(SIGNAL_BUCKETS, F.col("user_id"))
-        .sortWithinPartitions("user_id", "ts")
+        .repartition(F.pmod(F.hash("user_id"), F.lit(SIGNAL_BUCKETS)))
+        .sortWithinPartitions("event_date", "user_id", "ts")
         .write.partitionBy("event_date")
         .option("compression", "zstd")
         .mode(mode)
@@ -131,8 +149,9 @@ def compact_partition(spark: SparkSession, path: str, event_date: str) -> int:
     """Small-file compaction for one date partition — streaming ingest
     appends a file per micro-batch, and a 100 TB store lives or dies
     by file sizes (footer-stat pruning and scan throughput both
-    degrade with file count). Rewrites the partition to SIGNAL_BUCKETS
-    signal-clustered sorted files; returns the file count removed.
+    degrade with file count). Rewrites the partition to at most
+    SIGNAL_BUCKETS signal-clustered sorted files; returns the file count
+    removed.
 
     The rewrite stages to a sibling directory, then swaps by renaming
     the original to `.old` before renaming the staged copy in — a
