@@ -357,12 +357,7 @@ def main() -> None:
     # Indexes built ONCE from the FIXED ×1 corpus slice (src0) and
     # checkpointed, so the timed section is the stream alone — the
     # production shape: persisted stores, accumulating crawls.
-    from timeseriesdb_spark.operators.multimodal import (
-        fp_bands,
-        image_bands,
-        image_dhash_fingerprints,
-    )
-    from timeseriesdb_spark.operators.videomm import video_fingerprints
+    from timeseriesdb_spark.operators.multimodal import fingerprints, fp_bands
     from timeseriesdb_spark.streaming.curation import multimodal_keep_stream
 
     corpus = (
@@ -372,12 +367,8 @@ def main() -> None:
     )
     norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
     tfps = corpus.select(F.md5(norm).alias("fp")).localCheckpoint()
-    ibands = image_bands(
-        image_dhash_fingerprints(corpus), cap=True
-    ).localCheckpoint()
-    vbands = fp_bands(
-        video_fingerprints(corpus), "doc_id", "vfp", cap=True
-    ).localCheckpoint()
+    ibands = fp_bands(fingerprints(corpus, "dhash"), "dhash").localCheckpoint()
+    vbands = fp_bands(fingerprints(corpus, "vfp"), "vfp").localCheckpoint()
 
     def run_keep_stream(k: int, rep: str, fmt: str, path: str | None):
         srcdir = f"{SCRATCH}/keepsrc_{k}"
@@ -515,7 +506,7 @@ def main() -> None:
         "pair stage does its real per-group work inside the bucket,",
         "and output stays EXACTLY one row per clip — the measured",
         "rows ×16/×1 = 16.0 column. The streamed probes",
-        "(image_probe_stream / audio_probe_stream) are the same",
+        "(multimodal.fp_probe_stream, families dhash and afp) are the same",
         "band-bucketed LEFT ANTI joins on the ingest path, pinned",
         "stream==batch in tests/test_image_dedup.py and",
         "tests/test_audio_dedup.py.",

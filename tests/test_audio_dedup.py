@@ -7,7 +7,7 @@ length-shift robustness contract (a replica clip with a short appended
 tail lands within hamming DHASH_T; modality-disjoint by construction —
 the probe edits the SAMPLES, not any text), (c) decision/pair
 consistency, (d) stored-index probe parity, and (e) the payload-decode
-path: fingerprints computed from real WAV bytes (afp_with_carry) must
+path: fingerprints computed from real WAV bytes (the payload route) must
 equal fingerprints computed through the synthesis path."""
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from timeseriesdb_spark.operators.multimodal import (
     DHASH_BAND_W,
     DHASH_BANDS,
     DHASH_T,
-    audio_fingerprints,
+    fingerprints,
     q_audio_dedup,
     q_audio_fp,
     q_audio_neardup,
@@ -113,16 +113,14 @@ def test_crafted_replicas_banded_equals_brute(spark):
     assert ham(np_fps[1], np_fps[101]) == 0
     assert ham(np_fps[0], np_fps[2]) > DHASH_T
 
-    fp = audio_fingerprints(ev)
+    fp = fingerprints(ev, "afp")
     fps = _fps_of(fp)
     assert fps == np_fps  # Spark decode path == numpy synthesis path
     from timeseriesdb_spark.operators.multimodal import fp_neardup_pairs
 
     got = {
         (r.user_a, r.user_b, r.hamming)
-        for r in fp_neardup_pairs(
-            fp, "user_id", "afp", "user_a", "user_b"
-        ).collect()
+        for r in fp_neardup_pairs(fp, "afp").collect()
     }
     assert got == _brute_pairs(fps)
     assert (0, 100, ham(np_fps[0], np_fps[100])) in got
@@ -145,9 +143,8 @@ def test_incremental_stored_probe_parity(spark, tmp_path):
     dup_of_corpus, a batch-internal copy pair flags only its LARGER
     user_id."""
     from timeseriesdb_spark.operators.multimodal import (
-        incremental_audio_neardup,
-        incremental_audio_neardup_stored,
-        write_afp_store,
+        incremental_fp,
+        write_fp_store,
     )
 
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet").select(
@@ -170,18 +167,18 @@ def test_incremental_stored_probe_parity(spark, tmp_path):
 
     inline = {
         r.user_id: (r.dup_of_corpus, r.dup_of_batch, r.keep)
-        for r in incremental_audio_neardup(batch, corpus).collect()
+        for r in incremental_fp(batch, corpus, "afp").collect()
     }
     import shutil
 
     spark.sql("DROP TABLE IF EXISTS afp_probe_test")
     shutil.rmtree("spark-warehouse/afp_probe_test", ignore_errors=True)
     try:
-        write_afp_store(corpus, "afp_probe_test")
+        write_fp_store(corpus, "afp", "afp_probe_test")
         stored = {
             r.user_id: (r.dup_of_corpus, r.dup_of_batch, r.keep)
-            for r in incremental_audio_neardup_stored(
-                spark, batch, "afp_probe_test"
+            for r in incremental_fp(
+                batch, "afp_probe_test", "afp"
             ).collect()
         }
     finally:
@@ -205,10 +202,9 @@ def _payload_frame(spark, ev) -> "pd.DataFrame":
 
 
 def test_payload_decode_path_matches_synthesis_path(spark):
-    """afp_with_carry over encoded WAV payloads == audio_fingerprints
-    through the synthesis path — pins that the stored/streamed byte
-    route and the events route hash identically."""
-    from timeseriesdb_spark.operators.multimodal import afp_with_carry
+    """The afp fingerprints of encoded WAV payloads == those through
+    the synthesis path — pins that the stored/streamed byte route and
+    the events route hash identically."""
 
     ev = (
         spark.read.parquet(f"{SF_DIR}/events.parquet")
@@ -217,23 +213,25 @@ def test_payload_decode_path_matches_synthesis_path(spark):
     )
     via_payload = {
         int(r.user_id): r.afp
-        for r in afp_with_carry(_payload_frame(spark, ev)).collect()
+        for r in fingerprints(
+            _payload_frame(spark, ev), "afp", carry=True
+        ).collect()
     }
-    via_events = _fps_of(audio_fingerprints(ev))
+    via_events = _fps_of(fingerprints(ev, "afp"))
     assert via_payload == via_events
     assert len(via_payload) > 0
 
 
 def test_audio_probe_stream_matches_batch(spark, tmp_path):
     """Streamed audio probe drops exactly the batch
-    incremental_audio_neardup dup_of_corpus set, statelessly, with
+    incremental_fp dup_of_corpus set, statelessly, with
     original columns surviving. The sf corpus has no true audio
     near-dups across the parity split, so a corpus-clip copy is
     injected into the streamed batch to make the drop set non-empty."""
     from timeseriesdb_spark.operators.multimodal import (
-        audio_probe_stream,
         fp_bands,
-        incremental_audio_neardup,
+        fp_probe_stream,
+        incremental_fp,
     )
 
     src = str(tmp_path / "asrc")
@@ -255,16 +253,14 @@ def test_audio_probe_stream_matches_batch(spark, tmp_path):
         "overwrite"
     ).parquet(src)
 
-    bands = fp_bands(
-        audio_fingerprints(corpus), "user_id", "afp", cap=True
-    )
+    bands = fp_bands(fingerprints(corpus, "afp"), "afp", cap=True)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     q = (
-        audio_probe_stream(stream, bands)
+        fp_probe_stream(stream, bands, "afp")
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -276,7 +272,7 @@ def test_audio_probe_stream_matches_batch(spark, tmp_path):
         r.user_id for r in spark.read.parquet(out).select("user_id").collect()
     }
 
-    flags = incremental_audio_neardup(batch_ev, corpus).collect()
+    flags = incremental_fp(batch_ev, corpus, "afp").collect()
     expect = {r.user_id for r in flags if r.dup_of_corpus == 0}
     dropped = {r.user_id for r in flags if r.dup_of_corpus == 1}
     assert 9_000_001 in dropped

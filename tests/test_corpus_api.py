@@ -168,13 +168,7 @@ def test_multimodal_index_facades_match_direct_stores(spark, tmp_path):
     import shutil
 
     from timeseriesdb_spark.api import SignalEngine
-    from timeseriesdb_spark.operators.multimodal import (
-        audio_fingerprints,
-        fp_bands,
-        image_bands,
-        image_dhash_fingerprints,
-    )
-    from timeseriesdb_spark.operators.videomm import video_fingerprints
+    from timeseriesdb_spark.operators.multimodal import fingerprints, fp_bands
 
     doc = load_table(spark, SF_DIR, "documents")
     corpus_raw = doc.where(F.col("source") == dedup.CORPUS_SOURCE)
@@ -192,19 +186,19 @@ def test_multimodal_index_facades_match_direct_stores(spark, tmp_path):
         (
             "facade_img_idx",
             lambda t: eng.build_image_index(t),
-            image_bands(image_dhash_fingerprints(curated), cap=True),
+            fp_bands(fingerprints(curated, "dhash"), "dhash", cap=True),
             ("doc_id", "dhash", "band_key"),
         ),
         (
             "facade_vid_idx",
             lambda t: eng.build_video_index(t),
-            fp_bands(video_fingerprints(curated), "doc_id", "vfp", cap=True),
+            fp_bands(fingerprints(curated, "vfp"), "vfp", cap=True),
             ("doc_id", "vfp", "band_key"),
         ),
         (
             "facade_aud_idx",
             lambda t: seng.build_audio_index(t),
-            fp_bands(audio_fingerprints(ev), "user_id", "afp", cap=True),
+            fp_bands(fingerprints(ev, "afp"), "afp", cap=True),
             ("user_id", "afp", "band_key"),
         ),
     ]

@@ -84,9 +84,8 @@ def test_incremental_stored_probe_parity(spark, tmp_path):
     doc_id."""
     from timeseriesdb_spark.operators.dedup import CORPUS_SOURCE
     from timeseriesdb_spark.operators.multimodal import (
-        incremental_image_neardup,
-        incremental_image_neardup_stored,
-        write_dhash_store,
+        incremental_fp,
+        write_fp_store,
     )
 
     doc = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
@@ -113,7 +112,7 @@ def test_incremental_stored_probe_parity(spark, tmp_path):
 
     inline = {
         r.doc_id: (r.dup_of_corpus, r.dup_of_batch, r.keep)
-        for r in incremental_image_neardup(batch, corpus).collect()
+        for r in incremental_fp(batch, corpus, "dhash").collect()
     }
     # a previous session may have left the managed-table LOCATION
     # behind without its catalog entry (DROP alone won't clear it)
@@ -122,11 +121,11 @@ def test_incremental_stored_probe_parity(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS dhash_probe_test")
     shutil.rmtree("spark-warehouse/dhash_probe_test", ignore_errors=True)
     try:
-        write_dhash_store(corpus, "dhash_probe_test")
+        write_fp_store(corpus, "dhash", "dhash_probe_test")
         stored = {
             r.doc_id: (r.dup_of_corpus, r.dup_of_batch, r.keep)
-            for r in incremental_image_neardup_stored(
-                spark, batch, "dhash_probe_test"
+            for r in incremental_fp(
+                batch, "dhash_probe_test", "dhash"
             ).collect()
         }
     finally:
@@ -228,16 +227,16 @@ def test_replicated_probe_pairs_linear(spark, replicated_corpus):
 
 def test_image_probe_stream_matches_batch(spark, tmp_path):
     """Streamed image probe drops exactly the batch
-    incremental_image_neardup dup_of_corpus set, statelessly, with
+    incremental_fp dup_of_corpus set, statelessly, with
     original columns surviving. The sf corpus has no true image
     near-dups across the source split, so a corpus-image copy is
     injected into the batch to make the drop set non-empty."""
     from timeseriesdb_spark.operators.dedup import CORPUS_SOURCE
     from timeseriesdb_spark.operators.multimodal import (
-        image_bands,
-        image_dhash_fingerprints,
-        image_probe_stream,
-        incremental_image_neardup,
+        fingerprints,
+        fp_bands,
+        fp_probe_stream,
+        incremental_fp,
     )
 
     src = str(tmp_path / "isrc")
@@ -256,14 +255,14 @@ def test_image_probe_stream_matches_batch(spark, tmp_path):
     batch = doc.where(F.col("source") != CORPUS_SOURCE).unionByName(extra)
     batch.coalesce(3).write.mode("overwrite").parquet(src)
 
-    bands = image_bands(image_dhash_fingerprints(corpus), cap=True)
+    bands = fp_bands(fingerprints(corpus, "dhash"), "dhash", cap=True)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     q = (
-        image_probe_stream(stream, bands)
+        fp_probe_stream(stream, bands, "dhash")
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -273,7 +272,7 @@ def test_image_probe_stream_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
     kept = {r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()}
 
-    flags = incremental_image_neardup(batch, corpus).collect()
+    flags = incremental_fp(batch, corpus, "dhash").collect()
     expect = {r.doc_id for r in flags if r.dup_of_corpus == 0}
     dropped = {r.doc_id for r in flags if r.dup_of_corpus == 1}
     assert 9_000_001 in dropped

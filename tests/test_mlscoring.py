@@ -186,6 +186,60 @@ def test_grail_span_guard_refuses_embed(spark, tmp_path):
     shutil.rmtree(dst, ignore_errors=True)
 
 
+def test_grail_tier_with_fewer_landmarks_than_feature_slots(
+    spark, tmp_path, monkeypatch
+):
+    """A dataset where only 3 of the GRAIL_DICT_K landmark signals
+    reach SEG_ROWS gives a K = 3 dictionary, one column short of the 4
+    degraded-feature slots. Both engines pad the projection with a
+    zero column: every GRAIL cell hash-matches its oracle, d_max is
+    0.0 throughout, and resolving the oracles does not raise."""
+    import shutil
+
+    import duckdb
+
+    from tests.conftest import assert_matches_oracle
+    from timeseriesdb_spark.registry import resolve_oracles
+    from timeseriesdb_spark.tables import TABLES
+
+    dst = tmp_path / "k3"
+    shutil.copytree(SF_DIR, dst, ignore=shutil.ignore_patterns("events*"))
+    src = f"{SF_DIR}/events.parquet"
+    con = duckdb.connect()
+    counts = con.execute(
+        f"SELECT user_id, count(*) FROM '{src}' WHERE user_id < "
+        f"{mlscoring.GRAIL_DICT_K} GROUP BY 1 ORDER BY 1"
+    ).fetchall()
+    full = [u for u, n in counts if n >= mlscoring.SEG_ROWS]
+    assert len(full) > 3
+    # cut every landmark past the first three below one segment
+    cut = ", ".join(str(u) for u in full[3:])
+    con.execute(
+        f"""COPY (
+            SELECT * EXCLUDE (rn) FROM (
+                SELECT *, row_number() OVER (
+                    PARTITION BY user_id ORDER BY ts, event_id) AS rn
+                FROM '{src}')
+            WHERE NOT (user_id IN ({cut}) AND rn >= {mlscoring.SEG_ROWS})
+        ) TO '{dst}/events.parquet' (FORMAT parquet)"""
+    )
+    assert len(mlscoring._grail_seg_dictionary_ddb(str(dst))[0]) == 3
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{dst}/{t}.parquet'"
+        )
+    monkeypatch.setenv("SPARK_TSDB_TEST_SF", str(dst))
+    oracles = resolve_oracles()
+    coeffs = mlscoring._grail_seg_coeffs(spark, str(dst)).toPandas()
+    assert len(coeffs) > 0 and (coeffs["d_max"] == 0.0).all()
+    for family in ("kmeans", "tree", "knn", "forest"):
+        name = f"q_{family}_drift_grail"
+        assert_matches_oracle(
+            mlscoring.QUERIES[name](spark, str(dst)), con, oracles[name]
+        )
+    con.close()
+
+
 def test_no_module_level_cache_outside_the_store():
     """Derived state lives in the one fingerprint-keyed store in
     tables.py. A module-level *_CACHE dict anywhere else would be keyed

@@ -170,15 +170,10 @@ def test_multimodal_keep_stream_matches_batch(spark, tmp_path):
     voxel tiling preserved, hamming 0-1)."""
     from timeseriesdb_spark.operators.dedup import CORPUS_SOURCE
     from timeseriesdb_spark.operators.multimodal import (
-        image_bands,
-        image_dhash_fingerprints,
-        incremental_image_neardup,
+        fingerprints,
+        fp_bands,
+        incremental_fp,
     )
-    from timeseriesdb_spark.operators.videomm import (
-        incremental_video_neardup,
-        video_fingerprints,
-    )
-    from timeseriesdb_spark.operators.multimodal import fp_bands
     from timeseriesdb_spark.streaming.curation import multimodal_keep_stream
     from timeseriesdb_spark.tables import load_table
 
@@ -190,8 +185,8 @@ def test_multimodal_keep_stream_matches_batch(spark, tmp_path):
     corpus = doc.where(F.col("source") == CORPUS_SOURCE)
     norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
     text_fps = corpus.select(F.md5(norm).alias("fp"))
-    ibands = image_bands(image_dhash_fingerprints(corpus), cap=True)
-    vbands = fp_bands(video_fingerprints(corpus), "doc_id", "vfp", cap=True)
+    ibands = fp_bands(fingerprints(corpus, "dhash"), "dhash", cap=True)
+    vbands = fp_bands(fingerprints(corpus, "vfp"), "vfp", cap=True)
 
     # probe target: a corpus doc whose video bands ALL survive the
     # df-cap (a hot/template clip's buckets are dropped at index
@@ -263,12 +258,12 @@ def test_multimodal_keep_stream_matches_batch(spark, tmp_path):
     }
     img_keep = {
         r.doc_id
-        for r in incremental_image_neardup(batch, corpus).collect()
+        for r in incremental_fp(batch, corpus, "dhash").collect()
         if r.dup_of_corpus == 0
     }
     vid_keep = {
         r.doc_id
-        for r in incremental_video_neardup(batch, corpus).collect()
+        for r in incremental_fp(batch, corpus, "vfp").collect()
         if r.dup_of_corpus == 0
     }
     expect = text_keep & img_keep & vid_keep

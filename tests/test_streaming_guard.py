@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 from timeseriesdb_spark.api import (
+    _COMPACTABLE,
     _HIGH_WATER,
     _TIERS,
     CorpusEngine,
@@ -335,6 +336,56 @@ def test_replay_deletes_stale_partitions(spark, tmp_path):
     assert bids == ["batch_id=0"]  # stale 1..3 deleted, not double-counted
     got = _pdf(SPECS["rollup"][4](spark, eng, store))
     pd.testing.assert_frame_equal(got, exp)
+
+
+@pytest.mark.parametrize(
+    "family",
+    sorted(f for f, t in TIER_OF.items() if t in _COMPACTABLE),
+)
+def test_replay_after_compaction_writes_nothing(spark, tmp_path, family):
+    """Crash replay across a compaction: maintain over 4 files
+    (batch_id=0..3), compact them into one generation, then lose the
+    last commit (commits/3 and its .crc, the crash between write and
+    commit) and restart on the same checkpoint. Spark re-runs batch 3;
+    the generation already absorbed it, so nothing is written and the
+    served answers equal a clean run (they double-counted batch 3
+    before)."""
+    kind, source, split_col, attr, serve = SPECS[family]
+    rows = {
+        "events": _events,
+        "documents": _documents,
+        "lineitem": _lineitem,
+    }[source](spark)
+    src = str(tmp_path / "src")
+    quarter = F.pmod(F.xxhash64(F.col(split_col)), F.lit(4))
+    for i in range(4):
+        rows.filter(quarter == i).coalesce(1).write.mode("append").parquet(src)
+    eng = _engine(kind, spark, tmp_path)
+
+    def run(store, ckpt):
+        stream = (
+            spark.readStream.schema(rows.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        getattr(eng, attr)(stream, store, ckpt).awaitTermination(180)
+
+    ref = str(tmp_path / "ref")
+    run(ref, str(tmp_path / "ck_ref"))
+    exp = _pdf(serve(spark, eng, ref))
+
+    store, ckpt = str(tmp_path / "tier"), str(tmp_path / "ck")
+    run(store, ckpt)
+    assert _batch_ids(store) == {0, 1, 2, 3}
+    assert eng.compact_partials(store, TIER_OF[family]) == 4
+    os.remove(os.path.join(ckpt, "commits", "3"))
+    os.remove(os.path.join(ckpt, "commits", ".3.crc"))
+    run(store, ckpt)
+    assert os.listdir(os.path.join(ckpt, "commits")).count("3") == 1
+    pd.testing.assert_frame_equal(_pdf(serve(spark, eng, store)), exp)
+    assert [
+        d for d in os.listdir(store) if d.startswith("batch_id=")
+    ] == ["batch_id=compacted-0"]
 
 
 def test_ann_probe_stream_guarded(spark, tmp_path):

@@ -19,13 +19,14 @@ from timeseriesdb_spark.operators.multimodal import (
     DHASH_BAND_W,
     DHASH_BANDS,
     DHASH_T,
+    FAMILIES,
+    fingerprints,
 )
 from timeseriesdb_spark.operators.videomm import (
     q_video_dedup,
     q_video_fp,
     q_video_neardup,
     q_video_scene_cuts,
-    video_fingerprints,
 )
 
 
@@ -177,16 +178,14 @@ def test_crafted_edit_replicas_banded_equals_brute(spark):
         ),
         "doc_id long, text string",
     )
-    fp = video_fingerprints(doc)
+    fp = fingerprints(doc, "vfp")
     fps = {int(r.doc_id): r.vfp for r in fp.collect()}
     assert fps == np_fps  # Spark decode path == numpy synthesis path
     from timeseriesdb_spark.operators.multimodal import fp_neardup_pairs
 
     got = {
         (r.doc_a, r.doc_b, r.hamming)
-        for r in fp_neardup_pairs(
-            fp, "doc_id", "vfp", "doc_a", "doc_b"
-        ).collect()
+        for r in fp_neardup_pairs(fp, "vfp").collect()
     }
     assert got == _brute_pairs(fps)
     assert (0, 100, ham(np_fps[0], np_fps[100])) in got
@@ -211,10 +210,9 @@ def test_incremental_stored_probe_parity(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from timeseriesdb_spark.operators.dedup import CORPUS_SOURCE
-    from timeseriesdb_spark.operators.videomm import (
-        incremental_video_neardup,
-        incremental_video_neardup_stored,
-        write_vfp_store,
+    from timeseriesdb_spark.operators.multimodal import (
+        incremental_fp,
+        write_fp_store,
     )
 
     doc = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
@@ -239,18 +237,18 @@ def test_incremental_stored_probe_parity(spark, tmp_path):
 
     inline = {
         r.doc_id: (r.dup_of_corpus, r.dup_of_batch, r.keep)
-        for r in incremental_video_neardup(batch, corpus).collect()
+        for r in incremental_fp(batch, corpus, "vfp").collect()
     }
     import shutil
 
     spark.sql("DROP TABLE IF EXISTS vfp_probe_test")
     shutil.rmtree("spark-warehouse/vfp_probe_test", ignore_errors=True)
     try:
-        write_vfp_store(corpus, "vfp_probe_test")
+        write_fp_store(corpus, "vfp", "vfp_probe_test")
         stored = {
             r.doc_id: (r.dup_of_corpus, r.dup_of_batch, r.keep)
-            for r in incremental_video_neardup_stored(
-                spark, batch, "vfp_probe_test"
+            for r in incremental_fp(
+                batch, "vfp_probe_test", "vfp"
             ).collect()
         }
     finally:
@@ -263,17 +261,16 @@ def test_incremental_stored_probe_parity(spark, tmp_path):
 
 def test_video_probe_stream_matches_batch(spark, tmp_path):
     """Streamed video probe drops exactly the batch
-    incremental_video_neardup dup_of_corpus set, statelessly, with
+    incremental_fp dup_of_corpus set, statelessly, with
     original columns surviving; a corpus-clip copy is injected so the
     drop set is non-empty."""
     from pyspark.sql import functions as F
 
     from timeseriesdb_spark.operators.dedup import CORPUS_SOURCE
-    from timeseriesdb_spark.operators.multimodal import fp_bands
-    from timeseriesdb_spark.operators.videomm import (
-        incremental_video_neardup,
-        video_fingerprints,
-        video_probe_stream,
+    from timeseriesdb_spark.operators.multimodal import (
+        fp_bands,
+        fp_probe_stream,
+        incremental_fp,
     )
 
     src = str(tmp_path / "vsrc")
@@ -300,14 +297,14 @@ def test_video_probe_stream_matches_batch(spark, tmp_path):
         3
     ).write.mode("overwrite").parquet(src)
 
-    bands = fp_bands(video_fingerprints(corpus), "doc_id", "vfp", cap=True)
+    bands = fp_bands(fingerprints(corpus, "vfp"), "vfp", cap=True)
     stream = (
         spark.readStream.schema(spark.read.parquet(src).schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
     q = (
-        video_probe_stream(stream, bands)
+        fp_probe_stream(stream, bands, "vfp")
         .writeStream.format("parquet")
         .option("path", out)
         .option("checkpointLocation", ckpt)
@@ -319,7 +316,7 @@ def test_video_probe_stream_matches_batch(spark, tmp_path):
         r.doc_id for r in spark.read.parquet(out).select("doc_id").collect()
     }
 
-    flags = incremental_video_neardup(batch, corpus).collect()
+    flags = incremental_fp(batch, corpus, "vfp").collect()
     expect = {r.doc_id for r in flags if r.dup_of_corpus == 0}
     dropped = {r.doc_id for r in flags if r.dup_of_corpus == 1}
     assert 9_000_001 in dropped
@@ -445,13 +442,13 @@ def _ham(a: str, b: str) -> int:
 def test_voxel_fp_rate_boundary_and_mean_dhash_invariance():
     """The re-encoding-robustness contract, pinned both ways:
 
-    (a) the frame-major voxel fingerprint (video_fingerprints /
+    (a) the frame-major voxel fingerprint (the vfp family:
         audio.fingerprint_bits over frames.ravel()) is EDIT-robust but
         NOT rate-robust — temporal restride scrambles the spatial
         phase at every proportional chunk position (measured 25-32
         bits on the synthetic clips), so a re-encoded clip does not
         pair under it (the documented invariance boundary);
-    (b) the rate-normalized mean_frame_dhash IS exactly invariant to
+    (b) the rate-normalized mdhash bits ARE exactly invariant to
         uniform fps upsampling (frame duplication leaves the integer
         per-pixel mean unchanged), keeps unrelated clips far, and its
         decimation robustness is bounded by inter-frame correlation —
@@ -459,7 +456,7 @@ def test_voxel_fp_rate_boundary_and_mean_dhash_invariance():
         adversarial worst case and measure ABOVE DHASH_T, which a
         real pipeline reads as: decimated re-encodes of
         frame-correlated video pair, of scene-cut slideshows don't."""
-    from timeseriesdb_spark.operators.videomm import mean_frame_dhash
+    mean_frame_dhash = FAMILIES["mdhash"].bits
 
     texts = [
         b"the quick brown fox jumps over the lazy dog and runs far away"
@@ -515,8 +512,8 @@ def test_audio_fingerprint_is_rate_robust():
 def test_rate_probe_catches_reencodes_vfp_does_not(spark, tmp_path):
     """End-to-end re-encode gate (r11): an fps-doubled RE-ENCODE of a
     corpus clip (same frames, each duplicated, re-encoded at 2× fps)
-    is dropped by video_rate_probe_stream (mean-dhash store) and sails
-    through video_probe_stream (frame-major vfp) — the invariance
+    is dropped by the mdhash probe (mean-dhash store) and sails
+    through the vfp probe (frame-major voxels) — the invariance
     boundary demonstrated on the actual ingest path, both probes over
     the same streamed payload frame. Unrelated clips survive both."""
     import shutil
@@ -524,14 +521,13 @@ def test_rate_probe_catches_reencodes_vfp_does_not(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from timeseriesdb_spark.operators.dedup import CORPUS_SOURCE
-    from timeseriesdb_spark.operators.multimodal import fp_bands
-    from timeseriesdb_spark.operators.videomm import (
-        mean_frame_dhash,
-        video_fingerprints,
-        video_probe_stream,
-        video_rate_probe_stream,
-        write_mdhash_store,
+    from timeseriesdb_spark.operators.multimodal import (
+        fp_bands,
+        fp_probe_stream,
+        write_fp_store,
     )
+
+    mean_frame_dhash = FAMILIES["mdhash"].bits
 
     doc = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", "text", "source"
@@ -571,11 +567,11 @@ def test_rate_probe_catches_reencodes_vfp_does_not(spark, tmp_path):
     src = str(tmp_path / "clipsrc")
     clips.coalesce(1).write.mode("overwrite").parquet(src)
 
-    vbands = fp_bands(video_fingerprints(corpus), "doc_id", "vfp", cap=True)
+    vbands = fp_bands(fingerprints(corpus, "vfp"), "vfp", cap=True)
     spark.sql("DROP TABLE IF EXISTS mdhash_probe_test")
     shutil.rmtree("spark-warehouse/mdhash_probe_test", ignore_errors=True)
     try:
-        write_mdhash_store(corpus, "mdhash_probe_test")
+        write_fp_store(corpus, "mdhash", "mdhash_probe_test")
         mbands = spark.table("mdhash_probe_test")
         # the corpus clip's own bands must have survived the df-cap,
         # else the drop expectation is vacuous — re-pick would be
@@ -583,13 +579,13 @@ def test_rate_probe_catches_reencodes_vfp_does_not(spark, tmp_path):
         n_bands = mbands.where(F.col("doc_id") == c0.doc_id).count()
         assert n_bands > 0
 
-        def run(probe, bands, out, ck):
+        def run(key, bands, out, ck):
             stream = (
                 spark.readStream.schema(spark.read.parquet(src).schema)
                 .parquet(src)
             )
             q = (
-                probe(stream, bands)
+                fp_probe_stream(stream, bands, key)
                 .writeStream.format("parquet")
                 .option("path", out)
                 .option("checkpointLocation", ck)
@@ -603,11 +599,11 @@ def test_rate_probe_catches_reencodes_vfp_does_not(spark, tmp_path):
             }
 
         kept_rate = run(
-            video_rate_probe_stream, mbands,
+            "mdhash", mbands,
             str(tmp_path / "rout"), str(tmp_path / "rck"),
         )
         kept_vfp = run(
-            video_probe_stream, vbands,
+            "vfp", vbands,
             str(tmp_path / "vout"), str(tmp_path / "vck"),
         )
     finally:

@@ -226,18 +226,34 @@ def _run_stream(
     shared state. The one remaining hazard, a fresh checkpoint against
     a non-empty store, is guarded here (guard_fresh_checkpoint, `guard`
     keywords pass through), which yields `base`; `transform(stream,
-    store_path, base)` derives the written stream from it."""
-    base = 0
+    store_path, base)` derives the written stream from it. A batch id
+    that a compacted generation already absorbed is not written again:
+    it was written before the compaction, and its replay (the commit
+    lost in a crash) would re-derive the same partials next to the
+    generation that holds them."""
+    import os
+
+    base, absorbed = 0, -1
     if store_path is not None:
         base = guard_fresh_checkpoint(
             store_path, checkpoint, on_fresh_checkpoint, **guard
         )
+        if os.path.isdir(store_path):
+            absorbed = _batch_high_water(store_path, [
+                d for d in os.listdir(store_path)
+                if d.startswith("batch_id=compacted-")
+            ])
     if transform is not None:
         stream = transform(stream, store_path, base)
+
+    def sink(batch_df: DataFrame, bid: int) -> None:
+        if base + bid > absorbed:
+            write(batch_df, base + bid)
+        else:  # still run it: stateful streams commit state only then
+            batch_df.write.format("noop").mode("overwrite").save()
+
     return (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, bid: write(batch_df, base + bid)
-        )
+        stream.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint)
         .trigger(**({"availableNow": True} if trigger is None else trigger))
         .start()
@@ -531,16 +547,15 @@ class SignalEngine:
 
     def build_audio_index(self, table: str) -> None:
         """Persist the signal corpus' AUDIO fingerprint band index
-        (multimodal.write_afp_store — clips are signal-keyed, so the
-        audio index lives on the signal engine): later clip batches
-        dedup against the store without re-decoding the corpus
-        (incremental_audio_neardup_stored / audio_probe_stream)."""
-        from timeseriesdb_spark.operators.multimodal import (
-            write_afp_store,
-        )
+        (multimodal.write_fp_store, family `afp` — clips are
+        signal-keyed, so the audio index lives on the signal engine):
+        later clip batches dedup against the store without re-decoding
+        the corpus (multimodal.incremental_fp / fp_probe_stream)."""
+        from timeseriesdb_spark.operators.multimodal import write_fp_store
 
-        write_afp_store(
+        write_fp_store(
             self.events().select("user_id", "ts", "event_id", "value"),
+            "afp",
             table,
         )
 
@@ -1429,25 +1444,21 @@ class CorpusEngine:
         write_band_store(self.docs(), table)
 
     def build_image_index(self, table: str) -> None:
-        """Persist the corpus dHash band index (the image twin of
-        build_band_index, multimodal.write_dhash_store) — later image
-        batches dedup against the store without re-decoding the
-        corpus (incremental_image_neardup_stored / image_probe_stream)."""
-        from timeseriesdb_spark.operators.multimodal import (
-            write_dhash_store,
-        )
+        """Persist the corpus dHash band index (multimodal.write_fp_store,
+        family `dhash`) — later image batches dedup against the store
+        without re-decoding the corpus (multimodal.incremental_fp /
+        fp_probe_stream)."""
+        from timeseriesdb_spark.operators.multimodal import write_fp_store
 
-        write_dhash_store(self.docs(), table)
+        write_fp_store(self.docs(), "dhash", table)
 
     def build_video_index(self, table: str) -> None:
-        """Persist the corpus VIDEO fingerprint band index (the video
-        twin of build_image_index, videomm.write_vfp_store) — later
-        clip batches dedup against the store without re-decoding the
-        corpus (incremental_video_neardup_stored /
-        video_probe_stream)."""
-        from timeseriesdb_spark.operators.videomm import write_vfp_store
+        """Persist the corpus VIDEO fingerprint band index
+        (multimodal.write_fp_store, family `vfp`) — later clip batches
+        dedup against the store without re-decoding the corpus."""
+        from timeseriesdb_spark.operators.multimodal import write_fp_store
 
-        write_vfp_store(self.docs(), table)
+        write_fp_store(self.docs(), "vfp", table)
 
     def chunks(self) -> DataFrame:
         """Sliding-window chunks of the corpus (embedding front door)."""

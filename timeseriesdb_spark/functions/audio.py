@@ -81,10 +81,6 @@ def synth_audio(values: np.ndarray, rate: int = AUD_RATE) -> bytes:
 
 
 AFP_CHUNKS = 57  # energy chunks per clip → AFP_CHUNKS-1 = 56 sign bits
-                 # (same width as the image dHash, so the two
-                 # fingerprint families share the banded-Hamming LSH
-                 # machinery: 4 bands × 14 bits, pigeonhole-complete
-                 # at hamming ≤ 3)
 
 
 def fingerprint_bits(samples: "np.ndarray") -> str:
@@ -92,11 +88,9 @@ def fingerprint_bits(samples: "np.ndarray") -> str:
     into AFP_CHUNKS equal-ish chunks with EXACT integer boundaries
     (sample i of n → chunk i·C // n), per-chunk energy Σs² is exact
     int64, and bit c = 1 iff E[c+1] > E[c] (strict; ties → 0) — a
-    chromaprint-style energy-delta-sign hash, the time-axis twin of
-    the image dHash's gradient-sign bits. Every comparison is
+    chromaprint-style energy-delta-sign hash. Every comparison is
     int64-vs-int64, so the fingerprint is deterministic down to the
-    bit in ANY engine (the property that lets the audio-dedup family
-    hash-check cross-engine). Length-invariant: the chunk grid
+    bit in ANY engine. Length-invariant: the chunk grid
     resamples the clip, so appending a short tail moves only the
     boundary samples and flips few bits — near-dup robustness. A
     chunk with no samples (n < AFP_CHUNKS) has energy 0."""

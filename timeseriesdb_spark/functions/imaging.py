@@ -159,6 +159,20 @@ def bilinear_gray_exact(pix: np.ndarray, out_h: int, out_w: int):
     return n, 3 * dx * dy * 255
 
 
+DHASH_GRID = 8  # dHash grid side: DHASH_GRID·(DHASH_GRID−1) = 56 bits
+
+
+def dhash_bits(pix: np.ndarray) -> str:
+    """Difference hash of a decoded (H, W, C) image as a '01' string:
+    the exact-integer gray resample to a DHASH_GRID² grid of tap sums
+    N (bilinear_gray_exact), then bit (py, px) = 1 iff
+    N[py, px+1] > N[py, px] (strict; ties → 0), row-major. Every
+    comparison is int64 against int64, so the bits are the same in any
+    engine (dHash on float pixels would not be)."""
+    n, _ = bilinear_gray_exact(pix, DHASH_GRID, DHASH_GRID)
+    return "".join("1" if b else "0" for b in (n[:, 1:] > n[:, :-1]).ravel())
+
+
 # ---- deterministic payload synthesis -------------------------------
 # The testdata carries no binary image column, so payloads are
 # SYNTHESIZED from document text as real encoded images: dimensions

@@ -25,6 +25,8 @@ import struct
 
 import numpy as np
 
+from timeseriesdb_spark.functions import audio, imaging
+
 VID_W = 16           # frame width (px)
 VID_H = 12           # frame height (px)
 VID_FPS = 4          # nominal frames/second for duration math
@@ -110,3 +112,26 @@ def synth_frames(text_bytes: bytes) -> np.ndarray:
 def synth_video(text_bytes: bytes) -> bytes:
     """Document text → real encoded video payload."""
     return encode_video(synth_frames(text_bytes))
+
+
+def voxel_bits(frames: np.ndarray) -> str:
+    """Frame-major voxel fingerprint: the (F, H, W) grid flattened in
+    frame order and hashed with the audio energy-delta-sign bits
+    (exact integer chunk boundaries and energies). Appending or
+    trimming frames shifts every chunk boundary slightly and flips few
+    bits: the EDIT-robust video tier. Temporal restride scrambles the
+    spatial phase at every chunk, so it is not rate-robust."""
+    return audio.fingerprint_bits(frames.ravel().astype(np.int64))
+
+
+def mean_dhash_bits(frames: np.ndarray) -> str:
+    """RATE-robust video fingerprint: the image dHash of the time-mean
+    frame (per-pixel integer floor-mean over frames). Duplicating every
+    frame k times leaves the mean, so the hash, unchanged; dropping
+    frames is tolerated only as far as adjacent frames correlate (the
+    synthetic clips' frames are independent text chunks, the worst
+    case: decimation by 2 measures hamming 9–12; SCALING.md).
+    All-integer, so cross-engine exact."""
+    nf = frames.shape[0]
+    mean = (frames.astype(np.int64).sum(axis=0) // nf).astype(np.uint8)
+    return imaging.dhash_bits(mean[:, :, None])

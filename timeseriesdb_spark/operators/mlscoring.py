@@ -709,6 +709,18 @@ def _seg_dict_from_pdf(pdf: "pd.DataFrame") -> list:
     return out
 
 
+def _grail_seg_params(int_dict: list) -> tuple:
+    """_grail_params for the segment tier, with the projection padded
+    by zero columns to the len(_FEATS_DEG) feature slots: with K <
+    EMBED_DIM landmarks the eigendecomposition has only K columns, and
+    both engines then emit 0.0 in the missing slots."""
+    from timeseriesdb_spark.operators.mlkernels import _grail_params
+
+    proj, e1, e2 = _grail_params(int_dict)
+    pad = len(_FEATS_DEG) - proj.shape[1]
+    return np.pad(proj, ((0, 0), (0, pad))), e1, e2
+
+
 def _grail_seg_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(signal, complete segment) GRAIL embedding coefficients,
     emitted in the degraded-feature slots (d_mean..d_max ← coeff
@@ -719,15 +731,12 @@ def _grail_seg_coeffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     each coefficient is one left-associative chain over the broadcast
     projection literals — the q_grail_embed discipline at segment
     granularity."""
-    from timeseriesdb_spark.operators.mlkernels import _grail_params
     from timeseriesdb_spark.operators.transforms import (
         packed_grouped_map,
     )
 
     int_dict = _grail_seg_dictionary(spark, sf_dir)
-    proj, e1, e2 = _grail_params(int_dict)
-    if proj.shape[1] != 4:  # the 4 coeffs ARE the d_* feature slots
-        raise ValueError("GRAIL tier requires EMBED_DIM == 4")
+    proj, e1, e2 = _grail_seg_params(int_dict)  # 4 coeffs = d_* slots
     bc = spark.sparkContext.broadcast((int_dict, proj, e1, e2))
     qscale = 4096.0  # GRAIL_Q inline (closure rule)
     seg_rows = SEG_ROWS
@@ -1269,10 +1278,8 @@ def _grail_oracle_sql(family: str, sf_dir: str) -> str:
     SEGMENT granularity, joined to the exact-decimal raw features and
     fed through the family's labeled CTE and the every-signal
     agreement tail."""
-    from timeseriesdb_spark.operators.mlkernels import _grail_params
-
     int_dict, dict_ids = _grail_seg_dictionary_ddb(sf_dir)
-    proj, e1, e2 = _grail_params(int_dict)
+    proj, e1, e2 = _grail_seg_params(int_dict)
     K = len(int_dict)
     e1rows = ", ".join(
         f"({h - 64}, {float(v):.17e})" for h, v in enumerate(e1)

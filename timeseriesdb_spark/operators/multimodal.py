@@ -25,22 +25,23 @@ reading the stored bytes — the decode path is unchanged.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import Any, NamedTuple
 
 import pandas as pd
 from pyspark import cloudpickle as _cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from timeseriesdb_spark.functions import audio, imaging
+from timeseriesdb_spark.functions import audio, imaging, video
 from timeseriesdb_spark.operators.common import parallelize_small_scan
 from timeseriesdb_spark.tables import load_table
 
-# Ship the imaging/audio modules BY VALUE inside every serialized
-# closure: executors don't need timeseriesdb_spark on their PYTHONPATH
-# (the same reason the streaming kernels inline their helpers).
-_cloudpickle.register_pickle_by_value(imaging)
-_cloudpickle.register_pickle_by_value(audio)
+# Ship the codec modules BY VALUE inside every serialized closure:
+# executors don't need timeseriesdb_spark on their PYTHONPATH (the
+# same reason the streaming kernels inline their helpers).
+for _m in (imaging, audio, video):
+    _cloudpickle.register_pickle_by_value(_m)
 
 REAL_DECODE = True  # round 5: pure-numpy BMP/PPM decode, no stub left
 
@@ -248,7 +249,7 @@ def q_multimodal_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DHASH_GRID = 8        # resized grid side (DHASH_GRID × DHASH_GRID)
+DHASH_GRID = imaging.DHASH_GRID       # resized grid side (DHASH_GRID × DHASH_GRID)
 DHASH_ROW_BITS = DHASH_GRID - 1       # horizontal gradients per row
 DHASH_BITS = DHASH_GRID * DHASH_ROW_BITS  # 56-bit fingerprint
 DHASH_BANDS = 4       # pigeonhole bands: hamming ≤ DHASH_T ⇒ ≥1 band equal
@@ -261,105 +262,142 @@ DHASH_BAND_DF_CAP = 64  # boilerplate fence: band buckets larger than
                         # on blank/template images)
 
 
-def image_dhash_fingerprints(doc: DataFrame) -> DataFrame:
-    """Difference-hash image fingerprints over the INTEGER-EXACT
-    resized grid: decode → bilinear_gray_exact to a DHASH_GRID² grid
-    of exact rationals N/D (D constant per image) → bit(py, px) = 1
-    iff N[py, px+1] > N[py, px] (strict; ties → 0). Every comparison
-    is int64-vs-int64, so the fingerprint is deterministic down to
-    the bit in ANY engine — which is what lets the whole image-dedup
-    family hash-check cross-engine (dHash on float pixels would not).
-    Emitted as a '01' string like simhash_fingerprints."""
+class FpFamily(NamedTuple):
+    """One 56-bit near-dup fingerprint family (see FAMILIES)."""
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    id_col: str
+    fp_col: str
+    bits: Callable[[Any], str]  # decoded payload → '01' string
+    decode: Callable[[bytes], tuple]  # payload → (header, decoded)
+    synth: Callable[..., bytes]  # the batch tier's payload synthesis
+    source: str  # batch-tier input: "text+id", "text" or "events"
 
-        g = DHASH_GRID
+
+# Every image, audio and video near-dup family, keyed by its fp column.
+# Each emits a DHASH_BITS-wide '01' string from exact integer
+# comparisons, so one banded-Hamming core serves them all: DHASH_BANDS
+# bands of DHASH_BAND_W bits, pigeonhole-complete at hamming ≤ DHASH_T
+# (a near-dup pair shares at least one unchanged band, so candidates
+# only form inside a band bucket — an equi-join, never all-pairs), and
+# buckets past DHASH_BAND_DF_CAP dropped (blank images, silent clips
+# and static videos are the stop-shingles). A family is computed once
+# when its band store is written; later batches probe the store
+# (incremental_fp) or stream through the stateless gate
+# (fp_probe_stream) with no corpus re-decode, the lsh_bands lifecycle
+# of dedup.py. Adding a family takes one entry here plus one `bits`
+# function in a functions/ module. Kernels close over these functions
+# and the codec modules only: those are registered by value at the top
+# of this module, so executors need no package install, while anything
+# defined in operators/ (this table's tuple type too) would pickle by
+# reference.
+#
+# - dhash: image gradient signs of the exact-integer resized grid;
+#   payload synthesized from documents.text, BMP or PPM by doc_id.
+# - afp: audio energy-delta signs; a clip is a signal, so the batch
+#   tier synthesizes one WAV per signal from its events.
+# - vfp: video voxel stream under the audio hash — edit-robust.
+# - mdhash: dHash of the video's time-mean frame — rate-robust (an
+#   fps-doubled re-encode keeps it exactly). A pipeline keeps both
+#   video indexes.
+FAMILIES = {
+    "dhash": FpFamily("doc_id", "dhash", imaging.dhash_bits,
+                      imaging.decode_image, imaging.synth_image, "text+id"),
+    "afp": FpFamily("user_id", "afp", audio.fingerprint_bits,
+                    audio.decode_wav, audio.synth_audio, "events"),
+    "vfp": FpFamily("doc_id", "vfp", video.voxel_bits,
+                    video.decode_video, video.synth_video, "text"),
+    "mdhash": FpFamily("doc_id", "mdhash", video.mean_dhash_bits,
+                       video.decode_video, video.synth_video, "text"),
+}
+
+
+def _batch_cols(fam: FpFamily) -> tuple[str, ...]:
+    """The columns a family's batch tier reads."""
+    if fam.source == "events":
+        return ("user_id", "ts", "event_id", "value")
+    return (fam.id_col, "text")
+
+
+def fingerprints(df: DataFrame, key: str, carry: bool = False) -> DataFrame:
+    """Family `key`'s fingerprint column appended to `df`, one
+    stateless Arrow pass (so it runs unchanged on a readStream frame).
+    The payload is the `payload` column's bytes when `df` has one (the
+    stored and streamed route), else synthesized from `text`; the
+    audio family with no `payload` groups signal events into clips
+    instead. carry=True keeps every input column, else only
+    (id, fp)."""
+    id_col, fp_col, bits, decode, synth, source = FAMILIES[key]
+    from_payload = "payload" in df.columns
+    if source == "events" and not from_payload:
+        return _clip_fingerprints(df, FAMILIES[key])
+    by_id = source == "text+id"
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids, fps = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = imaging.synth_image(
-                    text.encode("utf-8"), int(doc_id)
+            if from_payload:
+                payloads = (bytes(p) for p in pdf["payload"])
+            elif by_id:
+                payloads = (
+                    synth(t.encode("utf-8"), int(i))
+                    for i, t in zip(pdf[id_col], pdf["text"])
                 )
-                _, pix = imaging.decode_image(payload)
-                n, _ = imaging.bilinear_gray_exact(pix, g, g)
-                bits = (n[:, 1:] > n[:, :-1]).ravel()
-                ids.append(doc_id)
-                fps.append("".join("1" if b else "0" for b in bits))
-            yield pd.DataFrame({"doc_id": ids, "dhash": fps})
+            else:
+                payloads = (synth(t.encode("utf-8")) for t in pdf["text"])
+            fps = [bits(decode(p)[1]) for p in payloads]
+            out = pdf.copy() if carry else pdf[[id_col]].copy()
+            out[fp_col] = fps
+            yield out
 
-    return doc.mapInPandas(extract, "doc_id bigint, dhash string")
+    if carry:
+        from pyspark.sql.types import StringType, StructField, StructType
 
-
-def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dHash fingerprint tier itself (doc_id, dhash) — what a
-    production pipeline PERSISTS (partitioned by band key) so later
-    image batches dedup against the store without re-decoding the
-    corpus (the lsh_bands lifecycle, for images)."""
-    return image_dhash_fingerprints(
-        parallelize_small_scan(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-            spark,
+        schema = StructType(
+            list(df.schema.fields) + [StructField(fp_col, StringType())]
         )
+    else:
+        schema = f"{id_col} bigint, {fp_col} string"
+    return df.mapInPandas(kernel, schema)
+
+
+def _clip_fingerprints(ev: DataFrame, fam: FpFamily) -> DataFrame:
+    """(user_id, fp) per clip: each signal's events, in (ts, event_id)
+    order, synthesize one real payload that the kernel decodes and
+    hashes. One shuffle on user_id (packed_grouped_map); after it a
+    clip is 56 characters, and pair formation downstream is
+    bucketed."""
+    from timeseriesdb_spark.operators.transforms import packed_grouped_map
+
+    id_col, fp_col, bits, decode, synth, _ = fam
+
+    def clip_fp(g: pd.DataFrame) -> pd.DataFrame:
+        payload = synth(g["value"].to_numpy())
+        return pd.DataFrame(
+            {
+                id_col: [int(g[id_col].iloc[0])],
+                fp_col: [bits(decode(payload)[1])],
+            }
+        )
+
+    return packed_grouped_map(ev, clip_fp, f"{id_col} bigint, {fp_col} string")
+
+
+def _band_key(fp: "F.Column", b: int) -> "F.Column":
+    """'<b>:<band b's 14 bits>' — one string column a store buckets on."""
+    return F.concat(
+        F.lit(f"{b}:"), F.substring(fp, b * DHASH_BAND_W + 1, DHASH_BAND_W)
     )
 
 
-def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs: banded-Hamming LSH over the dHash
-    fingerprints — the multimodal twin of q_minhash_lsh_pairs. The
-    56-bit fingerprint splits into DHASH_BANDS 14-bit bands; by
-    pigeonhole any pair within hamming DHASH_T (= 3 < 4 bands) shares
-    at least one unchanged band, so candidates only form inside a
-    (band, band_key) bucket — an equi-join, never all-pairs — and the
-    exact hamming filter keeps true near-dups. Buckets past
-    DHASH_BAND_DF_CAP are dropped before pairing (blank/template
-    images are the image-space stop-shingles; the cap bounds pair
-    fan-out at df·CAP, and the oracle applies the identical fence).
-
-    Scale: decode + fingerprint is one Arrow-batched corpus pass;
-    pair formation is bucketed (measured linear on the replicated-
-    image probe — cross-replica images differ, so replicas add pairs,
-    never multiply them); hamming is integer band-XOR popcounts.
-
-    NOTE the sf0.01 test corpus genuinely has no image pair within
-    hamming DHASH_T (closest candidate is 11 bits apart) — the 0-row
-    result there is the true answer, and q_image_dedup covers the
-    same machinery with corpus-sized output at every SF."""
-    fp = image_dhash_fingerprints(
-        parallelize_small_scan(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-            spark,
-        )
-    )
-    return image_neardup_pairs(fp)
-
-
-def fp_bands(
-    fp: DataFrame, id_col: str, fp_col: str, cap: bool = True
-) -> DataFrame:
-    """Explode a 56-bit fingerprint frame into (id, fp, band_key) rows
-    — the generic banded-Hamming LSH split shared by the image dHash
-    and audio energy-delta fingerprint families (both emit
-    DHASH_BITS-wide '01' strings by construction). band_key =
-    '<band>:<14 bits>' (one string column so a store can bucket on
-    it). With cap=True, buckets past DHASH_BAND_DF_CAP are dropped
-    (the stop-shingle fence: blank/template images, silent clips);
-    probes leave their small batch side uncapped."""
+def fp_bands(fp: DataFrame, key: str, cap: bool = True) -> DataFrame:
+    """Explode a family's (id, fp) frame into (id, fp, band_key) rows.
+    With cap=True, buckets past DHASH_BAND_DF_CAP are dropped; probes
+    leave their small batch side uncapped."""
+    fam = FAMILIES[key]
     bands = fp.select(
-        id_col,
-        fp_col,
+        fam.id_col,
+        fam.fp_col,
         F.explode(
-            F.array(
-                *[
-                    F.concat(
-                        F.lit(f"{b}:"),
-                        F.substring(
-                            fp_col, b * DHASH_BAND_W + 1, DHASH_BAND_W
-                        ),
-                    )
-                    for b in range(DHASH_BANDS)
-                ]
-            )
+            F.array(*[_band_key(F.col(fam.fp_col), b) for b in range(DHASH_BANDS)])
         ).alias("band_key"),
     )
     if not cap:
@@ -374,11 +412,6 @@ def fp_bands(
     )
 
 
-def image_bands(fp: DataFrame, cap: bool = True) -> DataFrame:
-    """fp_bands over an image dHash frame (doc_id, dhash)."""
-    return fp_bands(fp, "doc_id", "dhash", cap=cap)
-
-
 def _dhash_hamming(ca: str, cb: str) -> "F.Column":
     """Exact hamming distance between two '01' fingerprint columns:
     per-band binary→long conversion, XOR, popcount — all JVM."""
@@ -391,16 +424,18 @@ def _dhash_hamming(ca: str, cb: str) -> "F.Column":
     ).cast("bigint")
 
 
-def fp_neardup_pairs(
-    fp: DataFrame, id_col: str, fp_col: str,
-    out_a: str, out_b: str,
-) -> DataFrame:
-    """Banded-Hamming candidate join + exact hamming filter over a
-    generic 56-bit fingerprint frame — candidates only form inside a
-    (band, band_key) bucket (an equi-join, never all-pairs), the
-    exact hamming refinement keeps true near-dups. Shared by the
-    image and audio near-dup families."""
-    bands = fp_bands(fp, id_col, fp_col, cap=True)
+def _pair_cols(key: str) -> tuple[str, str]:
+    """A family's pair columns: its id column with `_id` → `_a`, `_b`."""
+    stem = FAMILIES[key].id_col.removesuffix("_id")
+    return f"{stem}_a", f"{stem}_b"
+
+
+def fp_neardup_pairs(fp: DataFrame, key: str) -> DataFrame:
+    """Near-dup pairs (<id>_a, <id>_b, hamming) of a family's (id, fp)
+    frame: the banded candidate join, then the exact hamming filter."""
+    id_col, fp_col = FAMILIES[key].id_col, FAMILIES[key].fp_col
+    out_a, out_b = _pair_cols(key)
+    bands = fp_bands(fp, key, cap=True)
     a, b = bands.alias("a"), bands.alias("b")
     pairs = (
         a.join(
@@ -424,23 +459,22 @@ def fp_neardup_pairs(
     )
 
 
-def fp_dedup_decision(
-    fp: DataFrame, id_col: str, fp_col: str
-) -> DataFrame:
-    """Total keep/drop decision over a CHECKPOINTED fingerprint frame
-    (id, fp, keep) — keep = 0 iff a smaller-id item is within hamming
-    DHASH_T via the banded pairs. The shared tail of
-    q_image_dedup / q_audio_dedup / q_video_dedup; callers checkpoint
-    so the decode pass runs once across the plan's branches."""
+def fp_dedup_decision(fp: DataFrame, key: str) -> DataFrame:
+    """Total keep/drop decision (id, fp, keep) over a CHECKPOINTED
+    (id, fp) frame — keep = 0 iff a smaller-id item is within hamming
+    DHASH_T via the banded pairs. Callers checkpoint so the decode pass
+    runs once across the plan's branches."""
+    fam = FAMILIES[key]
+    id_col = fam.id_col
     dropped = (
-        fp_neardup_pairs(fp, id_col, fp_col, "_a", "_b")
-        .select(F.col("_b").alias(id_col))
+        fp_neardup_pairs(fp, key)
+        .select(F.col(_pair_cols(key)[1]).alias(id_col))
         .distinct()
         .withColumn("_dropped", F.lit(1))
     )
     return fp.join(dropped, id_col, "left").select(
         id_col,
-        fp_col,
+        fam.fp_col,
         F.when(F.col("_dropped").isNotNull(), 0)
         .otherwise(1)
         .cast("int")
@@ -448,92 +482,42 @@ def fp_dedup_decision(
     )
 
 
-def image_neardup_pairs(fp: DataFrame) -> DataFrame:
-    """Banded-Hamming candidate join + exact hamming filter over a
-    fingerprint frame (doc_id, dhash) — see q_image_neardup."""
-    return fp_neardup_pairs(fp, "doc_id", "dhash", "doc_a", "doc_b")
-
-
-def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Total image keep/drop decision — the q_semdedup shape for the
-    multimodal column: every document gets a row (doc_id, dhash,
-    keep), keep = 0 iff a smaller-id document's image is within
-    hamming DHASH_T (via the banded pairs). This is the query a
-    curation pipeline actually consumes (q_image_neardup's pair list
-    is its evidence trail), and it stays corpus-sized at every SF.
-    The fingerprint frame is checkpointed so the decode pass runs
-    once, not once per plan branch."""
-    fp = image_dhash_fingerprints(
-        parallelize_small_scan(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-            spark,
-        )
-    ).localCheckpoint()
-    return fp_dedup_decision(fp, "doc_id", "dhash")
-
-
-def write_dhash_store(corpus: DataFrame, table: str) -> None:
-    """Persist the corpus dHash band index as a band_key-bucketed
-    catalog table (the image twin of dedup.write_band_store):
-    fingerprints are computed ONCE at index build — every later image
-    batch probes the store with no corpus re-decode, and the probe
-    join co-locates on band_key with no exchange on the corpus side.
-    Stored CAPPED (DHASH_BAND_DF_CAP): hot buckets are blank/template
-    images, dropped at write so no probe ever fans out on them."""
+def write_fp_store(corpus: DataFrame, key: str, table: str) -> None:
+    """Persist the corpus band index of family `key` as a
+    band_key-bucketed catalog table: fingerprints are computed ONCE
+    here, every later batch probes the store with no corpus re-decode,
+    and the probe join co-locates on band_key with no exchange on the
+    corpus side. Stored CAPPED (DHASH_BAND_DF_CAP), so no probe fans
+    out on a hot bucket."""
     from timeseriesdb_spark.sources.bucketed import write_bucketed
 
     write_bucketed(
-        image_bands(image_dhash_fingerprints(corpus), cap=True),
+        fp_bands(fingerprints(corpus, key), key, cap=True),
         table,
         key="band_key",
         sort_by=None,
     )
 
 
-def incremental_image_neardup(
-    batch: DataFrame, corpus: DataFrame
+def incremental_fp(
+    batch: DataFrame, corpus: DataFrame | str, key: str
 ) -> DataFrame:
-    """Incremental IMAGE dedup: for each batch document, is its image
-    within hamming DHASH_T of (a) any corpus image — dup_of_corpus —
-    or (b) any EARLIER batch image (smaller doc_id, keep-first) —
-    dup_of_batch. keep = 1 iff neither. The multimodal twin of
-    dedup.incremental_neardup: the corpus never re-decodes at probe
-    time when the band frame comes from write_dhash_store
-    (incremental_image_neardup_stored)."""
-    return _image_incremental_from_bands(
-        batch, image_bands(image_dhash_fingerprints(corpus), cap=True)
-    )
-
-
-def incremental_image_neardup_stored(
-    spark: SparkSession, batch: DataFrame, band_table: str
-) -> DataFrame:
-    """:func:`incremental_image_neardup` against a persisted dHash
-    band index."""
-    return _image_incremental_from_bands(batch, spark.table(band_table))
-
-
-def _image_incremental_from_bands(
-    batch: DataFrame, bands_c: DataFrame
-) -> DataFrame:
-    # one decode of the batch feeds both probe joins (the
-    # _incremental_from_bands checkpoint discipline: the batch is the
-    # small side by construction; eager so the single materialization
-    # is shared across the plan's branches)
-    fp_b = image_dhash_fingerprints(
-        batch.select("doc_id", "text")
-    ).localCheckpoint()
-    return _fp_incremental_from_bands(fp_b, bands_c, "doc_id", "dhash")
-
-
-def _fp_incremental_from_bands(
-    fp_b: DataFrame, bands_c: DataFrame, id_col: str, fp_col: str
-) -> DataFrame:
-    """Generic incremental near-dup decision from a (checkpointed)
-    batch fingerprint frame and a corpus band frame: dup_of_corpus /
-    dup_of_batch / keep per batch id — shared by the image and audio
-    incremental families."""
-    bands_b = fp_bands(fp_b, id_col, fp_col, cap=False)
+    """Incremental near-dup decision of family `key`: per batch item,
+    dup_of_corpus (within hamming DHASH_T of a corpus item),
+    dup_of_batch (of an EARLIER batch item — smaller id, keep-first)
+    and keep = 1 iff neither. `corpus` is a corpus frame, fingerprinted
+    and banded here, or the name of a band table from write_fp_store,
+    which probes with no corpus re-decode."""
+    fam = FAMILIES[key]
+    id_col, fp_col = fam.id_col, fam.fp_col
+    if isinstance(corpus, str):
+        bands_c = batch.sparkSession.table(corpus)
+    else:
+        bands_c = fp_bands(fingerprints(corpus, key), key, cap=True)
+    # one decode of the batch feeds both probe joins: the batch is the
+    # small side, checkpointed eagerly so the plan's branches share it
+    fp_b = fingerprints(batch.select(*_batch_cols(fam)), key).localCheckpoint()
+    bands_b = fp_bands(fp_b, key, cap=False)
     a = bands_b.alias("a")
     ham = _dhash_hamming(f"a.{fp_col}", f"b.{fp_col}")
     corpus_hits = (
@@ -573,88 +557,78 @@ def _fp_incremental_from_bands(
     )
 
 
-def dhash_with_carry(doc: DataFrame) -> DataFrame:
-    """image_dhash_fingerprints with ALL input columns passed through
-    — the streaming-friendly form (one stateless Arrow pass appending
-    a dhash column; no aggregation state, so it runs unchanged on a
-    readStream frame)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    out_schema = StructType(
-        list(doc.schema.fields) + [StructField("dhash", StringType())]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        g = DHASH_GRID
-        for pdf in batches:
-            fps = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = imaging.synth_image(
-                    text.encode("utf-8"), int(doc_id)
-                )
-                _, pix = imaging.decode_image(payload)
-                n, _ = imaging.bilinear_gray_exact(pix, g, g)
-                bits = (n[:, 1:] > n[:, :-1]).ravel()
-                fps.append("".join("1" if b else "0" for b in bits))
-            out = pdf.copy()
-            out["dhash"] = fps
-            yield out
-
-    return doc.mapInPandas(extract, out_schema)
-
-
 def fp_probe_stream(
-    carried: DataFrame, corpus_bands: DataFrame, fp_col: str
+    stream: DataFrame, corpus_bands: DataFrame, key: str
 ) -> DataFrame:
-    """The generic stateless ingest-path near-dup gate shared by all
-    three fingerprint modalities: given a (possibly streaming) frame
-    already carrying its fingerprint column (dhash_with_carry /
-    afp_with_carry / vfp_with_carry), drop rows within hamming
-    DHASH_T of the persisted corpus band index — one LEFT ANTI
-    stream-static join per band, each an equi-join on band_key with
-    the exact hamming refinement as a residual predicate. No state
-    store: a replayed micro-batch re-probes to the same answer."""
-    cur = carried
+    """The stateless ingest-path near-dup gate of family `key`:
+    fingerprint the (possibly streaming) frame with every column
+    carried, then drop rows within hamming DHASH_T of the persisted
+    corpus band index — one LEFT ANTI stream-static join per band, each
+    an equi-join on band_key with the exact hamming refinement as a
+    residual predicate. No state store: a replayed micro-batch
+    re-probes to the same answer. Within-stream duplicates stay the
+    periodic batch pass (the q_*_dedup queries), the lambda split of
+    the text probe (streaming/curation.neardup_probe_stream)."""
+    fp_col = FAMILIES[key].fp_col
+    cur = fingerprints(stream, key, carry=True)
     for b in range(DHASH_BANDS):
-        key = F.concat(
-            F.lit(f"{b}:"),
-            F.substring(
-                F.col(f"a.{fp_col}"), b * DHASH_BAND_W + 1, DHASH_BAND_W
-            ),
-        )
-        cond = (key == F.col("c.band_key")) & (
+        cond = (_band_key(F.col(f"a.{fp_col}"), b) == F.col("c.band_key")) & (
             _dhash_hamming(f"a.{fp_col}", f"c.{fp_col}") <= DHASH_T
         )
-        cur = (
-            cur.alias("a")
-            .join(corpus_bands.alias("c"), cond, "left_anti")
-        )
+        cur = cur.alias("a").join(corpus_bands.alias("c"), cond, "left_anti")
     return cur
 
 
-def image_probe_stream(
-    stream: DataFrame, corpus_bands: DataFrame
+def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return parallelize_small_scan(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
+        spark,
+    )
+
+
+def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The dHash fingerprint tier itself (doc_id, dhash) — what a
+    production pipeline PERSISTS (write_fp_store) so later image
+    batches dedup against the store without re-decoding the corpus."""
+    return fingerprints(_docs(spark, sf_dir), "dhash")
+
+
+def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image near-duplicate pairs (doc_a, doc_b, hamming) over the
+    dHash fingerprints (fp_neardup_pairs).
+
+    Scale: decode + fingerprint is one Arrow-batched corpus pass;
+    pair formation is bucketed (measured linear on the replicated-
+    image probe — cross-replica images differ, so replicas add pairs,
+    never multiply them); hamming is integer band-XOR popcounts.
+
+    NOTE the sf0.01 test corpus genuinely has no image pair within
+    hamming DHASH_T (closest candidate is 11 bits apart) — the 0-row
+    result there is the true answer, and q_image_dedup covers the
+    same machinery with corpus-sized output at every SF."""
+    return fp_neardup_pairs(fingerprints(_docs(spark, sf_dir), "dhash"), "dhash")
+
+
+def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Total image keep/drop decision — the q_semdedup shape for the
+    multimodal column: every document gets a row (doc_id, dhash,
+    keep), keep = 0 iff a smaller-id document's image is within
+    hamming DHASH_T (via the banded pairs). This is the query a
+    curation pipeline actually consumes (q_image_neardup's pair list
+    is its evidence trail), and it stays corpus-sized at every SF.
+    The fingerprint frame is checkpointed so the decode pass runs
+    once, not once per plan branch."""
+    fp = fingerprints(_docs(spark, sf_dir), "dhash").localCheckpoint()
+    return fp_dedup_decision(fp, "dhash")
+
+
+def _incremental_by_source(
+    spark: SparkSession, sf_dir: str, key: str
 ) -> DataFrame:
-    """Drop streamed documents whose IMAGE is within hamming DHASH_T
-    of the existing corpus — incremental_image_neardup's corpus check
-    on the ingest path, stateless (the multimodal twin of
-    streaming/curation.neardup_probe_stream): one Arrow fingerprint
-    pass (no aggregation state), then one LEFT ANTI stream-static
-    join per band against the persisted dHash index
-    (write_dhash_store), each an equi-join on band_key with the exact
-    hamming refinement as a residual predicate. State store: none — a
-    replayed micro-batch re-probes to the same answer. Within-stream
-    image dups stay the periodic batch pass (q_image_dedup), the same
-    lambda split as text."""
-    return fp_probe_stream(dhash_with_carry(stream), corpus_bands, "dhash")
-
-
-def q_image_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental image dedup with documents split by source: `src0`
-    plays the already-indexed corpus, every other source the incoming
-    batch (the q_incremental_neardup convention)."""
+    """incremental_fp of a document family with documents split by
+    source: `src0` plays the already-indexed corpus, every other
+    source the incoming batch (the q_incremental_neardup
+    convention)."""
     from timeseriesdb_spark.operators.dedup import CORPUS_SOURCE
 
     doc = parallelize_small_scan(
@@ -663,10 +637,16 @@ def q_image_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         spark,
     )
-    return incremental_image_neardup(
+    return incremental_fp(
         doc.where(F.col("source") != CORPUS_SOURCE),
         doc.where(F.col("source") == CORPUS_SOURCE),
+        key,
     )
+
+
+def q_image_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental image dedup (_incremental_by_source)."""
+    return _incremental_by_source(spark, sf_dir, "dhash")
 
 
 AUD_FRAME = 64  # samples per analysis frame (complete frames only)
@@ -770,122 +750,42 @@ AUDIO_CORPUS_MOD = 2  # incremental split: even user_id = indexed
                       # stand-in for the documents convention)
 
 
-def audio_fingerprints(ev: DataFrame) -> DataFrame:
-    """Per-clip audio fingerprint (user_id, afp): each signal's events
-    synthesize into a REAL RIFF/PCM16 WAV, the kernel genuinely
-    decodes it back (functions/audio.py — a header or byte-order bug
-    breaks the oracle hash), and the decoded samples hash to the
-    56-bit energy-delta-sign fingerprint (audio.fingerprint_bits).
-    Same width as the image dHash by construction, so the two
-    families share the banded-Hamming LSH machinery (fp_bands /
-    fp_neardup_pairs / _fp_incremental_from_bands).
-
-    Scale: one shuffle on user_id (packed_grouped_map), then the
-    fingerprint is 56 chars per clip — the corpus of payloads never
-    moves again; pair formation downstream is bucketed."""
-    from timeseriesdb_spark.operators.transforms import packed_grouped_map
-
-    def fp(g: pd.DataFrame) -> pd.DataFrame:
-        payload = audio.synth_audio(g["value"].to_numpy())
-        _, samples = audio.decode_wav(payload)
-        return pd.DataFrame(
-            {
-                "user_id": [int(g["user_id"].iloc[0])],
-                "afp": [audio.fingerprint_bits(samples)],
-            }
-        )
-
-    return packed_grouped_map(ev, fp, "user_id bigint, afp string")
-
-
 def _audio_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "value"
+        *_batch_cols(FAMILIES["afp"])
     )
 
 
 def q_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The audio fingerprint tier itself (user_id, afp) — what a
-    production pipeline PERSISTS (write_afp_store, banded) so later
-    audio batches dedup against the store without re-decoding the
-    clip corpus. The audio twin of q_image_dhash."""
-    return audio_fingerprints(_audio_events(spark, sf_dir))
+    """The audio fingerprint tier itself (user_id, afp): each signal's
+    events synthesize into a REAL RIFF/PCM16 WAV that the kernel
+    decodes back (a header or byte-order bug breaks the oracle hash)
+    and hashes with the energy-delta-sign bits
+    (audio.fingerprint_bits). What a production pipeline PERSISTS
+    (write_fp_store) so later audio batches dedup against the store
+    without re-decoding the clip corpus."""
+    return fingerprints(_audio_events(spark, sf_dir), "afp")
 
 
 def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-duplicate pairs: banded-Hamming LSH over the
-    energy-delta fingerprints — the audio twin of q_image_neardup.
-    Candidates only form inside a (band, band_key) bucket (equi-join,
-    never all-pairs); the exact hamming filter keeps true near-dups;
-    buckets past DHASH_BAND_DF_CAP are dropped (silent/flat clips are
-    the audio stop-shingles). Like the image family at sf0.01, a
-    0-row result on a corpus with no clip pair within hamming DHASH_T
-    is the true answer — q_audio_dedup covers the same machinery with
-    corpus-sized output at every SF, and the banded==brute property
-    is pinned on crafted length-shifted replica clips."""
-    return fp_neardup_pairs(
-        audio_fingerprints(_audio_events(spark, sf_dir)),
-        "user_id", "afp", "user_a", "user_b",
-    )
+    """Audio near-duplicate pairs (user_a, user_b, hamming) over the
+    energy-delta fingerprints (fp_neardup_pairs). Like the image
+    family at sf0.01, a 0-row result on a corpus with no clip pair
+    within hamming DHASH_T is the true answer — q_audio_dedup covers
+    the same machinery with corpus-sized output at every SF, and the
+    banded==brute property is pinned on crafted length-shifted replica
+    clips."""
+    return fp_neardup_pairs(fingerprints(_audio_events(spark, sf_dir), "afp"), "afp")
 
 
 def q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Total audio keep/drop decision — every clip gets a row
     (user_id, afp, keep), keep = 0 iff a smaller-id clip is within
-    hamming DHASH_T (via the banded pairs). The audio twin of
-    q_image_dedup; corpus-sized at every SF. The fingerprint frame is
-    checkpointed so the decode pass runs once, not once per plan
-    branch."""
-    fp = audio_fingerprints(_audio_events(spark, sf_dir)).localCheckpoint()
-    return fp_dedup_decision(fp, "user_id", "afp")
-
-
-def write_afp_store(ev: DataFrame, table: str) -> None:
-    """Persist the clip corpus' fingerprint band index as a
-    band_key-bucketed catalog table (the audio twin of
-    write_dhash_store): fingerprints are computed ONCE at index build
-    — every later clip batch probes the store with no corpus
-    re-decode, and the probe join co-locates on band_key with no
-    exchange on the corpus side. Stored CAPPED (DHASH_BAND_DF_CAP):
-    hot buckets are silent/flat clips, dropped at write so no probe
-    ever fans out on them."""
-    from timeseriesdb_spark.sources.bucketed import write_bucketed
-
-    write_bucketed(
-        fp_bands(audio_fingerprints(ev), "user_id", "afp", cap=True),
-        table,
-        key="band_key",
-        sort_by=None,
-    )
-
-
-def incremental_audio_neardup(
-    batch: DataFrame, corpus: DataFrame
-) -> DataFrame:
-    """Incremental AUDIO dedup: for each batch clip, is its
-    fingerprint within hamming DHASH_T of (a) any corpus clip —
-    dup_of_corpus — or (b) any EARLIER batch clip (smaller user_id,
-    keep-first) — dup_of_batch. keep = 1 iff neither. The audio twin
-    of incremental_image_neardup; the corpus never re-decodes at
-    probe time when the band frame comes from write_afp_store
-    (incremental_audio_neardup_stored)."""
-    return _fp_incremental_from_bands(
-        audio_fingerprints(batch).localCheckpoint(),
-        fp_bands(audio_fingerprints(corpus), "user_id", "afp", cap=True),
-        "user_id", "afp",
-    )
-
-
-def incremental_audio_neardup_stored(
-    spark: SparkSession, batch: DataFrame, band_table: str
-) -> DataFrame:
-    """:func:`incremental_audio_neardup` against a persisted
-    fingerprint band index."""
-    return _fp_incremental_from_bands(
-        audio_fingerprints(batch).localCheckpoint(),
-        spark.table(band_table),
-        "user_id", "afp",
-    )
+    hamming DHASH_T (via the banded pairs); corpus-sized at every SF.
+    The fingerprint frame is checkpointed so the decode pass runs
+    once, not once per plan branch."""
+    fp = fingerprints(_audio_events(spark, sf_dir), "afp").localCheckpoint()
+    return fp_dedup_decision(fp, "afp")
 
 
 def q_audio_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -894,53 +794,11 @@ def q_audio_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch (events carry no `source`; the q_image_incremental
     convention adapted)."""
     ev = _audio_events(spark, sf_dir)
-    return incremental_audio_neardup(
+    return incremental_fp(
         ev.where(F.col("user_id") % AUDIO_CORPUS_MOD != 0),
         ev.where(F.col("user_id") % AUDIO_CORPUS_MOD == 0),
+        "afp",
     )
-
-
-def afp_with_carry(clips: DataFrame) -> DataFrame:
-    """Fingerprint a frame of ALREADY-ENCODED clips (…, payload
-    binary) — decodes the real WAV bytes (no synthesis: this is the
-    path stored/streamed payloads take) and appends an afp column.
-    Stateless one-pass Arrow kernel with all input columns carried
-    through, so it runs unchanged on a readStream frame (the audio
-    twin of dhash_with_carry)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    out_schema = StructType(
-        list(clips.schema.fields) + [StructField("afp", StringType())]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fps = []
-            for payload in pdf["payload"]:
-                _, samples = audio.decode_wav(bytes(payload))
-                fps.append(audio.fingerprint_bits(samples))
-            out = pdf.copy()
-            out["afp"] = fps
-            yield out
-
-    return clips.mapInPandas(extract, out_schema)
-
-
-def audio_probe_stream(
-    stream: DataFrame, corpus_bands: DataFrame
-) -> DataFrame:
-    """Drop streamed clips whose AUDIO is within hamming DHASH_T of
-    the existing corpus — incremental_audio_neardup's corpus check on
-    the ingest path, stateless (the audio twin of image_probe_stream):
-    one Arrow fingerprint pass over the clip payloads (no aggregation
-    state), then one LEFT ANTI stream-static join per band against
-    the persisted fingerprint index (write_afp_store), each an
-    equi-join on band_key with the exact hamming refinement as a
-    residual predicate. State store: none — a replayed micro-batch
-    re-probes to the same answer. Within-stream clip dups stay the
-    periodic batch pass (q_audio_dedup), the same lambda split as
-    text and images."""
-    return fp_probe_stream(afp_with_carry(stream), corpus_bands, "afp")
 
 
 QUERIES = {
@@ -1062,28 +920,46 @@ _DHASH_FP_SQL = f"""
         )
 """
 
-def _banded_pairs_sql(
-    fp_cte: str, cte: str, id_col: str, fp_col: str,
-    out_a: str, out_b: str,
-) -> str:
-    """DuckDB tail replaying fp_neardup_pairs over a WITH-chain whose
-    final CTE `cte` yields (id_col, fp_col) — shared by the
-    image/audio/video near-dup oracles."""
+def _capped_sql(cte: str, id_col: str, fp_col: str, p: str = "") -> str:
+    """CTEs `{p}bands` and `{p}capped` (fp_bands with cap=True) over a
+    CTE `cte` yielding (id_col, fp_col) — the DuckDB replay of the
+    banded core, shared by every family's oracles."""
     return f"""
-        WITH {fp_cte},
-        bands AS (
+        {p}bands AS (
             SELECT {id_col}, {fp_col}, band,
                    substr({fp_col}, CAST(band * {DHASH_BAND_W} + 1 AS INT),
                           {DHASH_BAND_W}) AS bkey
             FROM {cte} CROSS JOIN
                  (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
         ),
-        capped AS (
+        {p}capped AS (
             SELECT {id_col}, {fp_col}, band, bkey FROM (
                 SELECT *, count(*) OVER (PARTITION BY band, bkey) AS df
-                FROM bands
+                FROM {p}bands
             ) WHERE df <= {DHASH_BAND_DF_CAP}
-        ),
+        )"""
+
+
+def _dropped_sql(cte: str, id_col: str, fp_col: str, p: str = "") -> str:
+    """_capped_sql plus CTE `{p}dropped`: the ids with a smaller-id
+    item within hamming DHASH_T."""
+    return f"""{_capped_sql(cte, id_col, fp_col, p)},
+        {p}dropped AS (
+            SELECT DISTINCT b.{id_col}
+            FROM {p}capped a JOIN {p}capped b
+              ON a.band = b.band AND a.bkey = b.bkey
+             AND a.{id_col} < b.{id_col}
+            WHERE hamming(a.{fp_col}, b.{fp_col}) <= {DHASH_T}
+        )"""
+
+
+def _banded_pairs_sql(fp_cte: str, cte: str, key: str) -> str:
+    """DuckDB replay of fp_neardup_pairs over a WITH-chain whose final
+    CTE `cte` yields family `key`'s (id, fp)."""
+    id_col, fp_col = FAMILIES[key].id_col, FAMILIES[key].fp_col
+    out_a, out_b = _pair_cols(key)
+    return f"""
+        WITH {fp_cte},{_capped_sql(cte, id_col, fp_col)},
         pairs AS (
             SELECT DISTINCT a.{id_col} AS {out_a}, b.{id_col} AS {out_b},
                    a.{fp_col} AS fa, b.{fp_col} AS fb
@@ -1096,33 +972,11 @@ def _banded_pairs_sql(
     """
 
 
-def _banded_dedup_sql(
-    fp_cte: str, cte: str, id_col: str, fp_col: str
-) -> str:
-    """DuckDB tail replaying the total keep/drop decision (q_*_dedup)
-    over the same WITH-chain shape as _banded_pairs_sql."""
+def _banded_dedup_sql(fp_cte: str, cte: str, key: str) -> str:
+    """DuckDB replay of the total keep/drop decision (q_*_dedup)."""
+    id_col, fp_col = FAMILIES[key].id_col, FAMILIES[key].fp_col
     return f"""
-        WITH {fp_cte},
-        bands AS (
-            SELECT {id_col}, {fp_col}, band,
-                   substr({fp_col}, CAST(band * {DHASH_BAND_W} + 1 AS INT),
-                          {DHASH_BAND_W}) AS bkey
-            FROM {cte} CROSS JOIN
-                 (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
-        ),
-        capped AS (
-            SELECT {id_col}, {fp_col}, band, bkey FROM (
-                SELECT *, count(*) OVER (PARTITION BY band, bkey) AS df
-                FROM bands
-            ) WHERE df <= {DHASH_BAND_DF_CAP}
-        ),
-        dropped AS (
-            SELECT DISTINCT b.{id_col}
-            FROM capped a JOIN capped b
-              ON a.band = b.band AND a.bkey = b.bkey
-             AND a.{id_col} < b.{id_col}
-            WHERE hamming(a.{fp_col}, b.{fp_col}) <= {DHASH_T}
-        )
+        WITH {fp_cte},{_dropped_sql(cte, id_col, fp_col)}
         SELECT f.{id_col}, f.{fp_col},
                CAST(CASE WHEN d.{id_col} IS NULL THEN 1 ELSE 0 END AS INT)
                    AS keep
@@ -1130,14 +984,77 @@ def _banded_dedup_sql(
     """
 
 
+def _banded_incremental_sql(
+    fp_cte: str, cte: str, key: str, in_corpus: str
+) -> str:
+    """DuckDB replay of incremental_fp over a WITH-chain whose CTE
+    `cte` yields family `key`'s (id, fp) plus whatever `in_corpus`
+    (the predicate that puts a row in the indexed corpus) reads; every
+    other row is the batch."""
+    id_col, fp_col = FAMILIES[key].id_col, FAMILIES[key].fp_col
+    band_key = f"""CAST(band AS VARCHAR) || ':' ||
+                   substr({fp_col}, CAST(band * {DHASH_BAND_W} + 1 AS INT),
+                          {DHASH_BAND_W}) AS band_key"""
+    return f"""
+        WITH {fp_cte},
+        cb AS (
+            SELECT {id_col}, {fp_col}, band_key FROM (
+                SELECT *, count(*) OVER (PARTITION BY band_key) AS df
+                FROM (
+                    SELECT {id_col}, {fp_col}, {band_key}
+                    FROM {cte} CROSS JOIN
+                         (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
+                    WHERE {in_corpus}
+                )
+            ) WHERE df <= {DHASH_BAND_DF_CAP}
+        ),
+        bb AS (
+            SELECT {id_col}, {fp_col}, {band_key}
+            FROM {cte} CROSS JOIN
+                 (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
+            WHERE NOT ({in_corpus})
+        ),
+        c_hits AS (
+            SELECT DISTINCT a.{id_col}
+            FROM bb a JOIN cb b USING (band_key)
+            WHERE hamming(a.{fp_col}, b.{fp_col}) <= {DHASH_T}
+        ),
+        b_hits AS (
+            SELECT DISTINCT a.{id_col}
+            FROM bb a JOIN bb b
+              ON a.band_key = b.band_key AND a.{id_col} > b.{id_col}
+            WHERE hamming(a.{fp_col}, b.{fp_col}) <= {DHASH_T}
+        )
+        SELECT f.{id_col},
+               CAST(CASE WHEN c.{id_col} IS NULL THEN 0 ELSE 1 END AS INT)
+                   AS dup_of_corpus,
+               CAST(CASE WHEN b.{id_col} IS NULL THEN 0 ELSE 1 END AS INT)
+                   AS dup_of_batch,
+               CAST(CASE WHEN c.{id_col} IS NULL AND b.{id_col} IS NULL
+                         THEN 1 ELSE 0 END AS INT) AS keep
+        FROM {cte} f
+        LEFT JOIN c_hits c USING ({id_col})
+        LEFT JOIN b_hits b USING ({id_col})
+        WHERE NOT ({in_corpus})
+    """
+
+
+def _doc_source_sql(cte: str) -> str:
+    """CTE `src`: a document family's (doc_id, fp) rows from `cte` with
+    each document's source (`src0` is the incremental split's
+    corpus)."""
+    return f"""
+        src AS (
+            SELECT f.*, d.source FROM {cte} f JOIN documents d USING (doc_id)
+        )"""
+
+
 ORACLES: dict[str, str] = {
     "q_image_dhash": f"""
         WITH {_DHASH_FP_SQL}
         SELECT doc_id, dhash FROM fp
     """,
-    "q_image_neardup": _banded_pairs_sql(
-        _DHASH_FP_SQL, "fp", "doc_id", "dhash", "doc_a", "doc_b"
-    ),
+    "q_image_neardup": _banded_pairs_sql(_DHASH_FP_SQL, "fp", "dhash"),
     "q_audio_meta": f"""
         SELECT user_id,
                CAST(44 + 2 * count(*) AS BIGINT) AS n_bytes,
@@ -1174,62 +1091,11 @@ ORACLES: dict[str, str] = {
         FROM f GROUP BY user_id, frame
         HAVING count(*) = {AUD_FRAME}
     """,
-    "q_image_incremental": f"""
-        WITH {_DHASH_FP_SQL},
-        fps AS (
-            SELECT f.doc_id, f.dhash, d.source
-            FROM fp f JOIN documents d USING (doc_id)
-        ),
-        cb AS (
-            SELECT doc_id, dhash, band_key FROM (
-                SELECT *, count(*) OVER (PARTITION BY band_key) AS df
-                FROM (
-                    SELECT doc_id, dhash,
-                           CAST(band AS VARCHAR) || ':' ||
-                           substr(dhash,
-                                  CAST(band * {DHASH_BAND_W} + 1 AS INT),
-                                  {DHASH_BAND_W}) AS band_key
-                    FROM fps CROSS JOIN
-                         (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
-                    WHERE source = 'src0'
-                )
-            ) WHERE df <= {DHASH_BAND_DF_CAP}
-        ),
-        bb AS (
-            SELECT doc_id, dhash,
-                   CAST(band AS VARCHAR) || ':' ||
-                   substr(dhash, CAST(band * {DHASH_BAND_W} + 1 AS INT),
-                          {DHASH_BAND_W}) AS band_key
-            FROM fps CROSS JOIN
-                 (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
-            WHERE source != 'src0'
-        ),
-        c_hits AS (
-            SELECT DISTINCT a.doc_id
-            FROM bb a JOIN cb b USING (band_key)
-            WHERE hamming(a.dhash, b.dhash) <= {DHASH_T}
-        ),
-        b_hits AS (
-            SELECT DISTINCT a.doc_id
-            FROM bb a JOIN bb b
-              ON a.band_key = b.band_key AND a.doc_id > b.doc_id
-            WHERE hamming(a.dhash, b.dhash) <= {DHASH_T}
-        )
-        SELECT f.doc_id,
-               CAST(CASE WHEN c.doc_id IS NULL THEN 0 ELSE 1 END AS INT)
-                   AS dup_of_corpus,
-               CAST(CASE WHEN b.doc_id IS NULL THEN 0 ELSE 1 END AS INT)
-                   AS dup_of_batch,
-               CAST(CASE WHEN c.doc_id IS NULL AND b.doc_id IS NULL
-                         THEN 1 ELSE 0 END AS INT) AS keep
-        FROM fps f
-        LEFT JOIN c_hits c USING (doc_id)
-        LEFT JOIN b_hits b USING (doc_id)
-        WHERE f.source != 'src0'
-    """,
-    "q_image_dedup": _banded_dedup_sql(
-        _DHASH_FP_SQL, "fp", "doc_id", "dhash"
+    "q_image_incremental": _banded_incremental_sql(
+        _DHASH_FP_SQL + "," + _doc_source_sql("fp"),
+        "src", "dhash", "source = 'src0'",
     ),
+    "q_image_dedup": _banded_dedup_sql(_DHASH_FP_SQL, "fp", "dhash"),
     # Exact-integer bilinear replayed closed-form: the kernel's
     # rational geometry (x0/wx from ((2p+1)·W − out) over 2·out) and
     # integer tap sum N join four gsum lookups; value = N/D is one
@@ -1461,60 +1327,10 @@ ORACLES.update(
             WITH {_AFP_SQL}
             SELECT user_id, afp FROM afp
         """,
-        "q_audio_neardup": _banded_pairs_sql(
-            _AFP_SQL, "afp", "user_id", "afp", "user_a", "user_b"
+        "q_audio_neardup": _banded_pairs_sql(_AFP_SQL, "afp", "afp"),
+        "q_audio_dedup": _banded_dedup_sql(_AFP_SQL, "afp", "afp"),
+        "q_audio_incremental": _banded_incremental_sql(
+            _AFP_SQL, "afp", "afp", f"user_id % {AUDIO_CORPUS_MOD} = 0"
         ),
-        "q_audio_dedup": _banded_dedup_sql(
-            _AFP_SQL, "afp", "user_id", "afp"
-        ),
-        "q_audio_incremental": f"""
-            WITH {_AFP_SQL},
-            cb AS (
-                SELECT user_id, afp, band_key FROM (
-                    SELECT *, count(*) OVER (PARTITION BY band_key) AS df
-                    FROM (
-                        SELECT user_id, afp,
-                               CAST(band AS VARCHAR) || ':' ||
-                               substr(afp,
-                                      CAST(band * {DHASH_BAND_W} + 1 AS INT),
-                                      {DHASH_BAND_W}) AS band_key
-                        FROM afp CROSS JOIN
-                             (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
-                        WHERE user_id % {AUDIO_CORPUS_MOD} = 0
-                    )
-                ) WHERE df <= {DHASH_BAND_DF_CAP}
-            ),
-            bb AS (
-                SELECT user_id, afp,
-                       CAST(band AS VARCHAR) || ':' ||
-                       substr(afp, CAST(band * {DHASH_BAND_W} + 1 AS INT),
-                              {DHASH_BAND_W}) AS band_key
-                FROM afp CROSS JOIN
-                     (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
-                WHERE user_id % {AUDIO_CORPUS_MOD} != 0
-            ),
-            c_hits AS (
-                SELECT DISTINCT a.user_id
-                FROM bb a JOIN cb b USING (band_key)
-                WHERE hamming(a.afp, b.afp) <= {DHASH_T}
-            ),
-            b_hits AS (
-                SELECT DISTINCT a.user_id
-                FROM bb a JOIN bb b
-                  ON a.band_key = b.band_key AND a.user_id > b.user_id
-                WHERE hamming(a.afp, b.afp) <= {DHASH_T}
-            )
-            SELECT f.user_id,
-                   CAST(CASE WHEN c.user_id IS NULL THEN 0 ELSE 1 END AS INT)
-                       AS dup_of_corpus,
-                   CAST(CASE WHEN b.user_id IS NULL THEN 0 ELSE 1 END AS INT)
-                       AS dup_of_batch,
-                   CAST(CASE WHEN c.user_id IS NULL AND b.user_id IS NULL
-                             THEN 1 ELSE 0 END AS INT) AS keep
-            FROM afp f
-            LEFT JOIN c_hits c USING (user_id)
-            LEFT JOIN b_hits b USING (user_id)
-            WHERE f.user_id % {AUDIO_CORPUS_MOD} != 0
-        """,
     }
 )

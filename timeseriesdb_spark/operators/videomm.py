@@ -1,11 +1,12 @@
 """Video multimodal column operators — the third member of the
 image/audio/video triad (multimodal.py holds the image + audio
-families; this module mirrors them for video to keep file sizes
-sane). Payloads are REAL encoded RIFF/VIDF containers
-(functions/video.py) synthesized from documents.text; every kernel
-genuinely parses the bytes back into frame grids inside Arrow-batched
-mapInPandas — decode parallelism == partition count, payloads never
-pass through the driver, constant memory per task.
+families and the fingerprint-family table; this module mirrors them
+for video to keep file sizes sane). Payloads are REAL encoded
+RIFF/VIDF containers (functions/video.py) synthesized from
+documents.text; every kernel genuinely parses the bytes back into
+frame grids inside Arrow-batched mapInPandas — decode parallelism ==
+partition count, payloads never pass through the driver, constant
+memory per task.
 
 Queries (all DuckDB hash-checked — the synthesis contract is replayed
 closed-form from hex(encode(text)) while the Spark side must parse
@@ -18,12 +19,9 @@ the container it encoded):
 - q_video_scene_cuts: adjacent-frame absolute pixel delta Σ|p_t −
   p_{t−1}| per transition plus the is_cut decision at an integer
   threshold — shot segmentation, all int64.
-- q_video_fp / q_video_neardup / q_video_dedup: clip fingerprints
-  over the decoded voxel stream (audio.fingerprint_bits — the
-  56-bit energy-delta-sign hash over exact integer chunk energies)
-  feeding the SAME banded-Hamming LSH machinery as images and audio
-  (fp_bands / fp_neardup_pairs), so all three modalities dedup with
-  one shared, bucket-fenced, never-all-pairs core.
+- q_video_fp / q_video_neardup / q_video_dedup / q_video_incremental:
+  the edit-robust `vfp` fingerprint family; q_video_mean_dhash: the
+  rate-robust `mdhash` family (multimodal.FAMILIES).
 """
 
 from __future__ import annotations
@@ -31,34 +29,29 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark import cloudpickle as _cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from timeseriesdb_spark.functions import audio, imaging, video
-from timeseriesdb_spark.operators.common import parallelize_small_scan
+from timeseriesdb_spark.functions import audio, video
 from timeseriesdb_spark.operators.multimodal import (
     DHASH_GRID,
     DHASH_ROW_BITS,
-    DHASH_T,
-    fp_bands,
+    _banded_dedup_sql,
+    _banded_incremental_sql,
+    _banded_pairs_sql,
+    _docs,
+    _doc_source_sql,
+    _dropped_sql,
+    _DHASH_FP_SQL,
+    _incremental_by_source,
+    fingerprints,
     fp_dedup_decision,
     fp_neardup_pairs,
 )
 from timeseriesdb_spark.tables import load_table
 
-_cloudpickle.register_pickle_by_value(video)
-_cloudpickle.register_pickle_by_value(audio)
-
 VID_SAMPLE_EVERY = 2   # frame-sample stride (keep frames 0, 2, 4, …)
 SCENE_CUT_MIN = 20_000  # Σ|Δpixel| threshold for a cut decision
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return parallelize_small_scan(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text"),
-        spark,
-    )
 
 
 def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -161,52 +154,19 @@ def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def video_fingerprints(doc: DataFrame) -> DataFrame:
-    """Per-clip video fingerprint (doc_id, vfp): decode the container,
-    flatten the (F, H, W) voxel grid in frame-major order, hash the
-    int64 stream with the shared 56-bit energy-delta-sign fingerprint
-    (audio.fingerprint_bits — exact integer chunk boundaries and
-    energies, so the bit pattern is engine-deterministic). A clip with
-    appended/trimmed frames shifts every chunk boundary slightly and
-    flips few bits — the near-dup robustness the banded pairs need."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            ids, fps_ = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = video.synth_video(text.encode("utf-8"))
-                _, frames = video.decode_video(payload)
-                ids.append(doc_id)
-                fps_.append(
-                    audio.fingerprint_bits(
-                        frames.ravel().astype(np.int64)
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "vfp": fps_})
-
-    return doc.mapInPandas(extract, "doc_id bigint, vfp string")
-
-
 def q_video_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The video fingerprint tier (doc_id, vfp) — what a production
     pipeline PERSISTS, banded, so later clip batches dedup against
     the store without re-decoding the corpus."""
-    return video_fingerprints(_docs(spark, sf_dir))
+    return fingerprints(_docs(spark, sf_dir), "vfp")
 
 
 def q_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video near-duplicate pairs via the shared banded-Hamming LSH
-    core (fp_neardup_pairs): candidates only inside (band, band_key)
-    buckets, exact hamming refinement, df-capped hot buckets. Like
-    the image/audio twins, a 0-row answer on a corpus with no clip
-    pair within hamming DHASH_T is the true answer; banded==brute is
-    pinned on crafted frame-appended replicas in tests."""
-    return fp_neardup_pairs(
-        video_fingerprints(_docs(spark, sf_dir)),
-        "doc_id", "vfp", "doc_a", "doc_b",
-    )
+    """Video near-duplicate pairs (doc_a, doc_b, hamming)
+    (fp_neardup_pairs). A 0-row answer on a corpus with no clip pair
+    within hamming DHASH_T is the true answer; banded==brute is pinned
+    on crafted frame-appended replicas in tests."""
+    return fp_neardup_pairs(fingerprints(_docs(spark, sf_dir), "vfp"), "vfp")
 
 
 def q_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,295 +174,22 @@ def q_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     iff a smaller-id clip is within hamming DHASH_T. Corpus-sized at
     every SF; the fingerprint frame is checkpointed so the decode
     pass runs once across the plan's branches."""
-    fp = video_fingerprints(_docs(spark, sf_dir)).localCheckpoint()
-    return fp_dedup_decision(fp, "doc_id", "vfp")
-
-
-def write_vfp_store(corpus: DataFrame, table: str) -> None:
-    """Persist the clip corpus' video-fingerprint band index as a
-    band_key-bucketed catalog table (the video twin of
-    write_dhash_store / write_afp_store): fingerprints are computed
-    ONCE at index build — later clip batches probe with no corpus
-    re-decode, co-located on band_key. Stored CAPPED: hot buckets are
-    static/template clips, dropped at write."""
-    from timeseriesdb_spark.sources.bucketed import write_bucketed
-
-    write_bucketed(
-        fp_bands(video_fingerprints(corpus), "doc_id", "vfp", cap=True),
-        table,
-        key="band_key",
-        sort_by=None,
-    )
-
-
-def incremental_video_neardup(
-    batch: DataFrame, corpus: DataFrame
-) -> DataFrame:
-    """Incremental VIDEO dedup: dup_of_corpus / dup_of_batch / keep
-    per batch clip, via the shared _fp_incremental_from_bands core —
-    the corpus never re-decodes at probe time when the band frame
-    comes from write_vfp_store (incremental_video_neardup_stored)."""
-    from timeseriesdb_spark.operators.multimodal import (
-        _fp_incremental_from_bands,
-    )
-
-    return _fp_incremental_from_bands(
-        video_fingerprints(batch.select("doc_id", "text")).localCheckpoint(),
-        fp_bands(video_fingerprints(corpus), "doc_id", "vfp", cap=True),
-        "doc_id", "vfp",
-    )
-
-
-def incremental_video_neardup_stored(
-    spark: SparkSession, batch: DataFrame, band_table: str
-) -> DataFrame:
-    """:func:`incremental_video_neardup` against a persisted index."""
-    from timeseriesdb_spark.operators.multimodal import (
-        _fp_incremental_from_bands,
-    )
-
-    return _fp_incremental_from_bands(
-        video_fingerprints(batch.select("doc_id", "text")).localCheckpoint(),
-        spark.table(band_table),
-        "doc_id", "vfp",
-    )
+    fp = fingerprints(_docs(spark, sf_dir), "vfp").localCheckpoint()
+    return fp_dedup_decision(fp, "vfp")
 
 
 def q_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental video dedup with documents split by source —
-    `src0` plays the already-indexed corpus, every other source the
-    incoming batch (the q_image_incremental convention)."""
-    from timeseriesdb_spark.operators.dedup import CORPUS_SOURCE
-
-    doc = parallelize_small_scan(
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "source"
-        ),
-        spark,
-    )
-    return incremental_video_neardup(
-        doc.where(F.col("source") != CORPUS_SOURCE),
-        doc.where(F.col("source") == CORPUS_SOURCE),
-    )
-
-
-def vfp_with_carry(clips: DataFrame) -> DataFrame:
-    """Fingerprint a frame of ALREADY-ENCODED clips (…, payload
-    binary) — decodes real container bytes (the stored/streamed
-    route, no synthesis) and appends a vfp column. Stateless one-pass
-    Arrow kernel with all input columns carried through, so it runs
-    unchanged on a readStream frame (the video twin of
-    dhash_with_carry / afp_with_carry)."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    out_schema = StructType(
-        list(clips.schema.fields) + [StructField("vfp", StringType())]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            fps_ = []
-            for payload in pdf["payload"]:
-                _, frames = video.decode_video(bytes(payload))
-                fps_.append(
-                    audio.fingerprint_bits(frames.ravel().astype(np.int64))
-                )
-            out = pdf.copy()
-            out["vfp"] = fps_
-            yield out
-
-    return clips.mapInPandas(extract, out_schema)
-
-
-def mean_frame_dhash(frames) -> str:
-    """RATE-NORMALIZED video fingerprint: the image-dHash gradient
-    sign bits of the TIME-MEAN frame (per-pixel integer floor-mean
-    over frames → exact-integer bilinear DHASH_GRID resample →
-    row-gradient signs). Marginalizing the time axis makes the hash
-    EXACTLY invariant to uniform fps upsampling (duplicating every
-    frame k× leaves the mean unchanged — pinned in tests), and robust
-    to temporal decimation precisely to the extent adjacent frames
-    correlate: real video is highly frame-correlated, while the
-    synthetic corpus's frames are independent text chunks — the
-    adversarial worst case, where drop-every-2nd measures hamming
-    9–12 (> DHASH_T; pinned as the documented invariance boundary,
-    unrelated clips at 26–36 for contrast; SCALING.md).
-
-    The frame-major voxel fingerprint (video_fingerprints) is the
-    EDIT-robust tier; this is the RATE-robust tier — a real pipeline
-    persists both band indexes, pairing a clip with its re-encoded
-    self (reference analogue: the lossy recoding daemon,
-    recoding_daemon.rs:143-225, degrades stored clips in place).
-    All-integer ⇒ cross-engine exact (q_video_mean_dhash oracle)."""
-    import numpy as np
-
-    nf = frames.shape[0]
-    mean = (frames.astype(np.int64).sum(axis=0) // nf).astype(np.uint8)
-    n, _ = imaging.bilinear_gray_exact(
-        mean[:, :, None], DHASH_GRID, DHASH_GRID
-    )
-    bits = (n[:, 1:] > n[:, :-1]).ravel()
-    return "".join("1" if b else "0" for b in bits)
-
-
-def video_mean_dhash(doc: DataFrame) -> DataFrame:
-    """Per-clip rate-normalized fingerprint frame (doc_id, mdhash) —
-    the persisted second band-index axis next to q_video_fp.
-
-    The kernel body is INLINE (module-object references only, like
-    every other kernel): a closure that names a module-level function
-    pickles it by (module, qualname) REFERENCE, which makes the Python
-    worker import the repo package — and the driver contract runs from
-    an arbitrary cwd where that import fails. Module OBJECTS
-    (video/imaging) serialize by value, so they are the only repo
-    references a kernel may close over (the repo-wide convention)."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        g = DHASH_GRID
-        for pdf in batches:
-            ids, fps_ = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload = video.synth_video(text.encode("utf-8"))
-                _, frames = video.decode_video(payload)
-                nf = frames.shape[0]
-                mean = (
-                    frames.astype(np.int64).sum(axis=0) // nf
-                ).astype(np.uint8)
-                n, _ = imaging.bilinear_gray_exact(mean[:, :, None], g, g)
-                bits = (n[:, 1:] > n[:, :-1]).ravel()
-                ids.append(doc_id)
-                fps_.append("".join("1" if b else "0" for b in bits))
-            yield pd.DataFrame({"doc_id": ids, "mdhash": fps_})
-
-    return doc.mapInPandas(extract, "doc_id bigint, mdhash string")
+    """Incremental video dedup (multimodal._incremental_by_source)."""
+    return _incremental_by_source(spark, sf_dir, "vfp")
 
 
 def q_video_mean_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-declared wrapper over :func:`video_mean_dhash`."""
-    return video_mean_dhash(_docs(spark, sf_dir))
-
-
-def vfp_with_carry_docs(doc: DataFrame) -> DataFrame:
-    """video_fingerprints with ALL input columns carried through —
-    the DOCUMENTS-stream twin of vfp_with_carry (which takes encoded
-    clip payloads): synthesizes the clip from text exactly like the
-    batch tier, appends a vfp column, stateless one Arrow pass, so it
-    runs unchanged on a readStream frame. Used by the fused
-    multimodal_keep_stream gate."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    out_schema = StructType(
-        list(doc.schema.fields) + [StructField("vfp", StringType())]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            fps_ = []
-            for text in pdf["text"]:
-                payload = video.synth_video(text.encode("utf-8"))
-                _, frames = video.decode_video(payload)
-                fps_.append(
-                    audio.fingerprint_bits(frames.ravel().astype(np.int64))
-                )
-            out = pdf.copy()
-            out["vfp"] = fps_
-            yield out
-
-    return doc.mapInPandas(extract, out_schema)
-
-
-def video_probe_stream(
-    stream: DataFrame, corpus_bands: DataFrame
-) -> DataFrame:
-    """Drop streamed clips whose VIDEO is within hamming DHASH_T of
-    the existing corpus — stateless ingest-path dedup (the video twin
-    of image_probe_stream / audio_probe_stream): one Arrow
-    fingerprint pass over the clip payloads, then one LEFT ANTI
-    stream-static join per band against the persisted index
-    (write_vfp_store), each an equi-join on band_key with the exact
-    hamming refinement as a residual predicate. No state store — a
-    replayed micro-batch re-probes to the same answer."""
-    from timeseriesdb_spark.operators.multimodal import fp_probe_stream
-
-    return fp_probe_stream(vfp_with_carry(stream), corpus_bands, "vfp")
-
-
-def mdhash_with_carry(clips: DataFrame) -> DataFrame:
-    """Rate-normalized fingerprint of ALREADY-ENCODED clips (…,
-    payload binary) with ALL input columns carried through — the
-    payload-route twin of video_mean_dhash (which synthesizes from
-    documents.text). Decodes the real container, appends `mdhash`.
-    Stateless one Arrow pass; module-object references only (the
-    kernel-serialization rule), so it runs on a readStream frame from
-    any driver cwd."""
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    out_schema = StructType(
-        list(clips.schema.fields) + [StructField("mdhash", StringType())]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        g = DHASH_GRID
-        for pdf in batches:
-            fps_ = []
-            for payload in pdf["payload"]:
-                _, frames = video.decode_video(bytes(payload))
-                nf = frames.shape[0]
-                mean = (
-                    frames.astype(np.int64).sum(axis=0) // nf
-                ).astype(np.uint8)
-                n, _ = imaging.bilinear_gray_exact(mean[:, :, None], g, g)
-                bits = (n[:, 1:] > n[:, :-1]).ravel()
-                fps_.append("".join("1" if b else "0" for b in bits))
-            out = pdf.copy()
-            out["mdhash"] = fps_
-            yield out
-
-    return clips.mapInPandas(extract, out_schema)
-
-
-def write_mdhash_store(corpus: DataFrame, table: str) -> None:
-    """Persist the corpus' RATE-NORMALIZED band index (mean-frame
-    dHash) as a band_key-bucketed catalog table — the second index
-    axis next to write_vfp_store: vfp pairs sample-space edits,
-    mdhash pairs re-encodes (fps changes leave the time-mean frame
-    fixed). A production pipeline maintains both, like chromaprint's
-    multiple hash families."""
-    from timeseriesdb_spark.operators.multimodal import fp_bands
-    from timeseriesdb_spark.sources.bucketed import write_bucketed
-
-    write_bucketed(
-        fp_bands(video_mean_dhash(corpus), "doc_id", "mdhash", cap=True),
-        table,
-        key="band_key",
-        sort_by=None,
-    )
-
-
-def video_rate_probe_stream(
-    stream: DataFrame, corpus_bands: DataFrame
-) -> DataFrame:
-    """Drop streamed clips that are RE-ENCODES of existing corpus
-    clips — the ingest gate the frame-major vfp probe cannot provide
-    (restride scrambles its spatial phase; SCALING.md boundary): one
-    Arrow mean-dhash pass over the clip payloads, then the shared
-    banded LEFT ANTI probe against the write_mdhash_store index.
-    Pinned end-to-end in tests/test_video.py: an fps-doubled
-    re-encode of a corpus clip is dropped HERE and sails through
-    video_probe_stream."""
-    from timeseriesdb_spark.operators.multimodal import fp_probe_stream
-
-    return fp_probe_stream(
-        mdhash_with_carry(stream), corpus_bands, "mdhash"
-    )
+    """The rate-normalized fingerprint tier (doc_id, mdhash) — the
+    second persisted band-index axis next to q_video_fp: vfp pairs
+    sample-space edits, mdhash pairs re-encodes (an fps change leaves
+    the time-mean frame fixed), like chromaprint's multiple hash
+    families."""
+    return fingerprints(_docs(spark, sf_dir), "mdhash")
 
 
 def q_multimodal_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -696,15 +383,6 @@ _MDHASH_SQL = f"""
         )
 """
 
-from timeseriesdb_spark.operators.multimodal import (  # noqa: E402
-    _banded_dedup_sql,
-    _banded_pairs_sql,
-    _DHASH_FP_SQL,
-    DHASH_BAND_DF_CAP,
-    DHASH_BAND_W,
-    DHASH_BANDS,
-)
-
 ORACLES: dict[str, str] = {
     "q_video_mean_dhash": f"""
         WITH {_MDHASH_SQL}
@@ -716,47 +394,8 @@ ORACLES: dict[str, str] = {
         ed AS (
             SELECT min(doc_id) AS doc_id FROM documents
             GROUP BY md5(lower(regexp_replace(text, '\\s+', ' ', 'g')))
-        ),
-        ibands AS (
-            SELECT doc_id, dhash, band,
-                   substr(dhash, CAST(band * {DHASH_BAND_W} + 1 AS INT),
-                          {DHASH_BAND_W}) AS bkey
-            FROM fp CROSS JOIN
-                 (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
-        ),
-        icapped AS (
-            SELECT doc_id, dhash, band, bkey FROM (
-                SELECT *, count(*) OVER (PARTITION BY band, bkey) AS df
-                FROM ibands
-            ) WHERE df <= {DHASH_BAND_DF_CAP}
-        ),
-        idropped AS (
-            SELECT DISTINCT b.doc_id
-            FROM icapped a JOIN icapped b
-              ON a.band = b.band AND a.bkey = b.bkey
-             AND a.doc_id < b.doc_id
-            WHERE hamming(a.dhash, b.dhash) <= {DHASH_T}
-        ),
-        vbands AS (
-            SELECT doc_id, vfp AS vf, band,
-                   substr(vfp, CAST(band * {DHASH_BAND_W} + 1 AS INT),
-                          {DHASH_BAND_W}) AS bkey
-            FROM vfp CROSS JOIN
-                 (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
-        ),
-        vcapped AS (
-            SELECT doc_id, vf, band, bkey FROM (
-                SELECT *, count(*) OVER (PARTITION BY band, bkey) AS df
-                FROM vbands
-            ) WHERE df <= {DHASH_BAND_DF_CAP}
-        ),
-        vdropped AS (
-            SELECT DISTINCT b.doc_id
-            FROM vcapped a JOIN vcapped b
-              ON a.band = b.band AND a.bkey = b.bkey
-             AND a.doc_id < b.doc_id
-            WHERE hamming(a.vf, b.vf) <= {DHASH_T}
-        )
+        ),{_dropped_sql("fp", "doc_id", "dhash", "i")},
+        {_dropped_sql("vfp", "doc_id", "vfp", "v").lstrip()}
         SELECT dd.doc_id,
                CAST(CASE WHEN e.doc_id IS NULL THEN 0 ELSE 1 END AS INT)
                    AS keep_text,
@@ -818,63 +457,10 @@ ORACLES: dict[str, str] = {
         WITH {_VFP_SQL}
         SELECT doc_id, vfp FROM vfp
     """,
-    "q_video_neardup": _banded_pairs_sql(
-        _VFP_SQL, "vfp", "doc_id", "vfp", "doc_a", "doc_b"
+    "q_video_neardup": _banded_pairs_sql(_VFP_SQL, "vfp", "vfp"),
+    "q_video_incremental": _banded_incremental_sql(
+        _VFP_SQL + "," + _doc_source_sql("vfp"),
+        "src", "vfp", "source = 'src0'",
     ),
-    "q_video_incremental": f"""
-        WITH {_VFP_SQL},
-        fps AS (
-            SELECT f.doc_id, f.vfp, d.source
-            FROM vfp f JOIN documents d USING (doc_id)
-        ),
-        cb AS (
-            SELECT doc_id, vfp, band_key FROM (
-                SELECT *, count(*) OVER (PARTITION BY band_key) AS df
-                FROM (
-                    SELECT doc_id, vfp,
-                           CAST(band AS VARCHAR) || ':' ||
-                           substr(vfp,
-                                  CAST(band * {DHASH_BAND_W} + 1 AS INT),
-                                  {DHASH_BAND_W}) AS band_key
-                    FROM fps CROSS JOIN
-                         (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
-                    WHERE source = 'src0'
-                )
-            ) WHERE df <= {DHASH_BAND_DF_CAP}
-        ),
-        bb AS (
-            SELECT doc_id, vfp,
-                   CAST(band AS VARCHAR) || ':' ||
-                   substr(vfp, CAST(band * {DHASH_BAND_W} + 1 AS INT),
-                          {DHASH_BAND_W}) AS band_key
-            FROM fps CROSS JOIN
-                 (SELECT unnest(range(0, {DHASH_BANDS})) AS band) t
-            WHERE source != 'src0'
-        ),
-        c_hits AS (
-            SELECT DISTINCT a.doc_id
-            FROM bb a JOIN cb b USING (band_key)
-            WHERE hamming(a.vfp, b.vfp) <= {DHASH_T}
-        ),
-        b_hits AS (
-            SELECT DISTINCT a.doc_id
-            FROM bb a JOIN bb b
-              ON a.band_key = b.band_key AND a.doc_id > b.doc_id
-            WHERE hamming(a.vfp, b.vfp) <= {DHASH_T}
-        )
-        SELECT f.doc_id,
-               CAST(CASE WHEN c.doc_id IS NULL THEN 0 ELSE 1 END AS INT)
-                   AS dup_of_corpus,
-               CAST(CASE WHEN b.doc_id IS NULL THEN 0 ELSE 1 END AS INT)
-                   AS dup_of_batch,
-               CAST(CASE WHEN c.doc_id IS NULL AND b.doc_id IS NULL
-                         THEN 1 ELSE 0 END AS INT) AS keep
-        FROM fps f
-        LEFT JOIN c_hits c USING (doc_id)
-        LEFT JOIN b_hits b USING (doc_id)
-        WHERE f.source != 'src0'
-    """,
-    "q_video_dedup": _banded_dedup_sql(
-        _VFP_SQL, "vfp", "doc_id", "vfp"
-    ),
+    "q_video_dedup": _banded_dedup_sql(_VFP_SQL, "vfp", "vfp"),
 }

@@ -196,11 +196,9 @@ def multimodal_keep_stream(
     - text: exact-fingerprint gate — md5 of whitespace-normalized
       lowercase text (the q_fingerprint canonical form), one
       stream-static LEFT ANTI equi-join against the corpus fp frame;
-    - image: dHash gate — one Arrow fingerprint pass
-      (dhash_with_carry) then the banded-Hamming anti-join probe
-      against the persisted dhash index (fp_probe_stream);
-    - video: fingerprint gate — same shared probe core over
-      vfp_with_carry_docs and the vfp band index.
+    - image and video: the `dhash` and `vfp` family gates
+      (multimodal.fp_probe_stream) against their persisted band
+      indexes, payloads synthesized from `text` as in the batch tier.
 
     Gates chain as filters, so a document dropped by an earlier
     modality never pays the later decode; survivors carry fp/dhash/vfp
@@ -209,11 +207,7 @@ def multimodal_keep_stream(
     uses individually. Scale: each gate is an equi-join against a
     band_key-bucketed bounded index — no state store, no shuffle of
     the stream beyond the joins Catalyst plans."""
-    from timeseriesdb_spark.operators.multimodal import (
-        dhash_with_carry,
-        fp_probe_stream,
-    )
-    from timeseriesdb_spark.operators.videomm import vfp_with_carry_docs
+    from timeseriesdb_spark.operators.multimodal import fp_probe_stream
 
     norm = F.lower(F.regexp_replace(F.col("text"), r"\s+", " "))
     cur = (
@@ -225,8 +219,8 @@ def multimodal_keep_stream(
             "left_anti",
         )
     )
-    cur = fp_probe_stream(dhash_with_carry(cur), image_bands, "dhash")
-    return fp_probe_stream(vfp_with_carry_docs(cur), video_bands, "vfp")
+    cur = fp_probe_stream(cur, image_bands, "dhash")
+    return fp_probe_stream(cur, video_bands, "vfp")
 
 
 def semantic_decon_stream(
