@@ -7,6 +7,11 @@ from separate runs.
 Usage:
     python scripts/ab_conf.py "spark.sql.join.preferSortMergeJoin=false" q_foo q_bar
     SPARK_TSDB_AB_REPS=7 python scripts/ab_conf.py "k=v;k2=v2" q_foo
+
+Only runtime-modifiable confs can be A/B'd this way. A static conf
+(for example spark.sql.codegen.cache.maxEntries) is fixed when the JVM
+starts, so it is refused up front: compare it with two processes
+instead, e.g. perfbench/run.py on two checkouts.
 """
 
 from __future__ import annotations
@@ -16,7 +21,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from timeseriesdb_spark.registry import QUERIES  # noqa: E402
 from timeseriesdb_spark.session import get_spark  # noqa: E402
@@ -31,6 +36,14 @@ def main() -> None:
     assert names, "pass query names"
     spark = get_spark(app_name="ab-conf")
     spark.sparkContext.setLogLevel("ERROR")
+    static = [k for k, _ in confs if not spark.conf.isModifiable(k)]
+    if static:
+        spark.stop()
+        sys.exit(
+            f"ab_conf: {', '.join(static)} cannot be set at runtime (a static "
+            "conf); A/B it with two processes, e.g. perfbench/run.py on two "
+            "checkouts"
+        )
     base = {k: spark.conf.get(k, None) for k, _ in confs}
 
     def set_variant(on: bool) -> None:

@@ -4,13 +4,14 @@ DuckDB oracles (same hash discipline as driver_sim). Usage:
     python scripts/check_subset.py q_paa q_window_max ...
 """
 import hashlib
+import os
 import sys
 
 import duckdb
 import pandas as pd
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e  # noqa: E402
 
 spark = (
@@ -20,7 +21,6 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-import os
 SF = os.environ.get("SPARK_TSDB_TEST_SF", "/root/testdata/sf0.01")
 con = duckdb.connect()
 for t in [

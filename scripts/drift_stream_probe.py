@@ -18,7 +18,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

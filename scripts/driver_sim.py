@@ -1,11 +1,20 @@
 """Simulates the correctness driver: vanilla SparkSession (none of our
-session.py configs), import __spark_entry__, run entry + every query at
-sf0.01, compare to DuckDB oracle via order-insensitive value hash."""
-import hashlib, sys
+session.py configs), import __spark_entry__, run entry + every query on
+one data dir, compare to DuckDB oracle via order-insensitive value hash.
+
+    python scripts/driver_sim.py [DATA_DIR]
+
+DATA_DIR defaults to the sf0.01 fixture. It also becomes
+SPARK_TSDB_TEST_SF, so lazy oracles retrain on the same data."""
+import argparse, hashlib, os, sys
 import duckdb, pandas as pd
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+ap.add_argument("data_dir", nargs="?", help="default: the sf0.01 fixture")
+DATA_DIR = ap.parse_args().data_dir
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e
 
 spark = SparkSession.builder.master("local[4]").appName("driver-sim").getOrCreate()
@@ -17,6 +26,8 @@ print(f"entry(): {n} rows, schema={df.schema.simpleString()}")
 assert n > 0
 
 SF = "/root/testdata/sf0.01"
+SF = DATA_DIR or SF
+os.environ["SPARK_TSDB_TEST_SF"] = SF
 con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")

@@ -7,9 +7,10 @@ exchange counts) visible. Run from the repo root:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from timeseriesdb_spark.plans import checks  # noqa: E402
 from timeseriesdb_spark.registry import QUERIES  # noqa: E402

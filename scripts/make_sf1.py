@@ -34,7 +34,7 @@ Pure pyarrow/pandas — no RNG, no Spark, bit-reproducible. Output
 parquet row groups are 256k rows so Spark splits the single files
 into parallel scan tasks.
 
-Usage: python scripts/make_sf1.py  (writes /root/repo/testdata_sf1)
+Usage: python scripts/make_sf1.py  (writes testdata_sf1 at the repo root)
 """
 
 from __future__ import annotations
@@ -47,7 +47,8 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = os.environ.get("SPARK_TSDB_SF1_SRC", "/root/testdata/sf0.1")
-DST = os.environ.get("SPARK_TSDB_SF1_DST", "/root/repo/testdata_sf1")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DST = os.environ.get("SPARK_TSDB_SF1_DST", os.path.join(ROOT, "testdata_sf1"))
 FACTOR = int(os.environ.get("SPARK_TSDB_SF1_FACTOR", "10"))
 ROW_GROUP = 262_144
 

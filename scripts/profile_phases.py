@@ -18,7 +18,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from timeseriesdb_spark.registry import QUERIES  # noqa: E402
 from timeseriesdb_spark.session import get_spark  # noqa: E402

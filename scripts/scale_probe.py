@@ -23,7 +23,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
@@ -608,7 +609,7 @@ def main() -> None:
         "  text-chunk frames are the adversarial worst case (hamming",
         "  9–12, above DHASH_T), real frame-correlated video is not.",
     ]
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(os.path.join(ROOT, "SCALING.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote SCALING.md")
     shutil.rmtree(SCRATCH, ignore_errors=True)
