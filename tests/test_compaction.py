@@ -128,13 +128,13 @@ def test_compact_partials_crash_recovery(spark, tmp_path):
 def test_compact_partials_crash_after_install_stragglers(spark, tmp_path):
     # Install-first swap: a crash AFTER batch_id=compacted-<g> is
     # installed but BEFORE the snapshotted partitions are retired
-    # leaves manifest-listed dirs in the base. They are already merged
-    # into the generation, so recovery must remove them (keeping them
-    # would double count) while sparing batches not in the manifest.
-    import json
+    # leaves its snapshot's dirs in the base. They are already merged
+    # into the generation (at or below its high-water), so reads skip
+    # them and the next compaction retires them (keeping them would
+    # double count) while sparing batches above the high-water.
     import os
 
-    from timeseriesdb_spark.api import SignalEngine
+    from timeseriesdb_spark.api import _HIGH_WATER, SignalEngine
 
     path = str(tmp_path / "h3")
     eng = SignalEngine(spark, path)
@@ -144,15 +144,18 @@ def test_compact_partials_crash_after_install_stragglers(spark, tmp_path):
     # was never retired. batch_id=8 landed after the snapshot.
     _write_hist_batch(spark, path, 7, 1, 100)
     _write_hist_batch(spark, path, 8, 1, 2)
-    aside = path + "__compact_old_1"
-    os.makedirs(aside)
-    with open(f"{aside}/_COMPACT_MANIFEST.json", "w") as f:
-        json.dump(["batch_id=compacted-0", "batch_id=7"], f)
-    # fake the installed generation = compacted-0 partials + the 100
+    os.makedirs(path + "__compact_old_1")
+    # fake the installed generation = compacted-0 partials + the 100,
+    # with the high-water an install records (batch 7)
     spark.createDataFrame(
         [(1, "2024-01-05", 3, 105)],
         "user_id long, day string, bin int, partial_n long",
     ).write.mode("overwrite").parquet(f"{path}/batch_id=compacted-1")
+    with open(f"{path}/batch_id=compacted-1/{_HIGH_WATER}", "w") as f:
+        f.write("7")
+    # a read inside the window already answers exactly
+    rows = eng.histogram_bins(path).collect()
+    assert [(r.user_id, r.bin, r.n) for r in rows] == [(1, 3, 107)]
 
     eng.compact_partials(path, "hist")  # recovery then re-compact
     rows = eng.histogram_bins(path).collect()

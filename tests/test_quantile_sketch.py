@@ -124,11 +124,12 @@ def test_streamed_quantiles_equal_batch(spark, tmp_path):
         _sorted(eng.quantile_estimates(tier)), got, check_dtype=False
     )
 
-    # a partial streamed AFTER compaction still merges on top: feed
-    # the same rows again -> counts double, every bucket answer at
-    # the same rank fraction is unchanged
+    # a partial streamed AFTER compaction (an id above the generation's
+    # high-water) still merges on top: feed the same rows again ->
+    # counts double, every bucket answer at the same rank fraction is
+    # unchanged
     qsk_day_buckets(ev).write.mode("overwrite").parquet(
-        f"{tier}/batch_id=late"
+        f"{tier}/batch_id=1000"
     )
     doubled = _sorted(eng.quantile_estimates(tier))
     assert (doubled["n_total"] == 2 * got["n_total"]).all()

@@ -31,6 +31,7 @@ equality exact for all families.
 from __future__ import annotations
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -43,6 +44,7 @@ from timeseriesdb_spark.api import (
     _TIERS,
     CorpusEngine,
     SignalEngine,
+    _read_tier,
     guard_fresh_checkpoint,
 )
 from timeseriesdb_spark.tables import load_table
@@ -67,7 +69,7 @@ def _lineitem(spark):
 
 
 def _merged(spark, path, keys, aggs):
-    return spark.read.parquet(path).groupBy(*keys).agg(*aggs)
+    return _read_tier(spark, path).groupBy(*keys).agg(*aggs)
 
 
 SPECS = {
@@ -263,7 +265,8 @@ def test_guard_counts_compacted_generations(tmp_path):
     double-count), and a resumed checkpoint keeps its recorded base.
     While a compaction's aside dir exists (running, or crashed after
     the install), every fresh checkpoint refuses: that compaction's
-    recovery deletes the ids its manifest lists, new partials included."""
+    recovery restores or deletes partitions by name, blind to partials
+    written since."""
     store = tmp_path / "tier"
     gen = store / "batch_id=compacted-0"
     gen.mkdir(parents=True)
@@ -349,7 +352,13 @@ def test_replay_after_compaction_writes_nothing(spark, tmp_path, family):
     commit) and restart on the same checkpoint. Spark re-runs batch 3;
     the generation already absorbed it, so nothing is written and the
     served answers equal a clean run (they double-counted batch 3
-    before)."""
+    before).
+
+    Then the two retire-window states: an absorbed id (batch_id=3)
+    back next to compacted-0, and compacted-0 back next to the
+    compacted-1 that absorbed it. Reads take the newest generation plus
+    the ids above its high-water, so both answer like a clean run
+    (sum-merged tiers double-counted before)."""
     kind, source, split_col, attr, serve = SPECS[family]
     rows = {
         "events": _events,
@@ -386,6 +395,15 @@ def test_replay_after_compaction_writes_nothing(spark, tmp_path, family):
     assert [
         d for d in os.listdir(store) if d.startswith("batch_id=")
     ] == ["batch_id=compacted-0"]
+
+    shutil.copytree(f"{ref}/batch_id=3", f"{store}/batch_id=3")
+    pd.testing.assert_frame_equal(_pdf(serve(spark, eng, store)), exp)
+    shutil.rmtree(f"{store}/batch_id=3")
+    gen0 = str(tmp_path / "compacted-0")
+    shutil.copytree(f"{store}/batch_id=compacted-0", gen0)
+    assert eng.compact_partials(store, TIER_OF[family]) == 1
+    shutil.copytree(gen0, f"{store}/batch_id=compacted-0")
+    pd.testing.assert_frame_equal(_pdf(serve(spark, eng, store)), exp)
 
 
 def test_ann_probe_stream_guarded(spark, tmp_path):

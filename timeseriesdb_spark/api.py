@@ -92,22 +92,60 @@ class _LeaseHeartbeat:
 _HIGH_WATER = "_BATCH_HIGH_WATER"
 
 
-def _batch_high_water(store_path: str, partitions: list[str]) -> int:
-    """Highest batch id among `partitions` (batch_id=... dirs of
-    `store_path`), counting the ids compacted generations absorbed; -1
-    if none."""
+class _Cut(NamedTuple):
+    """A partial store's batch dirs, listed once: `dirs` holds every
+    batch_id=<n> and batch_id=compacted-<g> (other names are not
+    batches). `live` is what a read serves: the newest generation
+    (`gen`, -1 if none) plus every integer id above the high-water it
+    absorbed (`absorbed`, -1 without a generation). Anything else is
+    already absorbed: integer ids at or below the mark, and older
+    generations (seen only between install and retire, or after a
+    crash there). `high` is the highest batch id the store holds or
+    absorbed."""
+
+    dirs: list[str]
+    live: list[str]
+    gen: int
+    absorbed: int
+    high: int
+
+
+def _cut(store_path: str, below: int | None = None) -> _Cut:
+    """The one listing of `store_path`'s batch dirs; `below` keeps
+    only the live integer ids under it."""
     import os
 
-    ids = [-1]
-    for d in partitions:
-        bid = d.split("=", 1)[1]
-        mark = os.path.join(store_path, d, _HIGH_WATER)
-        if bid.isdigit():
-            ids.append(int(bid))
-        elif os.path.exists(mark):
-            with open(mark) as f:
-                ids.append(int(f.read()))
-    return max(ids)
+    ids, gens = {}, {}  # dir -> batch id / generation
+    for d in os.listdir(store_path) if os.path.isdir(store_path) else []:
+        key, _, bid = d.partition("=")
+        n = bid.removeprefix("compacted-")
+        if key == "batch_id" and n.isdigit():
+            (ids if n == bid else gens)[d] = int(n)
+    gen, absorbed = max(gens.values(), default=-1), -1
+    live = [d for d, g in gens.items() if g == gen]
+    mark = os.path.join(store_path, *live[:1], _HIGH_WATER)
+    if live and os.path.exists(mark):
+        with open(mark) as f:
+            absorbed = int(f.read())
+    live += sorted(
+        d for d, i in ids.items()
+        if absorbed < i and (below is None or i < below)
+    )
+    high = max([absorbed, *ids.values()])
+    return _Cut(sorted([*ids, *gens]), live, gen, absorbed, high)
+
+
+def _read_tier(
+    spark: SparkSession, path: str, cut: _Cut | None = None
+) -> DataFrame:
+    """Every read of a tier store: its live batch dirs (`cut`, default
+    the store's `_cut`), or its root if it has no batch_id= dirs (as
+    build_rollup writes), with the schema its writer recorded
+    (store.footer_schema), so building the read runs no Spark job. An
+    empty or missing store raises ValueError."""
+    cut = cut or _cut(path)
+    paths = [f"{path}/{d}" for d in cut.live] if cut.dirs else [path]
+    return spark.read.schema(store.footer_schema(path, paths)).parquet(*paths)
 
 
 def guard_fresh_checkpoint(
@@ -144,7 +182,8 @@ def guard_fresh_checkpoint(
       batch-id namespace stable.
 
     Every mode refuses while a compaction aside dir exists: its
-    recovery deletes partitions BY NAME (compact_partials finishes it).
+    recovery restores or deletes the aside's partitions BY NAME, blind
+    to writes made since (compact_partials finishes it).
 
     Returns the base offset to ADD to every foreachBatch batch id.
     """
@@ -158,15 +197,11 @@ def guard_fresh_checkpoint(
             f"on_fresh_checkpoint must be one of {valid}; "
             f"got {on_fresh_checkpoint!r}"
         )
-    existing: list[str] = []
-    if os.path.isdir(store_path):
-        existing = [
-            d for d in os.listdir(store_path) if d.startswith("batch_id=")
-        ]
+    cut = _cut(store_path)
     fresh = not os.path.isdir(os.path.join(checkpoint, "offsets"))
     meta_path = os.path.join(checkpoint, meta_name)
     base = 0
-    if fresh and existing:
+    if fresh and cut.dirs:
         parent, leaf = os.path.split(os.path.abspath(store_path))
         asides = [
             n for n in os.listdir(parent)
@@ -189,12 +224,12 @@ def guard_fresh_checkpoint(
                 "store's max batch_id)."
             )
         if on_fresh_checkpoint == "replay":
-            for d in existing:
+            for d in cut.dirs:
                 shutil.rmtree(
                     os.path.join(store_path, d), ignore_errors=True
                 )
         else:
-            base = 1 + _batch_high_water(store_path, existing)
+            base = 1 + cut.high
     if not fresh and os.path.exists(meta_path):
         with open(meta_path) as f:
             base = json.load(f)["base"]
@@ -231,18 +266,12 @@ def _run_stream(
     it was written before the compaction, and its replay (the commit
     lost in a crash) would re-derive the same partials next to the
     generation that holds them."""
-    import os
-
     base, absorbed = 0, -1
     if store_path is not None:
         base = guard_fresh_checkpoint(
             store_path, checkpoint, on_fresh_checkpoint, **guard
         )
-        if os.path.isdir(store_path):
-            absorbed = _batch_high_water(store_path, [
-                d for d in os.listdir(store_path)
-                if d.startswith("batch_id=compacted-")
-            ])
+        absorbed = _cut(store_path).absorbed
     if transform is not None:
         stream = transform(stream, store_path, base)
 
@@ -291,17 +320,15 @@ def _drift_positioned(stream: DataFrame, feature_path: str, base: int):
     """The drift tier's stream transform: rank every row per signal
     (streaming/driftscore.positioned_stream). On rehydrate (`base` > 0)
     the per-signal carries seed from the store's high-water — carries
-    from PRIOR runs only (batch_id < base), so this run's own writes
-    never inflate the seed on resume."""
+    from PRIOR runs only (integer batch ids below base), so this run's
+    own writes never inflate the seed on resume."""
     import os
 
     initial = None
     if base > 0:
-        hw = driftscore.signal_high_water(
-            stream.sparkSession.read.parquet(feature_path).where(
-                F.col("batch_id") < base
-            )
-        )
+        hw = driftscore.signal_high_water(_read_tier(
+            stream.sparkSession, feature_path, _cut(feature_path, base)
+        ))
         cap = int(
             os.environ.get("SPARK_TSDB_REHYDRATE_MAX_SIGNALS", "1000000")
         )
@@ -370,7 +397,7 @@ _TIERS = {
     "terms": _Tier(text.term_source_counts, merge_by(
         ("source", "term"), cnt="sum"
     )),
-    # the rehydrate seed reads `batch_id < base` as an integer, so a
+    # the rehydrate seed reads the integer batch ids below `base`, so a
     # compacted generation would break it: no combine
     "drift": _Tier(
         driftscore.chunk_feature_partials, transform=_drift_positioned
@@ -574,7 +601,7 @@ class SignalEngine:
         batch-built rollup and the streaming maintainer's per-batch
         partials: merge is associative, so partial granularity is
         irrelevant."""
-        return self._merge_rollup(self.spark.read.parquet(rollup_path), which)
+        return self._merge_rollup(_read_tier(self.spark, rollup_path), which)
 
     @staticmethod
     def _merge_rollup(r: DataFrame, which: str) -> DataFrame:
@@ -617,7 +644,7 @@ class SignalEngine:
             return (dt.timestamp() % sec) == 0
 
         if _aligned(t0) and _aligned(t1):
-            r = self.spark.read.parquet(rollup_path)
+            r = _read_tier(self.spark, rollup_path)
             if t0 is not None:
                 r = r.filter(F.col("bucket_start") >= F.lit(t0))
             if t1 is not None:
@@ -679,7 +706,7 @@ class SignalEngine:
         query exactly when the partials cover the same lineitem rows."""
         from timeseriesdb_spark.tables import load_table
 
-        daily = _TIERS["shipdate"].combine(self.spark.read.parquet(store_path))
+        daily = _TIERS["shipdate"].combine(_read_tier(self.spark, store_path))
         orders = load_table(self.spark, sf_dir, "orders")
         return curation.interval_agg_from_daily(daily, orders)
 
@@ -770,7 +797,7 @@ class SignalEngine:
         the full corpus is still available).
 
         The store declares no combine, so compact_partials refuses it:
-        the rehydrate seed reads `batch_id < base` as an integer.
+        the rehydrate seed reads the integer batch ids below `base`.
         """
         return _maintain(
             "drift", stream, feature_path, checkpoint, on_fresh_checkpoint,
@@ -790,8 +817,6 @@ class SignalEngine:
         identical math to the batch query, so the result rows equal
         q_<family>_drift(sf_dir) exactly when the partials cover the
         same events."""
-        import os
-
         from timeseriesdb_spark.operators.mlscoring import (
             _LABELERS,
             _drift_rollup,
@@ -803,21 +828,9 @@ class SignalEngine:
                 f"unknown drift family {family!r}; one of "
                 f"{sorted(_LABELERS)}"
             )
-        if not (
-            os.path.isdir(feature_path)
-            and any(
-                d.startswith("batch_id=") for d in os.listdir(feature_path)
-            )
-        ):
-            raise ValueError(
-                f"no drift feature partials under {feature_path!r} — "
-                "run maintain_drift_feature_stream first (the store is "
-                "populated per micro-batch)"
-            )
-        partials = self.spark.read.parquet(feature_path)
-        feats = _features_from_chunks(
-            driftscore.merge_feature_partials(partials)
-        )
+        feats = _features_from_chunks(driftscore.merge_feature_partials(
+            _read_tier(self.spark, feature_path)
+        ))
         return _drift_rollup(
             self.spark, sf_dir, feats,
             _LABELERS[family](self.spark, sf_dir),
@@ -832,7 +845,7 @@ class SignalEngine:
         bounds (inclusive) prune TIER partials, never raw facts —
         the rollup's whole point: any time-range distinct question
         answers from bytes-per-signal-day state."""
-        tier = self.spark.read.parquet(sketch_path)
+        tier = _read_tier(self.spark, sketch_path)
         if start_day is not None:
             tier = tier.where(F.col("event_date") >= F.lit(start_day))
         if end_day is not None:
@@ -891,7 +904,7 @@ class SignalEngine:
 
     def ohlc_bars(self, bars_path: str) -> DataFrame:
         """Merged OHLC bars from maintained partials."""
-        return tsanalytics.merge_ohlc(self.spark.read.parquet(bars_path))
+        return tsanalytics.merge_ohlc(_read_tier(self.spark, bars_path))
 
     def maintain_histogram_stream(
         self,
@@ -913,7 +926,7 @@ class SignalEngine:
     def histogram_bins(self, hist_path: str) -> DataFrame:
         """Merged per-signal histogram from maintained partials."""
         return (
-            self.spark.read.parquet(hist_path)
+            _read_tier(self.spark, hist_path)
             .groupBy("user_id", "bin")
             .agg(F.sum("partial_n").alias("n"))
         )
@@ -939,7 +952,7 @@ class SignalEngine:
         """Per-signal graded quantiles from the maintained tier (merge
         partials, then the SAME finalize as q_quantile_rollup)."""
         merged = (
-            self.spark.read.parquet(qsk_path)
+            _read_tier(self.spark, qsk_path)
             .groupBy("user_id", "bucket")
             .agg(F.sum("partial_n").alias("n"))
         )
@@ -971,7 +984,7 @@ class SignalEngine:
             rank_trigram_counts,
         )
 
-        per_user = _TIERS["ngrams"].combine(self.spark.read.parquet(tier_path))
+        per_user = _TIERS["ngrams"].combine(_read_tier(self.spark, tier_path))
         counts = per_user.groupBy("e1", "e2", "e3").agg(
             F.sum("n").alias("n"),
             F.count("*").alias("n_users"),
@@ -1008,7 +1021,7 @@ class SignalEngine:
         tier partials (never raw facts), and the residual accounting
         automatically re-derives for exactly the days in range, so the
         interval guarantee holds for the range query too."""
-        tier = self.spark.read.parquet(hh_path)
+        tier = _read_tier(self.spark, hh_path)
         if start_day is not None:
             tier = tier.where(F.col("day") >= F.lit(start_day))
         if end_day is not None:
@@ -1031,22 +1044,23 @@ class SignalEngine:
         ValueError before any side effect.
 
         Safe against concurrent streamed maintenance: the batch_id=*
-        listing is SNAPSHOTTED first and only those partitions are
-        read, merged, and removed — a micro-batch landing between the
-        snapshot and the swap is neither merged nor deleted (it keeps
-        merging on top of the new generation at read time). The swap
-        is INSTALL-FIRST: write the aside dir's manifest (the snapshot
-        listing), install `batch_id=compacted-<n>`, then retire the
+        listing is SNAPSHOTTED first (_cut) and only those partitions
+        are read (the snapshot's live cut), merged, and removed — a
+        micro-batch landing between the snapshot and the swap is
+        neither merged nor deleted (it keeps merging on top of the new
+        generation at read time). The swap is INSTALL-FIRST: make the
+        aside dir, install `batch_id=compacted-<n>`, then retire the
         snapshotted partitions into the aside and delete it. The store
-        path therefore never goes empty for a concurrent reader — a
-        reader that lists files inside the retire window sees old+new
-        (a transient double-count for sum-merged sketches, bounded by
-        the window; a reader listing before the install sees exactly
-        the old partials). Single compactor at a time: an O_EXCL
+        path therefore never goes empty for a concurrent reader, and no
+        reader double-counts: every read takes one cut, the newest
+        generation plus the batch ids above its high-water, so a reader
+        listing inside the retire window skips what the new generation
+        absorbed, and one listing before the install sees exactly the
+        old partials. Single compactor at a time: an O_EXCL
         lease lock (`<store>__compact_lock`, pid + wall-clock inside)
         is taken BEFORE the recovery sweep and held through the swap —
         so a second concurrent call raises up front and can never
-        mistake the live compactor's aside+manifest for crash debris
+        mistake the live compactor's aside for crash debris
         and rmtree it mid-swap. A crashed run leaves a stale lock;
         callers reclaim it only after COMPACT_LEASE_S of age AND only
         when the recorded holder pid is no longer alive, so within the
@@ -1073,16 +1087,15 @@ class SignalEngine:
         Crash mid-swap is self-healing on the next call: the aside
         dir's name carries the generation it feeds
         (`__compact_old_<n>`). If `batch_id=compacted-<n>` was
-        installed, every manifest-listed partition — whether already
-        retired into the aside or still sitting in the base — is
-        merged into it, so recovery deletes those (keeping them would
-        double count). If not installed, nothing was retired yet
-        (retire happens only after install), so recovery just clears
-        the aside and tmp debris; any partial it does find is restored,
-        and a base-name collision on restore raises instead of
-        silently discarding either copy. Never silent data loss.
-        On an object store this becomes the same manifest protocol
-        as apply_retention."""
+        installed, every partition of its snapshot is merged into it:
+        recovery deletes the aside with what was already retired into
+        it, and what still sits in the base lies outside every read's
+        cut until this call's own snapshot retires it. If not
+        installed, nothing was retired yet (retire happens only after
+        install), so recovery just clears the aside and tmp debris;
+        any partial it does find is restored, and a base-name
+        collision on restore raises instead of silently discarding
+        either copy. Never silent data loss."""
         import os
         import time
         import uuid
@@ -1167,7 +1180,6 @@ class SignalEngine:
 
     def _compact_partials_locked(self, path: str, kind: str) -> int:
         """Body of compact_partials; caller holds the lease lock."""
-        import json as _json
         import os
         import shutil
 
@@ -1182,22 +1194,13 @@ class SignalEngine:
                 continue
             aside = os.path.join(parent, name)
             g = name.rsplit("_", 1)[-1]
-            manifest_path = os.path.join(aside, "_COMPACT_MANIFEST.json")
-            listed = []
-            if os.path.exists(manifest_path):
-                with open(manifest_path) as f:
-                    listed = _json.load(f)
-            if os.path.exists(f"{base}/batch_id=compacted-{g}"):
-                # Generation installed: every manifest-listed partition
-                # is merged into it — remove stragglers still in base,
-                # then the aside itself.
-                for d in listed:
-                    if os.path.exists(f"{base}/{d}"):
-                        shutil.rmtree(f"{base}/{d}")
-                shutil.rmtree(aside)
-            else:
+            # Generation installed: the aside holds only what it
+            # absorbed, and what its retire left in the base is absorbed
+            # too (reads skip it, this run's snapshot retires it).
+            # Not installed: restore any partial found.
+            if not os.path.exists(f"{base}/batch_id=compacted-{g}"):
                 for d in os.listdir(aside):
-                    if d == "_COMPACT_MANIFEST.json":
+                    if not d.startswith("batch_id="):
                         continue
                     if os.path.exists(f"{base}/{d}"):
                         raise RuntimeError(
@@ -1206,43 +1209,30 @@ class SignalEngine:
                             "to discard either copy — resolve manually"
                         )
                     shutil.move(f"{aside}/{d}", f"{base}/{d}")
-                shutil.rmtree(aside)
+            shutil.rmtree(aside)
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
-        snapshot = sorted(
-            d for d in os.listdir(base) if d.startswith("batch_id=")
-        )
-        if not snapshot:
+        snapshot = _cut(base)
+        if not snapshot.dirs:
             return 0
-        gens = [
-            int(d.rsplit("-", 1)[-1])
-            for d in snapshot
-            if d.startswith("batch_id=compacted-")
-        ]
-        gen = (max(gens) + 1) if gens else 0
+        gen = snapshot.gen + 1
         aside = base + f"__compact_old_{gen}"
         os.makedirs(aside)  # fresh: recovery above cleared any debris
-        with open(os.path.join(aside, "_COMPACT_MANIFEST.json"), "w") as f:
-            _json.dump(snapshot, f)
-        # Read exactly the snapshotted partitions (no partition
-        # inference on direct paths — batch_id simply isn't a column).
-        df = self.spark.read.parquet(*[f"{base}/{d}" for d in snapshot])
-        drop = [c for c in ("batch_id",) if c in df.columns]
-        merged = _TIERS[kind].combine(df.drop(*drop) if drop else df)
+        merged = _TIERS[kind].combine(_read_tier(self.spark, base, snapshot))
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, _HIGH_WATER), "w") as f:
-            f.write(str(_batch_high_water(base, snapshot)))
+            f.write(str(snapshot.high))
         shutil.move(tmp, f"{base}/batch_id=compacted-{gen}")  # install
-        for d in snapshot:  # retire — readers see old+new, never empty
+        for d in snapshot.dirs:  # retire: reads already skip them
             shutil.move(f"{base}/{d}", f"{aside}/{d}")
         shutil.rmtree(aside)
-        return len(snapshot)
+        return len(snapshot.dirs)
 
     def frequency_estimate(self, sketch_path: str, keys) -> DataFrame:
         """Per-signal Count-Min point estimates for `keys` from
         maintained counter partials."""
         merged = (
-            self.spark.read.parquet(sketch_path)
+            _read_tier(self.spark, sketch_path)
             .groupBy("user_id", "depth", "bucket")
             .agg(F.sum("partial_n").alias("n"))
         )
@@ -1250,7 +1240,7 @@ class SignalEngine:
 
     def distinct_estimate(self, sketch_path: str) -> DataFrame:
         """Per-signal distinct estimate from maintained sketches."""
-        r = self.spark.read.parquet(sketch_path)
+        r = _read_tier(self.spark, sketch_path)
         return r.groupBy("user_id").agg(
             F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(
                 "approx_distinct"
@@ -1485,7 +1475,7 @@ class CorpusEngine:
     def trending_terms(self, tier_path: str) -> DataFrame:
         """Trending terms from the maintained tier (merge partials,
         then the SAME finalize as the batch query)."""
-        merged = _TIERS["terms"].combine(self.spark.read.parquet(tier_path))
+        merged = _TIERS["terms"].combine(_read_tier(self.spark, tier_path))
         return text.trending_from_term_counts(merged)
 
     def compact_partials(self, path: str, kind: str) -> int:

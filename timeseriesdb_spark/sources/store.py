@@ -40,9 +40,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 SIGNAL_BUCKETS = 16  # file cap per date partition, per write and compaction
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # compaction target file size
+# the footer key Spark's Parquet writer records its schema under
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _micros_timestamps(events: DataFrame) -> None:
@@ -71,9 +74,41 @@ def write_signal_store(events: DataFrame, path: str, mode: str = "overwrite") ->
     )
 
 
+def footer_schema(root: str, paths: list[str] | None = None) -> StructType:
+    """The Spark schema recorded in the footer of the first part file
+    under `paths` (searched in order; default the store `root`). It is
+    the key Spark's own inference reads from one file, read here on the
+    driver, so a read that declares it builds without running a job.
+    Every store in this package is written by Spark to a local FS. A
+    store with no part file raises ValueError."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    for path in [root] if paths is None else paths:
+        for top, dirs, files in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            parts = sorted(
+                f for f in files
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
+            if parts:
+                meta = pq.read_metadata(os.path.join(top, parts[0])).metadata
+                return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    raise ValueError(
+        f"store {root!r} is empty or missing: ingest into it or run its "
+        "maintainer first"
+    )
+
+
 def read_signal_store(spark: SparkSession, path: str) -> DataFrame:
-    """Scan the store; time/signal predicates prune partitions/files."""
-    return spark.read.parquet(path)
+    """Scan the store with a declared schema: the footer's
+    (footer_schema) plus the `event_date DATE` partition column, so
+    building the scan runs no Spark job. Time/signal predicates prune
+    partitions/files."""
+    schema = footer_schema(path).add("event_date", "date")
+    return spark.read.schema(schema).parquet(path)
 
 
 ZORDER_BITS = 16    # per-dimension resolution of the z-curve
@@ -175,7 +210,9 @@ def compact_partition(spark: SparkSession, path: str, event_date: str) -> int:
     n_files = max(1, min(SIGNAL_BUCKETS, -(-total_bytes // TARGET_FILE_BYTES)))
     staged = f"{part}.compacting"
     (
-        spark.read.parquet(part)
+        read_signal_store(spark, path)
+        .where(F.col("event_date") == F.lit(event_date).cast("date"))
+        .drop("event_date")
         .repartition(n_files, "user_id")
         .sortWithinPartitions("user_id", "ts")
         .write.option("compression", "zstd")
