@@ -4,6 +4,7 @@ layout with identical data.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -88,232 +89,135 @@ def test_compact_partials_spares_concurrent_batches(spark, tmp_path):
     assert [(r.user_id, r.bin, r.n) for r in rows] == [(1, 3, 20)]
 
 
-def test_compact_partials_crash_recovery(spark, tmp_path):
-    # Crash BEFORE install: aside dir exists, generation missing ->
-    # recovery restores the partials. Crash AFTER install: generation
-    # present -> recovery deletes the aside (restoring would double
-    # count). Both must leave counts exact.
+class _Crash(Exception):
+    """Raised by a patched filesystem call: the process dies there."""
+
+
+def _hist_dirs(path):
+    import os
+
+    return sorted(d for d in os.listdir(path) if d.startswith("batch_id="))
+
+
+@pytest.mark.parametrize("point", ["tmp_written", "installed", "dead_dir_cut"])
+def test_compact_partials_crash_point(spark, tmp_path, monkeypatch, point):
+    # The install rename is compaction's one commit. A crash before it
+    # leaves an uninstalled __compact_tmp; a crash after it leaves dead
+    # dirs (absorbed by the installed generation), whole or with some
+    # part files already deleted. At every point a read answers
+    # exactly, and the next compaction leaves only its own generation.
     import os
     import shutil
 
     from timeseriesdb_spark.api import SignalEngine
 
-    # -- crash after move-aside, before install --
-    path = str(tmp_path / "h1")
+    path = str(tmp_path / "hist")
     eng = SignalEngine(spark, path)
     _write_hist_batch(spark, path, 0, 1, 5)
-    aside = path + "__compact_old_0"
-    os.makedirs(aside)
-    shutil.move(f"{path}/batch_id=0", f"{aside}/batch_id=0")
-    assert eng.compact_partials(path, "hist") == 1  # restored + merged
-    rows = eng.histogram_bins(path).collect()
-    assert [(r.user_id, r.bin, r.n) for r in rows] == [(1, 3, 5)]
-    assert not os.path.exists(aside)
+    eng.compact_partials(path, "hist")  # compacted-0 absorbs batch 0
+    for n in (60, 40):  # batch 1: two part files
+        spark.createDataFrame(
+            [(1, "2024-01-05", 3, n)],
+            "user_id long, day string, bin int, partial_n long",
+        ).coalesce(1).write.mode("append").parquet(f"{path}/batch_id=1")
+    _write_hist_batch(spark, path, 2, 1, 2)
+    snapshot = ["batch_id=1", "batch_id=2", "batch_id=compacted-0"]
+    assert _hist_dirs(path) == snapshot
 
-    # -- crash after install, before delete-aside --
-    path2 = str(tmp_path / "h2")
-    _write_hist_batch(spark, path2, 0, 1, 5)
-    eng.compact_partials(path2, "hist")  # installs compacted-0
-    aside2 = path2 + "__compact_old_0"
-    os.makedirs(aside2)
-    # plant stale pre-merge partials that are ALREADY in compacted-0
-    _write_hist_batch(spark, aside2.replace("__compact_old_0", ""), -1, 1, 999)
-    shutil.move(f"{path2}/batch_id=-1", f"{aside2}/batch_id=-1")
-    eng.compact_partials(path2, "hist")
-    rows = eng.histogram_bins(path2).collect()
-    # the planted 999 must NOT leak back in
-    assert [(r.user_id, r.bin, r.n) for r in rows] == [(1, 3, 5)]
+    rename, rmtree = os.rename, shutil.rmtree
 
+    def crash_rename(src, dst):
+        if point == "tmp_written":
+            raise _Crash
+        rename(src, dst)
 
-def test_compact_partials_crash_after_install_stragglers(spark, tmp_path):
-    # Install-first swap: a crash AFTER batch_id=compacted-<g> is
-    # installed but BEFORE the snapshotted partitions are retired
-    # leaves its snapshot's dirs in the base. They are already merged
-    # into the generation (at or below its high-water), so reads skip
-    # them and the next compaction retires them (keeping them would
-    # double count) while sparing batches above the high-water.
-    import os
+    def crash_rmtree(p, *args, **kw):
+        if point == "dead_dir_cut":  # dies mid-delete of batch_id=1
+            os.remove(os.path.join(p, sorted(
+                f for f in os.listdir(p) if f.endswith(".parquet")
+            )[0]))
+        raise _Crash
 
-    from timeseriesdb_spark.api import _HIGH_WATER, SignalEngine
-
-    path = str(tmp_path / "h3")
-    eng = SignalEngine(spark, path)
-    _write_hist_batch(spark, path, 0, 1, 5)
-    eng.compact_partials(path, "hist")  # installs compacted-0
-    # Simulate: compacted-1 installed, but batch_id=7 (merged into it)
-    # was never retired. batch_id=8 landed after the snapshot.
-    _write_hist_batch(spark, path, 7, 1, 100)
-    _write_hist_batch(spark, path, 8, 1, 2)
-    os.makedirs(path + "__compact_old_1")
-    # fake the installed generation = compacted-0 partials + the 100,
-    # with the high-water an install records (batch 7)
-    spark.createDataFrame(
-        [(1, "2024-01-05", 3, 105)],
-        "user_id long, day string, bin int, partial_n long",
-    ).write.mode("overwrite").parquet(f"{path}/batch_id=compacted-1")
-    with open(f"{path}/batch_id=compacted-1/{_HIGH_WATER}", "w") as f:
-        f.write("7")
-    # a read inside the window already answers exactly
-    rows = eng.histogram_bins(path).collect()
-    assert [(r.user_id, r.bin, r.n) for r in rows] == [(1, 3, 107)]
-
-    eng.compact_partials(path, "hist")  # recovery then re-compact
-    rows = eng.histogram_bins(path).collect()
-    # exact: 5 + 100 + 2 — neither double-counted nor lost
-    assert [(r.user_id, r.bin, r.n) for r in rows] == [(1, 3, 107)]
-    dirs = sorted(d for d in os.listdir(path) if d.startswith("batch_id="))
-    assert dirs == ["batch_id=compacted-2"], dirs
-
-
-def test_compact_partials_restore_collision_raises(spark, tmp_path):
-    # A name collision between a crash-aside partial and a live base
-    # dir is ambiguous (a replayed micro-batch may have re-created it)
-    # — recovery must refuse loudly, not silently discard either copy.
-    import os
-    import shutil
-
-    import pytest
-
-    from timeseriesdb_spark.api import SignalEngine
-
-    path = str(tmp_path / "h4")
-    eng = SignalEngine(spark, path)
-    _write_hist_batch(spark, path, 0, 1, 5)
-    aside = path + "__compact_old_0"
-    os.makedirs(aside)
-    _write_hist_batch(spark, path, 1, 1, 9)
-    shutil.move(f"{path}/batch_id=1", f"{aside}/batch_id=1")
-    _write_hist_batch(spark, path, 1, 1, 9)  # replayed twin in base
-    with pytest.raises(RuntimeError, match="both"):
+    monkeypatch.setattr(os, "rename", crash_rename)
+    # only the dead-dir deletes: __compact_tmp is absent at the start
+    monkeypatch.setattr(shutil, "rmtree", crash_rmtree)
+    with pytest.raises(_Crash):
         eng.compact_partials(path, "hist")
+    monkeypatch.undo()
 
+    if point == "tmp_written":
+        assert os.path.isdir(path + "__compact_tmp")
+        assert _hist_dirs(path) == snapshot
+        gen = 0
+    else:
+        assert _hist_dirs(path) == snapshot + ["batch_id=compacted-1"]
+        gen = 1
+    parts = os.listdir(f"{path}/batch_id=1")
+    assert sum(f.endswith(".parquet") for f in parts) == (
+        1 if point == "dead_dir_cut" else 2
+    )
 
-def test_compact_partials_glob_metachar_path(spark, tmp_path):
-    # Crash-debris discovery must work on store paths containing glob
-    # metacharacters (recovery enumerates via listdir + startswith;
-    # glob.glob would silently find nothing and leak the aside dir).
-    import os
-
-    from timeseriesdb_spark.api import SignalEngine
-
-    path = str(tmp_path / "h[5]")
-    os.makedirs(path)
-    aside = path + "__compact_old_0"
-    os.makedirs(aside)  # empty pre-install debris
-    eng = SignalEngine(spark, path)
-    assert eng.compact_partials(path, "hist") == 0
-    assert not os.path.exists(aside)  # debris was found and cleared
+    _write_hist_batch(spark, path, 3, 1, 1)  # lands after the crash
+    clean = [(1, 3, 5 + 60 + 40 + 2 + 1)]
+    rows = eng.histogram_bins(path).collect()
+    assert [(r.user_id, r.bin, r.n) for r in rows] == clean
+    eng.compact_partials(path, "hist")
+    rows = eng.histogram_bins(path).collect()
+    assert [(r.user_id, r.bin, r.n) for r in rows] == clean
+    assert _hist_dirs(path) == [f"batch_id=compacted-{gen + 1}"]
+    assert not os.path.exists(path + "__compact_tmp")
 
 
 def test_compact_partials_lock_excludes_second_compactor(spark, tmp_path):
-    # A live compactor holds <store>__compact_lock: a second call must
-    # raise up front (NOT run the recovery sweep — which would rmtree
-    # the live compactor's aside + manifest mid-swap). A stale lock
-    # (older than the lease) is reclaimed and compaction proceeds.
+    # <store>__compact_lock is a kernel flock held for the whole call.
+    # Held on another fd in this process, or by another process, a
+    # second call raises up front and touches no batch dir. The kernel
+    # drops a killed holder's lock, so the next call just runs; the
+    # lock file itself is never unlinked.
+    import fcntl
     import os
-    import time
-
-    import pytest
+    import subprocess
+    import sys
 
     from timeseriesdb_spark.api import SignalEngine
 
     path = str(tmp_path / "hist")
     eng = SignalEngine(spark, path)
     _write_hist_batch(spark, path, 0, 1, 5)
-
-    # simulate a LIVE compactor mid-swap: fresh lock + aside/manifest
     lock = path + "__compact_lock"
-    with open(lock, "w") as f:
-        f.write(f"{os.getpid()} {time.time()}\n")
-    aside = path + "__compact_old_0"
-    os.makedirs(aside)
-    with open(os.path.join(aside, "_COMPACT_MANIFEST.json"), "w") as f:
-        f.write('["batch_id=0"]')
-    with pytest.raises(RuntimeError, match="another compactor"):
-        eng.compact_partials(path, "hist")
-    # the live compactor's swap state was NOT touched
-    assert os.path.exists(aside)
-    assert os.path.exists(os.path.join(aside, "_COMPACT_MANIFEST.json"))
-    assert os.path.exists(lock)
 
-    # stale by age but the recorded holder pid is STILL ALIVE (ours):
-    # refuse to reclaim — a live holder whose heartbeat failed must
-    # never be reclaimed out from under.
-    old = time.time() - eng.COMPACT_LEASE_S - 10
-    os.utime(lock, (old, old))
-    with pytest.raises(RuntimeError, match="still.*alive"):
-        eng.compact_partials(path, "hist")
-    assert os.path.exists(lock)
-    assert os.path.exists(aside)
+    fd = os.open(lock, os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        with pytest.raises(RuntimeError, match="another compactor"):
+            eng.compact_partials(path, "hist")
+        assert _hist_dirs(path) == ["batch_id=0"]
+    finally:
+        os.close(fd)
 
-    # stale lock with a DEAD holder pid: reclaimed, recovery runs,
-    # compaction succeeds, lock released at exit
-    import subprocess
-
-    proc = subprocess.Popen(["sleep", "0"])
-    proc.wait()  # proc.pid is now dead (reuse within the test: ~never)
-    with open(lock, "w") as f:
-        f.write(f"{proc.pid}:deadbeef {time.time()}\n")
-    os.utime(lock, (old, old))
+    holder = subprocess.Popen(
+        [sys.executable, "-c",
+         "import fcntl, os, sys, time\n"
+         "fd = os.open(sys.argv[1], os.O_RDWR)\n"
+         "fcntl.flock(fd, fcntl.LOCK_EX)\n"
+         "print('locked', flush=True)\n"
+         "time.sleep(300)\n",
+         lock],
+        stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "locked"
+        with pytest.raises(RuntimeError, match="another compactor"):
+            eng.compact_partials(path, "hist")
+        assert _hist_dirs(path) == ["batch_id=0"]
+    finally:
+        holder.kill()  # SIGKILL: no cleanup runs in the holder
+        holder.wait(timeout=60)
+        holder.stdout.close()
     assert eng.compact_partials(path, "hist") == 1
-    assert not os.path.exists(lock)
-    assert not os.path.exists(aside)
     rows = eng.histogram_bins(path).collect()
     assert [(r.user_id, r.bin, r.n) for r in rows] == [(1, 3, 5)]
-
-
-def test_compact_lock_release_is_ownership_checked(spark, tmp_path, monkeypatch):
-    # If some other process replaces the lock while we hold it (e.g. a
-    # buggy reclaimer), the finally-release must NOT unlink their lock.
-    import os
-
-    from timeseriesdb_spark.api import SignalEngine
-
-    path = str(tmp_path / "hist")
-    eng = SignalEngine(spark, path)
-    _write_hist_batch(spark, path, 0, 1, 5)
-
-    lock = path + "__compact_lock"
-
-    orig = SignalEngine._compact_partials_locked
-
-    def hijack(self, p, kind):
-        # mid-compaction, a foreign process steals/replaces the lock
-        with open(lock, "w") as f:
-            f.write("99999:feedface 0.0\n")
-        return orig(self, p, kind)
-
-    monkeypatch.setattr(SignalEngine, "_compact_partials_locked", hijack)
-    assert eng.compact_partials(path, "hist") == 1
-    # the foreign lock survived our release
     assert os.path.exists(lock)
-    with open(lock) as f:
-        assert f.read().startswith("99999:feedface")
-
-
-def test_lease_heartbeat_keeps_lock_fresh(tmp_path):
-    # The heartbeat re-touches the lock mtime so a long merge job
-    # never ages past the stale horizon.
-    import os
-    import time
-
-    from timeseriesdb_spark.api import _LeaseHeartbeat
-
-    lock = str(tmp_path / "lk")
-    with open(lock, "w") as f:
-        f.write("x")
-    old = time.time() - 9999
-    os.utime(lock, (old, old))
-    hb = _LeaseHeartbeat(lock, 0.05)
-    hb.start()
-    try:
-        deadline = time.time() + 5.0
-        while os.path.getmtime(lock) < time.time() - 60:
-            assert time.time() < deadline, "heartbeat never touched lock"
-            time.sleep(0.02)
-    finally:
-        hb.stop()
-    assert os.path.getmtime(lock) >= time.time() - 60
 
 
 def test_compact_partials_rejects_bad_kind_before_side_effects(
@@ -321,11 +225,9 @@ def test_compact_partials_rejects_bad_kind_before_side_effects(
 ):
     # An unknown kind, or a tier that declares no combine (distinct,
     # drift), must raise ValueError naming the compactable kinds BEFORE
-    # the lease lock, the aside dir or any store read: no lock and no
-    # aside are left behind, and the store is untouched.
+    # the compaction lock or any store read: no lock file is created,
+    # and the store is untouched.
     import os
-
-    import pytest
 
     from timeseriesdb_spark.api import SignalEngine
 
@@ -335,7 +237,7 @@ def test_compact_partials_rejects_bad_kind_before_side_effects(
     for kind in ("nope", "distinct", "drift"):
         with pytest.raises(ValueError, match="compactable kinds.*ohlc"):
             eng.compact_partials(path, kind)
-        assert os.listdir(tmp_path) == ["hist"]  # no lock, no aside
+        assert os.listdir(tmp_path) == ["hist"]  # no lock file
         assert [
             d for d in os.listdir(path) if d.startswith("batch_id=")
         ] == ["batch_id=0"]

@@ -30,6 +30,7 @@ equality exact for all families.
 
 from __future__ import annotations
 
+import fcntl
 import os
 import shutil
 
@@ -263,10 +264,10 @@ def test_guard_counts_compacted_generations(tmp_path):
     starts above every batch id the generation absorbed (its
     high-water file), 'replay' deletes the generation too (it would
     double-count), and a resumed checkpoint keeps its recorded base.
-    While a compaction's aside dir exists (running, or crashed after
-    the install), every fresh checkpoint refuses: that compaction's
-    recovery restores or deletes partitions by name, blind to partials
-    written since."""
+    While a compact_partials holds the store's compaction lock,
+    'replay' refuses and deletes nothing (the compactor's commit and
+    deletes would race its own), while 'append' still starts above
+    every id the store holds."""
     store = tmp_path / "tier"
     gen = store / "batch_id=compacted-0"
     gen.mkdir(parents=True)
@@ -283,20 +284,23 @@ def test_guard_counts_compacted_generations(tmp_path):
     (ck / "offsets").mkdir()  # the first run's checkpoint, resumed
     assert guard_fresh_checkpoint(str(store), str(ck)) == 3
 
-    # compacted-1 installed, batch_id=4 not yet retired, aside left
-    aside = tmp_path / "tier__compact_old_1"
-    aside.mkdir()
-    (aside / "_COMPACT_MANIFEST.json").write_text(
-        '["batch_id=4", "batch_id=compacted-0"]'
-    )
-    for mode in ("error", "append", "replay"):
+    # a running compaction holds the lock
+    fd = os.open(str(tmp_path / "tier__compact_lock"), os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
         with pytest.raises(ValueError, match="compact_partials"):
             guard_fresh_checkpoint(
-                str(store), str(tmp_path / f"ck_{mode}_aside"), mode
+                str(store), str(tmp_path / "ck_replay_locked"), "replay"
             )
-    assert guard_fresh_checkpoint(str(store), str(ck)) == 3
-    aside.joinpath("_COMPACT_MANIFEST.json").unlink()
-    aside.rmdir()
+        assert sorted(os.listdir(store)) == [
+            "batch_id=4", "batch_id=compacted-0"
+        ]
+        assert guard_fresh_checkpoint(
+            str(store), str(tmp_path / "ck_append_locked"), "append"
+        ) == 5
+        assert guard_fresh_checkpoint(str(store), str(ck)) == 3
+    finally:
+        os.close(fd)
 
     assert guard_fresh_checkpoint(
         str(store), str(tmp_path / "ck_replay"), "replay"

@@ -6,7 +6,10 @@ compactable family).
 - building an engine read runs no Spark job: the schema comes from a
   footer read on the driver, not from Spark's inference job;
 - an empty or missing store raises one ValueError that names it;
-- no hand-rolled store read comes back (AST guard).
+- a read built before a compaction and run after it refuses loudly or
+  answers exactly, never a different number;
+- no hand-rolled store read, and no store dir move or delete outside
+  compaction and the replay guard, comes back (AST guards).
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ import re
 from pathlib import Path
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -66,6 +70,41 @@ def test_building_engine_reads_runs_no_job(spark, tmp_path):
     assert jobs == []
 
 
+def test_read_built_before_compaction_never_miscounts(spark, tmp_path):
+    # A tier read lists its files when it is built. Compaction then
+    # deletes the batch dirs it absorbed, so running the built read
+    # may fail on a missing part file, but it must never count a batch
+    # twice or drop one.
+    ev = load_table(spark, SF_DIR, "events").select(
+        "user_id", "event_id", "ts", "event_type", "value"
+    )
+    src, bars = str(tmp_path / "src"), str(tmp_path / "bars")
+    quarter = F.pmod(F.xxhash64("user_id"), F.lit(4))
+    for i in range(4):
+        ev.filter(quarter == i).coalesce(1).write.mode("append").parquet(src)
+    eng = SignalEngine(spark, str(tmp_path / "store"))
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    eng.maintain_ohlc_stream(
+        stream, bars, str(tmp_path / "ck")
+    ).awaitTermination(180)
+    clean = eng.ohlc_bars(bars).count()
+    assert clean > 0
+
+    built = eng.ohlc_bars(bars)
+    assert eng.compact_partials(bars, "ohlc") == 4
+    try:
+        n = built.count()
+    except Py4JJavaError as exc:  # refused: a listed file is gone
+        assert "FILE_NOT_EXIST" in str(exc), exc
+    else:
+        assert n == clean
+    assert eng.ohlc_bars(bars).count() == clean
+
+
 READERS = {
     "ohlc_bars": lambda eng, p: eng.ohlc_bars(p),
     "histogram_bins": lambda eng, p: eng.histogram_bins(p),
@@ -114,13 +153,14 @@ def _reads_parquet(node) -> bool:
     return False
 
 
-def _parquet_reads(rel: str) -> list[str]:
-    """'<rel>:<qualified function>' of every Parquet read in `rel`."""
+def _owners(rel: str, match) -> list[str]:
+    """'<rel>:<qualified function>' of every node in `rel` that
+    `match`es."""
     hits = []
 
     def visit(node, owner: str) -> None:
         for child in ast.iter_child_nodes(node):
-            if _reads_parquet(child):
+            if match(child):
                 hits.append(f"{rel}:{owner or '<module>'}")
             name = owner
             if isinstance(child, (ast.FunctionDef, ast.ClassDef)):
@@ -132,6 +172,36 @@ def _parquet_reads(rel: str) -> list[str]:
 
 
 def test_no_hand_rolled_store_reads():
-    hits = _parquet_reads("api.py") + _parquet_reads("sources/store.py")
+    hits = _owners("api.py", _reads_parquet)
+    hits += _owners("sources/store.py", _reads_parquet)
     assert [h for h in hits if h not in ALLOWED_READS] == []
     assert len(hits) == len(set(hits))  # one read per allowed function
+
+
+# Where api.py may move or delete a dir: compaction (its install
+# rename and the deletes of the dirs it absorbed) and the replay
+# guard's delete, both under the compaction lock. This list may only
+# shrink.
+ALLOWED_MOVES = {
+    "api.py:SignalEngine._compact_partials_locked",
+    "api.py:guard_fresh_checkpoint",
+}
+MOVERS = {("shutil", "rmtree"), ("shutil", "move"), ("os", "rename")}
+# Names of the aside dir and lease protocol compaction no longer has.
+GONE = ("__compact_old_", "_LeaseHeartbeat", "COMPACT_LEASE_S")
+
+
+def _moves(node) -> bool:
+    """A reference to shutil.rmtree, shutil.move or os.rename."""
+    return (
+        isinstance(node, ast.Attribute)
+        and isinstance(node.value, ast.Name)
+        and (node.value.id, node.attr) in MOVERS
+    )
+
+
+def test_store_dirs_move_only_under_the_compaction_lock():
+    assert set(_owners("api.py", _moves)) == ALLOWED_MOVES
+    for path in sorted(PACKAGE.rglob("*.py")):
+        text = path.read_text()
+        assert [g for g in GONE if g in text] == [], path

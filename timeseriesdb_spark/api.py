@@ -19,6 +19,7 @@ optimizer-visible) — nothing collects on the driver.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,54 +40,6 @@ _AGGS = {
 }
 
 
-def _pid_alive(pid: int) -> bool:
-    """True if a process with `pid` exists on this host (EPERM counts
-    as alive — signal 0 probes existence, not permission)."""
-    import os
-
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except (PermissionError, OSError):
-        return True
-    return True
-
-
-class _LeaseHeartbeat:
-    """Daemon thread that re-touches a lease-lock file's mtime every
-    `interval` seconds while a long job runs, so a live holder never
-    ages past the stale-reclaim horizon (ADVICE r7: a Spark merge job
-    longer than COMPACT_LEASE_S read as stale and got reclaimed).
-    Touch failures are swallowed — the lock may legitimately be gone
-    if an (incorrect) reclaimer raced us; the ownership-checked
-    release handles that case."""
-
-    def __init__(self, lock_path: str, interval: float):
-        import threading
-
-        self._lock_path = lock_path
-        self._interval = max(interval, 0.01)
-        self._stop = threading.Event()
-        self._thread = threading.Thread(target=self._run, daemon=True)
-
-    def _run(self) -> None:
-        import os
-
-        while not self._stop.wait(self._interval):
-            try:
-                os.utime(self._lock_path)
-            except OSError:
-                pass
-
-    def start(self) -> None:
-        self._thread.start()
-
-    def stop(self) -> None:
-        self._stop.set()
-        self._thread.join(timeout=5.0)
-
-
 # In every batch_id=compacted-<n>: the highest batch id it absorbed
 # (the leading "_" hides the file from Spark's reader).
 _HIGH_WATER = "_BATCH_HIGH_WATER"
@@ -99,9 +52,9 @@ class _Cut(NamedTuple):
     (`gen`, -1 if none) plus every integer id above the high-water it
     absorbed (`absorbed`, -1 without a generation). Anything else is
     already absorbed: integer ids at or below the mark, and older
-    generations (seen only between install and retire, or after a
-    crash there). `high` is the highest batch id the store holds or
-    absorbed."""
+    generations (seen only between an install and the deletion of the
+    dirs it absorbed, or after a crash there). `high` is the highest
+    batch id the store holds or absorbed."""
 
     dirs: list[str]
     live: list[str]
@@ -148,6 +101,31 @@ def _read_tier(
     return spark.read.schema(store.footer_schema(path, paths)).parquet(*paths)
 
 
+@contextmanager
+def _compaction_lock(store_path: str, error: type[Exception] = RuntimeError):
+    """Hold `<store>__compact_lock` for the block: an exclusive flock, so
+    a second holder (another process, or another fd in this one) gets
+    `error` at once, and the kernel drops the lock when its holder's
+    process dies. The file is never unlinked: a caller could then lock
+    a new inode while another still holds the old one."""
+    import fcntl
+    import os
+
+    lock = store_path.rstrip("/") + "__compact_lock"
+    fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
+    try:
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            raise error(
+                f"another compactor holds {lock}: compact_partials of "
+                f"{store_path!r} is running; retry after it finishes"
+            ) from None
+        yield
+    finally:
+        os.close(fd)
+
+
 def guard_fresh_checkpoint(
     store_path: str,
     checkpoint: str,
@@ -181,9 +159,10 @@ def guard_fresh_checkpoint(
       checkpoint sidecar so a crash/resume of this run keeps its
       batch-id namespace stable.
 
-    Every mode refuses while a compaction aside dir exists: its
-    recovery restores or deletes the aside's partitions BY NAME, blind
-    to writes made since (compact_partials finishes it).
+    "replay" deletes under the compaction lock (_compaction_lock) and
+    refuses while a compact_partials holds it. "append" writes above
+    every id the store holds and "error" writes nothing, so neither
+    collides with a running compaction.
 
     Returns the base offset to ADD to every foreachBatch batch id.
     """
@@ -202,17 +181,6 @@ def guard_fresh_checkpoint(
     meta_path = os.path.join(checkpoint, meta_name)
     base = 0
     if fresh and cut.dirs:
-        parent, leaf = os.path.split(os.path.abspath(store_path))
-        asides = [
-            n for n in os.listdir(parent)
-            if n.startswith(leaf + "__compact_old_")
-        ]
-        if asides:
-            raise ValueError(
-                f"fresh checkpoint {checkpoint!r} while compaction "
-                f"{asides} of {store_path!r} is running or was cut: "
-                "run compact_partials on the store first to finish it."
-            )
         if on_fresh_checkpoint == "error":
             raise ValueError(
                 f"fresh checkpoint {checkpoint!r} against a non-empty "
@@ -224,10 +192,11 @@ def guard_fresh_checkpoint(
                 "store's max batch_id)."
             )
         if on_fresh_checkpoint == "replay":
-            for d in cut.dirs:
-                shutil.rmtree(
-                    os.path.join(store_path, d), ignore_errors=True
-                )
+            with _compaction_lock(store_path, ValueError):
+                for d in _cut(store_path).dirs:  # listed under the lock
+                    shutil.rmtree(
+                        os.path.join(store_path, d), ignore_errors=True
+                    )
         else:
             base = 1 + cut.high
     if not fresh and os.path.exists(meta_path):
@@ -1043,189 +1012,50 @@ class SignalEngine:
         _TIERS key with a combine (_COMPACTABLE); any other kind raises
         ValueError before any side effect.
 
-        Safe against concurrent streamed maintenance: the batch_id=*
-        listing is SNAPSHOTTED first (_cut) and only those partitions
-        are read (the snapshot's live cut), merged, and removed — a
-        micro-batch landing between the snapshot and the swap is
-        neither merged nor deleted (it keeps merging on top of the new
-        generation at read time). The swap is INSTALL-FIRST: make the
-        aside dir, install `batch_id=compacted-<n>`, then retire the
-        snapshotted partitions into the aside and delete it. The store
-        path therefore never goes empty for a concurrent reader, and no
-        reader double-counts: every read takes one cut, the newest
-        generation plus the batch ids above its high-water, so a reader
-        listing inside the retire window skips what the new generation
-        absorbed, and one listing before the install sees exactly the
-        old partials. Single compactor at a time: an O_EXCL
-        lease lock (`<store>__compact_lock`, pid + wall-clock inside)
-        is taken BEFORE the recovery sweep and held through the swap —
-        so a second concurrent call raises up front and can never
-        mistake the live compactor's aside for crash debris
-        and rmtree it mid-swap. A crashed run leaves a stale lock;
-        callers reclaim it only after COMPACT_LEASE_S of age AND only
-        when the recorded holder pid is no longer alive, so within the
-        lease a crash just makes compaction unavailable (never
-        corrupt). Three hardenings close the races a bare
-        age-then-unlink reclaim would leave open:
+        Install is the one commit. Under the compaction lock
+        (_compaction_lock: a kernel flock on `<store>__compact_lock`
+        held for the whole call, so a second compactor raises
+        RuntimeError at once and a dead one's lock is already free), it
+        snapshots the store's cut (_cut), merges the snapshot's live
+        dirs into `<store>__compact_tmp`, records the high-water and
+        renames the dir to `batch_id=compacted-<g+1>`. From that rename
+        on, every read's cut serves the new generation plus the ids
+        above its high-water, so each dir of the snapshot is dead and
+        is deleted. A micro-batch landing after the snapshot is neither
+        merged nor deleted. A crash leaves either an uninstalled tmp
+        (cleared by the next call) or dead dirs (outside every cut;
+        deleted by the next call's snapshot).
 
-        * **Heartbeat**: while the merge job runs, a daemon thread
-          re-touches the lock every COMPACT_LEASE_S/4 — a live
-          compaction whose Spark job outlives the lease never *looks*
-          stale to other callers.
-        * **Single-winner reclaim**: a stale lock is reclaimed via
-          ``os.rename`` to a caller-unique name — rename of a missing
-          source fails, so exactly one of N concurrent reclaimers
-          wins; the losers raise instead of unlinking a lock some
-          other winner already recreated (the TOCTOU where two
-          compactors both end up live).
-        * **Ownership-checked release**: the lock body carries a
-          per-acquisition random token, and the finally-release only
-          unlinks the lock if it still contains this call's token —
-          if some other process (wrongly or rightly) replaced the
-          lock, we never delete *their* lease on the way out.
-
-        Crash mid-swap is self-healing on the next call: the aside
-        dir's name carries the generation it feeds
-        (`__compact_old_<n>`). If `batch_id=compacted-<n>` was
-        installed, every partition of its snapshot is merged into it:
-        recovery deletes the aside with what was already retired into
-        it, and what still sits in the base lies outside every read's
-        cut until this call's own snapshot retires it. If not
-        installed, nothing was retired yet (retire happens only after
-        install), so recovery just clears the aside and tmp debris;
-        any partial it does find is restored, and a base-name
-        collision on restore raises instead of silently discarding
-        either copy. Never silent data loss."""
-        import os
-        import time
-        import uuid
-
+        A tier read lists its files when it is built: build it after
+        compacting. A read built before and run after may fail on a
+        deleted part file; it never counts a batch twice."""
         if kind not in _COMPACTABLE:
             raise ValueError(
                 f"compact_partials: kind {kind!r} has no combine; "
                 f"compactable kinds are {_COMPACTABLE}"
             )
-        base = path.rstrip("/")
-        lock = base + "__compact_lock"
-        token = f"{os.getpid()}:{uuid.uuid4().hex}"
-
-        def acquire() -> None:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            with os.fdopen(fd, "w") as f:
-                f.write(f"{token} {time.time()}\n")
-
-        # Liveness gate: take the O_EXCL lease lock BEFORE the
-        # recovery sweep, so recovery can never reclaim the aside of a
-        # compactor that is still running.
-        try:
-            acquire()
-        except FileExistsError:
-            try:
-                age = time.time() - os.path.getmtime(lock)
-                with open(lock) as f:
-                    holder = f.read().split()
-            except OSError:
-                raise RuntimeError(
-                    f"compact_partials: {lock} contended (vanished or "
-                    "unreadable mid-check) — retry"
-                )
-            if age <= self.COMPACT_LEASE_S:
-                raise RuntimeError(
-                    f"compact_partials: another compactor holds {lock} "
-                    f"(age {age:.0f}s <= lease {self.COMPACT_LEASE_S}s)"
-                )
-            # Stale by age — but refuse if the recorded holder process
-            # is still alive (heartbeat failure / clock skew; a live
-            # holder must never be reclaimed out from under).
-            try:
-                holder_pid = int(holder[0].split(":")[0])
-            except (IndexError, ValueError):
-                holder_pid = -1
-            if holder_pid > 0 and _pid_alive(holder_pid):
-                raise RuntimeError(
-                    f"compact_partials: {lock} is past the lease (age "
-                    f"{age:.0f}s) but holder pid {holder_pid} is still "
-                    "alive — refusing to reclaim; investigate"
-                )
-            # Single-winner reclaim: rename to a caller-unique name.
-            # Rename of a missing source fails, so of N concurrent
-            # reclaimers exactly one gets here with the old lock.
-            claim = lock + f"__reclaim_{token}"
-            try:
-                os.rename(lock, claim)
-            except OSError:
-                raise RuntimeError(
-                    f"compact_partials: {lock} reclaim lost to a "
-                    "concurrent caller — retry"
-                )
-            os.unlink(claim)
-            acquire()  # FileExistsError here = fresh contender; propagate
-        hb = _LeaseHeartbeat(lock, self.COMPACT_LEASE_S / 4.0)
-        hb.start()
-        try:
+        with _compaction_lock(path):
             return self._compact_partials_locked(path, kind)
-        finally:
-            hb.stop()
-            # Ownership-checked release: only unlink if the lock still
-            # carries this call's token.
-            try:
-                with open(lock) as f:
-                    owned = f.read().split()[:1] == [token]
-            except OSError:
-                owned = False
-            if owned:
-                os.unlink(lock)
-
-    COMPACT_LEASE_S = 3600.0  # stale-lock reclaim horizon (seconds)
 
     def _compact_partials_locked(self, path: str, kind: str) -> int:
-        """Body of compact_partials; caller holds the lease lock."""
+        """Body of compact_partials; caller holds the compaction lock."""
         import os
         import shutil
 
         base = path.rstrip("/")
-        parent, leaf = os.path.split(base)
         tmp = base + "__compact_tmp"
-        # Recover debris from a crashed previous run FIRST. Enumerate
-        # siblings with listdir + startswith (glob would silently miss
-        # store paths containing glob metacharacters).
-        for name in sorted(os.listdir(parent or ".")):
-            if not name.startswith(leaf + "__compact_old_"):
-                continue
-            aside = os.path.join(parent, name)
-            g = name.rsplit("_", 1)[-1]
-            # Generation installed: the aside holds only what it
-            # absorbed, and what its retire left in the base is absorbed
-            # too (reads skip it, this run's snapshot retires it).
-            # Not installed: restore any partial found.
-            if not os.path.exists(f"{base}/batch_id=compacted-{g}"):
-                for d in os.listdir(aside):
-                    if not d.startswith("batch_id="):
-                        continue
-                    if os.path.exists(f"{base}/{d}"):
-                        raise RuntimeError(
-                            f"compact recovery: {base}/{d} exists in both "
-                            f"the store and crash-aside {aside}; refusing "
-                            "to discard either copy — resolve manually"
-                        )
-                    shutil.move(f"{aside}/{d}", f"{base}/{d}")
-            shutil.rmtree(aside)
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
         snapshot = _cut(base)
         if not snapshot.dirs:
             return 0
-        gen = snapshot.gen + 1
-        aside = base + f"__compact_old_{gen}"
-        os.makedirs(aside)  # fresh: recovery above cleared any debris
         merged = _TIERS[kind].combine(_read_tier(self.spark, base, snapshot))
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, _HIGH_WATER), "w") as f:
             f.write(str(snapshot.high))
-        shutil.move(tmp, f"{base}/batch_id=compacted-{gen}")  # install
-        for d in snapshot.dirs:  # retire: reads already skip them
-            shutil.move(f"{base}/{d}", f"{aside}/{d}")
-        shutil.rmtree(aside)
+        os.rename(tmp, f"{base}/batch_id=compacted-{snapshot.gen + 1}")
+        for d in snapshot.dirs:  # dead: outside every cut from here on
+            shutil.rmtree(f"{base}/{d}")
         return len(snapshot.dirs)
 
     def frequency_estimate(self, sketch_path: str, keys) -> DataFrame:
@@ -1479,9 +1309,9 @@ class CorpusEngine:
         return text.trending_from_term_counts(merged)
 
     def compact_partials(self, path: str, kind: str) -> int:
-        """Delegate to the SignalEngine partial compactor (shared
-        lease/manifest machinery; _TIERS carries the 'terms' kind this
-        engine maintains)."""
+        """Delegate to SignalEngine.compact_partials (same lock and
+        commit; _TIERS carries the 'terms' kind this engine
+        maintains)."""
         return SignalEngine(self.spark, self.path).compact_partials(
             path, kind
         )
