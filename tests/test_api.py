@@ -94,12 +94,7 @@ def test_window_max_matches_query(spark, engine):
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in exp.collect()]
 
 
-def test_smart_agg_routes_and_matches(spark, engine, tmp_path):
-    """Aligned ranges answer from the rollup, misaligned fall back to
-    raw — identical values either way (the router changes I/O only)."""
-    rp = str(tmp_path / "rollup_sa")
-    engine.build_rollup(rp, bucket="1 hour")
-
+def _smart_agg_routes_and_matches(engine, rp):
     t0, t1 = "2024-01-03 00:00:00", "2024-01-10 00:00:00"
     for which in ("count", "min", "max", "sum"):
         via_router = {
@@ -128,3 +123,23 @@ def test_smart_agg_routes_and_matches(spark, engine, tmp_path):
     assert got == exp
     plan = engine.smart_agg("max", rp, m0, m1)._jdf.queryExecution().toString()
     assert "bucket_start" not in plan
+
+
+def test_smart_agg_routes_and_matches(spark, engine, tmp_path, monkeypatch):
+    """Aligned ranges answer from the rollup, misaligned fall back to
+    raw — identical values either way (the router changes I/O only).
+    Alignment is decided in the session time zone (UTC), not the
+    Python process's: under TZ=Asia/Kolkata, 00:30 is a local hour
+    boundary but not a UTC one."""
+    import time
+
+    rp = str(tmp_path / "rollup_sa")
+    engine.build_rollup(rp, bucket="1 hour")
+    _smart_agg_routes_and_matches(engine, rp)
+    monkeypatch.setenv("TZ", "Asia/Kolkata")
+    time.tzset()
+    try:
+        _smart_agg_routes_and_matches(engine, rp)
+    finally:
+        monkeypatch.undo()
+        time.tzset()

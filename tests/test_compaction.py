@@ -1,5 +1,8 @@
-"""Compaction: many small appended files collapse to the bucketed
-layout with identical data.
+"""Store rewrites: many small appended files collapse to the bucketed
+layout with identical data, partial stores compact into one
+generation, and retention moves aged days into a tier. Each rewrite
+commits by one install under the store's lock; a read at or after
+any crash point answers exactly.
 """
 
 from __future__ import annotations
@@ -51,6 +54,179 @@ def test_compact_missing_partition_noop(spark, tmp_path):
     ev = load_table(spark, SF_DIR, "events").limit(10)
     store.write_signal_store(ev, path)
     assert store.compact_partition(spark, path, "1999-01-01") == 0
+
+
+DAY = "2024-01-05"
+
+
+def _appended_day(spark, path) -> int:
+    """A store whose DAY partition holds five appends of small files;
+    returns its row count."""
+    ev = load_table(spark, SF_DIR, "events").filter(F.to_date("ts") == DAY)
+    with_date = ev.withColumn("event_date", F.to_date("ts"))
+    for _ in range(5):
+        with_date.coalesce(2).write.partitionBy("event_date").mode(
+            "append"
+        ).parquet(path)
+    return 5 * ev.count()
+
+
+def _parquets(d):
+    import os
+
+    return sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def _days(path):
+    import os
+
+    return sorted(d for d in os.listdir(path) if d.startswith("event_date"))
+
+
+def test_compact_partition_read_at_commit_point(spark, tmp_path, monkeypatch):
+    # The day is staged outside the store and installed by one atomic
+    # exchange, so a read once the stage is written (the commit point)
+    # and right after the exchange (before the old day is deleted)
+    # both give the clean count: no staged or retired sibling is ever
+    # a partition of the store.
+    import os
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from timeseriesdb_spark.api import SignalEngine
+
+    path = str(tmp_path / "store")
+    clean = _appended_day(spark, path)
+    eng = SignalEngine(spark, path)
+    counts = []
+    write, rmtree = DataFrameWriter.parquet, shutil.rmtree
+
+    def write_then_read(self, *args, **kw):
+        write(self, *args, **kw)
+        counts.append(eng.events().count())
+
+    def read_then_rmtree(p, *args, **kw):
+        counts.append(eng.events().count())
+        rmtree(p, *args, **kw)
+
+    n_files = len(_parquets(f"{path}/event_date={DAY}"))
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_read)
+    monkeypatch.setattr(shutil, "rmtree", read_then_rmtree)
+    assert store.compact_partition(spark, path, DAY) == n_files - 1
+    monkeypatch.undo()
+    assert counts == [clean, clean]
+    assert _days(path) == [f"event_date={DAY}"]
+
+
+@pytest.mark.parametrize("point", ["staged", "exchanged", "dead_cut"])
+def test_compact_partition_crash_point(spark, tmp_path, monkeypatch, point):
+    # A crash before the exchange leaves the stage at the tmp path; one
+    # after it leaves the old day there, whole or with some part files
+    # already deleted. Neither is in the store, so a read answers
+    # exactly, and the next call clears the tmp and leaves one day dir
+    # of at most SIGNAL_BUCKETS files.
+    import os
+    import shutil
+
+    from timeseriesdb_spark.api import SignalEngine
+
+    path = str(tmp_path / "store")
+    tmp = path + "__compact_tmp"
+    clean = _appended_day(spark, path)
+    n_files = len(_parquets(f"{path}/event_date={DAY}"))
+    eng = SignalEngine(spark, path)
+
+    def crash_exchange(a, b):
+        raise _Crash
+
+    def crash_rmtree(p, *args, **kw):
+        if point == "dead_cut":  # dies mid-delete of the old day
+            os.remove(os.path.join(p, _parquets(p)[0]))
+        raise _Crash
+
+    if point == "staged":
+        monkeypatch.setattr(store, "_exchange", crash_exchange)
+    else:
+        monkeypatch.setattr(shutil, "rmtree", crash_rmtree)
+    with pytest.raises(_Crash):
+        store.compact_partition(spark, path, DAY)
+    monkeypatch.undo()
+
+    n_tmp = {"staged": 1, "exchanged": n_files, "dead_cut": n_files - 1}[point]
+    assert len(_parquets(tmp)) == n_tmp
+    assert _days(path) == [f"event_date={DAY}"]
+    assert eng.events().count() == clean
+
+    store.compact_partition(spark, path, DAY)
+    assert eng.events().count() == clean
+    assert _days(path) == [f"event_date={DAY}"]
+    assert 0 < len(_parquets(f"{path}/event_date={DAY}")) <= store.SIGNAL_BUCKETS
+    assert not os.path.exists(tmp)
+
+
+@pytest.mark.parametrize("point", ["staged", "installed", "part_deleted"])
+def test_apply_retention_crash_point(spark, tmp_path, monkeypatch, point):
+    # Retention's one commit is the rename that installs
+    # tiered_before=<cutoff>. A crash before it leaves the raw store
+    # whole and no tier; a crash after it leaves some or all of the
+    # pinned files, which the next call deletes without tiering again.
+    # At every point the raw store reads, and after the next call the
+    # tier holds every aged row once and the raw store none.
+    import os
+
+    import pyarrow.parquet as pq
+
+    from timeseriesdb_spark.api import SignalEngine
+
+    cutoff = "2024-01-15"
+    path, tier = str(tmp_path / "store"), str(tmp_path / "tier")
+    run_dir = f"{tier}/tiered_before={cutoff}"
+    eng = SignalEngine(spark, path)
+    ev = load_table(spark, SF_DIR, "events")
+    eng.ingest(ev)
+    n_all = ev.count()
+    n_old = ev.filter(F.to_date("ts") < cutoff).count()
+    remove, gone = os.remove, []
+
+    def crash_rename(src, dst):
+        raise _Crash
+
+    def crash_remove(p):
+        if p.endswith(".parquet"):
+            if point == "installed" or gone:
+                raise _Crash
+            gone.append(pq.read_metadata(p).num_rows)
+        remove(p)
+
+    if point == "staged":
+        monkeypatch.setattr(os, "rename", crash_rename)
+    else:
+        monkeypatch.setattr(os, "remove", crash_remove)
+    with pytest.raises(_Crash):
+        eng.apply_retention(tier, cutoff, chunk=8)
+    monkeypatch.undo()
+
+    assert os.path.isdir(path + "__compact_tmp") == (point == "staged")
+    assert os.path.isdir(run_dir) == (point != "staged")
+    if point != "staged":
+        tiered = spark.read.parquet(tier).agg(F.sum("n_src_rows"))
+        assert tiered.first()[0] == n_old
+    assert eng.events().count() == n_all - sum(gone)
+    assert eng.events().where(F.col("event_date") >= cutoff).count() == (
+        n_all - n_old
+    )
+
+    eng.apply_retention(tier, cutoff, chunk=8)
+    tiered = spark.read.parquet(tier).agg(F.sum("n_src_rows"))
+    assert tiered.first()[0] == n_old
+    assert eng.events().count() == n_all - n_old
+    assert eng.events().where(F.col("event_date") < cutoff).count() == 0
+    assert not [
+        d for d in os.listdir(path) if d.startswith("event_date=")
+        and d.split("=", 1)[1] < cutoff
+    ]
+    assert not os.path.exists(path + "__compact_tmp")
 
 
 def _write_hist_batch(spark, path, bid, uid, n):

@@ -8,8 +8,9 @@ compactable family).
 - an empty or missing store raises one ValueError that names it;
 - a read built before a compaction and run after it refuses loudly or
   answers exactly, never a different number;
-- no hand-rolled store read, and no store dir move or delete outside
-  compaction and the replay guard, comes back (AST guards).
+- no hand-rolled store read, no store dir or file move or delete
+  outside the store's one commit (store.rewrite), and no Hadoop
+  FileSystem call comes back (AST and text guards).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
-from timeseriesdb_spark.api import SignalEngine
+from timeseriesdb_spark.api import CorpusEngine, SignalEngine, _write_corpus
 from timeseriesdb_spark.tables import load_table
 
 PACKAGE = Path(__file__).resolve().parents[1] / "timeseriesdb_spark"
@@ -51,6 +52,16 @@ def test_building_engine_reads_runs_no_job(spark, tmp_path):
         )
         start(stream, str(tmp_path / f"ck{i}")).awaitTermination(180)
     assert eng.compact_partials(bars, "ohlc") == 2
+    corpus = CorpusEngine(spark, str(tmp_path / "corpus"))
+    _write_corpus(
+        spark.createDataFrame(
+            [(1, "a b", "web", 2, "train"), (2, "c", "news", 1, "test")],
+            "doc_id long, text string, source string, n_tokens int, "
+            "split string",
+        ),
+        corpus.path,
+        "overwrite",
+    )
 
     sc = spark.sparkContext
     group = "tier-reader-build"
@@ -61,6 +72,8 @@ def test_building_engine_reads_runs_no_job(spark, tmp_path):
             eng.ohlc_bars(bars),
             eng.rollup_agg(rollup),
             eng.range_query(0.0, 50.0),
+            corpus.split("train"),
+            corpus.stats(),
         ):
             assert df.schema.fields
         jobs = list(sc.statusTracker().getJobIdsForGroup(group))
@@ -127,8 +140,8 @@ def test_empty_or_missing_store_raises(spark, tmp_path, reader, state):
 
 # Where a DataFrameReader may read Parquet in the engine and store
 # modules: the tier reader, the signal store's reader, retention's read
-# of the exact files its manifest pinned, and the corpus read. This
-# list may only shrink.
+# of the exact files it pinned, and the corpus read. This list may only
+# shrink.
 ALLOWED_READS = {
     "api.py:_read_tier",
     "api.py:SignalEngine.apply_retention",
@@ -178,21 +191,28 @@ def test_no_hand_rolled_store_reads():
     assert len(hits) == len(set(hits))  # one read per allowed function
 
 
-# Where api.py may move or delete a dir: compaction (its install
-# rename and the deletes of the dirs it absorbed) and the replay
-# guard's delete, both under the compaction lock. This list may only
-# shrink.
+# Where the engine and store modules may move or delete a store dir or
+# file: the store's one commit (_Commit: install, then delete the
+# dead), which only store.rewrite hands out, inside its
+# `with _compaction_lock(...)`. This list may only shrink.
 ALLOWED_MOVES = {
-    "api.py:SignalEngine._compact_partials_locked",
-    "api.py:guard_fresh_checkpoint",
+    "sources/store.py:_Commit.install",
+    "sources/store.py:_Commit.delete",
 }
-MOVERS = {("shutil", "rmtree"), ("shutil", "move"), ("os", "rename")}
-# Names of the aside dir and lease protocol compaction no longer has.
-GONE = ("__compact_old_", "_LeaseHeartbeat", "COMPACT_LEASE_S")
+MOVERS = {
+    ("shutil", "rmtree"), ("shutil", "move"), ("os", "rename"),
+    ("os", "remove"), ("os", "unlink"), ("os", "rmdir"),
+}
+# Names of the aside dir, lease protocol, visible compaction siblings
+# and retention manifests that the store rewrites no longer have.
+GONE = (
+    "__compact_old_", "_LeaseHeartbeat", "COMPACT_LEASE_S",
+    ".compacting", "_manifests", "atomic_write",
+)
 
 
 def _moves(node) -> bool:
-    """A reference to shutil.rmtree, shutil.move or os.rename."""
+    """A reference to a dir or file mover or deleter (MOVERS)."""
     return (
         isinstance(node, ast.Attribute)
         and isinstance(node.value, ast.Name)
@@ -200,8 +220,45 @@ def _moves(node) -> bool:
     )
 
 
+def _calls(name: str):
+    """Matches a call of the bare name `name`."""
+    return lambda node: (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == name
+    )
+
+
 def test_store_dirs_move_only_under_the_compaction_lock():
-    assert set(_owners("api.py", _moves)) == ALLOWED_MOVES
+    hits = _owners("api.py", _moves) + _owners("sources/store.py", _moves)
+    assert set(hits) == ALLOWED_MOVES
+    # _Commit is built once: in store.rewrite, under the store's lock
+    assert _owners("api.py", _calls("_Commit")) == []
+    assert _owners("sources/store.py", _calls("_Commit")) == [
+        "sources/store.py:rewrite"
+    ]
+    tree = ast.parse((PACKAGE / "sources/store.py").read_text())
+    rewrite = next(
+        n for n in tree.body
+        if isinstance(n, ast.FunctionDef) and n.name == "rewrite"
+    )
+    locked = [
+        w for w in ast.walk(rewrite)
+        if isinstance(w, ast.With)
+        and _calls("_compaction_lock")(w.items[0].context_expr)
+    ]
+    assert len(locked) == 1
+    assert any(_calls("_Commit")(n) for n in ast.walk(locked[0]))
     for path in sorted(PACKAGE.rglob("*.py")):
         text = path.read_text()
         assert [g for g in GONE if g in text] == [], path
+
+
+def test_no_hadoop_filesystem_calls():
+    # Store files are renamed and deleted by sources/store.py on the
+    # local filesystem; no module goes through py4j to Hadoop's
+    # FileSystem.
+    for path in sorted(PACKAGE.rglob("*.py")):
+        text = path.read_text()
+        assert "org.apache.hadoop.fs" not in text, path
+        assert "getFileSystem" not in text, path

@@ -19,7 +19,6 @@ optimizer-visible) — nothing collects on the driver.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -43,6 +42,9 @@ _AGGS = {
 # In every batch_id=compacted-<n>: the highest batch id it absorbed
 # (the leading "_" hides the file from Spark's reader).
 _HIGH_WATER = "_BATCH_HIGH_WATER"
+# In every tiered_before=<cutoff>: the raw store files it tiered,
+# relative to the store (apply_retention).
+_PINNED_FILES = "_PINNED_FILES"
 
 
 class _Cut(NamedTuple):
@@ -101,31 +103,6 @@ def _read_tier(
     return spark.read.schema(store.footer_schema(path, paths)).parquet(*paths)
 
 
-@contextmanager
-def _compaction_lock(store_path: str, error: type[Exception] = RuntimeError):
-    """Hold `<store>__compact_lock` for the block: an exclusive flock, so
-    a second holder (another process, or another fd in this one) gets
-    `error` at once, and the kernel drops the lock when its holder's
-    process dies. The file is never unlinked: a caller could then lock
-    a new inode while another still holds the old one."""
-    import fcntl
-    import os
-
-    lock = store_path.rstrip("/") + "__compact_lock"
-    fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        try:
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-        except BlockingIOError:
-            raise error(
-                f"another compactor holds {lock}: compact_partials of "
-                f"{store_path!r} is running; retry after it finishes"
-            ) from None
-        yield
-    finally:
-        os.close(fd)
-
-
 def guard_fresh_checkpoint(
     store_path: str,
     checkpoint: str,
@@ -159,7 +136,7 @@ def guard_fresh_checkpoint(
       checkpoint sidecar so a crash/resume of this run keeps its
       batch-id namespace stable.
 
-    "replay" deletes under the compaction lock (_compaction_lock) and
+    "replay" deletes under the store's lock (store.rewrite) and
     refuses while a compact_partials holds it. "append" writes above
     every id the store holds and "error" writes nothing, so neither
     collides with a running compaction.
@@ -168,7 +145,6 @@ def guard_fresh_checkpoint(
     """
     import json
     import os
-    import shutil
 
     valid = ("error", "replay", new_events_mode)
     if on_fresh_checkpoint not in valid:
@@ -192,11 +168,10 @@ def guard_fresh_checkpoint(
                 "store's max batch_id)."
             )
         if on_fresh_checkpoint == "replay":
-            with _compaction_lock(store_path, ValueError):
-                for d in _cut(store_path).dirs:  # listed under the lock
-                    shutil.rmtree(
-                        os.path.join(store_path, d), ignore_errors=True
-                    )
+            with store.rewrite(store_path, ValueError) as commit:
+                commit.delete(  # listed under the lock
+                    os.path.join(store_path, d) for d in _cut(store_path).dirs
+                )
         else:
             base = 1 + cut.high
     if not fresh and os.path.exists(meta_path):
@@ -600,8 +575,12 @@ class SignalEngine:
         rows); otherwise fall back to the raw store scan. Both paths
         return identical values for count/min/max (and sum, decimal-
         routed), pinned by test — the router changes I/O, never the
-        answer."""
+        answer. Buckets start on epoch multiples, and Spark reads a
+        naive t0/t1 in the session time zone, so alignment is decided
+        in that zone too (a zone Python cannot resolve falls back to
+        the raw scan)."""
         from datetime import datetime
+        from zoneinfo import ZoneInfo
 
         def _aligned(s: str | None) -> bool:
             if s is None:
@@ -610,6 +589,12 @@ class SignalEngine:
             if sec is None:
                 return False
             dt = datetime.fromisoformat(s)
+            if dt.tzinfo is None:
+                zone = self.spark.conf.get("spark.sql.session.timeZone")
+                try:
+                    dt = dt.replace(tzinfo=ZoneInfo(zone))
+                except (KeyError, ValueError):
+                    return False
             return (dt.timestamp() % sec) == 0
 
         if _aligned(t0) and _aligned(t1):
@@ -1012,51 +997,44 @@ class SignalEngine:
         _TIERS key with a combine (_COMPACTABLE); any other kind raises
         ValueError before any side effect.
 
-        Install is the one commit. Under the compaction lock
-        (_compaction_lock: a kernel flock on `<store>__compact_lock`
-        held for the whole call, so a second compactor raises
-        RuntimeError at once and a dead one's lock is already free), it
-        snapshots the store's cut (_cut), merges the snapshot's live
-        dirs into `<store>__compact_tmp`, records the high-water and
-        renames the dir to `batch_id=compacted-<g+1>`. From that rename
-        on, every read's cut serves the new generation plus the ids
-        above its high-water, so each dir of the snapshot is dead and
-        is deleted. A micro-batch landing after the snapshot is neither
-        merged nor deleted. A crash leaves either an uninstalled tmp
-        (cleared by the next call) or dead dirs (outside every cut;
-        deleted by the next call's snapshot).
+        Install is the one commit. Under the store's lock (store.rewrite:
+        a kernel flock on `<store>__compact_lock` held for the whole
+        call, so a second compactor raises RuntimeError at once and a
+        dead one's lock is already free), it snapshots the store's cut
+        (_cut), merges the snapshot's live dirs into
+        `<store>__compact_tmp`, records the high-water and renames the
+        dir to `batch_id=compacted-<g+1>`. From that rename on, every
+        read's cut serves the new generation plus the ids above its
+        high-water, so each dir of the snapshot is dead and is deleted.
+        A micro-batch landing after the snapshot is neither merged nor
+        deleted. A crash leaves either an uninstalled tmp (cleared by
+        the next call) or dead dirs (outside every cut; deleted by the
+        next call's snapshot).
 
         A tier read lists its files when it is built: build it after
         compacting. A read built before and run after may fail on a
         deleted part file; it never counts a batch twice."""
+        import os
+
         if kind not in _COMPACTABLE:
             raise ValueError(
                 f"compact_partials: kind {kind!r} has no combine; "
                 f"compactable kinds are {_COMPACTABLE}"
             )
-        with _compaction_lock(path):
-            return self._compact_partials_locked(path, kind)
-
-    def _compact_partials_locked(self, path: str, kind: str) -> int:
-        """Body of compact_partials; caller holds the compaction lock."""
-        import os
-        import shutil
-
         base = path.rstrip("/")
-        tmp = base + "__compact_tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        snapshot = _cut(base)
-        if not snapshot.dirs:
-            return 0
-        merged = _TIERS[kind].combine(_read_tier(self.spark, base, snapshot))
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, _HIGH_WATER), "w") as f:
-            f.write(str(snapshot.high))
-        os.rename(tmp, f"{base}/batch_id=compacted-{snapshot.gen + 1}")
-        for d in snapshot.dirs:  # dead: outside every cut from here on
-            shutil.rmtree(f"{base}/{d}")
-        return len(snapshot.dirs)
+        with store.rewrite(base) as commit:
+            snapshot = _cut(base)
+            if not snapshot.dirs:
+                return 0
+            merged = _TIERS[kind].combine(
+                _read_tier(self.spark, base, snapshot)
+            )
+            merged.coalesce(1).write.mode("overwrite").parquet(commit.tmp)
+            with open(os.path.join(commit.tmp, _HIGH_WATER), "w") as f:
+                f.write(str(snapshot.high))
+            commit.install(f"{base}/batch_id=compacted-{snapshot.gen + 1}")
+            commit.delete(f"{base}/{d}" for d in snapshot.dirs)
+            return len(snapshot.dirs)
 
     def frequency_estimate(self, sketch_path: str, keys) -> DataFrame:
         """Per-signal Count-Min point estimates for `keys` from
@@ -1088,110 +1066,53 @@ class SignalEngine:
         store. Queries needing old data read the tier; the raw store
         stays bounded at (cutoff window) × ingest rate.
 
-        This is the manual commit protocol a table format would give
-        for free, idempotent at FILE granularity:
-
-        1. PIN: list the concrete parquet files under aged event_date
-           partitions once and persist the list as a manifest
-           (`tier_path/_manifests/<cutoff>.json`, written via tmp +
-           rename). Rows ingested into an aged partition AFTER the pin
-           land in new files that are not in the manifest — they are
-           neither tiered nor deleted by this run (a later cutoff
-           picks them up), closing the lost-ingest window.
-        2. TIER: aggregate exactly the manifest files into the
-           per-cutoff partition with overwrite, then seal it with our
-           OWN completion marker (`_manifests/<cutoff>.done`, tmp +
-           checked rename — not the committer's _SUCCESS, which
-           deployments can disable via
-           mapreduce.fileoutputcommitter.marksuccessfuljobs). A crash
-           mid-write leaves no marker; the rerun recomputes from the
-           same pinned manifest. Once the marker exists the write is
-           never repeated, so a rerun after partial deletes cannot
-           rebuild the tier from a now-smaller raw store.
-        3. DROP: delete exactly the manifest files (missing files are
-           no-ops), then remove aged partition dirs that became empty.
-
-        Manifests are kept after completion: they seal the cutoff, so
-        re-invoking with the same cutoff only re-runs the idempotent
-        delete phase and can never overwrite tiered data."""
+        The install is the one commit. Under the raw store's lock
+        (store.rewrite) it pins the data files of every aged event_date
+        partition, writes their PAA tier and the pinned list
+        (_PINNED_FILES, a file Spark's reader skips) into
+        `<store>__compact_tmp`, renames that dir to
+        `tiered_before=<cutoff>`, and then deletes exactly the pinned
+        files and `os.rmdir`s the date dirs they emptied. A rerun whose
+        cutoff dir is installed only repeats the deletes, so a cutoff
+        is never tiered twice. Rows ingested into an aged day after the
+        pin are neither tiered nor deleted; a later cutoff tiers them.
+        A crash before the rename leaves an uninstalled tmp (cleared by
+        the next rewrite of the store) and the raw store whole; a crash
+        after it leaves pinned files that the next call deletes.
+        `tier_path` must be on the raw store's filesystem."""
         import json
+        import os
 
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-
-        def hpath(s: str):
-            return jvm.org.apache.hadoop.fs.Path(s)
-
-        root = hpath(self.path)
-        fs = root.getFileSystem(conf)
-        man_dir = f"{tier_path}/_manifests"
-        man = hpath(f"{man_dir}/{cutoff_date}.json")
-        done = hpath(f"{man_dir}/{cutoff_date}.done")
         run_dir = f"{tier_path}/tiered_before={cutoff_date}"
-
-        def atomic_write(target, payload: str) -> None:
-            tmp = hpath(f"{man_dir}/.{target.getName()}.tmp")
-            fs.mkdirs(hpath(man_dir))
-            out = fs.create(tmp, True)
-            out.write(bytearray(payload.encode("utf-8")))
-            out.close()
-            if not fs.rename(tmp, target):
-                raise IOError(
-                    f"retention: atomic rename to {target} failed; "
-                    "aborting before any tier write or delete"
+        with store.rewrite(self.path) as commit:
+            if not os.path.isdir(run_dir):
+                days = os.listdir(self.path) if os.path.isdir(self.path) else []
+                files = sorted(
+                    f"{d}/{f}"
+                    for d in days
+                    if d.startswith("event_date=")
+                    and d.split("=", 1)[1] < cutoff_date  # ISO dates sort
+                    for f in os.listdir(f"{self.path}/{d}")
+                    if not f.startswith(("_", "."))
                 )
-
-        if fs.exists(man):  # resume: the pinned snapshot IS the manifest
-            stream = fs.open(man)
-            files = json.loads(
-                jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-            )
-            stream.close()
-        else:
-            if fs.exists(done):
-                # completion marker without its manifest: someone removed
-                # the pinned file list after the tier write. Re-pinning
-                # now could adopt late-arriving files, skip tiering them
-                # (marker says done) and then DELETE them — the exact
-                # lost-ingest window this protocol closes. Refuse.
-                raise RuntimeError(
-                    f"retention: {done} exists but manifest {man} is "
-                    "missing — inconsistent state, not re-pinning"
+                if not files:
+                    return
+                # the signal store's declared schema (read_signal_store)
+                schema = store.footer_schema(self.path).add("event_date", "date")
+                old = (
+                    self.spark.read.schema(schema)
+                    .option("basePath", self.path)
+                    .parquet(*(f"{self.path}/{f}" for f in files))
                 )
-            if not fs.exists(root):
-                return
-            files = []
-            for st in fs.listStatus(root):
-                name = st.getPath().getName()
-                if not name.startswith("event_date="):
-                    continue
-                if name.split("=", 1)[1] >= cutoff_date:  # ISO dates sort
-                    continue
-                files.extend(
-                    f.getPath().toString()
-                    for f in fs.listStatus(st.getPath())
-                    if not f.getPath().getName().startswith(("_", "."))
+                _paa(old, chunk, F.count("*").alias("n_src_rows")).write.parquet(
+                    commit.tmp
                 )
-            if not files:
-                return
-            files.sort()
-            atomic_write(man, json.dumps(files))
-
-        if not fs.exists(done):
-            old = self.spark.read.option("basePath", self.path).parquet(*files)
-            _paa(old, chunk, F.count("*").alias("n_src_rows")).write.mode(
-                "overwrite"
-            ).parquet(run_dir)
-            atomic_write(done, json.dumps({"files": len(files)}))
-
-        dirs = set()
-        for f in files:
-            fs.delete(hpath(f), False)
-            dirs.add(f.rsplit("/", 1)[0])
-        for d in sorted(dirs):
-            dp = hpath(d)
-            if fs.exists(dp) and fs.listStatus(dp).__len__() == 0:
-                fs.delete(dp, True)
+                with open(os.path.join(commit.tmp, _PINNED_FILES), "w") as f:
+                    json.dump(files, f)
+                os.makedirs(tier_path, exist_ok=True)
+                commit.install(run_dir)
+            with open(os.path.join(run_dir, _PINNED_FILES)) as f:
+                commit.delete(f"{self.path}/{name}" for name in json.load(f))
 
     def downsample(self, out_path: str, chunk: int = 8) -> None:
         """PAA downsampling to an aged tier (the lossy recoding path,
@@ -1241,7 +1162,11 @@ class CorpusEngine:
         _write_corpus(self._pipe().run(raw_docs), self.path, mode)
 
     def docs(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The corpus, read with a declared schema: the footer's
+        (store.footer_schema) plus the `split STRING` partition column,
+        so building the read runs no Spark job."""
+        schema = store.footer_schema(self.path).add("split", "string")
+        return self.spark.read.schema(schema).parquet(self.path)
 
     def split(self, name: str) -> DataFrame:
         """One split; the predicate is a partition filter (pruned scan)."""

@@ -38,6 +38,11 @@ joins co-locate without a shuffle.
 
 from __future__ import annotations
 
+import os
+import shutil
+from contextlib import contextmanager
+from typing import Iterable
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -82,7 +87,6 @@ def footer_schema(root: str, paths: list[str] | None = None) -> StructType:
     Every store in this package is written by Spark to a local FS. A
     store with no part file raises ValueError."""
     import json
-    import os
 
     import pyarrow.parquet as pq
 
@@ -180,6 +184,106 @@ def write_zorder_store(
     )
 
 
+# ---- store rewrites: one lock, one commit ------------------------------
+
+
+@contextmanager
+def _compaction_lock(store_path: str, error: type[Exception] = RuntimeError):
+    """Hold `<store>__compact_lock` for the block: an exclusive flock, so
+    a second holder (another process, or another fd in this one) gets
+    `error` at once, and the kernel drops the lock when its holder's
+    process dies. The file is never unlinked: a caller could then lock
+    a new inode while another still holds the old one."""
+    import fcntl
+
+    lock = store_path.rstrip("/") + "__compact_lock"
+    fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
+    try:
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            raise error(
+                f"another compactor holds {lock}: a rewrite of "
+                f"{store_path!r} (compact_partials, compact_partition or "
+                "apply_retention) is running; retry after it finishes"
+            ) from None
+        yield
+    finally:
+        os.close(fd)
+
+
+def _exchange(a: str, b: str) -> None:
+    """Swap two existing paths in one atomic step: Linux
+    renameat2(RENAME_EXCHANGE)."""
+    import ctypes
+
+    at_fdcwd, rename_exchange = -100, 2
+    renameat2 = ctypes.CDLL(None, use_errno=True).renameat2
+    renameat2.argtypes = [
+        ctypes.c_int, ctypes.c_char_p, ctypes.c_int, ctypes.c_char_p,
+        ctypes.c_uint,
+    ]
+    renameat2.restype = ctypes.c_int
+    if renameat2(
+        at_fdcwd, os.fsencode(a), at_fdcwd, os.fsencode(b), rename_exchange
+    ):
+        err = ctypes.get_errno()
+        raise OSError(err, os.strerror(err), a, None, b)
+
+
+class _Commit:
+    """The one commit of a store rewrite, handed out only by `rewrite`
+    while it holds the store's lock: stage into `tmp`, `install` it,
+    then `delete` what the install made dead."""
+
+    def __init__(self, tmp: str):
+        self.tmp = tmp
+
+    def install(self, target: str) -> None:
+        """Put the staged `tmp` at `target`: one rename if `target` is
+        new, else one atomic exchange, after which the old target sits
+        at `tmp` and is deleted like an uninstalled stage."""
+        if not os.path.exists(target):
+            os.rename(self.tmp, target)
+            return
+        _exchange(self.tmp, target)
+        self.delete([self.tmp])
+
+    def delete(self, dead: Iterable[str]) -> None:
+        """Delete each dir of `dead` whole; delete each file with its
+        checksum sidecar and then `os.rmdir` its dir if that left it
+        empty. A missing path is already deleted."""
+        for p in dead:
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+                continue
+            top, name = os.path.split(p)
+            for f in (p, os.path.join(top, f".{name}.crc")):
+                if os.path.lexists(f):
+                    os.remove(f)
+            if os.path.isdir(top) and not os.listdir(top):
+                os.rmdir(top)
+
+
+@contextmanager
+def rewrite(store_path: str, error: type[Exception] = RuntimeError):
+    """Every rewrite of a store's files runs in this block: it holds the
+    store's lock (_compaction_lock; a held lock raises `error`) and
+    yields the _Commit whose staging dir `<store>__compact_tmp`, outside
+    the store, it has just cleared of what a crash left there (an
+    uninstalled stage, or the dead target of an exchange)."""
+    with _compaction_lock(store_path, error):
+        commit = _Commit(store_path.rstrip("/") + "__compact_tmp")
+        if os.path.lexists(commit.tmp):
+            commit.delete([commit.tmp])
+        yield commit
+
+
+def _part_files(part: str) -> list[str]:
+    """The data files of one partition dir."""
+    return [f for f in os.listdir(part) if f.endswith(".parquet")]
+
+
 def compact_partition(spark: SparkSession, path: str, event_date: str) -> int:
     """Small-file compaction for one date partition — streaming ingest
     appends a file per micro-batch, and a 100 TB store lives or dies
@@ -188,48 +292,34 @@ def compact_partition(spark: SparkSession, path: str, event_date: str) -> int:
     SIGNAL_BUCKETS signal-clustered sorted files; returns the file count
     removed.
 
-    The rewrite stages to a sibling directory, then swaps by renaming
-    the original to `.old` before renaming the staged copy in — a
-    crash mid-swap leaves the data recoverable in `.old` (never in a
-    deleted-only state), though the partition path itself may be
-    briefly absent; use a table format for an atomic swap."""
+    The exchange is the one commit. Under the store's lock (rewrite)
+    the day is staged in `<store>__compact_tmp`, outside the store, and
+    swapped with `event_date=<d>` by one atomic exchange; the old day
+    then sits at the tmp path and is deleted. A read at any point sees
+    the old day or the new one, never both or neither. A crash leaves
+    the old or the dead day at the tmp path, and the next rewrite of
+    the store clears it. The signal store has no writer lock: a file
+    that ingest commits into the day after the staging read listed it
+    is exchanged out with the old day and deleted."""
     part = f"{path}/event_date={event_date}"
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    ppath = jvm.org.apache.hadoop.fs.Path(part)
-    fs = ppath.getFileSystem(conf)
-    if not fs.exists(ppath):
-        return 0
-    statuses = [
-        f for f in fs.listStatus(ppath) if f.getPath().getName().endswith(".parquet")
-    ]
-    before = len(statuses)
-    total_bytes = sum(f.getLen() for f in statuses)
-    # size the output by bytes (the point of compaction), capped at the
-    # bucket count so signal clustering is preserved on big partitions
-    n_files = max(1, min(SIGNAL_BUCKETS, -(-total_bytes // TARGET_FILE_BYTES)))
-    staged = f"{part}.compacting"
-    (
-        read_signal_store(spark, path)
-        .where(F.col("event_date") == F.lit(event_date).cast("date"))
-        .drop("event_date")
-        .repartition(n_files, "user_id")
-        .sortWithinPartitions("user_id", "ts")
-        .write.option("compression", "zstd")
-        .mode("overwrite")
-        .parquet(staged)
-    )
-    spath = jvm.org.apache.hadoop.fs.Path(staged)
-    # swap via rename-out → rename-in: the original survives as
-    # `.old` through the window, so a crash mid-swap is recoverable
-    # (the data is never only in a deleted state); a table format
-    # makes this step atomic
-    old = jvm.org.apache.hadoop.fs.Path(f"{part}.old")
-    fs.delete(old, True)
-    fs.rename(ppath, old)
-    fs.rename(spath, ppath)
-    fs.delete(old, True)
-    after = sum(
-        1 for f in fs.listStatus(ppath) if f.getPath().getName().endswith(".parquet")
-    )
-    return max(0, before - after)
+    with rewrite(path) as commit:
+        if not os.path.isdir(part):
+            return 0
+        before = _part_files(part)
+        total_bytes = sum(os.path.getsize(f"{part}/{f}") for f in before)
+        # size the output by bytes (the point of compaction), capped at
+        # the bucket count so signal clustering is preserved on big
+        # partitions
+        n_files = max(1, min(SIGNAL_BUCKETS, -(-total_bytes // TARGET_FILE_BYTES)))
+        (
+            read_signal_store(spark, path)
+            .where(F.col("event_date") == F.lit(event_date).cast("date"))
+            .drop("event_date")
+            .repartition(n_files, "user_id")
+            .sortWithinPartitions("user_id", "ts")
+            .write.option("compression", "zstd")
+            .mode("overwrite")
+            .parquet(commit.tmp)
+        )
+        commit.install(part)
+        return max(0, len(before) - len(_part_files(part)))
