@@ -15,7 +15,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from timeseriesdb_spark.registry import QUERIES, ordered_queries, resolve_oracles
+from timeseriesdb_spark.registry import QUERIES, resolve_oracles
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -28,13 +28,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered least-recently-verified-first: the driver's correctness
-    pass records a bounded number of rows per round in iteration
-    order, so queries missing a clean CORRECTNESS row (or never yet
-    checked) are listed first to be picked up this round."""
-    return ordered_queries()
+    """One entry per implemented operator from SURVEY.md §2, in
+    registry order: the `_MODULES` order of registry.py, then each
+    module's own QUERIES order."""
+    return dict(QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

@@ -15,11 +15,13 @@ chars, which truncated the r4 artifact into `parsed: null`):
   recorded run establishes the baseline" rule, per query). Never
   overwritten for existing entries.
 
-Timing protocol (BASELINE.md "BENCH protocol"): per query, one warm-up
-run then median of N timed runs (N_RUNS, doubled for sub-second queries
-whose medians are noise-dominated), same JVM/session. Results are fully
-materialized via the noop sink (all columns computed JVM-side; no
-driver collect). r14 cold-window fix (VERDICT r13 #3): the first
+Timing protocol (BASELINE.md "BENCH protocol"; `time_query`, the one
+timing loop, which scripts/time_queries.py, bench_sf1.py and
+scale_probe.py share): per query, one warm-up run then median of N
+timed runs (N_RUNS = $SPARK_TSDB_BENCH_RUNS, doubled for sub-second
+queries whose medians are noise-dominated), same JVM/session. Results
+are fully materialized via the noop sink (all columns computed
+JVM-side; no driver collect). r14 cold-window fix (VERDICT r13 #3): the first
 ~decile of the alphabet runs once DISCARDED before timing starts and
 is RE-TIMED at run end, keeping the RE-TIMED median (r15 — the earlier
 keep-the-better rule was a min-of-two-medians bias) — the post-start
@@ -44,18 +46,38 @@ from timeseriesdb_spark.registry import QUERIES
 from timeseriesdb_spark.session import get_spark
 
 N_RUNS = int(os.environ.get("SPARK_TSDB_BENCH_RUNS", "3"))
-SUBSEC_EXTRA = N_RUNS  # sub-second queries: double the sample count
 PROBE = "q_count"      # trivial fixed query re-timed through the run
+STAT_KEYS = ("min", "med", "max", "spread")  # per-query keys of BENCH_*.json
 
 
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _time_once(fn, spark, sf_dir) -> float:
+def run_once(fn, spark, sf_dir) -> tuple[float, float]:
+    """One run of a registry query: (build, total) seconds. Build is the
+    registry call; total adds the noop-sink write, which plans and runs
+    the query in its own QueryExecution."""
     t0 = time.perf_counter()
-    materialize(fn(spark, sf_dir))
-    return time.perf_counter() - t0
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    return t1 - t0, time.perf_counter() - t0
+
+
+def time_query(fn, spark, sf_dir, runs: int = N_RUNS) -> dict[str, float]:
+    """The BENCH protocol for one query: one warm-up run, then `runs`
+    timed runs, doubled when their median total is under 1 s. Returns
+    min/med/max/spread of the totals and the median build."""
+    run_once(fn, spark, sf_dir)  # warm-up (scan cache, codegen)
+    samples = [run_once(fn, spark, sf_dir) for _ in range(runs)]
+    if statistics.median(t for _, t in samples) < 1.0:
+        samples += [run_once(fn, spark, sf_dir) for _ in range(runs)]
+    totals = [t for _, t in samples]
+    med = statistics.median(totals)
+    return {
+        "min": round(min(totals), 4),
+        "med": round(med, 4),
+        "max": round(max(totals), 4),
+        "spread": round((max(totals) - min(totals)) / med, 3) if med else 0.0,
+        "build": round(statistics.median(b for b, _ in samples), 4),
+    }
 
 
 def main() -> None:
@@ -72,30 +94,11 @@ def main() -> None:
     stats: dict[str, dict[str, float]] = {}
     probe_samples: list[float] = []
 
-    def _query_stats(fn) -> dict[str, float]:
-        """One warm-up + the median-of-N protocol for a single query."""
-        materialize(fn(spark, sf_dir))  # warm-up (scan cache, codegen)
-        samples = [_time_once(fn, spark, sf_dir) for _ in range(N_RUNS)]
-        if statistics.median(samples) < 1.0:
-            samples += [
-                _time_once(fn, spark, sf_dir) for _ in range(SUBSEC_EXTRA)
-            ]
-        med = statistics.median(samples)
-        return {
-            "min": round(min(samples), 4),
-            "med": round(med, 4),
-            "max": round(max(samples), 4),
-            "spread": round((max(samples) - min(samples)) / med, 3)
-            if med
-            else 0.0,
-        }
-
     def probe() -> None:
         if PROBE in QUERIES:
             try:
-                materialize(QUERIES[PROBE](spark, sf_dir))  # warm
                 probe_samples.append(
-                    round(_time_once(QUERIES[PROBE], spark, sf_dir), 4)
+                    time_query(QUERIES[PROBE], spark, sf_dir, runs=1)["med"]
                 )
             except Exception:
                 pass
@@ -111,7 +114,7 @@ def main() -> None:
     n_decile = max(1, len(names) // 10)
     for name in names[:n_decile]:
         try:
-            materialize(QUERIES[name](spark, sf_dir))
+            run_once(QUERIES[name], spark, sf_dir)
         except Exception:
             pass  # the timed loop will report it
     # eighth-cadence probe marks (r15, VERDICT r14 #6 — was quarter
@@ -123,9 +126,9 @@ def main() -> None:
     marks = {(i * len(names)) // 8 for i in range(1, 8)}
     for i, name in enumerate(names):
         try:
-            s = _query_stats(QUERIES[name])
+            s = time_query(QUERIES[name], spark, sf_dir)
             times[name] = s["med"]
-            stats[name] = s
+            stats[name] = {k: s[k] for k in STAT_KEYS}
         except Exception as exc:  # a broken query must not sink the bench
             print(f"BENCH ERROR {name}: {exc}", file=sys.stderr)
             times[name] = -1.0
@@ -141,11 +144,11 @@ def main() -> None:
         if times.get(name, -1.0) < 0:
             continue
         try:
-            s = _query_stats(QUERIES[name])
+            s = time_query(QUERIES[name], spark, sf_dir)
         except Exception:
             continue
         times[name] = s["med"]
-        stats[name] = s
+        stats[name] = {k: s[k] for k in STAT_KEYS}
     probe()
 
     total = round(sum(t for t in times.values() if t > 0), 4)

@@ -12,6 +12,9 @@ would eventually grade.
 
 Writes BENCH_sf1.json (committed) and prints one JSON line.
 
+Each query is timed with bench.time_query, the bench protocol
+($SPARK_TSDB_BENCH_RUNS runs after a warm-up).
+
 Usage: python scripts/make_sf1.py && python scripts/bench_sf1.py
 """
 
@@ -19,12 +22,11 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_query  # noqa: E402
 from timeseriesdb_spark.registry import QUERIES  # noqa: E402
 from timeseriesdb_spark.session import get_spark  # noqa: E402
 
@@ -33,11 +35,6 @@ SF1_DIR = os.environ.get(
     "SPARK_TSDB_SF1_DST", os.path.join(REPO, "testdata_sf1")
 )
 TOP_N = int(os.environ.get("SPARK_TSDB_SF1_TOPN", "20"))
-RUNS = int(os.environ.get("SPARK_TSDB_SF1_RUNS", "3"))
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
 
 
 def main() -> None:
@@ -54,15 +51,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, dict[str, float]] = {}
     for name in names:
-        fn = QUERIES[name]
         try:
-            materialize(fn(spark, SF1_DIR))  # warm-up
-            samples = []
-            for _ in range(RUNS):
-                t0 = time.perf_counter()
-                materialize(fn(spark, SF1_DIR))
-                samples.append(time.perf_counter() - t0)
-            med = statistics.median(samples)
+            med = time_query(QUERIES[name], spark, SF1_DIR)["med"]
             out[name] = {
                 "sf1_med": round(med, 4),
                 "sf01_med": sf01[name],

@@ -4,7 +4,8 @@
 (the scale_probe.py ×1/×4/×16 replicas) as 4 time-ordered micro-batches
 with a fresh checkpoint per rep, and time (a) the maintenance drain
 (stateful position carry + partials write) and (b) the drift_scores
-finalize (merge partials → label → agree). Median of RUNS.
+finalize (merge partials → label → agree; bench.run_once). Median of
+$SPARK_TSDB_BENCH_RUNS.
 
 Prints the markdown rows appended to SCALING.md's streamed-drift
 section. The scaled dirs must exist (run scale_probe.py first, or any
@@ -23,12 +24,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import pandas as pd  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import N_RUNS, run_once  # noqa: E402
 from timeseriesdb_spark.api import SignalEngine  # noqa: E402
 from timeseriesdb_spark.session import get_spark  # noqa: E402
 from timeseriesdb_spark.tables import load_table  # noqa: E402
 
 FACTORS = [1, 4, 16]
-RUNS = 3
 SCRATCH = "/tmp/drift_stream_probe"
 SCALED = "/tmp/scale_probe"
 
@@ -75,7 +76,7 @@ def main() -> None:
                 "user_id", "event_id", "ts", "value"
             ).schema
         drains, finals = [], []
-        for rep in range(RUNS + 1):  # rep 0 is the untimed warm-up
+        for rep in range(N_RUNS + 1):  # rep 0 is the untimed warm-up
             feat = f"{SCRATCH}/feat_x{k}_r{rep}"
             ckpt = f"{SCRATCH}/ck_x{k}_r{rep}"
             shutil.rmtree(feat, ignore_errors=True)
@@ -90,13 +91,12 @@ def main() -> None:
                 stream, feat, ckpt
             ).awaitTermination(600)
             drain = time.perf_counter() - t0
-            t0 = time.perf_counter()
-            eng.drift_scores(feat, sf_dir, "kmeans").write.format(
-                "noop"
-            ).mode("overwrite").save()
+            _, final = run_once(
+                lambda s, d: eng.drift_scores(feat, d, "kmeans"), spark, sf_dir
+            )
             if rep > 0:
                 drains.append(drain)
-                finals.append(time.perf_counter() - t0)
+                finals.append(final)
         out[k] = (
             statistics.median(drains),
             statistics.median(finals),

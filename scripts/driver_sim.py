@@ -2,20 +2,24 @@
 session.py configs), import __spark_entry__, run entry + every query on
 one data dir, compare to DuckDB oracle via order-insensitive value hash.
 
-    python scripts/driver_sim.py [DATA_DIR]
+    python scripts/driver_sim.py [DATA_DIR] [--only Q ...]
 
 DATA_DIR defaults to the sf0.01 fixture. It also becomes
-SPARK_TSDB_TEST_SF, so lazy oracles retrain on the same data."""
-import argparse, hashlib, os, sys
-import duckdb, pandas as pd
+SPARK_TSDB_TEST_SF, so lazy oracles retrain on the same data. --only
+checks just the named queries (seconds instead of minutes)."""
+import argparse, os, sys
+import duckdb
 from pyspark.sql import SparkSession
 
 ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
 ap.add_argument("data_dir", nargs="?", help="default: the sf0.01 fixture")
-DATA_DIR = ap.parse_args().data_dir
+ap.add_argument("--only", nargs="+", metavar="Q", help="check only these queries")
+args = ap.parse_args()
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as e
+from perfbench.measure import value_hash
+from timeseriesdb_spark.tables import TABLES
 
 spark = SparkSession.builder.master("local[4]").appName("driver-sim").getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
@@ -26,27 +30,17 @@ print(f"entry(): {n} rows, schema={df.schema.simpleString()}")
 assert n > 0
 
 SF = "/root/testdata/sf0.01"
-SF = DATA_DIR or SF
+SF = args.data_dir or SF
 os.environ["SPARK_TSDB_TEST_SF"] = SF
 con = duckdb.connect()
-for t in ["region","nation","customer","supplier","part","orders","lineitem","events","documents","embeddings"]:
+for t in TABLES:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
 
-def value_hash(pdf: pd.DataFrame) -> str:
-    pdf = pdf[sorted(pdf.columns)].copy()
-    for c in pdf.columns:
-        if pd.api.types.is_datetime64_any_dtype(pdf[c]):
-            pdf[c] = pdf[c].astype("datetime64[us]")
-        elif pd.api.types.is_integer_dtype(pdf[c]):
-            pdf[c] = pdf[c].astype("int64")
-        elif pd.api.types.is_float_dtype(pdf[c]):
-            pdf[c] = pdf[c].astype("float64")
-    rows = sorted(map(repr, pdf.itertuples(index=False, name=None)))
-    return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16]
-
 qs, oracles = e.queries(), e.oracle_sql()
+unknown = sorted(set(args.only or ()) - set(qs))
+assert not unknown, f"not in queries(): {unknown}"
 fails = 0
-for name in sorted(qs):
+for name in args.only or sorted(qs):
     sdf = qs[name](spark, SF)
     got = sdf.toPandas()
     if name in oracles:

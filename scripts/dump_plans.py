@@ -1,6 +1,7 @@
-"""Regenerate PLANS.md: formatted physical plans of headline queries
-with the scale-relevant properties (PushedFilters, broadcasts,
-exchange counts) visible. Run from the repo root:
+"""Print PLANS.md: formatted physical plans of headline queries with
+the scale-relevant properties (PushedFilters, broadcasts, exchange
+counts) visible. The file is regenerated, not tracked. Run from the
+repo root:
 
     python scripts/dump_plans.py > PLANS.md
 """

@@ -28,6 +28,7 @@ sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
+from bench import N_RUNS, time_query  # noqa: E402
 from timeseriesdb_spark.registry import QUERIES  # noqa: E402
 from timeseriesdb_spark.session import get_spark  # noqa: E402
 from timeseriesdb_spark.tables import load_table  # noqa: E402
@@ -35,7 +36,6 @@ from timeseriesdb_spark.tables import load_table  # noqa: E402
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCRATCH = "/tmp/scale_probe"
 FACTORS = [1, 4, 16]
-RUNS = 3
 # one query per execution family, all reading only `events`
 PROBES = {
     "q_window_max": "bucketed position carry + tumbling max (flagship)",
@@ -292,15 +292,6 @@ def build_scaled_emb(spark: SparkSession, k: int) -> str:
     return out
 
 
-def time_query(fn, spark, sf_dir: str) -> float:
-    times = []
-    for _ in range(RUNS + 1):  # first run is warm-up
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times.append(time.perf_counter() - t0)
-    return statistics.median(times[1:])
-
-
 def main() -> None:
     spark = get_spark(app_name="scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
@@ -312,7 +303,9 @@ def main() -> None:
     results: dict[str, dict[int, float]] = {}
     for name in PROBES:
         fn = QUERIES[name]
-        results[name] = {k: time_query(fn, spark, dirs[k]) for k in FACTORS}
+        results[name] = {
+            k: time_query(fn, spark, dirs[k])["med"] for k in FACTORS
+        }
         print(name, {k: round(v, 3) for k, v in results[name].items()})
 
     ddirs = {k: build_scaled_docs(spark, k) for k in FACTORS}
@@ -320,7 +313,9 @@ def main() -> None:
     drows: dict[str, dict[int, int]] = {}
     for name in DOC_PROBES:
         fn = QUERIES[name]
-        dresults[name] = {k: time_query(fn, spark, ddirs[k]) for k in FACTORS}
+        dresults[name] = {
+            k: time_query(fn, spark, ddirs[k])["med"] for k in FACTORS
+        }
         drows[name] = {
             k: fn(spark, ddirs[k]).count() for k in (1, 16)
         }
@@ -331,7 +326,9 @@ def main() -> None:
     arows: dict[str, dict[int, int]] = {}
     for name in AUD_PROBES:
         fn = QUERIES[name]
-        aresults[name] = {k: time_query(fn, spark, dirs[k]) for k in FACTORS}
+        aresults[name] = {
+            k: time_query(fn, spark, dirs[k])["med"] for k in FACTORS
+        }
         arows[name] = {k: fn(spark, dirs[k]).count() for k in (1, 16)}
         print(name, {k: round(v, 3) for k, v in aresults[name].items()},
               "rows x1/x16:", arows[name])
@@ -340,7 +337,9 @@ def main() -> None:
     eresults: dict[str, dict[int, float]] = {}
     for name in EMB_PROBES:
         fn = QUERIES[name]
-        eresults[name] = {k: time_query(fn, spark, edirs[k]) for k in FACTORS}
+        eresults[name] = {
+            k: time_query(fn, spark, edirs[k])["med"] for k in FACTORS
+        }
         print(name, {k: round(v, 3) for k, v in eresults[name].items()})
 
     # flat-driver-cost witness for the capped semantic-decon eval pull
@@ -397,7 +396,7 @@ def main() -> None:
             .parquet(f"{SCRATCH}/keepsrc_{k}")
         )
         ts = []
-        for rep in range(RUNS + 1):  # first run is warm-up
+        for rep in range(N_RUNS + 1):  # first run is warm-up
             t0 = time.perf_counter()
             run_keep_stream(k, str(rep), "noop", None)
             ts.append(time.perf_counter() - t0)
@@ -413,7 +412,8 @@ def main() -> None:
         "# SCALING — weak-scaling probes at ×1/×4/×16 (local[32])",
         "",
         "Generated by `scripts/scale_probe.py`. Median of",
-        f"{RUNS} after warm-up, one JVM. The gate is curve SHAPE:",
+        f"{N_RUNS} after warm-up (bench.time_query: twice as many under",
+        "1 s), one JVM. The gate is curve SHAPE:",
         "time(×16)/time(×1) well under 16 means fixed stage overhead",
         "still dominates at this size (headroom), near 16/NCPU-bounded",
         "growth means scan-bound — either is 100×-survivable; superlinear",

@@ -165,6 +165,66 @@ def test_compact_partition_crash_point(spark, tmp_path, monkeypatch, point):
     assert not os.path.exists(tmp)
 
 
+def test_compact_partition_keeps_concurrent_appends(spark, tmp_path, monkeypatch):
+    # Ingest holds the store's lock shared. A rewrite refuses while an
+    # append is in flight, and an append started while the day is being
+    # exchanged waits for the rewrite to finish: its rows land in the
+    # new day instead of being exchanged out with the old one.
+    import fcntl
+    import os
+    import threading
+
+    from timeseriesdb_spark.api import SignalEngine
+
+    path = str(tmp_path / "store")
+    clean = _appended_day(spark, path)
+    eng = SignalEngine(spark, path)
+
+    fd = os.open(path + "__compact_lock", os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_SH)  # an append in flight
+        with pytest.raises(RuntimeError, match="a writer"):
+            store.compact_partition(spark, path, DAY)
+    finally:
+        os.close(fd)
+
+    extra = load_table(spark, SF_DIR, "events").filter(F.to_date("ts") == DAY)
+    n_extra = extra.count()
+    exchange, flock = store._exchange, fcntl.flock
+    asked, waited, errors = threading.Event(), [], []
+
+    def append():
+        try:
+            eng.ingest(extra)
+        except Exception as exc:  # reported by the asserts below
+            errors.append(exc)
+
+    ingest = threading.Thread(target=append, daemon=True)
+
+    def spy_flock(fd, op):
+        if op == fcntl.LOCK_SH:
+            asked.set()
+        return flock(fd, op)
+
+    def exchange_during_ingest(a, b):
+        ingest.start()
+        for _ in range(2400):  # until it asks for the lock or is done
+            if asked.wait(0.05) or not ingest.is_alive():
+                break
+        ingest.join(timeout=1)
+        waited.append(ingest.is_alive())
+        exchange(a, b)
+
+    monkeypatch.setattr(fcntl, "flock", spy_flock)
+    monkeypatch.setattr(store, "_exchange", exchange_during_ingest)
+    store.compact_partition(spark, path, DAY)
+    ingest.join(timeout=300)
+    monkeypatch.undo()
+    assert not ingest.is_alive() and errors == []
+    assert waited == [True]
+    assert eng.events().count() == clean + n_extra
+
+
 @pytest.mark.parametrize("point", ["staged", "installed", "part_deleted"])
 def test_apply_retention_crash_point(spark, tmp_path, monkeypatch, point):
     # Retention's one commit is the rename that installs

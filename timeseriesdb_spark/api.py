@@ -1074,8 +1074,9 @@ class SignalEngine:
         `tiered_before=<cutoff>`, and then deletes exactly the pinned
         files and `os.rmdir`s the date dirs they emptied. A rerun whose
         cutoff dir is installed only repeats the deletes, so a cutoff
-        is never tiered twice. Rows ingested into an aged day after the
-        pin are neither tiered nor deleted; a later cutoff tiers them.
+        is never tiered twice. Ingest holds the raw store's lock shared
+        (store.write_signal_store), so it waits while the call runs, and
+        rows it adds to an aged day afterwards wait for a later cutoff.
         A crash before the rename leaves an uninstalled tmp (cleared by
         the next rewrite of the store) and the raw store whole; a crash
         after it leaves pinned files that the next call deletes.

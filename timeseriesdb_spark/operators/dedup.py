@@ -137,7 +137,8 @@ def ngram_jaccard_pairs(doc: DataFrame) -> DataFrame:
     # at corpus scale; (2) at RUNTIME the corpus is scanned and
     # shingled exactly once: AQE materializes the shingle shuffle as
     # one query stage and the other self-join/sizes branches become
-    # ReusedQueryStages (see the final adaptive plan in PLANS.md — the
+    # ReusedQueryStages (see q_ngram_jaccard's final adaptive plan in
+    # `python scripts/dump_plans.py` output — the
     # PRE-execution plan shows the branches expanded, which
     # over-counts scans). Keeping n_sh as a separate tiny aggregation
     # off the same reused exchange beats carrying size(shingle_array)

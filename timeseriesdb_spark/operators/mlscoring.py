@@ -439,7 +439,8 @@ def _forest_label_of(spark: SparkSession, sf_dir: str):
     whole vote/argmax expression is parsed from the oracle's own
     _forest_label_sql text — this was the worst py4j offender (the
     Column fold cost ~0.7 s of every q_forest_drift* invocation's
-    build, measured by scripts/profile_phases.py: forest cells ran
+    build, as measured per phase (scripts/time_queries.py prints the
+    build median): forest cells ran
     ~0.7 s slower than tree cells on identical tiers, the labeler
     being the only difference). The oracle has hash-proven the text
     equals the old fold (CASE→1/0 == cast(bool as int), leading +0

@@ -66,17 +66,21 @@ def _micros_timestamps(events: DataFrame) -> None:
 
 def write_signal_store(events: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Persist events as the time-partitioned, signal-clustered store
-    laid out as the module docstring describes."""
+    laid out as the module docstring describes. The write holds the
+    store's lock shared (_compaction_lock, writer=True): appends run
+    side by side, wait for a running rewrite to finish, and make a new
+    one refuse, so no rewrite deletes a file they commit."""
     _micros_timestamps(events)
-    (
-        events.withColumn("event_date", F.to_date("ts"))
-        .repartition(F.pmod(F.hash("user_id"), F.lit(SIGNAL_BUCKETS)))
-        .sortWithinPartitions("event_date", "user_id", "ts")
-        .write.partitionBy("event_date")
-        .option("compression", "zstd")
-        .mode(mode)
-        .parquet(path)
-    )
+    with _compaction_lock(path, writer=True):
+        (
+            events.withColumn("event_date", F.to_date("ts"))
+            .repartition(F.pmod(F.hash("user_id"), F.lit(SIGNAL_BUCKETS)))
+            .sortWithinPartitions("event_date", "user_id", "ts")
+            .write.partitionBy("event_date")
+            .option("compression", "zstd")
+            .mode(mode)
+            .parquet(path)
+        )
 
 
 def footer_schema(root: str, paths: list[str] | None = None) -> StructType:
@@ -188,24 +192,32 @@ def write_zorder_store(
 
 
 @contextmanager
-def _compaction_lock(store_path: str, error: type[Exception] = RuntimeError):
-    """Hold `<store>__compact_lock` for the block: an exclusive flock, so
-    a second holder (another process, or another fd in this one) gets
-    `error` at once, and the kernel drops the lock when its holder's
-    process dies. The file is never unlinked: a caller could then lock
-    a new inode while another still holds the old one."""
+def _compaction_lock(
+    store_path: str, error: type[Exception] = RuntimeError, writer: bool = False
+):
+    """Hold `<store>__compact_lock` for the block. A rewrite holds it
+    exclusive: while anyone else (another process, or another fd in
+    this one) holds it, it gets `error` at once. A writer holds it
+    shared and waits for a rewrite to let go. The kernel drops the lock
+    when its holder's process dies. The file is never unlinked: a
+    caller could then lock a new inode while another still holds the
+    old one."""
     import fcntl
 
     lock = store_path.rstrip("/") + "__compact_lock"
+    os.makedirs(os.path.dirname(lock) or ".", exist_ok=True)
     fd = os.open(lock, os.O_CREAT | os.O_RDWR, 0o644)
     try:
         try:
-            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            fcntl.flock(
+                fd, fcntl.LOCK_SH if writer else fcntl.LOCK_EX | fcntl.LOCK_NB
+            )
         except BlockingIOError:
             raise error(
-                f"another compactor holds {lock}: a rewrite of "
+                f"another compactor or a writer holds {lock}: a rewrite of "
                 f"{store_path!r} (compact_partials, compact_partition or "
-                "apply_retention) is running; retry after it finishes"
+                "apply_retention) or an append to it (write_signal_store) "
+                "is running; retry after it finishes"
             ) from None
         yield
     finally:
@@ -298,9 +310,10 @@ def compact_partition(spark: SparkSession, path: str, event_date: str) -> int:
     then sits at the tmp path and is deleted. A read at any point sees
     the old day or the new one, never both or neither. A crash leaves
     the old or the dead day at the tmp path, and the next rewrite of
-    the store clears it. The signal store has no writer lock: a file
-    that ingest commits into the day after the staging read listed it
-    is exchanged out with the old day and deleted."""
+    the store clears it. Ingest (write_signal_store) holds the same
+    lock shared, so it waits while the day is rewritten, and a call
+    made while an append is in flight refuses: no committed file is
+    exchanged out and lost."""
     part = f"{path}/event_date={event_date}"
     with rewrite(path) as commit:
         if not os.path.isdir(part):

@@ -186,7 +186,7 @@ def session_stats(
 def ingest_to_parquet(
     stream_stats: DataFrame, out_dir: str, checkpoint_dir: str
 ):
-    """foreachBatch append to partitioned Parquet — the compression
+    """foreachBatch append to unpartitioned Parquet — the compression
     daemon's persist path (fm_write, compression_daemon.rs:124-140).
     availableNow trigger drains all pending input then stops (used by
     tests; production uses processingTime)."""
