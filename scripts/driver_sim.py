@@ -1,6 +1,7 @@
-"""Simulates the correctness driver: vanilla SparkSession (none of our
-session.py configs), import __spark_entry__, run entry + every query on
-one data dir, compare to DuckDB oracle via order-insensitive value hash.
+"""Simulates the correctness driver: deliberately a vanilla SparkSession
+(none of our session.py configs, as the driver passes its own), import
+__spark_entry__, run entry + every query on one data dir, compare to
+DuckDB oracle via order-insensitive value hash.
 
     python scripts/driver_sim.py [DATA_DIR] [--only Q ...]
 

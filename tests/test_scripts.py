@@ -8,6 +8,9 @@ second checkout would silently test the wrong code.
 Every query timing goes through `bench.time_query` (or its one run,
 `bench.run_once`), and every result hash is `perfbench.measure.value_hash`:
 a second copy gives a second number to reconcile.
+
+Every session comes from `session.get_spark`, so library code, tests
+and scripts all run with its defaults.
 """
 
 from __future__ import annotations
@@ -109,3 +112,35 @@ def test_time_query_in_process(spark):
     assert 0 < s["build"] <= s["med"]
     assert s["min"] <= s["med"] <= s["max"]
     assert SparkSession.getActiveSession() is spark
+
+
+# where a session may be built by hand: `get_spark` itself, and the
+# driver simulation, which deliberately runs on a vanilla session
+BUILDERS = {"timeseriesdb_spark/session.py", "scripts/driver_sim.py"}
+
+
+def _session_builders(source: str) -> list[int]:
+    """Line numbers of `SparkSession.builder`."""
+    return [
+        node.lineno for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Attribute) and node.attr == "builder"
+        and ast.unparse(node.value) == "SparkSession"
+    ]
+
+
+def test_guard_sees_a_session_builder():
+    src = "from pyspark.sql import SparkSession\ns = SparkSession.builder.getOrCreate()\n"
+    assert _session_builders(src) == [2]
+    assert _session_builders("s = get_spark()\n") == []
+
+
+def test_sessions_come_from_get_spark():
+    """Every library and script session takes `get_spark`'s defaults
+    (checkpoint manager, codegen cache)."""
+    found = {}
+    for path in glob.glob(os.path.join(ROOT, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            lines = _session_builders(f.read())
+        if lines:
+            found[os.path.relpath(path, ROOT)] = lines
+    assert set(found) == BUILDERS, found

@@ -22,6 +22,29 @@ matter identically on a 1000-executor cluster:
   above the registry's set. The cost is heap, about 33 KB per cached
   class: after one pass of the whole registry the live heap is 208 MB
   against 132 MB at 100 entries.
+- streamed checkpoints written through Hadoop's `FileSystem` API
+  (`spark.sql.streaming.checkpointFileManagerClass` =
+  `FileSystemBasedCheckpointFileManager`), for every streamed writer:
+  `_run_stream`'s foreachBatch sinks and the state store of the
+  `applyInPandasWithState` scans. Without Hadoop's native library,
+  Spark's default manager (`FileContextBasedCheckpointFileManager`)
+  stats the source, the destination and their `.crc` files through
+  `FileUtil.readLink` on each rename, and each stat forks `readlink`:
+  26 per batch of a `maintain_rollup_stream`. The `FileSystem` manager
+  forks none. Each log entry is still written to a temp file and
+  renamed with the same check-then-rename no-overwrite test (on a
+  local disk `FileContext` also stats and then renames), and both
+  files keep their `.crc` through `LocalFileSystem`. One `perfbench`
+  `stream_ingest` pass forked 525 processes before, 312 of them
+  checkpoint `readlink`, and 213 after: 92 checkpoint `chmod`, which
+  every created file and dir still costs, 120 data `chmod` and one for
+  the pass's own dir. Two other levers were rejected:
+  `spark.hadoop.fs.file.impl=RawLocalFileSystem` drops the `.crc`
+  integrity check of every local file, checkpoint logs included; and
+  `-Djdk.lang.Process.launchMechanism` would have to be set through
+  `spark.driver.extraJavaOptions`, which overrides the driver options
+  a caller passes with `--driver-java-options` (perfbench's JVM
+  flags among them).
 """
 
 from __future__ import annotations
@@ -55,5 +78,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     return builder.getOrCreate()
